@@ -36,15 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Driver-side budget for the hybrid deep-training path: the word-frequency
-#: dictionary collapses to the driver ONLY when it has at most this many
-#: rows (distinct words).  8M rows × ~40 bytes/word ≈ a few hundred MB —
-#: comfortably inside a normal driver heap, and real corpora vocabularies
-#: (even crawl-scale, post-tokenization) sit well under it; an
-#: over-budget dictionary falls back to the fully distributed merge loop.
-LOCAL_DICT_BUDGET_ROWS = 8_000_000
-
-
 def word_dictionary(docs: DataFrame, tokens_col) -> DataFrame:
     """(word, freq, syms) — the word-frequency dictionary with each word
     split into its code-point symbols.  ``tokens_col`` is the tokenized
@@ -154,8 +145,7 @@ def learn_merges_local(
     dict_rows: list[tuple[int, list[str]]], n_merges: int
 ) -> list[tuple[int, str, str, int, int]]:
     """Textbook greedy BPE merge learning over a COLLECTED word-frequency
-    dictionary — the driver-local arm of the hybrid deep-training path
-    (VERDICT r9 "What's wrong #3").
+    dictionary — the driver-local arm of the hybrid training path.
 
     Why a driver loop is the right scale call here: each distributed merge
     iteration pays three window passes + two materialize barriers over the
@@ -166,7 +156,8 @@ def learn_merges_local(
     the corpus-sized tokenize+count has collapsed 100 TB of text to
     (word, freq) rows, a 10^4-10^5-merge training loop over it is
     megabytes of driver CPU work, exactly like collecting k centroids.
-    The collect is gated by ``LOCAL_DICT_BUDGET_ROWS`` at the call site.
+    The collect is gated by ``session.LOCAL_COLLECT_BUDGET_ROWS`` at the
+    call site (``session.collect_bounded``).
 
     Semantics are IDENTICAL to the distributed operators (pinned by
     differential tests + the shared DuckDB oracle):

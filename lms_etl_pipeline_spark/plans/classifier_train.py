@@ -1,12 +1,13 @@
-"""Quality-classifier TRAINING — distributed full-batch gradient descent.
+"""Quality-classifier TRAINING — full-batch gradient descent, looped on the
+driver over a collapsed feature histogram.
 
 The engine already ships classifier INFERENCE (`doc_quality_score_logistic`:
 fixed exported weights as a codegen'd projection) and rule-based labeling
 (`doc_quality_filter` / `gopher_quality_rules`).  What a real curation stack
 trains between those two is the missing piece: a cheap linear model DISTILLED
 from the rule labels (exactly how fastText-style quality filters are built —
-heuristic/LLM labels in, linear scorer out), trained ON the cluster because
-the feature matrix is corpus-sized.
+heuristic/LLM labels in, linear scorer out), its features extracted ON the
+cluster because the corpus is large.
 
 This module adds that trainer as an exact, oracle-checkable operator:
 
@@ -17,39 +18,57 @@ This module adds that trainer as an exact, oracle-checkable operator:
   trajectory is bit-reproducible across engines (the `pinball_loss_eval`
   discipline, applied to an iterative algorithm).
 - **Algorithm**: full-batch GD on squared loss, K=12 iterations, learning
-  rate 2^-12.  Each iteration is ONE map-side-combining aggregate over the
-  materialized feature frame (d+2 exact sums); the weight update is O(d)
-  exact Python-int arithmetic on the driver (a 1-row bounded collect, same
-  class as the 16-row IVF centroid fetch); updated weights re-enter the
-  next iteration's plan as LITERALS — no broadcast join, no closure state.
+  rate 2^-12.  GD is sequential by nature, so the corpus collapses ONCE
+  to a bounded statistic and the loop runs on the driver: the features'
+  count histogram over ``(y, x1, x2, x3)`` is collected through
+  ``session.collect_bounded`` (one action).  ``y`` is a function of the
+  x's, so the histogram is bounded by the feature domain, not by the
+  corpus.  Each iteration's d+2 sums are then count-weighted sums over the
+  histogram in exact Python-int arithmetic, and the weight update is the
+  same O(d) sign/magnitude step either way.
+- **Fallback**: a histogram over ``session.LOCAL_COLLECT_BUDGET_ROWS``
+  takes the distributed loop: the feature frame is materialized and each
+  iteration is ONE map-side-combining aggregate over it (d+2 exact sums,
+  a 1-row collect), with the updated weights re-entering the next
+  iteration's plan as LITERALS — no broadcast join, no closure state.
+  Both arms produce the same trajectory bit for bit
+  (tests/test_classifier_train.py runs each against a pure-Python
+  reference).
 - **Exactness**: features are integers; weights are scale-6 micro-units;
   the hard sigmoid clamps BEFORE the ``div 4`` so truncating division only
-  ever sees non-negative operands (identical in Spark ``div`` and DuckDB
-  ``//``); the update magnitude ``|g| div (n * 2^12)`` is sign/magnitude
-  split for the same reason.  Per-row products stay under int64 for any
-  document below ~9.2e6 tokens (|r| <= 1e6 micro-units; the margin is the
-  same precondition class `pinball_loss_eval` documents); cross-row sums
-  go through DECIMAL(38,0) / HUGEINT *internally*, but the OUTPUT emits
-  the loss as two BIGINT limbs (``loss_hi = loss // 10^18``, ``loss_lo =
-  loss % 10^18``) — unbounded exactness with no decimal-class column in
-  the result (round 11: the driver's native-type cell hashing diverges on
-  Python ``Decimal`` vs ``int`` even at equal values, the same family as
-  the HUGEINT rule in ``tools/check_oracle.py``, which now also refuses
-  DECIMAL outputs catalog-wide).
+  ever sees non-negative operands (identical in Spark ``div``, DuckDB
+  ``//`` and Python ``//``); the update magnitude ``|g| div (n * 2^12)``
+  is sign/magnitude split for the same reason.  In the distributed arm,
+  per-row products stay under int64 for any document below ~9.2e6 tokens
+  (|r| <= 1e6 micro-units; the margin is the same precondition class
+  `pinball_loss_eval` documents) and cross-row sums go through
+  DECIMAL(38,0); the driver arm's Python ints are unbounded.  The OUTPUT
+  emits the loss as two BIGINT limbs (``loss_hi = loss // 10^18``,
+  ``loss_lo = loss % 10^18``) — unbounded exactness with no decimal-class
+  column in the result: native-type cell hashing diverges on Python
+  ``Decimal`` vs ``int`` even at equal values, the same family as the
+  HUGEINT rule in ``tools/check_oracle.py``, which also refuses DECIMAL
+  outputs catalog-wide.  An empty corpus yields K rows with a NULL loss
+  and zero weights (the oracle's NULL-sum arm).
 
 Scale posture (100 TB): feature extraction is the only corpus-sized work
-and runs once; it is materialized via the deployment-keyed seam
-(`session.materialize`) and each GD pass is a narrow 4-column scan of that
-frame with partial aggregation — the textbook distributed-GD shape (one
-all-reduce per iteration, here Spark's partial-agg + single-row exchange).
-K does not grow with data; the driver holds d+1 integers.  The loop frame
-is released (`session.release`) once trained.
+and runs once, feeding a partial-aggregated histogram whose size is set
+by the feature domain; K does not grow with data, and the driver holds
+the histogram plus d+1 integers.  The K iterations cost driver CPU
+proportional to the histogram, not Spark jobs: building the trainer
+launches the histogram's jobs only (≤ 3, pinned in
+tests/test_classifier_train.py), where the fallback launches a
+materialize plus one job per iteration.
 
-Measured (SCALING.md "Round-11 addition"): ~flat across sf0.1→sf1→~sf3→
-~sf10 under both materialize strategies, and persist beats localCheckpoint
-by 18–22% on this plan — the frame is narrow and re-scanned 12 times, so
-the columnar cache amortizes where the wide/scan-few clustering plans pay
-encode cost instead.
+Measured: the fallback loop (SCALING.md, "the GD trainer's two-strategy
+materialize cells") is ~flat across sf0.1→sf1→~sf3→~sf10 under both
+materialize strategies, and persist beats localCheckpoint there by
+18–22% — its frame is narrow and re-scanned 12 times, so the columnar
+cache amortizes.  The driver arm re-scans nothing: on the benchmark's
+`iterative_builders` workload (perfbench/, 4-vCPU VM, ``local[4]``) one
+build-and-evaluate pass launches 5 jobs where the distributed loop
+launches 28 (3 vs 26 while building), and takes a median 3.2 s of CPU
+time against the distributed loop's 5.5 s (ten paired runs).
 
 Scope note: the reference pipeline (``/root/reference/README.md``,
 pandas/boto3 Lambda ETL) has no model-training stage; this extends the
@@ -67,6 +86,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark import session
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.plans.llm import _TOKS
@@ -202,11 +222,44 @@ def _margin_sql(w: list[int]) -> str:
     )
 
 
-def _train(spark: SparkSession, sf_dir: str):
-    """Run the GD loop; returns (history rows, final weights, feats frame).
+def _step(w: list[int], g: list[int], n: int) -> None:
+    """GD weight update in place, sign/magnitude split so the truncating
+    division only sees non-negative operands: w_j -= sign(g_j) * (|g_j|
+    div (n << LR_SHIFT)).  No-op on an empty corpus (n == 0)."""
+    if n <= 0:
+        return
+    den = n << LR_SHIFT
+    for j in range(4):
+        mag = abs(g[j]) // den
+        w[j] -= mag if g[j] > 0 else -mag
 
-    The caller owns releasing the returned materialized feats frame.
-    """
+
+def _train_local(hist: list[tuple[int, int, int, int, int]]):
+    """The GD loop on the driver over the (y, x1, x2, x3, count) feature
+    histogram: every sum is count-weighted, in exact Python ints."""
+    n = sum(c for *_, c in hist)
+    w = [0, 0, 0, 0]
+    history = []
+    for it in range(1, GD_ITERS + 1):
+        loss, g = 0, [0, 0, 0, 0]
+        for y, x1, x2, x3, c in hist:
+            m = w[0] + w[1] * x1 + w[2] * x2 + w[3] * x3
+            r = min(max(m + 2 * _U, 0), 4 * _U) // 4 - y * _U
+            cr = c * r
+            loss += cr * r
+            g[0] += cr
+            g[1] += cr * x1
+            g[2] += cr * x2
+            g[3] += cr * x3
+        _step(w, g, n)
+        # an empty corpus has a NULL loss, as SQL's SUM over no rows
+        history.append((it, loss if n else None, *w))
+    return history, w
+
+
+def _train_distributed(spark: SparkSession, sf_dir: str):
+    """The over-budget fallback: one aggregate pass per GD iteration over
+    the materialized feature frame, weights re-entering as literals."""
     feats = materialize(_features(spark, sf_dir))
     w = [0, 0, 0, 0]
     history = []
@@ -224,40 +277,39 @@ def _train(spark: SparkSession, sf_dir: str):
             F.sum((F.col("r") * F.col("x3")).cast("decimal(38,0)")).alias("g3"),
             F.count("*").alias("n"),
         ).collect()[0]  # bounded: ONE row of d+2 scalars per iteration
-        n = row["n"]
-        den = n << LR_SHIFT
-        for j in range(4):
-            g = row[f"g{j}"]
-            if g is not None and g != 0 and n > 0:
-                g = int(g)
-                mag = abs(g) // den
-                w[j] -= mag if g > 0 else -mag
+        _step(w, [int(row[f"g{j}"] or 0) for j in range(4)], row["n"])
         loss = row["loss_u"]
-        history.append(
-            (
-                it,
-                int(loss) if loss is not None else None,
-                w[0],
-                w[1],
-                w[2],
-                w[3],
-            )
-        )
-    return history, w, feats
+        history.append((it, int(loss) if loss is not None else None, *w))
+    release(feats)
+    return history, w
+
+
+def _train(spark: SparkSession, sf_dir: str):
+    """Run the GD loop; returns (history rows, final weights).
+
+    The feature histogram is collected once when it fits the driver
+    budget; otherwise the distributed loop runs.
+    """
+    hist = session.collect_bounded(
+        _features(spark, sf_dir).groupBy("y", "x1", "x2", "x3").count(),
+        session.LOCAL_COLLECT_BUDGET_ROWS,
+    )
+    if hist is None:
+        return _train_distributed(spark, sf_dir)
+    return _train_local([tuple(r) for r in hist])
 
 
 @query("quality_classifier_train", oracle=_TRAIN_ORACLE)
 def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distill the rule-based quality filter into a linear scorer by
-    distributed full-batch GD (K=12, lr=2^-12, hard-sigmoid link, exact
+    full-batch GD (K=12, lr=2^-12, hard-sigmoid link, exact
     scale-6 integer arithmetic end to end — module docstring).  Output: one
     row per iteration with the pre-update squared loss (micro-units², as
     two exact BIGINT limbs hi/lo at base 10^18 — no decimal-class output
     column) and the post-update weights, i.e. the full verifiable training
     trajectory.
     """
-    history, _, feats = _train(spark, sf_dir)
-    release(feats)
+    history, _ = _train(spark, sf_dir)
     rows = [
         (it, *(divmod(loss, _LIMB) if loss is not None else (None, None)), *ws)
         for it, loss, *ws in history
@@ -274,14 +326,13 @@ def quality_classifier_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipped weights).  Output: doc_id, the rule label, and the scale-6
     hard-sigmoid score.
     """
-    _, w, feats = _train(spark, sf_dir)
-    # score over a FRESHLY derived (unmaterialized) feature plan, not the
-    # training cache: the returned plan is lazy, and referencing the
+    _, w = _train(spark, sf_dir)
+    # score over a FRESHLY derived (unmaterialized) feature plan, never a
+    # training cache: the returned plan is lazy, and referencing a
     # materialized frame would pin a CacheManager entry with no handle for
     # the caller to release (and make repeated cold-run timings silently
-    # warm via plan-matched cache reuse) — round-11 advisory.  The weights
-    # are literals, so serving is one narrow scan either way.
-    release(feats)
+    # warm via plan-matched cache reuse).  The weights are literals, so
+    # serving is one narrow scan.
     return _features(spark, sf_dir).select(
         "doc_id",
         F.col("y").alias("y_rule"),

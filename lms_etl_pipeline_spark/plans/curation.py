@@ -224,7 +224,7 @@ def charlm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the array costs MORE (measured 2.2-3.3 s inline vs
     # 3.8-4.8 s behind a repartition at sf0.1).
     tri = d.select("doc_id", F.explode(tri_arr).alias("tri"))
-    # Round 12: materialize tf — the model legs (c3 -> c2) and the scoring
+    # materialize tf — the model legs (c3 -> c2) and the scoring
     # join each re-ran the corpus explode + count otherwise (guide §2.4).
     tf = materialize(tri.groupBy("doc_id", "tri").agg(F.count("*").alias("tf")))
     c3 = tf.groupBy("tri").agg(F.sum("tf").alias("c3"))
@@ -799,7 +799,7 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Gopher quality rules (round 4)
+# Gopher quality rules
 # ---------------------------------------------------------------------------
 
 _GOPHER_MIN_WORDS = 50
@@ -984,42 +984,18 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tokenizer-construction step every pretraining pipeline runs before
     ``tokenize_to_vocab_ids``-style application.
 
-    Scale: the corpus-sized work is ONE tokenize + word count; every
-    iteration then runs on the vocabulary-bounded dictionary (explode +
-    word-partitioned windows + rebuild — operators/bpe.py), with the
-    winning pair a 1-row TakeOrderedAndProject broadcast (ALLOW_CROSS).
-    The textbook left-to-right greedy merge is applied SET-WISE (an
-    occurrence merges iff its offset within its occurrence-run is even),
-    so the inherently sequential loop becomes three declarative window
-    passes.  Ties break (count DESC, left ASC, right ASC) — documented
-    divergence from insertion-order tie handling, chosen for
-    cross-engine/cross-run reproducibility.  The dictionary is
-    re-materialized between iterations (``session.materialize``) so the
-    per-iteration lineage stays bounded, mirroring operators/ml.py's
-    iterative discipline."""
-    from lms_etl_pipeline_spark.operators import bpe
+    Scale: the corpus-sized work is ONE tokenize + word count; the
+    vocabulary-bounded dictionary then collapses once to the driver and
+    the merges run there (``plans.tokenizer.train_merges``, the same
+    hybrid path as ``bpe_train_merges_deep``).  An over-budget dictionary
+    takes the distributed loop, which applies the textbook left-to-right
+    greedy merge SET-WISE (operators/bpe.py).  Ties break (count DESC,
+    left ASC, right ASC) — documented divergence from insertion-order tie
+    handling, chosen for cross-engine/cross-run reproducibility."""
+    # imported here: a module-level import would register tokenizer's
+    # queries ahead of curation's and reorder the catalog
+    from lms_etl_pipeline_spark.plans.tokenizer import train_merges
 
-    d = load_table(spark, sf_dir, "documents")
-    # materialize the dictionary (the tokenize+count subtree feeds three
-    # consumers in iteration 1) and each 1-row winner (consumed by the
-    # merge pass, the output row, and the token count — re-running the
-    # TakeOrdered pass per consumer tripled the per-iteration cost)
-    dk = materialize(bpe.word_dictionary(d, tx.tokens("text")))
-    out = None
-    for it in range(1, _BPE_ITERS + 1):
-        b = materialize(bpe.best_pair(dk))
-        dk = materialize(bpe.apply_merge(dk, b))
-        after = dk.agg(
-            F.sum(F.col("freq") * F.size("syms")).cast("bigint").alias(
-                "corpus_tokens_after"
-            )
-        )
-        row = b.crossJoin(F.broadcast(after)).select(
-            F.lit(it).alias("iteration"),
-            F.col("left").alias("merge_left"),
-            F.col("right").alias("merge_right"),
-            "pair_count",
-            "corpus_tokens_after",
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
+    return train_merges(
+        spark, load_table(spark, sf_dir, "documents"), _BPE_ITERS
+    )

@@ -145,21 +145,20 @@ def _session_mode(spark) -> str:
 
 
 def materialize(df, *, eager: bool = True, cut_lineage: bool = False):
-    """Deployment-mode seam for multi-consumer / iterative reuse barriers
-    (VERDICT r8 "What's wrong #4"): every plan that materializes a frame
-    for several consumers (curation's tokenized corpus, graph label
-    iterations, k-means assignment loops) calls this instead of hard-coding
-    ``localCheckpoint`` — local masters keep the fast local checkpoint,
-    cluster masters get lineage-preserving ``persist(MEMORY_AND_DISK)``
-    (populated via a count() when ``eager``).  Override per session with
-    the ``spark.lms_etl_pipeline_spark.materialize`` conf.
+    """Deployment-mode seam for multi-consumer / iterative reuse barriers:
+    every plan that materializes a frame for several consumers (curation's
+    tokenized corpus, graph label iterations, k-means assignment loops)
+    calls this instead of hard-coding ``localCheckpoint`` — local masters
+    keep the fast local checkpoint, cluster masters get lineage-preserving
+    ``persist(MEMORY_AND_DISK)`` (populated via a count() when ``eager``).
+    Override per session with the ``spark.lms_etl_pipeline_spark.materialize``
+    conf.
 
-    The persist path's cost is MEASURED (SCALING.md "Round 10: the
-    persist() path TIMED"): +14–33% over localCheckpoint at ~sf3 on the
-    two heaviest consumers, shrinking to parity/+19% at ~sf10 — i.e. the
-    cluster default's overhead is bounded and smallest at exactly the
-    scale where the non-spillable localCheckpoint barrier OOMs an 8 GB
-    heap.  Note persist() also registers the frame with the SQL
+    The persist path's cost is MEASURED (SCALING.md, "the persist() path
+    TIMED"): +14–33% over localCheckpoint at ~sf3 on the two heaviest
+    consumers, shrinking to parity/+19% at ~sf10 — i.e. the cluster
+    default's overhead is bounded and smallest at exactly the scale where
+    the non-spillable localCheckpoint barrier OOMs an 8 GB heap.  Note persist() also registers the frame with the SQL
     CacheManager (plan-matched reuse across identical subplans in one
     session) — a feature on a warm cluster, but benchmarks must
     clearCache() between cold-run reps.
@@ -228,6 +227,29 @@ def release(df) -> None:
     """
     if _session_mode(df.sparkSession) == "persist":
         df.unpersist()
+
+
+#: Driver-side row budget for :func:`collect_bounded`.  8M rows of a few
+#: small columns is a few hundred MB, inside a normal driver heap; the
+#: frames collected through it are domain- or vocabulary-bounded (a feature
+#: histogram, a word-frequency dictionary) and sit well under it on real
+#: corpora.  Callers fall back to a distributed loop above it.
+LOCAL_COLLECT_BUDGET_ROWS = 8_000_000
+
+
+def collect_bounded(df, max_rows: int):
+    """Collect ``df`` to the driver if it has at most ``max_rows`` rows,
+    else return None.
+
+    One action either way: the collect reads at most ``max_rows + 1`` rows
+    and the extra row is the over-budget signal, so no separate ``count()``
+    pass runs and an over-budget frame never lands on the driver whole.  A
+    negative budget always returns None.  This is the seam for sequential
+    trainers (GD, BPE merges) that collapse a corpus once to a bounded
+    statistic and then loop on the driver instead of paying one Spark job
+    per iteration."""
+    rows = df.limit(max(max_rows + 1, 0)).collect()
+    return rows if len(rows) <= max_rows else None
 
 
 def get_spark(app_name: str = "lms-etl-pipeline-spark", **overrides: str) -> SparkSession:

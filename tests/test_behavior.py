@@ -1,4 +1,4 @@
-"""Behavioral invariants for plans/behavior.py (round-5b composites).
+"""Behavioral invariants for plans/behavior.py composites.
 
 Value-level cross-engine equality is covered by tools/check_oracle.py;
 these pin the semantic contracts a hash comparison can't express.
@@ -6,6 +6,7 @@ these pin the semantic contracts a hash comparison can't express.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -17,7 +18,7 @@ QUERIES = entrymod.queries()
 # ------------------------------------------------------------- item CF
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_item_cf_topk_symmetric_scores(spark):
     df = QUERIES["item_cooccurrence_cf"](spark, SF_SMOKE)
     rows = df.collect()

@@ -12,6 +12,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark import session
 from lms_etl_pipeline_spark.operators import bpe
 
 
@@ -119,7 +120,7 @@ def test_query_shape_and_monotone_counts(spark):
         )
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_local_learner_matches_textbook_and_distributed(spark):
     """The driver-local learner (hybrid deep path) must equal BOTH the
     textbook trainer and the distributed operator loop rule-for-rule —
@@ -171,7 +172,7 @@ def test_deep_query_hybrid_arms_agree(spark, monkeypatch):
         map(tuple, tokenizer.bpe_train_merges_deep(spark, SF_SMOKE).collect())
     )
     assert len(local) == 8
-    monkeypatch.setattr(bpe, "LOCAL_DICT_BUDGET_ROWS", 0)
+    monkeypatch.setattr(session, "LOCAL_COLLECT_BUDGET_ROWS", 0)
     dist = sorted(
         map(tuple, tokenizer.bpe_train_merges_deep(spark, SF_SMOKE).collect())
     )
@@ -179,9 +180,9 @@ def test_deep_query_hybrid_arms_agree(spark, monkeypatch):
 
 
 def test_deep_query_budget_knife_edge(spark, monkeypatch):
-    """VERDICT r10 #6: the hybrid gate at exactly |dictionary| ± 1 — budget
-    == dict rows takes the driver-local arm, budget == dict rows - 1 takes
-    the distributed fallback, and both arms must agree on the SAME fixture
+    """The hybrid gate at exactly |dictionary| ± 1 — budget == dict rows
+    takes the driver-local arm, budget == dict rows - 1 takes the
+    distributed fallback, and both arms must agree on the SAME fixture
     (the knife edge where one extra word flips the physical strategy)."""
     from lms_etl_pipeline_spark.operators import text as tx
     from lms_etl_pipeline_spark.plans import tokenizer
@@ -192,12 +193,21 @@ def test_deep_query_budget_knife_edge(spark, monkeypatch):
     d = load_table(spark, SF_SMOKE, "documents")
     n_dict = bpe.word_dictionary(d, tx.tokens("text")).count()
     assert n_dict > 1
+    fallbacks = []
+    distributed = tokenizer._train_distributed
+    monkeypatch.setattr(
+        tokenizer,
+        "_train_distributed",
+        lambda *a: fallbacks.append(1) or distributed(*a),
+    )
 
-    monkeypatch.setattr(bpe, "LOCAL_DICT_BUDGET_ROWS", n_dict)  # at budget
+    monkeypatch.setattr(session, "LOCAL_COLLECT_BUDGET_ROWS", n_dict)  # at budget
     at = sorted(map(tuple, tokenizer.bpe_train_merges_deep(spark, SF_SMOKE).collect()))
-    monkeypatch.setattr(bpe, "LOCAL_DICT_BUDGET_ROWS", n_dict - 1)  # 1 under
-    under = sorted(map(tuple, tokenizer.bpe_train_merges_deep(spark, SF_SMOKE).collect()))
-    assert at == under
+    assert not fallbacks, "a dictionary at the budget must stay on the driver"
+    monkeypatch.setattr(session, "LOCAL_COLLECT_BUDGET_ROWS", n_dict - 1)  # 1 over
+    over = sorted(map(tuple, tokenizer.bpe_train_merges_deep(spark, SF_SMOKE).collect()))
+    assert fallbacks == [1], "a dictionary over the budget must fall back"
+    assert at == over
     assert len(at) == 4
 
 
@@ -212,7 +222,7 @@ def test_encode_query_hybrid_arms_agree(spark, monkeypatch):
         map(tuple, tokenizer.bpe_encode_corpus(spark, SF_SMOKE).collect())
     )
     assert local
-    monkeypatch.setattr(bpe, "LOCAL_DICT_BUDGET_ROWS", 0)
+    monkeypatch.setattr(session, "LOCAL_COLLECT_BUDGET_ROWS", 0)
     dist = sorted(
         map(tuple, tokenizer.bpe_encode_corpus(spark, SF_SMOKE).collect())
     )

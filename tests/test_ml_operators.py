@@ -3,6 +3,7 @@ library APIs behind the unrolled oracle-checked plans)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators.ml import kmeans_assign, kmeans_fit, pagerank
@@ -45,7 +46,7 @@ def test_kmeans_fit_is_partitioning_invariant(spark):
     assert r1 == r8, "decimal-sum means must make results layout-independent"
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_pagerank_converges_and_ranks_hub_highest(spark):
     # star graph: everyone links to node h; h links to one spoke
     edges = spark.createDataFrame(
@@ -64,9 +65,9 @@ def test_kmeans_assign_empty_centroid_set_is_rejected_gracefully(spark):
     assert kmeans_assign(pts, cent).count() == 0
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_iterative_operators_scale_evidence_sf01(spark):
-    """Convergence-at-scale evidence (round-4 verdict #7): at sf0.1 both
+    """Convergence-at-scale evidence: at sf0.1 both
     general-iteration operators (a) converge strictly before max_iter,
     (b) finish inside a wall-clock bound, and (c) return results whose
     lineage is checkpoint-bounded — the optimized plan is a handful of

@@ -8,6 +8,7 @@ unicode, adversarial whitespace, permutations, partitionings).
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -78,7 +79,7 @@ def test_fingerprint_invariant_under_shuffle_and_dup(spark, words):
     ),
     st.integers(1, 8),
 )
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_dec_sum_partition_invariant(spark, values, parts):
     """The engine's decimal-sum convention is bit-identical under ANY
     partitioning — the property plain double sums lack."""
@@ -145,7 +146,7 @@ def test_jaccard_prefix_filter_is_lossless(spark, docs, t):
         st.tuples(st.integers(0, 4), st.integers(0, 4)), min_size=1, max_size=25
     )
 )
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 @SET
 def test_b3_pipeline_matches_reference(spark, labels):
     """The SQL B-cubed pipeline (three aggregates + joins, fixed-point
@@ -181,7 +182,7 @@ def test_b3_pipeline_matches_reference(spark, labels):
         st.tuples(st.integers(1, 20), st.booleans()), min_size=1, max_size=12
     )
 )
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 @SET
 def test_fifo_clamp_formula_matches_simulation(spark, lots):
     """The windowed clamp formula consumed_i = clamp(R - cum_prev, 0, qty)

@@ -23,6 +23,7 @@ tests pin the measured baselines on the sf0.001 fixture:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -43,7 +44,7 @@ def test_lsh_near_dup_full_recall_pinned(spark):
     assert row.recall == 1.0
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_lsh_banding_has_teeth(spark):
     """One 8-row band (every slot must match) measurably loses pairs —
     the metric the floor above relies on actually moves under banding

@@ -6,6 +6,8 @@ run 1 stays deduped in run 2.
 
 from __future__ import annotations
 
+import pytest
+
 from lms_etl_pipeline_spark import streaming
 from lms_etl_pipeline_spark.streaming.stateful import streaming_first_seen
 
@@ -18,7 +20,7 @@ def _land(spark, path, rows):
     ).coalesce(1).write.mode("append").parquet(path)
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_first_seen_across_runs(spark, tmp_path):
     landing = str(tmp_path / "in")
     ckpt = str(tmp_path / "ck")
@@ -50,7 +52,7 @@ def test_first_seen_across_runs(spark, tmp_path):
     assert sorted(got) == [("u3", "2024-01-01 02:00:01")]
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_streaming_corpus_dedup_pipeline(spark, tmp_path):
     """Composition: file stream -> content fingerprint -> stateful
     first-seen dedup -> collected sink.  A doc re-ingested in a later batch
@@ -95,7 +97,7 @@ def test_streaming_corpus_dedup_pipeline(spark, tmp_path):
     assert len(got) == 1  # only the new doc emerges
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_streaming_sessionize_emits_only_closed_sessions(spark, tmp_path):
     """Event-time-timeout sessionizer: a session is emitted exactly once —
     when the watermark passes its last event + gap — and open sessions
@@ -152,8 +154,6 @@ def test_running_totals_transform_with_state(spark, tmp_path):
     wire protocol) is unavailable — the container ships without it; the
     operator raises a named-dependency error there instead (gated seam,
     same contract as the multimodal codecs)."""
-    import pytest
-
     try:
         import google.protobuf  # noqa: F401
         _has_protobuf = True
@@ -222,7 +222,7 @@ def test_running_totals_transform_with_state(spark, tmp_path):
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_streaming_ewma_split_invariant_and_recursive(spark, tmp_path):
     """streaming_ewma folds the recurrence identically no matter where the
     micro-batch boundaries land: one-run ingestion and two-run ingestion
@@ -285,7 +285,7 @@ def test_streaming_ewma_split_invariant_and_recursive(spark, tmp_path):
     }, f"one={one} two={two} expect={expect}"
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_streaming_quota_gate_split_invariant(spark, tmp_path):
     """The quota gate admits exactly the first `limit` events per key by
     ts, with identical decisions whether the stream arrives as one batch

@@ -11,6 +11,8 @@ from __future__ import annotations
 import sqlite3
 from functools import partial
 
+import pytest
+
 from lms_etl_pipeline_spark import streaming
 from lms_etl_pipeline_spark.sinks import jdbc_upsert
 
@@ -21,7 +23,7 @@ def _write_batch(spark, path, rows):
     spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(path)
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_available_now_incremental_upsert(spark, tmp_path):
     landing = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
@@ -125,7 +127,7 @@ def test_sessionized_counts_streaming_plan(spark, tmp_path):
     assert sorted(got) == [(1, 1), (1, 2)]
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_watermark_drops_late_data_across_runs(spark, tmp_path):
     """Late-data semantics: a row older than the checkpointed watermark is
     dropped from windowed state; fresh rows aggregate normally."""
@@ -203,7 +205,7 @@ def test_rate_source_runtime_smoke(spark, tmp_path):
         q.stop()
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_stream_stream_join_within_bound(spark, tmp_path):
     """Watermarked stream-stream join: clicks attribute to the impression
     they follow within the bound; outside-bound clicks drop."""
@@ -244,7 +246,7 @@ def test_stream_stream_join_within_bound(spark, tmp_path):
     assert got == [(1, "2024-01-01 10:00:00", "2024-01-01 10:30:00")]
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_dedup_within_watermark_bounded_state(spark, tmp_path):
     """dropDuplicatesWithinWatermark: duplicates inside the watermark delay
     collapse to one row (within a run and across checkpointed runs)."""
@@ -456,7 +458,7 @@ def test_watermark_loss_curve_monotone(spark):
     assert all(0 <= r.drop_rate <= 1 for r in rows)
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_stream_stream_left_outer_emits_unmatched_after_watermark(spark, tmp_path):
     """LEFT OUTER stream-stream join: an impression with no click inside
     the bound must eventually emit with NULL right columns — but only
