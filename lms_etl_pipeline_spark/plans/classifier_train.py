@@ -22,15 +22,18 @@ This module adds that trainer as an exact, oracle-checkable operator:
   to a bounded statistic and the loop runs on the driver: the features'
   count histogram over ``(y, x1, x2, x3)`` is collected through
   ``session.collect_bounded`` (one action).  ``y`` is a function of the
-  x's, so the histogram is bounded by the feature domain, not by the
-  corpus.  Each iteration's d+2 sums are then count-weighted sums over the
+  x's, so the histogram has one row per distinct ``(x1, x2, x3)`` triple:
+  at most one per document, fewer wherever documents share a triple.
+  Each iteration's d+2 sums are then count-weighted sums over the
   histogram in exact Python-int arithmetic, and the weight update is the
   same O(d) sign/magnitude step either way.
 - **Fallback**: a histogram over ``session.LOCAL_COLLECT_BUDGET_ROWS``
-  takes the distributed loop: the feature frame is materialized and each
-  iteration is ONE map-side-combining aggregate over it (d+2 exact sums,
-  a 1-row collect), with the updated weights re-entering the next
-  iteration's plan as LITERALS — no broadcast join, no closure state.
+  takes the distributed loop over the histogram frame ``collect_bounded``
+  materialized for its collect, so the corpus pass never runs twice.
+  Each iteration is ONE map-side-combining, count-weighted aggregate over
+  it (d+2 exact sums, a 1-row collect), with the updated weights
+  re-entering the next iteration's plan as LITERALS — no broadcast join,
+  no closure state.
   Both arms produce the same trajectory bit for bit
   (tests/test_classifier_train.py runs each against a pure-Python
   reference).
@@ -41,8 +44,9 @@ This module adds that trainer as an exact, oracle-checkable operator:
   is sign/magnitude split for the same reason.  In the distributed arm,
   per-row products stay under int64 for any document below ~9.2e6 tokens
   (|r| <= 1e6 micro-units; the margin is the same precondition class
-  `pinball_loss_eval` documents) and cross-row sums go through
-  DECIMAL(38,0); the driver arm's Python ints are unbounded.  The OUTPUT
+  `pinball_loss_eval` documents); the count weights and the cross-row
+  sums go through DECIMAL(38,0); the driver arm's Python ints are
+  unbounded.  The OUTPUT
   emits the loss as two BIGINT limbs (``loss_hi = loss // 10^18``,
   ``loss_lo = loss % 10^18``) — unbounded exactness with no decimal-class
   column in the result: native-type cell hashing diverges on Python
@@ -52,23 +56,36 @@ This module adds that trainer as an exact, oracle-checkable operator:
   and zero weights (the oracle's NULL-sum arm).
 
 Scale posture (100 TB): feature extraction is the only corpus-sized work
-and runs once, feeding a partial-aggregated histogram whose size is set
-by the feature domain; K does not grow with data, and the driver holds
-the histogram plus d+1 integers.  The K iterations cost driver CPU
-proportional to the histogram, not Spark jobs: building the trainer
-launches the histogram's jobs only (≤ 3, pinned in
-tests/test_classifier_train.py), where the fallback launches a
-materialize plus one job per iteration.
+and runs once, feeding a partial-aggregated histogram; K does not grow
+with data, and the driver holds the histogram plus d+1 integers.  The K
+iterations cost driver CPU proportional to the histogram, not Spark
+jobs: building the trainer launches the histogram's jobs only (≤ 3,
+pinned in tests/test_classifier_train.py), where the fallback adds one
+aggregate job pair per iteration.  Which arm runs depends on the number
+of distinct feature triples, which nothing bounds but the document count:
+a corpus with long, varied documents can pass the budget, and then takes
+the fallback.  An over-budget histogram costs the rows the collect
+shipped before it saw the overflow (up to the budget) on top of the
+fallback itself.
 
-Measured: the fallback loop (SCALING.md, "the GD trainer's two-strategy
-materialize cells") is ~flat across sf0.1→sf1→~sf3→~sf10 under both
-materialize strategies, and persist beats localCheckpoint there by
-18–22% — its frame is narrow and re-scanned 12 times, so the columnar
-cache amortizes.  The driver arm re-scans nothing: on the benchmark's
-`iterative_builders` workload (perfbench/, 4-vCPU VM, ``local[4]``) one
-build-and-evaluate pass launches 5 jobs where the distributed loop
-launches 28 (3 vs 26 while building), and takes a median 3.2 s of CPU
-time against the distributed loop's 5.5 s (ten paired runs).
+Measured histogram sizes (distinct ``(y, x1, x2, x3)`` rows / documents
+with at least one token): sf0.001 454 / 500, sf0.01 446 / 500, sf0.1
+2 499 / 5 000, the benchmark's generated catalog 460 / 500.  These
+fixtures' documents have at most 100 tokens from a 31-word vocabulary,
+so their triple domain saturates; the figures say nothing of a real
+corpus's histogram, which can approach one row per document.
+
+Measured: the distributed loop (SCALING.md, "the GD trainer's
+two-strategy materialize cells", taken when it iterated over the
+feature frame rather than the histogram) is ~flat across
+sf0.1→sf1→~sf3→~sf10 under both materialize strategies, and persist
+beats localCheckpoint there by 18–22% — its frame is narrow and
+re-scanned 12 times, so the columnar cache amortizes.  The driver arm
+re-scans nothing: on the benchmark's `iterative_builders` workload
+(perfbench/, 4-vCPU VM, ``local[4]``) one build-and-evaluate pass
+launches 5 jobs where the distributed loop launches 28 (3 vs 26 while
+building), and takes a median 3.2 s of CPU time against the distributed
+loop's 5.5 s (ten paired runs).
 
 Scope note: the reference pipeline (``/root/reference/README.md``,
 pandas/boto3 Lambda ETL) has no model-training stage; this extends the
@@ -90,7 +107,7 @@ from lms_etl_pipeline_spark import session
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.plans.llm import _TOKS
-from lms_etl_pipeline_spark.session import materialize, release
+from lms_etl_pipeline_spark.session import release
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 #: GD iteration count — fixed, data-independent (each is one aggregate pass)
@@ -257,30 +274,31 @@ def _train_local(hist: list[tuple[int, int, int, int, int]]):
     return history, w
 
 
-def _train_distributed(spark: SparkSession, sf_dir: str):
+def _train_distributed(hist: DataFrame):
     """The over-budget fallback: one aggregate pass per GD iteration over
-    the materialized feature frame, weights re-entering as literals."""
-    feats = materialize(_features(spark, sf_dir))
+    the feature histogram ``collect_bounded`` materialized, count-weighted,
+    with the weights re-entering each pass as literals."""
+    c = F.col("count").cast("decimal(20,0)")
     w = [0, 0, 0, 0]
     history = []
     for it in range(1, GD_ITERS + 1):
         r = F.expr(f"({_margin_sql(w)}) - y * {_U}")
         # per-row products are int64-safe below ~9.2e6 tokens/doc
-        # (|r| <= 1e6); cross-row sums widen to DECIMAL(38,0)
-        row = feats.select(
-            r.alias("r"), "x1", "x2", "x3"
+        # (|r| <= 1e6); the count weight and the sums are DECIMAL(38,0)
+        row = hist.select(
+            r.alias("r"), "x1", "x2", "x3", "count"
         ).agg(
-            F.sum((F.col("r") * F.col("r")).cast("decimal(38,0)")).alias("loss_u"),
-            F.sum(F.col("r").cast("decimal(38,0)")).alias("g0"),
-            F.sum((F.col("r") * F.col("x1")).cast("decimal(38,0)")).alias("g1"),
-            F.sum((F.col("r") * F.col("x2")).cast("decimal(38,0)")).alias("g2"),
-            F.sum((F.col("r") * F.col("x3")).cast("decimal(38,0)")).alias("g3"),
-            F.count("*").alias("n"),
+            F.sum(c * (F.col("r") * F.col("r"))).alias("loss_u"),
+            F.sum(c * F.col("r")).alias("g0"),
+            F.sum(c * (F.col("r") * F.col("x1"))).alias("g1"),
+            F.sum(c * (F.col("r") * F.col("x2"))).alias("g2"),
+            F.sum(c * (F.col("r") * F.col("x3"))).alias("g3"),
+            F.sum("count").alias("n"),
         ).collect()[0]  # bounded: ONE row of d+2 scalars per iteration
-        _step(w, [int(row[f"g{j}"] or 0) for j in range(4)], row["n"])
+        _step(w, [int(row[f"g{j}"] or 0) for j in range(4)], row["n"] or 0)
         loss = row["loss_u"]
         history.append((it, int(loss) if loss is not None else None, *w))
-    release(feats)
+    release(hist)
     return history, w
 
 
@@ -288,15 +306,13 @@ def _train(spark: SparkSession, sf_dir: str):
     """Run the GD loop; returns (history rows, final weights).
 
     The feature histogram is collected once when it fits the driver
-    budget; otherwise the distributed loop runs.
+    budget; otherwise the distributed loop runs over it.
     """
-    hist = session.collect_bounded(
-        _features(spark, sf_dir).groupBy("y", "x1", "x2", "x3").count(),
-        session.LOCAL_COLLECT_BUDGET_ROWS,
-    )
-    if hist is None:
-        return _train_distributed(spark, sf_dir)
-    return _train_local([tuple(r) for r in hist])
+    hist = _features(spark, sf_dir).groupBy("y", "x1", "x2", "x3").count()
+    rows, frame = session.collect_bounded(hist)
+    if rows is None:
+        return _train_distributed(frame)
+    return _train_local([tuple(r) for r in rows])
 
 
 @query("quality_classifier_train", oracle=_TRAIN_ORACLE)

@@ -17,9 +17,10 @@ uses at scale:
    driver loop with the exact same tie rule and greedy-merge semantics
    (differentially pinned against the distributed operators in
    tests/test_bpe.py);
-3. an over-budget dictionary is materialized and takes the fully
-   distributed iteration, one lineage-cut barrier per merge — correctness
-   never depends on the dictionary fitting.
+3. an over-budget dictionary takes the fully distributed iteration, one
+   lineage-cut barrier per merge, starting from the dictionary frame the
+   collect already materialized — correctness never depends on the
+   dictionary fitting.
 
 Scope note: the reference pipeline (``/root/reference/README.md``) has no
 tokenizer stage; this extends the engine along the training-data axis the
@@ -43,7 +44,7 @@ from lms_etl_pipeline_spark.operators import bpe
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.plans.llm import _TOKS
-from lms_etl_pipeline_spark.session import materialize
+from lms_etl_pipeline_spark.session import materialize, release
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 #: merge budget for the deep-training query (driver-local arm: ~ms each;
@@ -165,15 +166,16 @@ def train_merges(spark: SparkSession, docs: DataFrame, n_merges: int) -> DataFra
     post-merge corpus token count, in ``_OUT_SCHEMA``; fewer rows when the
     dictionary runs out of adjacent pairs."""
     dk = bpe.word_dictionary(docs, tx.tokens("text"))
-    rows = session.collect_bounded(
-        dk.select("freq", "syms"), session.LOCAL_COLLECT_BUDGET_ROWS
-    )
+    rows, dk = session.collect_bounded(dk)
     if rows is not None:
         merges = bpe.learn_merges_local(
             [(r["freq"], r["syms"]) for r in rows], n_merges
         )
         return spark.createDataFrame(merges, _OUT_SCHEMA)
-    out = _train_distributed(materialize(dk), n_merges)
+    # every merge materializes its own frame, so the dictionary
+    # collect_bounded materialized is released once the loop is done
+    out = _train_distributed(dk, n_merges)
+    release(dk)
     if out is None:  # empty corpus: no pairs to merge anywhere
         return spark.createDataFrame([], _OUT_SCHEMA)
     return out
@@ -310,20 +312,21 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     dk = bpe.word_dictionary(d, tx.tokens("text"))
-    rows = session.collect_bounded(dk, session.LOCAL_COLLECT_BUDGET_ROWS)
+    rows, dk = session.collect_bounded(dk)
     if rows is not None:
         enc = bpe.encode_dictionary_local(
             [(r["word"], r["freq"], r["syms"]) for r in rows], _ENC_MERGES
         )
         ed = spark.createDataFrame(enc, "word string, syms array<string>")
     else:
-        cur = materialize(dk)
+        cur = dk
         for _ in range(_ENC_MERGES):
             b = materialize(bpe.best_pair(cur))
             if b.isEmpty():
                 break
             cur = materialize(bpe.apply_merge(cur, b), cut_lineage=True)
         ed = cur.select("word", "syms")
+        release(dk)
     toks = d.select(
         "doc_id", F.posexplode(tx.tokens("text")).alias("pos", "word")
     )

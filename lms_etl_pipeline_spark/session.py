@@ -229,27 +229,39 @@ def release(df) -> None:
         df.unpersist()
 
 
-#: Driver-side row budget for :func:`collect_bounded`.  8M rows of a few
-#: small columns is a few hundred MB, inside a normal driver heap; the
-#: frames collected through it are domain- or vocabulary-bounded (a feature
-#: histogram, a word-frequency dictionary) and sit well under it on real
-#: corpora.  Callers fall back to a distributed loop above it.
+#: Driver-side row budget for :func:`collect_bounded`: the largest frame a
+#: sequential trainer collects to loop on the driver.  8M rows of a few
+#: small columns is a few hundred MB, inside a normal driver heap; callers
+#: fall back to a distributed loop above it.
 LOCAL_COLLECT_BUDGET_ROWS = 8_000_000
 
 
-def collect_bounded(df, max_rows: int):
-    """Collect ``df`` to the driver if it has at most ``max_rows`` rows,
-    else return None.
+def collect_bounded(df):
+    """Collect ``df`` to the driver if it has at most
+    ``LOCAL_COLLECT_BUDGET_ROWS`` rows.  Returns ``(rows, None)`` in
+    budget and ``(None, frame)`` over it.
 
-    One action either way: the collect reads at most ``max_rows + 1`` rows
-    and the extra row is the over-budget signal, so no separate ``count()``
-    pass runs and an over-budget frame never lands on the driver whole.  A
-    negative budget always returns None.  This is the seam for sequential
-    trainers (GD, BPE merges) that collapse a corpus once to a bounded
-    statistic and then loop on the driver instead of paying one Spark job
-    per iteration."""
-    rows = df.limit(max(max_rows + 1, 0)).collect()
-    return rows if len(rows) <= max_rows else None
+    This is the seam for sequential trainers (GD, BPE merges) that collapse
+    a corpus once to a smaller statistic and then loop on the driver
+    instead of paying one Spark job per iteration.  One action either way:
+    the collect reads at most one row past the budget, and that row is the
+    over-budget signal, so no separate ``count()`` pass runs.
+
+    ``df`` goes through a lazy :func:`materialize` first, so the pass that
+    computes it for the collect also keeps it.  Over budget, ``frame`` is
+    that materialized ``df``: the caller's distributed fallback reads it
+    without re-running the pass that produced it, and must :func:`release`
+    it when done.  In budget it is released here.  What an over-budget
+    frame wastes is the rows shipped before the signal: up to the budget,
+    the same transfer an in-budget frame at the budget pays.  In persist
+    mode the collect launches one more job than in local-checkpoint mode:
+    adaptive execution builds the cache as a stage of its own."""
+    frame = materialize(df, eager=False)
+    rows = frame.limit(LOCAL_COLLECT_BUDGET_ROWS + 1).collect()
+    if len(rows) > LOCAL_COLLECT_BUDGET_ROWS:
+        return None, frame
+    release(frame)
+    return rows, None
 
 
 def get_spark(app_name: str = "lms-etl-pipeline-spark", **overrides: str) -> SparkSession:

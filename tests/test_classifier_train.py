@@ -54,8 +54,9 @@ def _py_reference(rows, iters, shift):
 
 
 def _arms(monkeypatch):
-    """Run the loop body once per training arm: ``driver`` (the shipped
-    budget) and ``distributed`` (a negative budget, which forces the
+    """Run the loop body once per training arm: ``driver`` (the feature
+    histogram collected under the shipped budget) and ``distributed``
+    (``collect_bounded`` forced to report over budget, which forces the
     fallback even on an empty corpus).  Yields the arm's name and checks
     that ``_train`` took that arm."""
     from lms_etl_pipeline_spark import session
@@ -68,14 +69,17 @@ def _arms(monkeypatch):
         "_train_distributed",
         lambda *a: fallbacks.append(1) or distributed(*a),
     )
-    for arm, budget in (
-        ("driver", session.LOCAL_COLLECT_BUDGET_ROWS),
-        ("distributed", -1),
-    ):
-        monkeypatch.setattr(session, "LOCAL_COLLECT_BUDGET_ROWS", budget)
+    collect = session.collect_bounded
+
+    def over_budget(df):
+        return None, df
+
+    for arm, collector in (("driver", collect), ("distributed", over_budget)):
+        monkeypatch.setattr(session, "collect_bounded", collector)
         fallbacks.clear()
         yield arm
         assert bool(fallbacks) == (arm == "distributed"), f"{arm} arm not taken"
+    monkeypatch.setattr(session, "collect_bounded", collect)
 
 
 class TestTrainExactness:
@@ -301,11 +305,13 @@ class TestPredictCacheHygiene:
         from lms_etl_pipeline_spark.plans.classifier_train import (
             quality_classifier_predict,
         )
+        from lms_etl_pipeline_spark import session
         from lms_etl_pipeline_spark.session import MATERIALIZE_CONF
 
         cm = spark._jsparkSession.sharedState().cacheManager()
         assert cm.isEmpty(), "precondition: another test leaked a cache entry"
-        for arm in _arms(monkeypatch):
+
+        def check(arm):
             spark.conf.set(MATERIALIZE_CONF, "persist")
             try:
                 out = quality_classifier_predict(spark, SF_SMOKE)
@@ -316,3 +322,10 @@ class TestPredictCacheHygiene:
                 f"quality_classifier_predict ({arm} arm) pinned a CacheManager "
                 "entry with no release handle"
             )
+
+        for arm in _arms(monkeypatch):
+            check(arm)
+        # a real over-budget collect hands the persisted histogram to the
+        # fallback, which must release it
+        monkeypatch.setattr(session, "LOCAL_COLLECT_BUDGET_ROWS", 0)
+        check("over-budget")

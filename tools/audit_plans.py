@@ -75,7 +75,6 @@ ALLOW_CROSS: dict[str, int] = {
     "benford_digit_test": 4,     # 1-row digit-count total broadcast
     "watermark_loss_curve": 4,   # 1-row event-total broadcast (drop-rate denominator)
     "gdpr_erasure_cascade": 8,   # small cohort broadcast onto 1-row per-table counts
-    "bpe_train_merges": 4,       # over-budget fallback: 1-row best-pair x 1-row token-count
     "knn_dot_product_mips": 8,   # 5-row query-set broadcast x linear scan
     "embedding_pairwise_stats": 512,  # bounded 200-row id-range all-pairs anchor
     "semdedup_threshold_sweep": 512,  # same bounded pair anchor + 1-row total broadcast
