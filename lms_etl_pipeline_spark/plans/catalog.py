@@ -10,6 +10,7 @@ driver's comparator sorts columns by name before hashing values.
 from __future__ import annotations
 
 from collections.abc import Callable
+from itertools import zip_longest
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -18,98 +19,26 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
 
-# The driver's differential-correctness budget covers the FIRST 50 entries of
-# ``queries()`` in iteration order.  Registration order is import order, which
-# front-loads one family and starves the rest; this explicit priority list
-# curates the first 50 to span every operator family (relational/TPC-H,
-# windows, streaming, text/dedup/ANN, Python compute surface, multimodal,
-# ETL parity, sources, scalar).  Everything not listed follows in
-# registration order, so the full catalog is still exposed.
-_PRIORITY: tuple[str, ...] = (
-    # Round-12 rotation — RE-CERT ECONOMY (policy recorded in round 8):
-    # slots after the two smoke anchors go to
-    #   (1) NEVER-CERTIFIED DEBT first (VERDICT r11 next-round #1): the
-    #       five round-11 additions that have never appeared in a driver
-    #       window — the PQ family (pq_codebook_train / pq_encode_codes /
-    #       knn_pq_adc / pq_recall_eval) and mmr_diverse_selection — all
-    #       locally exact at sf0.01, leading the window ahead of any
-    #       re-cert so cert_ledger's never-certified debt returns to 0;
-    #   (2) CHANGED since last driver row: scalar_date_funcs (oracle
-    #       rewritten to a sign-split integer floor — domain-independent
-    #       pre-epoch semantics, VERDICT r11 "what's wrong" #2),
-    #       multimodal_y4m_frames_real (parse_y4m now requires the
-    #       spec-mandated space/newline after the FRAME magic — r12
-    #       advisory), and join_bucketed_colocated (the orphan-warehouse
-    #       reclaim is now scheme- and content-guarded — r12 advisory);
-    #   (3) LONGEST-STALE certificates from the r1-r11 artifacts, oldest
-    #       last-green round first, name-ordered within a round so the
-    #       selection is reproducible from the artifacts alone.  The ten
-    #       rows-only-by-design queries all got their first driver window
-    #       (and green rows) in r11, so none re-enters this round — every
-    #       r12 slot is exact-oracle-backed.
-    # Invariants (unchanged since r5): the two smoke anchors stay
-    # in-window every round; rotated-out queries remain covered by the
-    # full-catalog local gate (tools/check_oracle.py) which the driver
-    # check is a same-engine, same-fixture subset of.
-    # tests/test_catalog.py re-derives this window from the policy and
-    # the r1-r11 artifacts, so drift fails CI.
-    "flagship_regional_revenue",
-    "events_session_window",
-    "pq_codebook_train",
-    "pq_encode_codes",
-    "knn_pq_adc",
-    "pq_recall_eval",
-    "mmr_diverse_selection",
-    "scalar_date_funcs",
-    "multimodal_y4m_frames_real",
-    "join_bucketed_colocated",
-    "dedup_fingerprint",
-    "dedup_winnowing",
-    "doc_repetition_signals",
-    "domain_cap_filter",
-    "etl_dq_violations",
-    "etl_parse_datetime_strict",
-    "event_type_itemsets",
-    "events_sessionize_gap",
-    "funnel_conversion",
-    "intra_doc_dedup",
-    "mixture_temperature_weights",
-    "multimodal_audio_decode",
-    "packing_efficiency",
-    "prefix_dup_candidates",
-    "psi_drift_report",
-    "q11_important_values",
-    "q13_customer_distribution",
-    "q22_dormant_balances",
-    "q4_order_priority",
-    "q7_nation_volume",
-    "retention_cohorts",
-    "sample_stable_per_group",
-    "scalar_higher_order_funcs",
-    "scalar_map_funcs",
-    "scd2_history_build",
-    "score_calibration_bins",
-    "source_reputation",
-    "text_redact_pii",
-    "token_count_bpe",
-    "triangle_count_cooccur",
-    "variant_semi_structured",
-    "window_first_last_nth",
-    "window_lag_lead",
-    "window_running_sum",
-    "winsorize_event_values",
-    "ab_quantile_treatment_effect",
-    "ab_sample_size_planning",
-    "acf_lags",
-    "activity_streaks",
-    "anova_f_event_types",
-)
+#: the two smoke queries; they lead ``queries()``
+SMOKE_ANCHORS = ("flagship_regional_revenue", "events_session_window")
 
 
 def _ordered(names: dict[str, object]) -> list[str]:
-    """Priority names first (those registered), then the rest in registration order."""
-    prioritized = [n for n in _PRIORITY if n in names]
-    return prioritized + [n for n in names if n not in set(prioritized)]
+    """Catalog order: the smoke anchors, then the oracle-backed queries
+    round-robin across their defining plan modules (each module in
+    registration order), then the rest in registration order.
+
+    A check that samples the first 50 entries of ``queries()`` thus sees
+    every operator family, not just the first modules imported.
+    """
+    by_module: dict[str, list[str]] = {}
+    for n, fn in _QUERIES.items():
+        if n in _ORACLES and n not in SMOKE_ANCHORS:
+            by_module.setdefault(fn.__module__, []).append(n)
+    spread = [n for rnd in zip_longest(*by_module.values()) for n in rnd if n]
+    head = [n for n in (*SMOKE_ANCHORS, *spread) if n in names]
+    seen = set(head)
+    return head + [n for n in names if n not in seen]
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:

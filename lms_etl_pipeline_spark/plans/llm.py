@@ -8,7 +8,7 @@ DuckDB — including MinHash (the md5-based universal-hash family is
 engine-portable, so the oracle computes *identical* signatures) and the
 connected-components clustering (recursive-CTE transitive closure).  Only
 the intrinsically approximate paths are rows-only — SimHash (xxhash64),
-hyperplane-LSH / IVF / MLlib-LSH recall, HLL sketches, seeded sampling —
+hyperplane-LSH / IVF recall, HLL sketches, seeded sampling —
 each anchored by an exact oracle-checked twin.
 """
 

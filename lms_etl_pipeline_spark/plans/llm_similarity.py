@@ -4,7 +4,7 @@ compute surface — the second half of the LLM-data plans, split from
 stay <= ~1,100 LoC).
 
 Families here: winnowing fingerprints, near-dup transitive clustering,
-the end-to-end corpus curation pipeline, SimHash, exact/LSH/IVF/MLlib
+the end-to-end corpus curation pipeline, SimHash, exact/LSH/IVF
 kNN over embeddings, embedding statistics and centroids, and the UDTF /
 pandas-UDAF / applyInPandas surface.  Tokenize/shingle/minhash SQL
 fragments and the quality/dedup primitives stay in ``plans/llm`` and are
@@ -212,10 +212,10 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain is (narrow projections + three hash shuffles + the LSH equi-join
     + diameter-bounded label iterations) — no stage is quadratic.
 
-    Tokenize-ONCE discipline (round 8): the corpus regex split is the
+    Tokenize-ONCE discipline: the corpus regex split is the
     chain's dominant per-row cost, and the naive composition pays it four
     times (quality features, fingerprint, and the minhash + verification
-    legs of the LSH stage).  The pipeline now materializes the token array
+    legs of the LSH stage).  The pipeline materializes the token array
     in the quality stage, fingerprints FROM it (``tx.fingerprint_of``),
     checkpoints the gated frame once — so the quality subtree itself runs
     once, not once per consumer — and hands the array to the LSH stage
@@ -224,7 +224,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lms_etl_pipeline_spark.operators.graph import connected_components
 
     d = load_table(spark, sf_dir, "documents")
-    # spread the corpus before the tokenize/HOF feature stage (round 12):
+    # spread the corpus before the tokenize/HOF feature stage:
     # a single-split fixture otherwise runs the whole quality pass on one
     # core; at scale (scan parallelism >= cores) this is a no-op.
     qf = materialize(
@@ -258,13 +258,13 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash per doc + bucket by the top-16-bit prefix — the cheap
     near-dup prefilter (xxhash64 is engine-specific => rows-only check)."""
-    # Round 12: the 64-bit vote loop is an O(64·n_tokens) interpreted
-    # array expression, and it previously ran on the raw single-split scan
-    # with the subtree INLINED twice (once for the signature, once under
-    # substring) — measured 6.7-7.0 s exec at sf0.1.  Spread first, then
-    # compute the signature in its own projection so the bucket reads the
-    # column attribute (CollapseProject keeps multi-referenced expensive
-    # exprs un-duplicated): ~0.5 s, identical rows.
+    # The 64-bit vote loop is an O(64·n_tokens) interpreted array
+    # expression: on the raw single-split scan with the subtree INLINED
+    # twice (once for the signature, once under substring) it measured
+    # 6.7-7.0 s exec at sf0.1.  Spread first, then compute the signature
+    # in its own projection so the bucket reads the column attribute
+    # (CollapseProject keeps multi-referenced expensive exprs
+    # un-duplicated): ~0.5 s, identical rows.
     d = spread_for_cpu(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
@@ -467,84 +467,6 @@ def knn_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 3)
         .select("q_id", "n_id", "rk", "cosine")
-    )
-
-
-@query("near_dup_pairs_mllib", oracle=None)
-def near_dup_pairs_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MLlib ``MinHashLSH`` twin of ``near_dup_pairs_lsh`` (SURVEY §2.12
-    names the MLlib primitive; the native-expression pipeline above is the
-    oracle-parity path).  3-gram shingles -> HashingTF -> MinHashLSH ->
-    approxSimilarityJoin on Jaccard distance <= 0.5.  Shingles, not raw
-    tokens: token-set Jaccard conflates docs that merely share common
-    vocabulary (measured: 88k of 125k possible pairs 'similar' at sf0.01).
-    Random hash family => rows-only check."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    d = load_table(spark, sf_dir, "documents")
-    toked = d.select("doc_id", tx.tokens("text").alias("_toks")).filter(F.size("_toks") >= 3)
-    shingled = spread_for_cpu(toked, "doc_id").select(
-        "doc_id", F.array_distinct(tx.shingles(F.col("_toks"), n=3)).alias("toks")
-    )
-    tf = HashingTF(inputCol="toks", outputCol="features", numFeatures=1 << 18, binary=True)
-    # localCheckpoint as a plan BARRIER, not (only) a cache: inside
-    # approxSimilarityJoin's self-join rewrite Catalyst re-collapses the
-    # projections and evaluates the MinHash UDF BEFORE this size filter,
-    # so a zero-token document (empty/whitespace text) aborts the join
-    # with "Must have at least 1 non zero entry" even though the filter
-    # excludes it (hostile-text fixture sweep).  Freezing the filtered
-    # frame keeps the UDF strictly after the filter.
-    # (materialize()'s persist path is an equivalent barrier: a cached
-    # frame plans as InMemoryRelation, which projection collapse cannot
-    # cross.)
-    feats = materialize(tf.transform(shingled).filter(F.size("toks") > 0))
-    mh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
-    model = mh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, 0.5, distCol="jaccard_dist")
-    return (
-        pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("a"),
-            F.col("datasetB.doc_id").alias("b"),
-            F.round(F.lit(1.0) - F.col("jaccard_dist"), 6).alias("jaccard"),
-        )
-    )
-
-
-@query("knn_mllib_brp", oracle=None)
-def knn_mllib_brp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MLlib ``BucketedRandomProjectionLSH`` ANN over the embeddings —
-    the Euclidean-distance scale path (SURVEY §2.12 similarity row);
-    ``knn_cosine_exact`` stays the oracle-checked anchor."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
-    )
-    brp = BucketedRandomProjectionLSH(
-        inputCol="features", outputCol="hashes", bucketLength=2.0, numHashTables=4, seed=42
-    )
-    if e.isEmpty():
-        # MLlib's fit() crashes on a zero-row frame ("head of empty
-        # array"); an empty corpus must yield an empty result.  The probe
-        # is a LIMIT-1 scan — negligible against the fit it gates.
-        return spark.createDataFrame(
-            [], "q_id BIGINT, n_id BIGINT, dist DOUBLE, rk INT"
-        )
-    model = brp.fit(e)
-    q = e.filter(F.col("vec_id") < 5)
-    pairs = model.approxSimilarityJoin(q, e, 10.0, distCol="dist")
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("n_id").asc())
-    return (
-        pairs.filter(F.col("datasetA.vec_id") != F.col("datasetB.vec_id"))
-        .select(
-            F.col("datasetA.vec_id").alias("q_id"),
-            F.col("datasetB.vec_id").alias("n_id"),
-            F.round("dist", 6).alias("dist"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
     )
 
 

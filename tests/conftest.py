@@ -12,31 +12,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
-def pytest_collection_modifyitems(config, items):
-    """Gate multi-minute sweeps behind ``@pytest.mark.slow`` (round 13).
-
-    The full suite grew to ~49 min quiet (~72 min contended) and outgrew the
-    driver's pytest window (VERIFY_r12 cut at 79% with zero failures), so an
-    unfinished gate proved nothing.  Default collection now skips tests
-    marked ``slow`` — the seeded-fuzzer sweeps, sf0.1 scale smokes, and
-    individual >~14 s wall-clock-bound tests — keeping the default run under
-    ~20 min.  The full suite stays runnable on demand:
-
-        RUN_SLOW=1 python -m pytest tests/ -q        # everything
-        python -m pytest tests/ -m slow -q           # only the gated sweeps
-    """
-    if os.environ.get("RUN_SLOW"):
-        return
-    if "slow" in (config.getoption("markexpr", None) or ""):
-        return
-    gate = pytest.mark.skip(
-        reason="gated slow sweep: set RUN_SLOW=1 (or -m slow) to run"
-    )
-    for item in items:
-        if "slow" in item.keywords:
-            item.add_marker(gate)
-
-
 @pytest.fixture(scope="session")
 def spark():
     # Few shuffle partitions: tests move KBs, not GBs.

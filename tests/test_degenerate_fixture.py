@@ -1,10 +1,10 @@
-"""Single-row-input robustness (round 8): the defects tools/make_sf_one.py
+"""Single-row-input robustness: the defects tools/make_sf_one.py
 found — the n-1 variance denominators, zero-variance normalizations,
 single-class pair counts, and 1x1 contingency tables that a zero-row sweep
 can't reach (NULLs short-circuit them).
 
 Full sweep: ``python tools/check_oracle.py .scratch/sf_one`` — expected
-292 pass, 0 fail, 10 rows-only.
+all pass.
 """
 
 from __future__ import annotations
@@ -12,13 +12,8 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-import __spark_entry__ as entrymod
-from tools.check_oracle import MAX_COMPARE_ROWS, compare
-from tools.make_sf0 import TABLES
+from tools.check_oracle import check, duck_views
 from tools.make_sf_one import build
-
-QUERIES = entrymod.queries()
-ORACLES = entrymod.oracle_sql()
 
 # every query the n=1 sweep caught ANSI-aborting or diverging (now green)
 FIXED = [
@@ -45,22 +40,13 @@ def sf_one(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck1(sf_one):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_one}/{t}.parquet/*.parquet')"
-        )
-    yield con
-    con.close()
+    with duck_views(sf_one) as con:
+        yield con
 
 
 @pytest.mark.parametrize("name", FIXED)
 def test_oracle_match_on_single_row_input(spark, sf_one, duck1, name):
-    sdf = QUERIES[name](spark, sf_one)
-    rel = duck1.sql(ORACLES[name])
-    problems = compare(
-        name, sdf, rel.limit(MAX_COMPARE_ROWS + 1).fetchall(), list(rel.columns)
-    )
+    problems = check(spark, duck1, name, sf_one)
     assert problems == [], problems
 
 

@@ -1,23 +1,22 @@
-"""Zero-row-input robustness (round 8): the defects tools/make_sf0.py found.
+"""Zero-row-input robustness: the defects tools/make_sf0.py found.
 
 A pipeline meets empty inputs constantly (filters that match nothing, empty
-ingest days); these tests pin the eight queries the empty-fixture sweep
-caught crashing or diverging, plus the one DOCUMENTED engine divergence
+ingest days); these tests pin the queries the empty-fixture sweep caught
+crashing or diverging, plus the one DOCUMENTED engine divergence
 (Spark CUBE/ROLLUP omit the grand-total grouping-set row over zero rows;
 DuckDB/PostgreSQL emit it per the SQL standard).
 
 Full sweep: ``python tools/check_oracle.py .scratch/sf0`` — expected
-290 pass, 2 fail (the cube/rollup divergence), 10 rows-only.
+all pass but the two cube/rollup divergences.
 """
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-from tools.check_oracle import MAX_COMPARE_ROWS, compare
-from tools.make_sf0 import TABLES, build
+from tools.check_oracle import check, duck_views
+from tools.make_sf0 import build
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
@@ -27,12 +26,12 @@ FIXED_CRASHES = [
     "wilson_conversion_ci",
     "lsh_recall_eval",
     "curated_corpus_partitioned_write",
-    # round 11: kth_smallest(k=0) on an empty column — now returns the
-    # oracle's empty join result instead of raising
+    # kth_smallest(k=0) on an empty column returns the oracle's empty
+    # join result instead of raising
     "quantile_exact_selection",
 ]
 # rows-only queries that crashed (must now return an empty frame)
-FIXED_CRASHES_ROWS_ONLY = ["knn_cosine_ivf", "knn_mllib_brp"]
+FIXED_CRASHES_ROWS_ONLY = ["knn_cosine_ivf"]
 # queries whose empty-input VALUES diverged from the oracle (now aligned)
 FIXED_DIVERGENCES = [
     "etl_dq_violations",
@@ -67,22 +66,15 @@ def sf0(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck0(sf0):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf0}/{t}.parquet/*.parquet')"
-        )
-    yield con
-    con.close()
+    with duck_views(sf0) as con:
+        yield con
 
 
 @pytest.mark.parametrize(
     "name", FIXED_CRASHES + FIXED_DIVERGENCES + [s for s in SAMPLE if s in ORACLES]
 )
 def test_oracle_match_on_empty_input(spark, sf0, duck0, name):
-    sdf = QUERIES[name](spark, sf0)
-    rel = duck0.sql(ORACLES[name])
-    problems = compare(name, sdf, rel.limit(MAX_COMPARE_ROWS + 1).fetchall(), list(rel.columns))
+    problems = check(spark, duck0, name, sf0)
     assert problems == [], problems
 
 

@@ -1,7 +1,7 @@
-"""Seeded-fuzzer regressions (round 8): tools/fuzz_fixture.py findings.
+"""Seeded-fuzzer regressions: tools/fuzz_fixture.py findings.
 
-Five seeds swept clean (292 exact each) after fixing four distinct defect
-classes the hand-built fixtures missed:
+Seeds 0-4 sweep clean after fixing four distinct defect classes the
+hand-built fixtures missed:
 
 - signed zero: WHICH zero IEEE min/max/subtraction return is
   engine-dependent; the comparator canonicalizes -0.0 (values were equal);
@@ -15,53 +15,46 @@ classes the hand-built fixtures missed:
   zero net period delta (share division), and the DECIMAL-literal
   double-rounding hazard in the s-curve's injected theory constants.
 
-Full sweep: ``python tools/fuzz_fixture.py <seed> --sweep`` — seeds 0-4
-expected 292 pass, 0 fail, 10 rows-only.
+Full sweep: ``python tools/fuzz_fixture.py <seed> --sweep`` — every
+oracle-backed query is expected to pass.
 
-Round 9 swept six more seeds (11-19 odd steps); seed 11 found a FIFTH class —
-the double-round tie: ``ROUND(q, 6)`` where the quotient q sits within
-an ulp of a decimal .5 boundary rounds the full binary expansion in
-Spark (BigDecimal HALF_UP) but the scaled double in DuckDB, landing on
-opposite sides.  Fix: when the operands are already engine-identical
-(exact decimal sum → one double cast → one IEEE divide), emit the
-UNROUNDED quotient — deterministic by IEEE 754 — instead of introducing
-a rounding step that is itself engine-divergent
+Seed 11 found a FIFTH class — the double-round tie: ``ROUND(q, 6)``
+where the quotient q sits within an ulp of a decimal .5 boundary rounds
+the full binary expansion in Spark (BigDecimal HALF_UP) but the scaled
+double in DuckDB, landing on opposite sides.  Fix: when the operands are
+already engine-identical (exact decimal sum → one double cast → one IEEE
+divide), emit the UNROUNDED quotient — deterministic by IEEE 754 —
+instead of introducing a rounding step that is itself engine-divergent
 (timeseries_seasonal_profile; pinned below on the seed-11 fixture).
 
-Round 10 widened the generator (seeds >=20: sub-day timestamp knife
-edges, NFC/NFD unicode hazards, negative metrics/balances) and swept the
-full 20-39 band clean after fixing three more classes on it: seed 20's
-float-EPOCH-cast rounding (SEVENTH class — DuckDB CAST(EPOCH(ts) AS
-BIGINT) rounds where Spark's unix_timestamp floors; oracle now floors in
-integer EPOCH_US), seed 23's round-tie recurrence in the attribution
-credit (the raw IEEE quotient is emitted), and seed 37's float32->decimal
-cast divergence (EIGHTH class, see FIXED_BY_SEED).
+Seeds >= 20 widen the generator (sub-day timestamp knife edges, NFC/NFD
+unicode hazards, negative metrics/balances); the 20-39 band sweeps clean
+after fixing three more classes on it: seed 20's float-EPOCH-cast
+rounding (SEVENTH class — DuckDB CAST(EPOCH(ts) AS BIGINT) rounds where
+Spark's unix_timestamp floors; oracle now floors in integer EPOCH_US),
+seed 23's round-tie recurrence in the attribution credit (the raw IEEE
+quotient is emitted), and seed 37's float32->decimal cast divergence
+(EIGHTH class, see FIXED_BY_SEED).
 
-Round 11 aimed the generator at the new trainers (seeds >=40: quality-gate
-knife-edge documents, dense `w####` vocabularies, dictionary-budget
-boundaries); seeds 40-42 swept clean, seed 43 found a NINTH class — the
-first OUTPUT-VOLUME defect (SymSpell's ungated distance-1 pair set is
-quadratic on dense singleton vocab: >2M agreed rows breached the
-comparator bound and spilled DuckDB to disk exhaustion, which also took
-down the unrelated llr_collocations run sharing the device).  Fixed with
-the index-side frequency-dominance gate; pinned in FIXED_BY_SEED.
+Seeds >= 40 aim the generator at the trainers (quality-gate knife-edge
+documents, dense `w####` vocabularies, dictionary-budget boundaries);
+seed 43 found a NINTH class — the first OUTPUT-VOLUME defect (SymSpell's
+ungated distance-1 pair set is quadratic on dense singleton vocab: >2M
+agreed rows breached the comparator bound and spilled DuckDB to disk
+exhaustion, which also took down the unrelated llr_collocations run
+sharing the device).  Fixed with the index-side frequency-dominance
+gate; pinned in FIXED_BY_SEED.
 """
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-import __spark_entry__ as entrymod
-from tools.check_oracle import MAX_COMPARE_ROWS, _norm_cell, compare
+from tools.check_oracle import _norm_cell, check, duck_views
 from tools.fuzz_fixture import SIZES, build
-from tools.make_sf0 import TABLES
 
-# Round 13: multi-minute sweep — gated from the default run (tests/conftest.py)
+# multi-minute sweep: excluded from the default run (pytest.ini)
 pytestmark = pytest.mark.slow
-
-QUERIES = entrymod.queries()
-ORACLES = entrymod.oracle_sql()
 
 # every query a seed-0..4 sweep caught (seed in comment)
 FIXED = [
@@ -76,7 +69,7 @@ FIXED = [
     "survival_kaplan_meier",           # 2: LN(0) on total churn
 ]
 
-#: round-9 seed findings: seed -> queries fixed on it (both are the
+#: seed findings: seed -> queries fixed on it (11 and 16 are the
 #: double-round-tie class; seed 16's fix additionally surfaced that
 #: DuckDB's // on DECIMAL operands is plain DOUBLE division — oracle
 #: integer division must go through HUGEINT)
@@ -87,7 +80,7 @@ FIXED_BY_SEED = {
     # the oracle's interval-on-timestamp as-of anchor 23h from the plan's
     # date-truncated one; both sides now truncate to DATE explicitly
     19: ["scd2_snapshot_asof"],
-    # seed 20 (round 10, the sub-day knife-edge axis): a SEVENTH class —
+    # seed 20 (the sub-day knife-edge axis): a SEVENTH class —
     # float-EPOCH-cast ROUNDS where Spark's unix_timestamp FLOORS, so a
     # 23:59:59.999999 instant diverged by one second; the oracle now
     # floors in exact integer microseconds (EPOCH_US // 1000000)
@@ -136,13 +129,8 @@ def fuzz0(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duckf(fuzz0):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fuzz0}/{t}.parquet/*.parquet')"
-        )
-    yield con
-    con.close()
+    with duck_views(fuzz0) as con:
+        yield con
 
 
 def test_fixture_is_deterministic(spark, tmp_path_factory):
@@ -162,11 +150,7 @@ def test_fixture_is_deterministic(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("name", FIXED)
 def test_oracle_match_on_fuzz_seed0(spark, fuzz0, duckf, name):
-    sdf = QUERIES[name](spark, fuzz0)
-    rel = duckf.sql(ORACLES[name])
-    problems = compare(
-        name, sdf, rel.limit(MAX_COMPARE_ROWS + 1).fetchall(), list(rel.columns)
-    )
+    problems = check(spark, duckf, name, fuzz0)
     assert problems == [], problems
 
 
@@ -181,23 +165,12 @@ def test_oracle_match_on_found_seeds(spark, tmp_path_factory, seed, name):
     diverged."""
     out = str(tmp_path_factory.mktemp(f"fuzz{seed}"))
     build(spark, seed, out)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{out}/{t}.parquet/*.parquet')"
-        )
-    try:
-        sdf = QUERIES[name](spark, out)
-        rel = con.sql(ORACLES[name])
-        problems = compare(
-            name, sdf, rel.limit(MAX_COMPARE_ROWS + 1).fetchall(), list(rel.columns)
-        )
-        assert problems == [], problems
-    finally:
-        con.close()
+    with duck_views(out) as con:
+        problems = check(spark, con, name, out)
+    assert problems == [], problems
 
 
-#: round-11 trainer-axis standing regression: seed 40 exercises the
+#: trainer-axis standing regression: seed 40 exercises the
 #: quality-rule knife edges / single-class / long-doc generator paths;
 #: these queries consume them most directly (GD trainer pair, BPE, the
 #: label-rule twin, token stats)
@@ -219,35 +192,24 @@ def fuzz40(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duckf40(fuzz40):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fuzz40}/{t}.parquet/*.parquet')"
-        )
-    yield con
-    con.close()
+    with duck_views(fuzz40) as con:
+        yield con
 
 
 @pytest.mark.parametrize("name", TRAINER_AXIS_QUERIES)
 def test_oracle_match_on_trainer_axis_seed40(spark, fuzz40, duckf40, name):
-    """Round 11: the widened generator's first seed stays a permanent
-    regression for the trainer-aimed axes (full 40-47 band swept clean
-    at round time)."""
-    sdf = QUERIES[name](spark, fuzz40)
-    rel = duckf40.sql(ORACLES[name])
-    problems = compare(
-        name, sdf, rel.limit(MAX_COMPARE_ROWS + 1).fetchall(), list(rel.columns)
-    )
+    """The trainer-axis generator's first seed stays a permanent
+    regression for the trainer-aimed axes (the 40-47 band sweeps clean)."""
+    problems = check(spark, duckf40, name, fuzz40)
     assert problems == [], problems
 
 
 def test_trainer_axes_only_from_seed40(spark, tmp_path_factory):
-    """Seeds below 40 must stay byte-identical to their pre-round-11
-    fixtures: the new generator paths draw NOTHING from the RNG stream on
-    the legacy branch.  The md5 below was taken from the seed-39
-    documents table built by the ROUND-10 generator (verified identical
-    to the round-11 rebuild at pin time), so any future edit that
-    perturbs legacy seeds fails here."""
+    """Seeds below 40 must stay byte-identical to the fixtures built
+    before the trainer axes existed: those generator paths draw NOTHING
+    from the RNG stream on the legacy branch.  The md5 below is of the
+    seed-39 documents table as the pre-trainer-axis generator built it,
+    so any edit that perturbs legacy seeds fails here."""
     import hashlib
 
     from tools.fuzz_fixture import TRAINER_AXES_FROM_SEED

@@ -1,4 +1,4 @@
-"""Hostile-values robustness (round 8): tools/make_sf_hostile.py findings.
+"""Hostile-values robustness: tools/make_sf_hostile.py findings.
 
 Two axes with different contracts:
 
@@ -7,8 +7,7 @@ Two axes with different contracts:
   legitimate data the engine must process EXACTLY — the differential sweep
   against the text-only fixture must stay green (found: tokenizer-parity
   break on zero-token fingerprints via DuckDB's NULL ARRAY_TO_STRING([]),
-  element_at/slice/sequence(1,0) ANSI aborts, a Catalyst UDF-before-filter
-  reorder inside MLlib's approxSimilarityJoin, and four zero-norm cosine
+  element_at/slice/sequence(1,0) ANSI aborts, and four zero-norm cosine
   aborts);
 - NON-FINITE metrics (NaN/Inf in events.value, embeddings.embedding):
   OUT OF DOMAIN by declaration — both engines rightly refuse NaN->DECIMAL
@@ -16,7 +15,7 @@ Two axes with different contracts:
   a fixture at preflight with named columns instead.
 
 Full text-axis sweep: ``python tools/check_oracle.py .scratch/sf_hostile_text``
-— expected 292 pass, 0 fail, 10 rows-only.
+— expected all pass.
 """
 
 from __future__ import annotations
@@ -24,14 +23,9 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-import __spark_entry__ as entrymod
 from tools.audit_plans import finite_metric_failures
-from tools.check_oracle import MAX_COMPARE_ROWS, compare
-from tools.make_sf0 import TABLES
+from tools.check_oracle import check, duck_views
 from tools.make_sf_hostile import build
-
-QUERIES = entrymod.queries()
-ORACLES = entrymod.oracle_sql()
 
 # oracle-backed queries the text-edge sweep caught crashing or diverging
 FIXED_TEXT = [
@@ -60,30 +54,14 @@ def sf_text(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def duck_text(sf_text):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_text}/{t}.parquet/*.parquet')"
-        )
-    yield con
-    con.close()
+    with duck_views(sf_text) as con:
+        yield con
 
 
 @pytest.mark.parametrize("name", FIXED_TEXT)
 def test_oracle_match_on_text_edges(spark, sf_text, duck_text, name):
-    sdf = QUERIES[name](spark, sf_text)
-    rel = duck_text.sql(ORACLES[name])
-    problems = compare(
-        name, sdf, rel.limit(MAX_COMPARE_ROWS + 1).fetchall(), list(rel.columns)
-    )
+    problems = check(spark, duck_text, name, sf_text)
     assert problems == [], problems
-
-
-def test_mllib_minhash_survives_zero_token_docs(spark, sf_text):
-    """The Catalyst reorder inside approxSimilarityJoin evaluated the
-    MinHash UDF before the size filters; the checkpoint barrier keeps it
-    after (would raise 'Must have at least 1 non zero entry' otherwise)."""
-    assert QUERIES["near_dup_pairs_mllib"](spark, sf_text).count() >= 0
 
 
 def test_finite_metric_gate_rejects_nonfinite_fixture(spark, tmp_path_factory):

@@ -1,4 +1,4 @@
-"""Local differential harness mimicking the driver's correctness gate.
+"""Spark-vs-DuckDB differential check over the query catalog.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same parquet fixtures, then compares row count, column
@@ -6,7 +6,8 @@ names, and order-insensitive values (exact, NaN-safe).  Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
 
-Exit code 0 iff every checked query matches.
+Exit code 0 iff every checked query matches.  ``duck_views`` and ``check``
+are the seam the test suite uses for the same comparison.
 """
 
 from __future__ import annotations
@@ -15,9 +16,31 @@ import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
+
+#: the fixture tables every ``sf_dir`` holds, one parquet file or directory each
+TABLES = (
+    "region nation customer supplier part orders lineitem events documents embeddings"
+).split()
+
+#: rows-only query -> its named EXACT anchors, each oracle-backed (the
+#: COVERAGE.md table; tests/test_catalog.py checks it covers exactly the
+#: catalog's rows-only set)
+ROWS_ONLY_ANCHORS: dict[str, tuple[str, ...]] = {
+    "agg_approx_count_distinct": ("agg_distinct_counts",),
+    "agg_approx_percentiles": ("agg_percentiles_exact",),
+    "sketch_hll_partial_merge": ("agg_distinct_counts",),
+    "dedup_simhash": ("simhash_exact_pairs",),
+    "knn_cosine_lsh": ("knn_cosine_exact", "ann_recall_eval"),
+    "knn_cosine_ivf": ("knn_cosine_exact", "ann_recall_eval"),
+    "sample_fraction": ("sample_stable_per_group",),
+    "sample_stratified_by_priority": (
+        "sample_stable_per_group",
+        "systematic_sample_stratified",
+    ),
+}
 
 
 def _norm_cell(v):
@@ -29,9 +52,7 @@ def _norm_cell(v):
         if v == 0.0:
             # canonicalize signed zero: -0.0 == 0.0 in SQL but reprs (and
             # hashes) differ, and WHICH zero IEEE min/max/subtraction
-            # return is engine-dependent (fuzz seed 0: GREATEST(-0.0, 0.0)
-            # and decimal-roundtrip means flipped the sign bit between
-            # engines on four queries while every VALUE matched)
+            # return is engine-dependent
             return 0.0
         return v
     return v
@@ -45,13 +66,12 @@ def hugeint_columns(rel) -> list[str]:
     The external driver hashes cells by native type: HUGEINT mismatches
     Spark's BIGINT, and a DECIMAL column fetches as ``decimal.Decimal``
     whose hash/repr differs from Spark's int/float even when every value
-    is equal (round 10's sole red driver row, `quality_classifier_train`,
-    was the one DECIMAL(38,0) output among 297 oracles).  Our fetchall()
-    comparator normalizes both classes -> Python scalars and is blind to
-    them, so this gate makes the defect structurally detectable: every
-    integer aggregate in an oracle must be CAST(... AS BIGINT) (split
-    into BIGINT limbs if the sum can exceed int64), and no query may
-    emit a decimal-typed output column on either side.
+    is equal.  Our fetchall() comparator normalizes both classes -> Python
+    scalars and is blind to them, so this gate makes the defect
+    structurally detectable: every integer aggregate in an oracle must be
+    CAST(... AS BIGINT) (split into BIGINT limbs if the sum can exceed
+    int64), and no query may emit a decimal-typed output column on either
+    side.
     """
     return [
         c
@@ -91,10 +111,10 @@ def native_class_divergences(s_rows, s_idx, duck_rows, d_idx, cols) -> list[str]
     """Columns whose first non-null cell has a DIFFERENT native Python
     class on the two fetch paths.
 
-    Generalizes the HUGEINT/DECIMAL rules (round 11, VERDICT r10 #2): the
-    external driver hashes cells by native type, so int-vs-Decimal,
-    float-vs-Decimal, or date-vs-datetime diverge even at equal values,
-    while the repr-based comparator can be blind to some of them.
+    Generalizes the HUGEINT/DECIMAL rules: a hasher that keys on native
+    type sees int-vs-Decimal, float-vs-Decimal, or date-vs-datetime
+    diverge even at equal values, while the repr-based comparator can be
+    blind to some of them.
     """
     out = []
     for c in cols:
@@ -148,55 +168,68 @@ def compare(name: str, spark_df, duck_rows, duck_cols) -> list[str]:
     return problems
 
 
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table over ``sf_dir``.
+
+    Reference fixtures are single parquet files; Spark-written fixtures
+    (the builders under ``tools/``) are directories of part files.
+    """
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path = f"{path}/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def check(spark, con, name: str, sf_dir: str) -> list[str]:
+    """Problems with oracle-backed query ``name`` on ``sf_dir``; empty = match.
+
+    ``con`` is a ``duck_views(sf_dir)`` connection.  The HUGEINT/DECIMAL
+    gates run first; values are compared only when both sides pass them.
+    """
+    from lms_etl_pipeline_spark import plans
+
+    sdf = plans.all_queries()[name](spark, sf_dir)
+    rel = con.sql(plans.all_oracles()[name])
+    problems = [
+        f"oracle emits driver-unsafe HUGEINT/DECIMAL in column {c!r} "
+        f"(CAST to BIGINT, or split into BIGINT limbs)"
+        for c in hugeint_columns(rel)
+    ] + [
+        f"Spark plan emits driver-unsafe DECIMAL in column {c!r} "
+        f"(cast to bigint/double, or split into BIGINT limbs)"
+        for c in spark_decimal_columns(sdf)
+    ]
+    if problems:
+        return problems
+    duck_rows = rel.limit(MAX_COMPARE_ROWS + 1).fetchall()
+    return compare(name, sdf, duck_rows, list(rel.columns))
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    import __spark_entry__ as entrymod
+    from lms_etl_pipeline_spark import plans
     from lms_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("oracle-check")
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        path = f"{sf_dir}/{t}.parquet"
-        # driver fixtures are single files; Spark-written fixtures (the
-        # synthetic deep-sweep scales under .scratch/) are directories
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
-        )
+    oracles = plans.all_oracles()
+    con = duck_views(sf_dir)
 
     n_pass = n_fail = n_rows_only = 0
-    for name, fn in sorted(qs.items()):
+    for name, fn in sorted(plans.all_queries().items()):
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
             if name not in oracles:
-                cnt = sdf.count()
+                cnt = fn(spark, sf_dir).count()
                 print(f"  ~ {name}: rows-only ({cnt} rows)")
                 n_rows_only += 1
                 continue
-            rel = con.sql(oracles[name])
-            duck_cols = list(rel.columns)
-            problems = [
-                f"oracle emits driver-unsafe HUGEINT/DECIMAL in column {c!r} "
-                f"(CAST to BIGINT, or split into BIGINT limbs)"
-                for c in hugeint_columns(rel)
-            ] + [
-                f"Spark plan emits driver-unsafe DECIMAL in column {c!r} "
-                f"(cast to bigint/double, or split into BIGINT limbs)"
-                for c in spark_decimal_columns(sdf)
-            ]
-            duck_rows = rel.limit(MAX_COMPARE_ROWS + 1).fetchall()
-            if not problems:
-                problems = compare(name, sdf, duck_rows, duck_cols)
+            problems = check(spark, con, name, sf_dir)
         except Exception as exc:  # noqa: BLE001
             problems = [f"EXCEPTION: {type(exc).__name__}: {exc}"]
         if problems:

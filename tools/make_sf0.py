@@ -1,21 +1,21 @@
 """Synthesize the ZERO-ROW fixture: every table, correct schema, no data.
 
-Round-8 robustness axis: a production pipeline regularly meets empty
-inputs (a filter that matched nothing, an empty ingest day, a new tenant),
-and "works on data" says nothing about whether a global aggregate divides
-by its own zero count, a writer round-trip loses its schema, or an MLlib
-fit crashes on a headless frame.  Sweeping the WHOLE catalog against this
-fixture found and fixed eight real defects in round 8 (five hard crashes:
-wilson_conversion_ci, lsh_recall_eval, curated_corpus_partitioned_write,
-knn_cosine_ivf, knn_mllib_brp; three empty-semantics divergences:
-etl_dq_violations, gini_concentration, cramers_v_association).
+A production pipeline regularly meets empty inputs (a filter that matched
+nothing, an empty ingest day, a new tenant), and "works on data" says
+nothing about whether a global aggregate divides by its own zero count, a
+writer round-trip loses its schema, or a model fit crashes on a headless
+frame.  Sweeping the WHOLE catalog against this fixture found real defects
+(hard crashes: wilson_conversion_ci, lsh_recall_eval,
+curated_corpus_partitioned_write, knn_cosine_ivf; empty-semantics
+divergences: etl_dq_violations, gini_concentration,
+cramers_v_association); tests/test_empty_fixture.py pins them.
 
 Usage:
     python tools/make_sf0.py [out_dir]          (default .scratch/sf0)
     python tools/check_oracle.py .scratch/sf0   (the sweep)
 
-Expected sweep result: 290 pass, 2 fail, 10 rows-only.  The two standing
-failures are agg_cube and agg_rollup — a DOCUMENTED ENGINE DIVERGENCE, not
+Expected sweep result: every oracle-backed query passes except two standing
+failures, agg_cube and agg_rollup — a DOCUMENTED ENGINE DIVERGENCE, not
 a defect in this repo: the SQL standard (and DuckDB/PostgreSQL) emit the
 grand-total grouping-set row even over zero input rows, while Spark's
 CUBE/ROLLUP return an empty result.  tests/test_empty_fixture.py pins both
@@ -30,10 +30,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from tools.check_oracle import TABLES  # noqa: E402 - the fixture table list
 
 DEFAULT_OUT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "sf0"

@@ -21,7 +21,7 @@ Usage:
     python tools/make_sf_one.py [out_dir]        (default .scratch/sf_one)
     python tools/check_oracle.py .scratch/sf_one (the sweep)
 
-Expected sweep result: 292 pass, 0 fail, 10 rows-only.
+Expected sweep result: every oracle-backed query passes.
 tests/test_degenerate_fixture.py pins the formerly-failing queries.
 """
 

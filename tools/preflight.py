@@ -1,26 +1,22 @@
-"""Preflight gate: the round may not ship unless this exits 0.
+"""Preflight gate: a change may not ship unless this exits 0.
 
-Runs, in order, the three checks that each independently catch catalog
+Runs, in order, the checks that each independently catch catalog
 regressions, and refuses on the first non-zero exit:
 
-1. ``pytest tests/ -q``                — unit/property/golden suite
+1. ``pytest tests/ -q``                — unit/property suite, including the
+                                         whole-catalog oracle gate at sf0.001
 2. ``tools/check_oracle.py <sf_dir>``  — full-catalog DuckDB differential
 3. ``tools/audit_plans.py <sf_dir>``   — physical-plan scale-red-flag audit
+4. ``tools/skew_stress.py --gate``     — skew mitigation: mitigated ==
+                                         unmitigated results, AQE skew-split
+                                         fires, the salt spreads the hot key
 
 Usage: python tools/preflight.py [sf_dir]   (default /root/testdata/sf0.01)
 
-Run this as the last action of every round; record the PASS line in the
-snapshot commit / PROGRESS entry.  (Round-3 retro: every gate existed and
-each would have caught the shipped NTZ regression — they just were not run
-after the final environment change.  This wrapper makes "run the gates" one
-command with one exit code.)
-
-Round-6 retro: ALSO run the full-catalog differential one scale up at
-least once per round (``python tools/check_oracle.py /root/testdata/sf0.1``)
-— the sf0.1 sweep caught a cross-engine rounding tie (embedding_centroids,
-odd-multiple-of-2^-10 float on a .5 nano boundary) that three rounds of
-sf0.001/0.01 gates never hit, because the tie needs a specific float VALUE
-to appear in the data.  Bigger fixtures sample more of the value space.
+Also run the full-catalog differential one scale up now and then
+(``python tools/check_oracle.py <sf0.1 fixture dir>``): cross-engine
+rounding ties need a specific float VALUE to appear in the data, and
+bigger fixtures sample more of the value space.
 """
 
 from __future__ import annotations
@@ -34,16 +30,7 @@ STEPS = lambda sf_dir: [  # noqa: E731
     ("pytest", [sys.executable, "-m", "pytest", "tests/", "-q"]),
     ("check_oracle", [sys.executable, "tools/check_oracle.py", sf_dir]),
     ("audit_plans", [sys.executable, "tools/audit_plans.py", sf_dir]),
-    # round 8: the r7 skew measurement as a standing MECHANISM gate —
-    # mitigated == unmitigated results, AQE skew-split demonstrably fires,
-    # deterministic salt spreads the hot key (~40s at reduced N; wall-clock
-    # claims stay in SCALING.md where they were measured at full N).
     ("skew_gate", [sys.executable, "tools/skew_stress.py", "--gate"]),
-    # round 8: rows-only -> exact-anchor chain must reconcile green.
-    ("cert_ledger", [sys.executable, "tools/cert_ledger.py"]),
-    # round 11: COVERAGE.md may not claim ✅ for a query whose latest
-    # driver row is non-green unless the line is marked 'driver-pending'.
-    ("coverage_gate", [sys.executable, "tools/coverage_gate.py"]),
 ]
 
 
