@@ -1,41 +1,36 @@
-"""Headline benchmark: wall-clock the engine's flagship queries at sf0.1.
+"""Headline benchmark: time the engine's flagship queries at sf0.1.
 
-Runs each headline query end-to-end on ``local[$SPARK_GRAFT_CPUS]`` against
-``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) and prints ONE
-JSON line::
+Runs each ``HEADLINE`` query end to end on ``local[$SPARK_GRAFT_CPUS]``
+against ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) and
+prints ONE compact JSON line on stdout::
 
     {"metric": "headline_total_sec", "value": N, "unit": "sec",
-     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
+     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1,
+     "exec_total_sec": N}
 
-The headline set is chosen to cover every expensive plan shape the engine
-claims: scan-heavy agg, fact-fact shuffle join + broadcast dims, outer join
-agg, window functions, event windowing, TF-IDF (explode + double agg +
-shuffle join), MinHash-LSH near-dup, and exact cosine top-k.
+``queries`` holds each query's best wall time over ``$BENCH_REPS`` reps
+(default 3), plan build included; ``value`` is their sum.
+``exec_total_sec`` sums each query's smallest in-job time: the Spark job
+durations of one rep, i.e. task scheduling plus executor work.  The rest
+of the wall time is driver-side work: Python plan building, Catalyst and
+codegen, Py4J.  The full record (per-query ``exec``, ``jobs``, ``spread``,
+``reps`` and ``plan_hashes``) goes to stderr as one JSON line.
 
-Measurement discipline (round-2 advisories):
+Wall time on a shared host is noisy.  Performance claims are judged with
+paired ``perfbench`` runs (CPU time of the process tree); this script is
+the headline timer and the plan-hash record.
 
-- each query is forced through a **full-column hash-sum sink**, not
-  ``count()`` — Catalyst column-prunes projection-only plans under count,
-  which silently under-reports projection-shaped work (e.g. minhash's
-  hash-slot arrays were being optimized away);
-- each query runs ``BENCH_REPS`` times (default 2; **min 5 for sub-second
-  queries** — round-9 finding: the driver's re-run of bit-identical plans
-  swung ±6% on the total and ±30% on sub-second queries at 2-3 reps, so
-  round-over-round "improvements" had outrun the noise floor) and reports
-  the MIN plus the **cross-rep spread** (max−min) per query;
-- every headline query's **normalized optimized-plan fingerprint** is
-  emitted alongside its timing, and each timing carries a
-  ``delta_significant`` flag — true ONLY when the plan hash changed or
-  |Δ vs the previous round| exceeds both runs' measured spreads.  A
-  round summary may claim a regression/improvement ONLY for flagged
-  queries; everything else is "plans unchanged, timing within noise";
-- (round 7) each query ALSO reports ``exec`` — the sum of Spark job
-  durations for the best rep, i.e. the in-job (scheduling + executor)
-  slice of the end-to-end wall time.  The gap to the end-to-end number is
-  driver-side per-plan overhead (Catalyst analysis, AQE re-planning,
-  Janino codegen compile, Py4J) that is constant per plan and amortizes
-  to nothing at the 100 TB design point.  ``value`` keeps the historical
-  end-to-end definition so the BENCH_r01-r06 series stays comparable.
+Measurement:
+
+- each query is forced through a full-column hash sink (``sink_of``), not
+  ``count()``: Catalyst column-prunes projection-only plans under a count,
+  which silently drops projection-shaped work;
+- every rep builds a fresh frame (``time_rep``), so no rep reuses another
+  rep's shuffle output;
+- sub-second queries get at least ``SUBSEC_MIN_REPS`` reps, since their
+  min-of-3 still swings by tens of percent on an unchanged plan;
+- ``plan_fingerprint`` hashes each optimized plan, so a timing change can
+  be told apart from a plan change.
 """
 
 from __future__ import annotations
@@ -63,115 +58,26 @@ HEADLINE = (
     "multimodal_image_decode",
     "dedup_embedding_cosine",
     "corpus_curation_pipeline",
-    # Round 8: representative of the bucketed exact global-order operator
-    # family (operators/rank.py) that 14 catalog queries were re-planned
-    # onto in round 7 — a regression in that operator was previously
-    # invisible to BENCH.
+    # the bucketed exact global-order operator family (operators/rank.py)
     "token_budget_selection",
-    # Round 9: representative of the as-of/temporal join family (cogrouped
-    # sort-merge "next event after t" shape) — cheap (~0.3 s) and guards a
-    # plan family BENCH was otherwise blind to.
+    # the as-of join family (cogrouped sort-merge "next event after t")
     "join_asof_next_purchase",
-    # Round 9: the new tokenizer-TRAINING family (BPE merge learning) —
-    # three materialize-barriered window iterations over the word
-    # dictionary; drift here means the iterative-window discipline broke.
+    # BPE merge learning: the shallow and the deep hybrid path
     "bpe_train_merges",
-    # Round 10: the realistic-budget hybrid (64 merges learned driver-side
-    # over the vocabulary-bounded dictionary) — guards the bounded-collect
-    # gate and the tokenize+count distributed prefix.
     "bpe_train_merges_deep",
-    # Round 10: distributed full-batch GD training (12 aggregate passes
-    # over a materialized feature frame + literal-weight re-entry) — the
-    # iterative-aggregate plan family BENCH was otherwise blind to.
+    # iterative full-batch GD training over a materialized feature frame
     "quality_classifier_train",
-    # Round 11: exact radix-selection quantiles (ONE batched 16-bit
-    # radix pass family: shared histogram + exact-count-gated direct
-    # resolve over a materialized integer column) — the sort-free
-    # exact-order-statistics family.
+    # sort-free exact quantiles (batched radix selection)
     "quantile_exact_selection",
-    # Round 11: DSIR importance selection — hashed-n-gram model build +
-    # bucket-keyed broadcast scoring + top-k; guards the hashed-feature
-    # explode/count family (one materialized corpus tokenize pass) BENCH
-    # was otherwise blind to.
+    # hashed-n-gram model build + broadcast scoring + top-k
     "dsir_importance_selection",
-    # Round 11: the REAL video-codec certificate (Y4M synth + pure-byte
-    # parse + strided frame sampling in one mapInPandas) — guards the
-    # real-codec mapInPandas family; the WAV/PPM twins share its shape.
+    # the real-codec mapInPandas family (Y4M synth + parse + frame sampling)
     "multimodal_y4m_frames_real",
 )
 
-# Sub-second queries sit inside the box's fixed-cost noise floor, where
-# min-of-2 still swings ±30% with an unchanged plan (measured rounds 4, 6,
-# and — decisively — the round-9 builder-vs-driver same-hash comparison):
-# they get at least this many reps so min + spread are meaningful.
+# Sub-second queries sit inside the host's fixed-cost noise floor: they get
+# at least this many reps so min and spread mean something.
 SUBSEC_MIN_REPS = 5
-
-# Contention detection (round 12, VERDICT r11 next-round #4): the official
-# r11 record shipped a non-reproducing 2x outlier (corpus_curation 7.27 s vs
-# 3.3-3.7 s on three other same-plan measurements) because the end-of-round
-# box was busy.  Two independent signals now guard the record:
-#   1. a fixed CALIBRATION probe — a pure-JVM hash-reduce over range() with
-#      no I/O and a frozen plan — whose min-of-3 is a box-speed sample;
-#      compared against the baseline record's probe, a ratio above
-#      CONTENTION_CAL_RATIO means this box is measurably slower than the
-#      one the baseline was recorded on;
-#   2. sum of cross-rep spreads relative to the headline total — a
-#      contended box can't reproduce its own timings rep-to-rep.
-# Either signal trips `contended`; the record is then labeled
-# confidence=low after ONE bounded re-rep pass of the worst offenders
-# (largest spread/min), so a transient spike gets a second chance before
-# the round is baselined on noise.
-CONTENTION_CAL_RATIO = 1.30
-CONTENTION_SPREAD_FRAC = 0.25
-CONTENTION_REREP_MAX = 5
-# Hypervisor steal fraction (of all cpu ticks elapsed during the headline
-# loop) above which the box demonstrably shares its host with a busy
-# neighbor.  Found the hard way at the end of round 12: a run where every
-# shuffle-heavy query came back 3-8x slow was labeled confidence=high
-# because uniform steal reproduces rep-to-rep (warm spread stays small) and
-# the calibration ratio compared against a record that predates the probe.
-# Measured on this box: quiet windows sit at 0.2-0.6% steal; the 65 s
-# outlier window measured 5.5%.
-CONTENTION_STEAL_PCT = 2.0
-
-# Round-12 measurement fix (declared in OPTIMIZATION_r12.md): the r12
-# baseline run tripped `spread_high` on a demonstrably QUIET box
-# (calibration probe 0.166 s — fastest in the series) because max−min over
-# all reps counts each plan's FIRST-rep Catalyst/codegen warm-up as noise.
-# The contention signal now uses the spread over reps AFTER the first
-# (warm spread — genuine run-to-run variance), and the default rep count
-# rises to 3 so every query has >= 2 warm samples.  The recorded `spread`
-# field keeps its historical all-reps definition (and the r01-r11 series
-# stays comparable); `warm_spread` is recorded alongside.
-
-
-def steal_sample() -> tuple[int, int] | None:
-    """(steal_ticks, total_ticks) from the aggregate /proc/stat cpu line,
-    or None where unreadable (non-Linux).  Steal is field 8: time this VM's
-    vCPUs were runnable but the hypervisor ran someone else — CPU loss that
-    neither load average nor our own process accounting can see."""
-    try:
-        with open("/proc/stat") as fh:
-            vals = [int(x) for x in fh.readline().split()[1:]]
-        return vals[7], sum(vals)
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def calibration_probe(spark, reps: int = 3) -> float:
-    """Min-of-``reps`` wall time of a fixed pure-compute job (xxhash64
-    reduce over 200M range rows on 32 partitions): no parquet, no Python
-    workers, no shuffle — the timing moves only with available CPU."""
-    from pyspark.sql import functions as F
-
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).select(
-            F.xxhash64("id").alias("h")
-        ).agg(F.bit_xor("h")).collect()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
 
 
 def sink_of(df):
@@ -205,6 +111,39 @@ def plan_fingerprint(df) -> str:
     return hashlib.md5(s.encode()).hexdigest()[:12]
 
 
+def time_rep(spark, fn, sf_dir: str) -> tuple[float, float, int]:
+    """One timed rep of query ``fn``: build a fresh frame and force it
+    through the sink.  Returns ``(wall_s, job_s, n_jobs)``: wall seconds
+    including the plan build (and any jobs the builder runs eagerly), the
+    summed durations of the Spark jobs the rep launched, and their count.
+
+    Re-collecting one DataFrame is no steady-state proxy: the scheduler
+    skips its already-computed shuffle map stages, so every rep rebuilds.
+    """
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def job_ids() -> set[int]:
+        # the status store is fed by the listener bus; drain it first so
+        # every job started so far is visible, with its end time
+        jsc.listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    before = job_ids()
+    t0 = time.perf_counter()
+    force_eval(fn(spark, sf_dir))
+    wall = time.perf_counter() - t0
+    new = job_ids() - before
+    store = jsc.statusStore()
+    job_s = 0.0
+    for jid in new:
+        jd = store.job(jid)
+        sub, end = jd.submissionTime(), jd.completionTime()
+        if sub.isDefined() and end.isDefined():
+            job_s += (end.get().getTime() - sub.get().getTime()) / 1000.0
+    return wall, job_s, len(new)
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -220,290 +159,52 @@ def main() -> int:
     qs = entrymod.queries()
     reps = max(int(os.environ.get("BENCH_REPS", "3")), 1)
 
-    # Warm the JVM + parquet footer caches once so per-query numbers measure
-    # the plan, not session startup.
+    # Warm the JVM and the parquet footer caches once, so per-query numbers
+    # measure the plan, not session start-up.
     force_eval(qs["flagship_regional_revenue"](spark, sf_dir))
 
-    # Box-speed sample BEFORE the headline loop (see calibration_probe).
-    calibration_sec = calibration_probe(spark)
-    steal_start = steal_sample()
-
-    # Spark job durations let us split each end-to-end rep into time INSIDE
-    # jobs (task scheduling + executor work — what scales with data) and
-    # driver-side gaps between them (Catalyst analysis, AQE re-planning,
-    # Janino codegen compile, Py4J — per-plan constants that amortize to
-    # nothing at the 100 TB design point but are a visible slice of wall
-    # time on a 10 MB fixture).  NOTE: re-collecting the SAME DataFrame is
-    # NOT a valid steady-state proxy — the scheduler skips already-computed
-    # shuffle map stages, so a re-collect measures only the final stage
-    # (measured: q1 re-collect 0.03 s vs 1.4 s of real map-stage work).
-    status_store = spark.sparkContext._jsc.sc().statusStore()
-    tracker = spark.sparkContext.statusTracker()
-
-    def _job_ids() -> set[int]:
-        return set(tracker.getJobIdsForGroup(None) or [])
-
-    def _jobs_sum(new_ids: set[int]) -> float:
-        tot = 0.0
-        for jid in new_ids:
-            jd = status_store.job(jid)
-            sub, comp = jd.submissionTime(), jd.completionTime()
-            if sub.isDefined() and comp.isDefined():
-                tot += (comp.get().getTime() - sub.get().getTime()) / 1000.0
-        return tot
-
     timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    warm_spreads: dict[str, float] = {}
     execs: dict[str, float] = {}
-    plans: dict[str, str] = {}
+    jobs: dict[str, int] = {}
+    spreads: dict[str, float] = {}
     reps_used: dict[str, int] = {}
+    plans: dict[str, str] = {}
     for name in HEADLINE:
         fn = qs[name]
-        samples: list[float] = []
-        ebest = float("inf")
+        samples: list[tuple[float, float, int]] = []
         n_reps = reps
-        done = 0
-        while done < n_reps:
-            before = _job_ids()
-            t0 = time.perf_counter()
-            force_eval(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-            try:
-                ebest = min(ebest, _jobs_sum(_job_ids() - before))
-            except Exception:  # noqa: BLE001 - status store is best-effort
-                pass
-            done += 1
-            # sub-second queries: escalate to SUBSEC_MIN_REPS (see above)
-            if done == n_reps and min(samples) < 1.0 and n_reps < SUBSEC_MIN_REPS:
-                n_reps = SUBSEC_MIN_REPS
-        timings[name] = round(min(samples), 3)
-        spreads[name] = round(max(samples) - min(samples), 3)
-        warm = samples[1:] or samples
-        warm_spreads[name] = round(max(warm) - min(warm), 3)
-        reps_used[name] = done
-        if ebest != float("inf"):
-            execs[name] = round(ebest, 3)
+        while len(samples) < n_reps:
+            samples.append(time_rep(spark, fn, sf_dir))
+            if len(samples) == n_reps and min(s[0] for s in samples) < 1.0:
+                n_reps = max(n_reps, SUBSEC_MIN_REPS)
+        walls = [s[0] for s in samples]
+        timings[name] = round(min(walls), 3)
+        spreads[name] = round(max(walls) - min(walls), 3)
+        execs[name] = round(min(s[1] for s in samples), 3)
+        jobs[name] = min(s[2] for s in samples)
+        reps_used[name] = len(samples)
         plans[name] = plan_fingerprint(fn(spark, sf_dir))
 
-    # Label each timing against the newest PARSEABLE prior-round
-    # fingerprints: a delta with plan_changed=false is box noise by
-    # construction; one with plan_changed=true names its own cause.
-    # "new" = first recording.
-    #
-    # Round-8 repair (VERDICT r7 "What's wrong #1"): the driver's
-    # BENCH_r{N}.json tail-capture can truncate the (long) JSON line, leaving
-    # parsed=null — so bench.py now (a) persists its OWN full artifact to
-    # BENCH_LOCAL_r{N}.json every run, and (b) walks candidates newest-round
-    # first across BOTH artifact families, skipping unparseable/hash-less
-    # ones, considering only rounds BEFORE the current one (an intra-round
-    # local rerun must not become its own baseline and mask a plan change).
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds_seen = [
-        int(m.group(1))
-        for f in os.listdir(here)
-        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", f))
-    ]
-    # The driver writes BENCH_r{N}.json at round end, after running bench —
-    # so while bench runs, the newest driver artifact is the PREVIOUS round.
-    current_round = int(
-        os.environ.get("SPARK_GRAFT_ROUND", (max(rounds_seen) + 1) if rounds_seen else 1)
-    )
-    candidates: list[tuple[int, int, str]] = []
-    for f in os.listdir(here):
-        m = re.fullmatch(r"BENCH(_LOCAL)?_r(\d+)\.json", f)
-        if not m:
-            continue
-        # current-round records (an intra-round local rerun) must not become
-        # their own plan baseline, but their calibration probe DOES join the
-        # series best — a quiet earlier run of this round keeps the bar
-        # honest for a later contended one.
-        cal_only = int(m.group(2)) >= current_round
-        # at equal round, prefer the driver's artifact (end-of-round state)
-        candidates.append(
-            (int(m.group(2)), 0 if m.group(1) else 1, f, cal_only)
-        )
-    prev_hashes: dict[str, str] = {}
-    prev_timings: dict[str, float] = {}
-    prev_spreads: dict[str, float] = {}
-    prev_calibration: float | None = None
-    baseline_file: str | None = None
-    for _rnd, _pri, f, cal_only in sorted(candidates, reverse=True):
-        try:
-            with open(os.path.join(here, f)) as fh:
-                doc = json.load(fh)
-            # the driver's BENCH_r{N}.json wraps our JSON line under
-            # "parsed"; a raw bench.py capture has plan_hashes at top level
-            doc = doc.get("parsed", doc) or doc
-            hashes = doc.get("plan_hashes") or {}
-        except (OSError, ValueError, AttributeError):
-            continue
-        # series-best probe across ALL parseable records — comparing only
-        # against the newest record lets the bar drift: one contended
-        # record (slow probe) would then make the NEXT contended run look
-        # fine.  The round-12 65 s outlier got confidence=high exactly this
-        # way (its baseline predated the probe, so the signal was inert).
-        cal = doc.get("calibration_sec")
-        if isinstance(cal, (int, float)) and (
-            prev_calibration is None or cal < prev_calibration
-        ):
-            prev_calibration = float(cal)
-        if hashes and baseline_file is None and not cal_only:
-            prev_hashes, baseline_file = hashes, f
-            prev_timings = doc.get("queries") or {}
-            prev_spreads = doc.get("spread") or {}
-    # --- contention check (round 12): re-rep the worst offenders once if
-    # either signal trips, then label the whole record's confidence so the
-    # next round's delta_significant isn't baselined on a noisy run.
-    steal_pct: float | None = None
-
-    def _signals() -> dict[str, bool]:
-        nonlocal steal_pct
-        total_now = sum(timings.values())
-        end = steal_sample()
-        if steal_start and end and end[1] > steal_start[1]:
-            steal_pct = round(
-                100.0
-                * (end[0] - steal_start[0])
-                / (end[1] - steal_start[1]),
-                2,
-            )
-        return {
-            "calibration_slow": (
-                prev_calibration is not None
-                and calibration_sec > CONTENTION_CAL_RATIO * prev_calibration
-            ),
-            "spread_high": (
-                total_now > 0
-                and sum(warm_spreads.values())
-                > CONTENTION_SPREAD_FRAC * total_now
-            ),
-            # hypervisor steal over the headline loop: uniform host-side
-            # contention passes BOTH signals above (it reproduces rep to
-            # rep, and a drifted baseline can blunt the probe ratio) — this
-            # reads the loss directly from the kernel.
-            "steal_high": (
-                steal_pct is not None and steal_pct > CONTENTION_STEAL_PCT
-            ),
-        }
-
-    signals = _signals()
-    if any(signals.values()):
-        worst = sorted(
-            (n for n in timings if timings[n] > 0),
-            key=lambda n: spreads[n] / timings[n],
-            reverse=True,
-        )[:CONTENTION_REREP_MAX]
-        for name in worst:
-            t0 = time.perf_counter()
-            force_eval(qs[name](spark, sf_dir))
-            t = time.perf_counter() - t0
-            if t < timings[name]:
-                spreads[name] = round(spreads[name] + timings[name] - t, 3)
-                timings[name] = round(t, 3)
-            else:
-                warm_spreads[name] = round(
-                    max(warm_spreads[name], t - timings[name]), 3
-                )
-            reps_used[name] += 1
-        signals = _signals()
-    contended = any(signals.values())
-
-    plan_changed = {
-        name: (
-            "new" if name not in prev_hashes
-            else plans[name] != prev_hashes[name]
-        )
-        for name in plans
-    }
-    # A round-over-round delta is attributable ONLY when the plan changed
-    # (the hash names the cause) or |Δ| clears BOTH runs' measured
-    # cross-rep spreads (pre-spread baselines contribute 0).  Everything
-    # else is run-to-run variance by construction — the round-9 lesson.
-    delta_significant = {}
-    for name in plans:
-        if plan_changed[name] is not False:  # True, or "new" (first recording)
-            delta_significant[name] = True
-            continue
-        prev_t = prev_timings.get(name)
-        if prev_t is None:
-            delta_significant[name] = True
-            continue
-        noise = max(spreads[name], prev_spreads.get(name, 0.0))
-        delta_significant[name] = abs(timings[name] - prev_t) > noise
-
-    total = round(sum(timings.values()), 3)
-    payload = {
+    line = json.dumps({
         "metric": "headline_total_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "reps": reps_used,
-        # Per-query sum of Spark job durations for the best fresh
-        # rep: the in-job (scheduling + executor) slice of the
-        # end-to-end number; the gap to "queries" is driver-side
-        # per-plan overhead (Catalyst/AQE/codegen compile/Py4J)
-        # that amortizes away at scale.  See the loop comment.
         "exec_total_sec": round(sum(execs.values()), 3),
+    })
+    # callers capture a bounded tail of stdout (~2000 chars)
+    assert len(line) < 1900, f"printed bench line is {len(line)} chars"
+    record = {
+        **json.loads(line),
         "exec": execs,
-        # max−min over this run's reps: the measured per-query noise floor
+        "jobs": jobs,
         "spread": spreads,
-        # max−min over reps AFTER the first (excludes one-time plan
-        # compile/codegen warm-up) — what the contention signal reads
-        "warm_spread": warm_spreads,
-        # true only when the plan hash changed or |Δ vs baseline| clears
-        # both runs' spreads — the ONLY queries a round summary may claim
-        # a regression/improvement for
-        "delta_significant": delta_significant,
+        "reps": reps_used,
         "plan_hashes": plans,
-        "plan_changed": plan_changed,
-        "plan_baseline": baseline_file,
-        # box-speed probe + contention verdict (see calibration_probe):
-        # a low-confidence record should not anchor round-over-round
-        # regression claims — compare plans, not wall times, against it
-        "calibration_sec": calibration_sec,
-        # hypervisor steal %% of all cpu ticks during the headline loop
-        # (None where /proc/stat is unreadable) — see steal_sample()
-        "steal_pct": steal_pct,
-        "contention_signals": signals,
-        "confidence": "low" if contended else "high",
-        "round": current_round,
     }
-    # Persist the full artifact independently of the driver's line capture,
-    # so the next round always has a parseable baseline to label
-    # plan_changed against.
-    try:
-        with open(os.path.join(here, f"BENCH_LOCAL_r{current_round:02d}.json"), "w") as fh:
-            fh.write(json.dumps(payload) + "\n")
-    except OSError:
-        pass  # read-only checkout must not break the driver's line capture
-    # The driver records only a bounded TAIL of stdout (~2000 chars):
-    # BENCH_r07..r10.json all came back "parsed": null because the full
-    # payload (plan_hashes, spread, delta_significant, ...) outgrew the
-    # capture and the line's HEAD was cut off.  PRINT a compact line that
-    # fits with wide margin — metric, value, per-query e2e, sf, exec
-    # total, round — and keep the full record in BENCH_LOCAL_r{N}.json
-    # (committed, diffable, and what bench.py itself baselines against).
-    compact = {
-        "metric": payload["metric"],
-        "value": payload["value"],
-        "unit": payload["unit"],
-        "queries": timings,
-        "sf": sf,
-        "exec_total_sec": payload["exec_total_sec"],
-        "calibration_sec": calibration_sec,
-        "steal_pct": steal_pct,
-        "confidence": payload["confidence"],
-        "round": current_round,
-    }
-    line = json.dumps(compact)
-    assert len(line) < 1900, (
-        f"printed bench line is {len(line)} chars — trim it below the "
-        "driver's ~2000-char tail capture or BENCH_r{N}.json goes "
-        "parsed=null again"
-    )
-    print(line)
+    print(json.dumps(record), file=sys.stderr, flush=True)
+    print(line, flush=True)
     return 0
 
 

@@ -141,6 +141,149 @@ def apply_merge(dict_df: DataFrame, best: DataFrame) -> DataFrame:
     )
 
 
+def merges_sql(tokens_sql: str, n_merges: int) -> str:
+    """DuckDB oracle twin of the merge loop: a ``WITH`` clause over the
+    ``documents`` table (no trailing comma) defining, for k = 1..n_merges,
+    the dictionary ``d{k}``, its winning pair ``best{k}`` (columns l, r,
+    pair_count), and the post-merge token count ``after{k}``
+    (corpus_tokens_after); the final dictionary is ``d{n_merges + 1}``.
+    ``tokens_sql`` is the DuckDB expression tokenizing ``text``.
+
+    Same formulas as :func:`best_pair` and :func:`apply_merge`, set-wise
+    greedy merge included.  When no pair remains (``best{k}`` empty) the
+    next dictionary is the current one, so an encode over a single-symbol
+    dictionary keeps its words; training emits no row for an empty
+    ``best{k}``, and every later ``best`` stays empty.
+
+    The dictionary and best-pair CTEs are ``AS MATERIALIZED``: DuckDB
+    inlines multiply-referenced CTEs, and each iteration references its
+    dictionary twice, so an un-hinted chain re-expands 2^K subtrees
+    ("too many open files" at K=64); materialized, the replay is linear.
+    """
+    chain = [
+        f"""
+    WITH d1 AS MATERIALIZED (
+      SELECT word, CAST(COUNT(*) AS BIGINT) AS freq,
+             REGEXP_EXTRACT_ALL(word, '(?s).') AS syms
+      FROM (SELECT UNNEST({tokens_sql}) AS word FROM documents)
+      GROUP BY word
+    )"""
+    ]
+    for k in range(1, n_merges + 1):
+        chain.append(f"""
+    pairs{k} AS (
+      SELECT freq, syms, UNNEST(RANGE(1, LEN(syms))) AS i FROM d{k}
+    ),
+    best{k} AS MATERIALIZED (
+      SELECT syms[i] AS l, syms[i + 1] AS r,
+             CAST(SUM(freq) AS BIGINT) AS pair_count
+      FROM pairs{k} GROUP BY 1, 2
+      ORDER BY pair_count DESC, l ASC, r ASC LIMIT 1
+    ),
+    pos{k} AS (
+      SELECT d.word, d.freq, b.l, b.r, d.syms,
+             UNNEST(RANGE(1, LEN(d.syms) + 1)) AS j
+      FROM d{k} d CROSS JOIN best{k} b
+    ),
+    occ{k} AS (
+      SELECT word, freq, l, r, j, syms[j] AS sym,
+             COALESCE(syms[j] = l AND LEAD(syms[j]) OVER
+                 (PARTITION BY word ORDER BY j) = r, FALSE) AS occ
+      FROM pos{k}
+    ),
+    st{k} AS (
+      SELECT *, occ AND NOT COALESCE(LAG(occ) OVER
+                 (PARTITION BY word ORDER BY j), FALSE) AS is_start
+      FROM occ{k}
+    ),
+    run{k} AS (
+      SELECT *, MAX(CASE WHEN is_start THEN j END)
+                 OVER (PARTITION BY word ORDER BY j
+                       ROWS UNBOUNDED PRECEDING) AS run_start
+      FROM st{k}
+    ),
+    kept{k} AS (
+      SELECT *, occ AND (j - run_start) % 2 = 0 AS kept
+      FROM run{k}
+    ),
+    cons{k} AS (
+      SELECT *, COALESCE(LAG(kept) OVER (PARTITION BY word ORDER BY j),
+                         FALSE) AS consumed
+      FROM kept{k}
+    ),
+    d{k + 1} AS MATERIALIZED (
+      SELECT word, freq,
+             LIST(CASE WHEN kept THEN l || r ELSE sym END ORDER BY j) AS syms
+      FROM cons{k} WHERE NOT consumed
+      GROUP BY word, freq
+      UNION ALL
+      SELECT word, freq, syms FROM d{k}
+      WHERE NOT EXISTS (SELECT 1 FROM best{k})
+    ),
+    after{k} AS (
+      SELECT CAST(SUM(freq * LEN(syms)) AS BIGINT) AS corpus_tokens_after
+      FROM d{k + 1}
+    )""")
+    return ",".join(chain)
+
+
+def train_merges_sql(tokens_sql: str, n_merges: int) -> str:
+    """DuckDB oracle of merge TRAINING: one row per learned merge
+    (iteration, merge_left, merge_right, pair_count, corpus_tokens_after)
+    over :func:`merges_sql`'s chain."""
+    return merges_sql(tokens_sql, n_merges) + "\n    UNION ALL".join(
+        f"""
+    SELECT {k} AS iteration, b.l AS merge_left, b.r AS merge_right,
+           b.pair_count, a.corpus_tokens_after
+    FROM best{k} b CROSS JOIN after{k} a"""
+        for k in range(1, n_merges + 1)
+    )
+
+
+def _greedy_merges(words: list[tuple[list[str], int]], n_merges: int):
+    """The driver-local merge loop shared by :func:`learn_merges_local` and
+    :func:`encode_dictionary_local`.  ``words``: (syms, freq) per distinct
+    word.  Yields ``(left, right, pair_count, words)`` after each merge,
+    ``words`` rewritten in the same order; stops early when no adjacent
+    pair remains.
+
+    - pair counts sum ``freq`` over EVERY adjacent position, overlapping
+      runs included (``aaa`` counts (a,a) twice) — matching
+      :func:`best_pair`'s posexplode;
+    - winner ties break (count DESC, left ASC, right ASC); Python string
+      comparison is code-point order, which equals the UTF-8 binary order
+      Spark and DuckDB compare by;
+    - the merge applies greedily left-to-right, non-overlapping —
+      :func:`apply_merge`'s set-wise even-offset formula is proven
+      equivalent (tests/test_bpe.py).
+    """
+    for _ in range(n_merges):
+        counts: dict[tuple[str, str], int] = {}
+        for syms, freq in words:
+            for a, b in zip(syms, syms[1:]):
+                counts[(a, b)] = counts.get((a, b), 0) + freq
+        if not counts:
+            return
+        (left, right), pair_count = min(
+            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
+        )
+        merged = left + right
+        new_words: list[tuple[list[str], int]] = []
+        for syms, freq in words:
+            i, acc = 0, []
+            n = len(syms)
+            while i < n:
+                if i + 1 < n and syms[i] == left and syms[i + 1] == right:
+                    acc.append(merged)
+                    i += 2
+                else:
+                    acc.append(syms[i])
+                    i += 1
+            new_words.append((acc, freq))
+        words = new_words
+        yield left, right, pair_count, words
+
+
 def learn_merges_local(
     dict_rows: list[tuple[int, list[str]]], n_merges: int
 ) -> list[tuple[int, str, str, int, int]]:
@@ -159,55 +302,21 @@ def learn_merges_local(
     The collect is gated by ``session.LOCAL_COLLECT_BUDGET_ROWS`` at the
     call site (``session.collect_bounded``).
 
-    Semantics are IDENTICAL to the distributed operators (pinned by
-    differential tests + the shared DuckDB oracle):
-
-    - pair counts sum ``freq`` over EVERY adjacent position, overlapping
-      runs included (``aaa`` counts (a,a) twice) — matching
-      :func:`best_pair`'s posexplode;
-    - winner ties break (count DESC, left ASC, right ASC); Python string
-      comparison is code-point order, which equals the UTF-8 binary order
-      Spark and DuckDB compare by;
-    - the merge applies greedily left-to-right, non-overlapping —
-      :func:`apply_merge`'s set-wise even-offset formula is proven
-      equivalent (tests/test_bpe.py).
+    Semantics are IDENTICAL to the distributed operators (see
+    :func:`_greedy_merges`; pinned by differential tests + the shared
+    DuckDB oracle).
 
     ``dict_rows``: (freq, syms) per distinct word.  Returns one row per
     learned merge: (iteration, left, right, pair_count,
     corpus_tokens_after); stops early when no adjacent pair remains.
     """
-    words: list[tuple[list[str], int]] = [
-        (list(syms), int(freq)) for freq, syms in dict_rows
-    ]
-    out: list[tuple[int, str, str, int, int]] = []
-    for it in range(1, n_merges + 1):
-        counts: dict[tuple[str, str], int] = {}
-        for syms, freq in words:
-            for a, b in zip(syms, syms[1:]):
-                counts[(a, b)] = counts.get((a, b), 0) + freq
-        if not counts:
-            break
-        (left, right), pair_count = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
+    words = [(list(syms), int(freq)) for freq, syms in dict_rows]
+    return [
+        (it, left, right, pair_count, sum(f * len(s) for s, f in cur))
+        for it, (left, right, pair_count, cur) in enumerate(
+            _greedy_merges(words, n_merges), 1
         )
-        merged = left + right
-        total = 0
-        new_words: list[tuple[list[str], int]] = []
-        for syms, freq in words:
-            i, acc = 0, []
-            n = len(syms)
-            while i < n:
-                if i + 1 < n and syms[i] == left and syms[i + 1] == right:
-                    acc.append(merged)
-                    i += 2
-                else:
-                    acc.append(syms[i])
-                    i += 1
-            new_words.append((acc, freq))
-            total += freq * len(acc)
-        words = new_words
-        out.append((it, left, right, pair_count, total))
-    return out
+    ]
 
 
 def encode_dictionary_local(
@@ -216,41 +325,15 @@ def encode_dictionary_local(
     """(word -> final symbol sequence) after ``n_merges`` greedy BPE merges
     — the driver-local arm of corpus ENCODING (``bpe_encode_corpus``).
 
-    Merge learning and application are the SAME loops as
-    :func:`learn_merges_local` (freq-weighted overlapping pair counts,
-    (count DESC, left ASC, right ASC) tie rule, left-to-right greedy
-    rewrite); this variant keeps word identity so the encoded dictionary
-    can be joined back to the corpus.  Differentially pinned against the
-    distributed ``best_pair``/``apply_merge`` loop in tests/test_bpe.py.
+    The same loop as :func:`learn_merges_local` (:func:`_greedy_merges`),
+    keeping word identity so the encoded dictionary can be joined back to
+    the corpus.  Differentially pinned against the distributed
+    ``best_pair``/``apply_merge`` loop in tests/test_bpe.py.
 
     ``rows``: (word, freq, syms) per distinct word.  Stops early when no
     adjacent pair remains (single-symbol dictionary).
     """
-    words: list[tuple[str, int, list[str]]] = [
-        (w, int(f), list(s)) for w, f, s in rows
-    ]
-    for _ in range(n_merges):
-        counts: dict[tuple[str, str], int] = {}
-        for _, f, syms in words:
-            for a, b in zip(syms, syms[1:]):
-                counts[(a, b)] = counts.get((a, b), 0) + f
-        if not counts:
-            break
-        (left, right), _ = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        merged = left + right
-        new_words: list[tuple[str, int, list[str]]] = []
-        for w, f, syms in words:
-            i, acc = 0, []
-            n = len(syms)
-            while i < n:
-                if i + 1 < n and syms[i] == left and syms[i + 1] == right:
-                    acc.append(merged)
-                    i += 2
-                else:
-                    acc.append(syms[i])
-                    i += 1
-            new_words.append((w, f, acc))
-        words = new_words
-    return [(w, syms) for w, _, syms in words]
+    words = [(list(s), int(f)) for _, f, s in rows]
+    for *_, words in _greedy_merges(words, n_merges):
+        pass
+    return [(w, syms) for (w, _, _), (syms, _) in zip(rows, words)]

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark.operators import bpe
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans import anchors
 from lms_etl_pipeline_spark.plans.catalog import query
@@ -893,86 +894,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- BPE tokenizer training (merge-rule learning) ----------------------------
 
 _BPE_ITERS = 3
-
-
-def _bpe_iter_sql(k: int) -> str:
-    """One BPE training iteration as chained DuckDB CTEs: d{k} -> best{k}
-    (most frequent adjacent pair, lexicographic tie-break) -> d{k+1} (the
-    greedy left-to-right merge applied set-wise — see operators/bpe.py:
-    an occurrence merges iff its offset from the start of its
-    occurrence-run is even, which is exact for a != b trivially and for
-    a == b reproduces textbook run behavior)."""
-    return f"""
-    pairs{k} AS (
-      SELECT freq, syms, UNNEST(RANGE(1, LEN(syms))) AS i FROM d{k}
-    ),
-    best{k} AS (
-      SELECT syms[i] AS l, syms[i + 1] AS r,
-             CAST(SUM(freq) AS BIGINT) AS pair_count
-      FROM pairs{k} GROUP BY 1, 2
-      ORDER BY pair_count DESC, l ASC, r ASC LIMIT 1
-    ),
-    pos{k} AS (
-      SELECT d.word, d.freq, b.l, b.r, d.syms,
-             UNNEST(RANGE(1, LEN(d.syms) + 1)) AS j
-      FROM d{k} d CROSS JOIN best{k} b
-    ),
-    occ{k} AS (
-      SELECT word, freq, l, r, j, syms[j] AS sym,
-             COALESCE(syms[j] = l AND LEAD(syms[j]) OVER
-                 (PARTITION BY word ORDER BY j) = r, FALSE) AS occ
-      FROM pos{k}
-    ),
-    st{k} AS (
-      SELECT *, occ AND NOT COALESCE(LAG(occ) OVER
-                 (PARTITION BY word ORDER BY j), FALSE) AS is_start
-      FROM occ{k}
-    ),
-    run{k} AS (
-      SELECT *, MAX(CASE WHEN is_start THEN j END)
-                 OVER (PARTITION BY word ORDER BY j
-                       ROWS UNBOUNDED PRECEDING) AS run_start
-      FROM st{k}
-    ),
-    kept{k} AS (
-      SELECT *, occ AND (j - run_start) % 2 = 0 AS kept
-      FROM run{k}
-    ),
-    cons{k} AS (
-      SELECT *, COALESCE(LAG(kept) OVER (PARTITION BY word ORDER BY j),
-                         FALSE) AS consumed
-      FROM kept{k}
-    ),
-    d{k + 1} AS (
-      SELECT word, freq,
-             LIST(CASE WHEN kept THEN l || r ELSE sym END ORDER BY j) AS syms
-      FROM cons{k} WHERE NOT consumed
-      GROUP BY word, freq
-    ),
-    after{k} AS (
-      SELECT CAST(SUM(freq * LEN(syms)) AS BIGINT) AS corpus_tokens_after
-      FROM d{k + 1}
-    )"""
-
-
-_BPE_ORACLE = (
-    f"""
-    WITH d1 AS (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS freq,
-             REGEXP_EXTRACT_ALL(word, '(?s).') AS syms
-      FROM (SELECT UNNEST({_TOKS}) AS word FROM documents)
-      GROUP BY word
-    ),"""
-    + ",".join(_bpe_iter_sql(k) for k in range(1, _BPE_ITERS + 1))
-    + "".join(
-        f"""
-    {"SELECT" if k == 1 else "UNION ALL SELECT"} {k} AS iteration,
-           b.l AS merge_left, b.r AS merge_right, b.pair_count,
-           a.corpus_tokens_after
-    FROM best{k} b CROSS JOIN after{k} a"""
-        for k in range(1, _BPE_ITERS + 1)
-    )
-)
+_BPE_ORACLE = bpe.train_merges_sql(_TOKS, _BPE_ITERS)
 
 
 @query("bpe_train_merges", oracle=_BPE_ORACLE)

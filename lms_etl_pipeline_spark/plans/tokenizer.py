@@ -26,12 +26,9 @@ Scope note: the reference pipeline (``/root/reference/README.md``) has no
 tokenizer stage; this extends the engine along the training-data axis the
 build mandates, over the ``documents`` fixture.
 
-Oracle strategy: DuckDB replays the SAME K iterations via a generated CTE
-chain.  The dictionary CTEs are ``AS MATERIALIZED`` — DuckDB inlines
-multiply-referenced CTEs, and each iteration references its dictionary
-twice, so the un-hinted chain re-expands 2^K subtrees (measured: "too many
-open files" at K=64); materialization keeps the replay linear (~3 s at
-sf0.01).
+Oracle strategy: DuckDB replays the SAME K iterations through one
+generated CTE chain, ``operators.bpe.merges_sql`` (shared with
+``bpe_train_merges``' oracle).
 """
 
 from __future__ import annotations
@@ -56,94 +53,27 @@ _OUT_SCHEMA = (
     "pair_count bigint, corpus_tokens_after bigint"
 )
 
-
-def _iter_sql(k: int) -> str:
-    """One BPE merge iteration as DuckDB CTEs (same formulas as
-    plans/curation.py's K=3 oracle, plus MATERIALIZED hints — see module
-    docstring)."""
-    return f"""
-    pairs{k} AS (
-      SELECT freq, syms, UNNEST(RANGE(1, LEN(syms))) AS i FROM d{k}
-    ),
-    best{k} AS MATERIALIZED (
-      SELECT syms[i] AS l, syms[i + 1] AS r,
-             CAST(SUM(freq) AS BIGINT) AS pair_count
-      FROM pairs{k} GROUP BY 1, 2
-      ORDER BY pair_count DESC, l ASC, r ASC LIMIT 1
-    ),
-    pos{k} AS (
-      SELECT d.word, d.freq, b.l, b.r, d.syms,
-             UNNEST(RANGE(1, LEN(d.syms) + 1)) AS j
-      FROM d{k} d CROSS JOIN best{k} b
-    ),
-    occ{k} AS (
-      SELECT word, freq, l, r, j, syms[j] AS sym,
-             COALESCE(syms[j] = l AND LEAD(syms[j]) OVER
-                 (PARTITION BY word ORDER BY j) = r, FALSE) AS occ
-      FROM pos{k}
-    ),
-    st{k} AS (
-      SELECT *, occ AND NOT COALESCE(LAG(occ) OVER
-                 (PARTITION BY word ORDER BY j), FALSE) AS is_start
-      FROM occ{k}
-    ),
-    run{k} AS (
-      SELECT *, MAX(CASE WHEN is_start THEN j END)
-                 OVER (PARTITION BY word ORDER BY j
-                       ROWS UNBOUNDED PRECEDING) AS run_start
-      FROM st{k}
-    ),
-    kept{k} AS (
-      SELECT *, occ AND (j - run_start) % 2 = 0 AS kept
-      FROM run{k}
-    ),
-    cons{k} AS (
-      SELECT *, COALESCE(LAG(kept) OVER (PARTITION BY word ORDER BY j),
-                         FALSE) AS consumed
-      FROM kept{k}
-    ),
-    d{k + 1} AS MATERIALIZED (
-      SELECT word, freq,
-             LIST(CASE WHEN kept THEN l || r ELSE sym END ORDER BY j) AS syms
-      FROM cons{k} WHERE NOT consumed
-      GROUP BY word, freq
-    ),
-    after{k} AS (
-      SELECT CAST(SUM(freq * LEN(syms)) AS BIGINT) AS corpus_tokens_after
-      FROM d{k + 1}
-    )"""
+_DEEP_ORACLE = bpe.train_merges_sql(_TOKS, _DEEP_MERGES)
 
 
-_DEEP_ORACLE = (
-    f"""
-    WITH d1 AS MATERIALIZED (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS freq,
-             REGEXP_EXTRACT_ALL(word, '(?s).') AS syms
-      FROM (SELECT UNNEST({_TOKS}) AS word FROM documents)
-      GROUP BY word
-    ),"""
-    + ",".join(_iter_sql(k) for k in range(1, _DEEP_MERGES + 1))
-    + "".join(
-        f"""
-    {"SELECT" if k == 1 else "UNION ALL SELECT"} {k} AS iteration,
-           b.l AS merge_left, b.r AS merge_right, b.pair_count,
-           a.corpus_tokens_after
-    FROM best{k} b CROSS JOIN after{k} a"""
-        for k in range(1, _DEEP_MERGES + 1)
-    )
-)
+def _merge_distributed(dk: DataFrame, n_merges: int):
+    """The fully distributed merge loop, the over-budget fallback of both
+    training and encoding: yields ``(best, dictionary)`` after each merge,
+    one lineage-cut barrier per merge; stops early when no adjacent pair
+    remains.  Same semantics as the driver-local loop."""
+    for _ in range(n_merges):
+        b = materialize(bpe.best_pair(dk))
+        if b.isEmpty():
+            return
+        dk = materialize(bpe.apply_merge(dk, b), cut_lineage=True)
+        yield b, dk
 
 
 def _train_distributed(dk: DataFrame, n_merges: int) -> DataFrame | None:
-    """Fully distributed merge loop (the over-budget fallback): identical
-    semantics to the driver-local learner, one lineage-cut barrier per
-    merge; stops early when no adjacent pair remains."""
+    """Merge training on the distributed loop: one row per learned merge,
+    or None when no adjacent pair exists."""
     out = None
-    for it in range(1, n_merges + 1):
-        b = materialize(bpe.best_pair(dk))
-        if b.isEmpty():
-            break
-        dk = materialize(bpe.apply_merge(dk, b), cut_lineage=True)
+    for it, (b, dk) in enumerate(_merge_distributed(dk, n_merges), 1):
         after = dk.agg(
             F.sum(F.col("freq") * F.size("syms"))
             .cast("bigint")
@@ -207,75 +137,8 @@ def bpe_train_merges_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ENC_MERGES = 8
 
 
-def _enc_iter_sql(k: int) -> str:
-    """One merge iteration for the ENCODE oracle.  Same formulas as
-    ``_iter_sql`` with two differences: no ``after{k}`` (encoding doesn't
-    report per-iteration counts), and the next dictionary FALLS BACK to
-    the current one when no pair remains (``best{k}`` empty) — training
-    just stops emitting rows there, but encoding must keep the dictionary
-    alive or a degenerate corpus (all single-symbol words) would encode
-    to nothing."""
-    return f"""
-    pairs{k} AS (
-      SELECT freq, syms, UNNEST(RANGE(1, LEN(syms))) AS i FROM d{k}
-    ),
-    best{k} AS MATERIALIZED (
-      SELECT syms[i] AS l, syms[i + 1] AS r,
-             CAST(SUM(freq) AS BIGINT) AS pair_count
-      FROM pairs{k} GROUP BY 1, 2
-      ORDER BY pair_count DESC, l ASC, r ASC LIMIT 1
-    ),
-    pos{k} AS (
-      SELECT d.word, d.freq, b.l, b.r, d.syms,
-             UNNEST(RANGE(1, LEN(d.syms) + 1)) AS j
-      FROM d{k} d CROSS JOIN best{k} b
-    ),
-    occ{k} AS (
-      SELECT word, freq, l, r, j, syms[j] AS sym,
-             COALESCE(syms[j] = l AND LEAD(syms[j]) OVER
-                 (PARTITION BY word ORDER BY j) = r, FALSE) AS occ
-      FROM pos{k}
-    ),
-    st{k} AS (
-      SELECT *, occ AND NOT COALESCE(LAG(occ) OVER
-                 (PARTITION BY word ORDER BY j), FALSE) AS is_start
-      FROM occ{k}
-    ),
-    run{k} AS (
-      SELECT *, MAX(CASE WHEN is_start THEN j END)
-                 OVER (PARTITION BY word ORDER BY j
-                       ROWS UNBOUNDED PRECEDING) AS run_start
-      FROM st{k}
-    ),
-    kept{k} AS (
-      SELECT *, occ AND (j - run_start) % 2 = 0 AS kept
-      FROM run{k}
-    ),
-    cons{k} AS (
-      SELECT *, COALESCE(LAG(kept) OVER (PARTITION BY word ORDER BY j),
-                         FALSE) AS consumed
-      FROM kept{k}
-    ),
-    d{k + 1} AS MATERIALIZED (
-      SELECT word, freq,
-             LIST(CASE WHEN kept THEN l || r ELSE sym END ORDER BY j) AS syms
-      FROM cons{k} WHERE NOT consumed
-      GROUP BY word, freq
-      UNION ALL
-      SELECT word, freq, syms FROM d{k}
-      WHERE NOT EXISTS (SELECT 1 FROM best{k})
-    )"""
-
-
 _ENC_ORACLE = (
-    f"""
-    WITH d1 AS MATERIALIZED (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS freq,
-             REGEXP_EXTRACT_ALL(word, '(?s).') AS syms
-      FROM (SELECT UNNEST({_TOKS}) AS word FROM documents)
-      GROUP BY word
-    ),"""
-    + ",".join(_enc_iter_sql(k) for k in range(1, _ENC_MERGES + 1))
+    bpe.merges_sql(_TOKS, _ENC_MERGES)
     + f""",
     toks AS (
       SELECT doc_id, UNNEST(tk) AS word,
@@ -320,11 +183,8 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         ed = spark.createDataFrame(enc, "word string, syms array<string>")
     else:
         cur = dk
-        for _ in range(_ENC_MERGES):
-            b = materialize(bpe.best_pair(cur))
-            if b.isEmpty():
-                break
-            cur = materialize(bpe.apply_merge(cur, b), cut_lineage=True)
+        for _, cur in _merge_distributed(dk, _ENC_MERGES):
+            pass
         ed = cur.select("word", "syms")
         release(dk)
     toks = d.select(

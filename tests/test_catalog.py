@@ -10,6 +10,9 @@
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -159,20 +162,56 @@ def test_rows_only_anchor_map_matches_catalog():
             assert a in ORACLES, f"{name}: anchor {a} is not oracle-backed"
 
 
-def test_bench_steal_sample_contract():
-    """bench.py's hypervisor-steal probe: two non-negative tick counters
-    with steal <= total, total strictly growing between samples (it feeds
-    the steal_high contention signal — a bad read must come back None,
-    never a junk ratio)."""
+def test_time_rep_counts_the_jobs_it_times(spark):
+    """bench.time_rep, the one timing seam of bench.py and the timing
+    tools: a real query launches at least one job, and the in-job time
+    is positive and inside the rep's wall time."""
     import bench
 
-    s = bench.steal_sample()
-    if s is None:  # non-Linux /proc layout — the signal degrades to off
-        return
-    steal0, total0 = s
-    assert 0 <= steal0 <= total0
-    import time as _time
+    fn = QUERIES["flagship_regional_revenue"]
+    wall_s, job_s, n_jobs = bench.time_rep(spark, fn, SF_SMOKE)
+    assert n_jobs >= 1
+    assert 0 < job_s <= wall_s
 
-    _time.sleep(0.05)
-    steal1, total1 = bench.steal_sample()
-    assert total1 > total0 and steal1 >= steal0
+
+def test_bench_prints_one_contract_line(spark, monkeypatch, capsys):
+    """bench.main prints exactly one JSON line with the six contract keys,
+    short enough for a bounded stdout capture, puts the full record
+    (plan hashes included) on stderr, and writes no file into the
+    checkout."""
+    import bench
+
+    root = os.path.dirname(os.path.abspath(bench.__file__))
+    monkeypatch.setattr(bench, "HEADLINE", ("q1_pricing_summary",))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMOKE)
+    monkeypatch.setenv("BENCH_REPS", "1")
+    before = set(os.listdir(root))
+    assert bench.main() == 0
+    out, err = capsys.readouterr()
+    assert set(os.listdir(root)) == before
+    lines = out.splitlines()
+    assert len(lines) == 1 and len(lines[0]) < 1900
+    doc = json.loads(lines[0])
+    assert set(doc) == {
+        "metric", "value", "unit", "queries", "sf", "exec_total_sec",
+    }
+    assert list(doc["queries"]) == ["q1_pricing_summary"]
+    assert doc["sf"] == 0.001
+    record = json.loads(
+        next(ln for ln in err.splitlines() if ln.startswith('{"metric"'))
+    )
+    assert set(record["plan_hashes"]) == {"q1_pricing_summary"}
+
+
+def test_time_query_takes_reps_after_the_query(spark, monkeypatch, capsys):
+    """tools/time_query.py parses ``<query> --reps N``: N is the rep
+    count, not a second query name."""
+    from tools import time_query
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMOKE)
+    assert time_query.main(["q1_pricing_summary", "--reps", "2"]) == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert [ln.split(":")[0] for ln in lines] == [
+        "q1_pricing_summary rep0",
+        "q1_pricing_summary rep1",
+    ]

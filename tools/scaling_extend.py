@@ -52,7 +52,6 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -171,7 +170,7 @@ def build_fixture(
 
 def main() -> int:
     import __spark_entry__ as entrymod
-    from bench import force_eval
+    from bench import force_eval, time_rep
     from lms_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("scaling-extend")
@@ -209,12 +208,9 @@ def main() -> int:
         for name in SF3_HEAVY:
             times, outs = [], []
             for sf_dir in (BIG, BIG3):
-                best = math.inf
-                for _ in range(REPS):
-                    t0 = time.perf_counter()
-                    force_eval(qs[name](spark, sf_dir))
-                    best = min(best, time.perf_counter() - t0)
-                times.append(best)
+                times.append(
+                    min(time_rep(spark, qs[name], sf_dir)[0] for _ in range(REPS))
+                )
                 outs.append(qs[name](spark, sf_dir).count())
             slope_in = math.log10(times[1] / times[0]) / half
             growth_out = math.log10(max(outs[1], 1) / max(outs[0], 1))
@@ -273,10 +269,9 @@ def main() -> int:
                     spark.conf.set(MATERIALIZE_CONF, strategy)
                     best = math.inf
                     for rep in range(REPS + 1):  # rep 0 warms footers/codegen
-                        t0 = time.perf_counter()
-                        force_eval(qs[name](spark, sf_dir))
+                        t = time_rep(spark, qs[name], sf_dir)[0]
                         if rep > 0:
-                            best = min(best, time.perf_counter() - t0)
+                            best = min(best, t)
                         # persist() registers frames in the SQL CacheManager,
                         # which matches by LOGICAL PLAN — so the next rep's
                         # identical plan would silently replay rep k's
@@ -317,9 +312,7 @@ def main() -> int:
             force_eval(qs[name](spark, sf_dir))  # warm footers/codegen
             best = math.inf
             for _ in range(REPS):
-                t0 = time.perf_counter()
-                force_eval(qs[name](spark, sf_dir))
-                best = min(best, time.perf_counter() - t0)
+                best = min(best, time_rep(spark, qs[name], sf_dir)[0])
                 foots.append(_storage_footprint(spark))
             times.append(best)
             outs.append(qs[name](spark, sf_dir).count())
@@ -371,9 +364,7 @@ def main() -> int:
             force_eval(qs[name](spark, sf_dir))  # warm footers/codegen
             best = math.inf
             for _ in range(REPS):
-                t0 = time.perf_counter()
-                force_eval(qs[name](spark, sf_dir))
-                best = min(best, time.perf_counter() - t0)
+                best = min(best, time_rep(spark, qs[name], sf_dir)[0])
                 # sample immediately after the run, before the context
                 # cleaner unpersists the plan's localCheckpoint RDDs —
                 # a lower bound if the cleaner races, never an overcount
@@ -413,11 +404,6 @@ def main() -> int:
         # with a fixed probe set).  Fixtures reuse the copy-shift scheme;
         # embeddings keep probe ids below the shift so the query set stays
         # fixed while the corpus scales.
-        tracker = spark.sparkContext.statusTracker()
-
-        def _jobs() -> set[int]:
-            return set(tracker.getJobIdsForGroup(None) or [])
-
         for d, copies, tabs in (
             (BIG3, SF3_COPIES, ("lineitem", "embeddings")),
             (BIG10, SF10_COPIES, ("lineitem", "embeddings")),
@@ -438,14 +424,9 @@ def main() -> int:
         for name in cells:
             times, jobs = [], []
             for sf_dir, _ in dirs:
-                best, jbest = math.inf, None
-                for _ in range(REPS):
-                    before = _jobs()
-                    t0 = time.perf_counter()
-                    force_eval(qs[name](spark, sf_dir))
-                    t = time.perf_counter() - t0
-                    if t < best:
-                        best, jbest = t, len(_jobs() - before)
+                best, _, jbest = min(
+                    time_rep(spark, qs[name], sf_dir) for _ in range(REPS)
+                )
                 times.append(best)
                 jobs.append(jbest)
             slope = math.log10(times[2] / times[1]) / math.log10(10.0 / 3.0)
@@ -466,14 +447,10 @@ def main() -> int:
     print("|---|---|---|---|---|")
     worst = 0.0
     for name in HEAVY:
-        times = []
-        for sf_dir, _ in scales:
-            best = math.inf
-            for _ in range(REPS):
-                t0 = time.perf_counter()
-                force_eval(qs[name](spark, sf_dir))
-                best = min(best, time.perf_counter() - t0)
-            times.append(best)
+        times = [
+            min(time_rep(spark, qs[name], sf_dir)[0] for _ in range(REPS))
+            for sf_dir, _ in scales
+        ]
         top = math.log10(times[2] / times[1])
         worst = max(worst, top)
         print(

@@ -11,8 +11,9 @@ survive a 100× scale-up?":
 - slope ≳ 1.3 → superlinear red flag (quadratic stage, driver loop) —
   the tool exits 1 so CI/preflight can gate on it.
 
-Same measurement discipline as bench.py: full-column hash-sum sink (no
-count() column pruning), min of REPS runs against the box's ±25% noise.
+Same measurement as bench.py (``bench.time_rep``: full-column hash-sum
+sink, fresh builder call per rep), min of REPS runs against the host's
+±25% noise.
 
 Usage: python tools/scaling_report.py [--md]   (--md prints a Markdown
 table for SCALING.md)
@@ -23,7 +24,6 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -40,7 +40,7 @@ def main() -> int:
     md = "--md" in sys.argv
 
     import __spark_entry__ as entrymod
-    from bench import HEADLINE, force_eval
+    from bench import HEADLINE, force_eval, time_rep
     from lms_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("scaling-report")
@@ -56,12 +56,9 @@ def main() -> int:
     for name in HEADLINE:
         times = []
         for sf_dir, _ in SFS:
-            best = math.inf
-            for _ in range(REPS):
-                t0 = time.perf_counter()
-                force_eval(qs[name](spark, sf_dir))
-                best = min(best, time.perf_counter() - t0)
-            times.append(best)
+            times.append(
+                min(time_rep(spark, qs[name], sf_dir)[0] for _ in range(REPS))
+            )
         # slope over the top decade (0.01 → 0.1), where fixed overhead is
         # smallest relative to work; full-range slope shown for context.
         top = math.log10(times[2] / times[1])

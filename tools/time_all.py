@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -22,7 +21,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as entrymod
-    from bench import force_eval
+    from bench import time_rep
     from lms_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("time_all")
@@ -34,10 +33,8 @@ def main() -> int:
         if pat and pat not in name:
             continue
         spark.sparkContext.setJobDescription(name)
-        t0 = time.perf_counter()
         try:
-            force_eval(fn(spark, sf_dir))
-            dt = time.perf_counter() - t0
+            dt = time_rep(spark, fn, sf_dir)[0]
             results.append((dt, name))
             print(f"{dt:8.3f}  {name}", flush=True)
         except Exception:  # noqa: BLE001 - scoping tool, keep going

@@ -1,63 +1,47 @@
-"""Isolate-time catalog queries with the bench sink (guide §1.4).
+"""Time catalog queries one rep at a time with the bench sink.
 
 Usage: python tools/time_query.py <query> [<query> ...] [--reps N]
 
-Times each named query exactly the way bench.py does (full-column
-hash-sum sink, fresh builder call per rep) on $SPARK_GRAFT_SF_DIR,
-printing every rep's wall and in-job seconds so warm-up, noise, and
-steady-state are visible separately. Labels jobs for the UI.
+Times each named query exactly the way bench.py does (``bench.time_rep``:
+full-column hash-sum sink, fresh builder call per rep) on
+$SPARK_GRAFT_SF_DIR, printing every rep's wall and in-job seconds and its
+job count, so warm-up, noise and steady state are visible separately.
+Labels jobs for the UI.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    reps = 4
-    for a in sys.argv[1:]:
-        if a.startswith("--reps"):
-            reps = int(a.split("=", 1)[1]) if "=" in a else int(sys.argv[sys.argv.index(a) + 1])
+def main(argv: list[str] | None = None) -> int:
+    p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    p.add_argument("queries", nargs="+", metavar="query")
+    p.add_argument("--reps", type=int, default=4)
+    args = p.parse_intermixed_args(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as entrymod
-    from bench import force_eval
+    from bench import time_rep
     from lms_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("time_query")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
 
-    status_store = spark.sparkContext._jsc.sc().statusStore()
-    tracker = spark.sparkContext.statusTracker()
-
-    def _job_ids() -> set[int]:
-        return set(tracker.getJobIdsForGroup(None) or [])
-
-    def _jobs_sum(new_ids: set[int]) -> float:
-        tot = 0.0
-        for jid in new_ids:
-            jd = status_store.job(jid)
-            sub, comp = jd.submissionTime(), jd.completionTime()
-            if sub.isDefined() and comp.isDefined():
-                tot += (comp.get().getTime() - sub.get().getTime()) / 1000.0
-        return tot
-
-    for name in args:
+    for name in args.queries:
         fn = qs[name]
-        for rep in range(reps):
+        for rep in range(args.reps):
             spark.sparkContext.setJobDescription(f"{name} rep{rep}")
-            before = _job_ids()
-            t0 = time.perf_counter()
-            force_eval(fn(spark, sf_dir))
-            wall = time.perf_counter() - t0
-            exec_s = _jobs_sum(_job_ids() - before)
-            print(f"{name} rep{rep}: wall={wall:.3f}s exec={exec_s:.3f}s", flush=True)
+            wall, job_s, n_jobs = time_rep(spark, fn, sf_dir)
+            print(
+                f"{name} rep{rep}: wall={wall:.3f}s exec={job_s:.3f}s jobs={n_jobs}",
+                flush=True,
+            )
         spark.sparkContext.setJobDescription(None)
     return 0
 
