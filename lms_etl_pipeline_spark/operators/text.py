@@ -50,10 +50,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def distinct_token_count(text: Column | str) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
 def shingles(toks: Column, n: int = 3) -> Column:
     """Word n-gram shingles of a token array (1-based ``element_at``).
 

@@ -87,11 +87,7 @@ def spread_for_cpu(df, key):
     return df.repartition(n, key)
 
 
-#: conf key overriding the deployment-keyed materialization strategy
-MATERIALIZE_CONF = "spark.lms_etl_pipeline_spark.materialize"
-
-
-def _materialize_mode(master: str | None, override: str | None = None) -> str:
+def _materialize_mode(master: str | None) -> str:
     """Pick the multi-consumer materialization strategy for a deployment.
 
     ``local-checkpoint`` truncates lineage and is the fastest barrier on a
@@ -107,16 +103,8 @@ def _materialize_mode(master: str | None, override: str | None = None) -> str:
     Spark Connect client, which typically FRONTS a real cluster) defaults
     to ``persist``: the safe, lineage-preserving strategy.  Guessing
     "local" there would silently re-introduce the availability hazard on
-    exactly the deployments the persist path exists to protect; users on a
-    genuinely-local Connect server can opt back in via the override conf.
+    exactly the deployments the persist path exists to protect.
     """
-    if override in ("local-checkpoint", "persist"):
-        return override
-    if override:
-        raise ValueError(
-            f"{MATERIALIZE_CONF} must be 'local-checkpoint' or 'persist', "
-            f"got {override!r}"
-        )
     if master is None:
         return "persist"
     return "local-checkpoint" if master.startswith("local") else "persist"
@@ -128,20 +116,15 @@ def _session_mode(spark) -> str:
         master = spark.conf.get("spark.master")
     except Exception:  # noqa: BLE001 - Connect sessions hide spark.master
         master = None
-    try:
-        override = spark.conf.get(MATERIALIZE_CONF)
-    except Exception:  # noqa: BLE001 - conf unset
-        override = None
-    if master is None and override is None:
+    if master is None:
         import warnings
 
         warnings.warn(
             "spark.master is not readable from this session; defaulting to "
-            f"the lineage-preserving 'persist' materialization (set "
-            f"{MATERIALIZE_CONF} to override)",
+            "the lineage-preserving 'persist' materialization",
             stacklevel=3,
         )
-    return _materialize_mode(master, override)
+    return _materialize_mode(master)
 
 
 def materialize(df, *, eager: bool = True, cut_lineage: bool = False):
@@ -151,8 +134,6 @@ def materialize(df, *, eager: bool = True, cut_lineage: bool = False):
     calls this instead of hard-coding ``localCheckpoint`` — local masters
     keep the fast local checkpoint, cluster masters get lineage-preserving
     ``persist(MEMORY_AND_DISK)`` (populated via a count() when ``eager``).
-    Override per session with the ``spark.lms_etl_pipeline_spark.materialize``
-    conf.
 
     The persist path's cost is MEASURED (SCALING.md, "the persist() path
     TIMED"): +14–33% over localCheckpoint at ~sf3 on the two heaviest

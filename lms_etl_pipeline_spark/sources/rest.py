@@ -40,6 +40,49 @@ ENDPOINTS: dict[str, str] = {
 PAGINATION_KEYS: tuple[str, ...] = ("totalItems", "limit", "offset", "returnedItems")
 
 
+def odata_filter(filters: dict[str, Any]) -> str:
+    """Render equality filters as the API's OData-style ``_filter`` param
+    (``{"departmentId": "O'Brien"}`` -> ``departmentId eq 'O''Brien'``).
+    A quote inside a value is doubled, OData's string-literal escape, so
+    outside input cannot end the literal early."""
+    return " and ".join(
+        "{} eq '{}'".format(k, str(v).replace("'", "''")) for k, v in filters.items()
+    )
+
+
+def api_headers(api_key: str = "", token: str | None = None, api_version: str = "") -> dict[str, str]:
+    """Request headers for the LMS API: JSON content type, plus
+    ``x-api-key``, ``x-api-version`` and a bearer token when given."""
+    h = {"Content-Type": "application/json"}
+    if api_key:
+        h["x-api-key"] = api_key
+    if api_version:
+        h["x-api-version"] = api_version
+    if token:
+        h["Authorization"] = f"Bearer {token}"
+    return h
+
+
+def request_json(
+    url: str,
+    headers: dict[str, str],
+    timeout: float,
+    params: dict[str, Any] | None = None,
+    data: bytes | None = None,
+) -> dict[str, Any]:
+    """One request, decoded as JSON: a GET, or a POST of ``data`` when
+    given.  ``params`` go on the query string; any status but 200 raises."""
+    if params:
+        url += "?" + urllib.parse.urlencode(params)
+    req = urllib.request.Request(
+        url, data=data, headers=headers, method="GET" if data is None else "POST"
+    )
+    with urllib.request.urlopen(req, timeout=timeout) as resp:
+        if resp.status != 200:
+            raise RuntimeError(f"REST HTTP {resp.status} for {url}")
+        return json.loads(resp.read().decode())
+
+
 @dataclass
 class RestSource:
     """Thin authenticated JSON-over-HTTP source.
@@ -60,13 +103,9 @@ class RestSource:
         payload = json.dumps(
             {"userName": username, "password": password, "privateKey": private_key}
         ).encode()
-        req = urllib.request.Request(
-            f"{self.base_url}/authenticate",
-            data=payload,
-            headers=self._headers(),
-            method="POST",
+        body = request_json(
+            f"{self.base_url}/authenticate", self._headers(), self.timeout, data=payload
         )
-        body = self._call(req)
         self._token = body["access_token"]
         return self._token
 
@@ -78,18 +117,13 @@ class RestSource:
         filters: dict[str, str] | None = None,
     ) -> dict[str, Any]:
         """GET one JSON page.  ``filters`` renders to the OData-ish
-        ``_filter`` param (``{"departmentId": "X"}`` ->
-        ``_filter=departmentId eq 'X'``) — predicate pushdown by transport,
-        with the value actually interpolated (the reference shipped the
-        literal string ``'department_id'``; SURVEY §2.2 O1)."""
+        ``_filter`` param through :func:`odata_filter` — predicate pushdown
+        by transport, with the value actually interpolated (the reference
+        shipped the literal string ``'department_id'``; SURVEY §2.2 O1)."""
         q = dict(params or {})
         if filters:
-            q["_filter"] = " and ".join(f"{k} eq '{v}'" for k, v in filters.items())
-        url = f"{self.base_url}{endpoint}"
-        if q:
-            url += "?" + urllib.parse.urlencode(q)
-        req = urllib.request.Request(url, headers=self._headers(), method="GET")
-        return self._call(req)
+            q["_filter"] = odata_filter(filters)
+        return request_json(f"{self.base_url}{endpoint}", self._headers(), self.timeout, q)
 
     # -- S3: routing + DataFrame assembly -----------------------------------
     def read_table(
@@ -116,17 +150,4 @@ class RestSource:
 
     # -- plumbing -----------------------------------------------------------
     def _headers(self) -> dict[str, str]:
-        h = {"Content-Type": "application/json"}
-        if self.api_key:
-            h["x-api-key"] = self.api_key
-        if self.api_version:
-            h["x-api-version"] = self.api_version
-        if self._token:
-            h["Authorization"] = f"Bearer {self._token}"
-        return h
-
-    def _call(self, req: urllib.request.Request) -> dict[str, Any]:
-        with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-            if resp.status != 200:
-                raise RuntimeError(f"REST source HTTP {resp.status} for {req.full_url}")
-            return json.loads(resp.read().decode())
+        return api_headers(self.api_key, self._token, self.api_version)

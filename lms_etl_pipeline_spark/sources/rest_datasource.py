@@ -25,10 +25,7 @@ bottleneck, linear scan parallelism up to the API's page count.
 
 from __future__ import annotations
 
-import json
 import math
-import urllib.parse
-import urllib.request
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -39,6 +36,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from lms_etl_pipeline_spark.sources.rest import api_headers, odata_filter, request_json
+
 DEFAULT_PAGE_SIZE = 500
 
 
@@ -48,18 +47,9 @@ class _Page(InputPartition):
         self.limit = limit
 
 
-def _fetch(base_url: str, endpoint: str, params: dict, headers: dict, timeout: float) -> dict:
-    url = f"{base_url}{endpoint}"
-    if params:
-        url += "?" + urllib.parse.urlencode(params)
-    req = urllib.request.Request(url, headers=headers, method="GET")
-    with urllib.request.urlopen(req, timeout=timeout) as resp:
-        if resp.status != 200:
-            raise RuntimeError(f"rest_api source HTTP {resp.status} for {url}")
-        return json.loads(resp.read().decode())
+class _RestOptions:
+    """The reader options both REST readers share, and their one GET."""
 
-
-class RestApiReader(DataSourceReader):
     def __init__(self, schema, options: dict):
         self.schema = schema
         self.base_url = options["base_url"]
@@ -68,12 +58,16 @@ class RestApiReader(DataSourceReader):
         self.rows_key = options.get("rows_key", "users")
         self.total_key = options.get("total_key", "totalItems")
         self.timeout = float(options.get("timeout", "30"))
+        self.headers = api_headers(options.get("api_key", ""), options.get("token"))
+
+    def _get(self, params: dict) -> dict:
+        return request_json(f"{self.base_url}{self.endpoint}", self.headers, self.timeout, params)
+
+
+class RestApiReader(_RestOptions, DataSourceReader):
+    def __init__(self, schema, options: dict):
+        super().__init__(schema, options)
         self.trust_pushdown = options.get("trust_pushdown", "false").lower() == "true"
-        self.headers = {"Content-Type": "application/json"}
-        if options.get("api_key"):
-            self.headers["x-api-key"] = options["api_key"]
-        if options.get("token"):
-            self.headers["Authorization"] = f"Bearer {options['token']}"
         self._pushed: dict[str, str] = {}
 
     # -- pushdown -----------------------------------------------------------
@@ -83,10 +77,10 @@ class RestApiReader(DataSourceReader):
         By default every filter — including the pushed ones — is yielded
         back so Spark re-applies it post-scan: REST APIs commonly ignore
         unknown query params, and a server that drops ``_filter`` would
-        otherwise silently return unfiltered rows as if they matched
-        (round-2 advisory).  Pushdown still prunes network traffic when the
-        API honors it; ``.option("trust_pushdown", "true")`` opts into
-        consuming the filters for servers known to enforce them.
+        otherwise silently return unfiltered rows as if they matched.
+        Pushdown still prunes network traffic when the API honors it;
+        ``.option("trust_pushdown", "true")`` opts into consuming the
+        filters for servers known to enforce them.
         """
         for f in filters:
             if isinstance(f, EqualTo) and len(f.attribute) == 1:
@@ -99,38 +93,26 @@ class RestApiReader(DataSourceReader):
     def _params(self, extra: dict) -> dict:
         p = dict(extra)
         if self._pushed:
-            p["_filter"] = " and ".join(f"{k} eq '{v}'" for k, v in self._pushed.items())
+            p["_filter"] = odata_filter(self._pushed)
         return p
 
     # -- planning -----------------------------------------------------------
     def partitions(self) -> list[_Page]:
         """ONE driver-side metadata call; one partition per API page."""
-        meta = _fetch(
-            self.base_url,
-            self.endpoint,
-            self._params({"limit": 1, "offset": 0}),
-            self.headers,
-            self.timeout,
-        )
+        meta = self._get(self._params({"limit": 1, "offset": 0}))
         total = int(meta.get(self.total_key, 0))
         n_pages = max(math.ceil(total / self.page_size), 1)
         return [_Page(i * self.page_size, self.page_size) for i in range(n_pages)]
 
     # -- execution (runs on executors) --------------------------------------
     def read(self, partition: _Page) -> Iterator[tuple]:
-        doc = _fetch(
-            self.base_url,
-            self.endpoint,
-            self._params({"limit": partition.limit, "offset": partition.offset}),
-            self.headers,
-            self.timeout,
-        )
+        doc = self._get(self._params({"limit": partition.limit, "offset": partition.offset}))
         fields = [f.name for f in self.schema.fields]
         for row in doc.get(self.rows_key, []):
             yield tuple(row.get(f) for f in fields)
 
 
-class RestApiStreamReader(SimpleDataSourceStreamReader):
+class RestApiStreamReader(_RestOptions, SimpleDataSourceStreamReader):
     """Incremental REST polling as a Structured Streaming source.
 
     This is the reference pipeline's ingestion semantics — poll the LMS
@@ -153,19 +135,8 @@ class RestApiStreamReader(SimpleDataSourceStreamReader):
     """
 
     def __init__(self, schema, options: dict):
-        self.schema = schema
-        self.base_url = options["base_url"]
-        self.endpoint = options["endpoint"]
-        self.page_size = int(options.get("page_size", DEFAULT_PAGE_SIZE))
-        self.rows_key = options.get("rows_key", "users")
-        self.total_key = options.get("total_key", "totalItems")
-        self.timeout = float(options.get("timeout", "30"))
+        super().__init__(schema, options)
         self.max_rows = int(options.get("max_rows_per_batch", "10000"))
-        self.headers = {"Content-Type": "application/json"}
-        if options.get("api_key"):
-            self.headers["x-api-key"] = options["api_key"]
-        if options.get("token"):
-            self.headers["Authorization"] = f"Bearer {options['token']}"
 
     def initialOffset(self) -> dict:
         return {"offset": 0}
@@ -175,13 +146,7 @@ class RestApiStreamReader(SimpleDataSourceStreamReader):
         off = lo
         while off < hi:
             limit = min(self.page_size, hi - off)
-            doc = _fetch(
-                self.base_url,
-                self.endpoint,
-                {"limit": limit, "offset": off},
-                self.headers,
-                self.timeout,
-            )
+            doc = self._get({"limit": limit, "offset": off})
             rows = doc.get(self.rows_key, [])
             if not rows:
                 return  # collection shrank below hi — stop rather than spin
@@ -191,13 +156,7 @@ class RestApiStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict):
         lo = int(start["offset"])
-        meta = _fetch(
-            self.base_url,
-            self.endpoint,
-            {"limit": 1, "offset": 0},
-            self.headers,
-            self.timeout,
-        )
+        meta = self._get({"limit": 1, "offset": 0})
         total = int(meta.get(self.total_key, 0))
         hi = min(total, lo + self.max_rows)
         if hi <= lo:

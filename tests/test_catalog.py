@@ -215,3 +215,27 @@ def test_time_query_takes_reps_after_the_query(spark, monkeypatch, capsys):
         "q1_pricing_summary rep0",
         "q1_pricing_summary rep1",
     ]
+
+
+def test_time_query_sweeps_past_a_failing_query(spark, monkeypatch, capsys):
+    """With no query names tools/time_query.py sweeps the catalog: a query
+    that raises is reported, the sweep goes on to the next one, and the run
+    ends with the slowest-queries summary and exit status 1."""
+    from tools import time_query
+
+    def raises(spark, sf_dir):
+        raise RuntimeError("builder failed")
+
+    monkeypatch.setattr(
+        entrymod,
+        "queries",
+        lambda: {"a_raises": raises, "b_ok": lambda spark, sf_dir: spark.range(3)},
+    )
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMOKE)
+    assert time_query.main([]) == 1
+    lines = capsys.readouterr().out.splitlines()
+    assert lines[0] == "a_raises: ERROR"
+    assert lines[1].startswith("b_ok rep0: wall=")
+    summary = lines[lines.index("== slowest 30 (best wall) ==") + 1 :]
+    assert [ln.split()[-1] for ln in summary if ln.strip()][0] == "b_ok"
+    assert lines[-1].endswith("over 1 queries, 1 failed ['a_raises']")

@@ -306,18 +306,15 @@ class TestPredictCacheHygiene:
             quality_classifier_predict,
         )
         from lms_etl_pipeline_spark import session
-        from lms_etl_pipeline_spark.session import MATERIALIZE_CONF
 
         cm = spark._jsparkSession.sharedState().cacheManager()
         assert cm.isEmpty(), "precondition: another test leaked a cache entry"
 
         def check(arm):
-            spark.conf.set(MATERIALIZE_CONF, "persist")
-            try:
+            with monkeypatch.context() as m:
+                m.setattr(session, "_session_mode", lambda spark: "persist")
                 out = quality_classifier_predict(spark, SF_SMOKE)
                 assert out.count() > 0
-            finally:
-                spark.conf.unset(MATERIALIZE_CONF)
             assert cm.isEmpty(), (
                 f"quality_classifier_predict ({arm} arm) pinned a CacheManager "
                 "entry with no release handle"

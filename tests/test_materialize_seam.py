@@ -1,11 +1,12 @@
 """Deployment-mode seam for multi-consumer materialization.
 
-VERDICT r8 "What's wrong #4": hard-coded ``localCheckpoint(eager=True)`` is
-correct and fast on local[32], but local checkpoints are NON-REPLICATED —
-on a real cluster, losing one executor kills the job instead of recomputing
-lineage.  ``session.materialize`` now picks the strategy by deployment:
-local masters keep the fast local checkpoint; cluster masters get
-lineage-preserving ``persist(MEMORY_AND_DISK)``; a session conf overrides.
+A hard-coded ``localCheckpoint(eager=True)`` is correct and fast on
+local[32], but local checkpoints are NON-REPLICATED — on a real cluster,
+losing one executor kills the job instead of recomputing lineage.
+``session.materialize`` picks the strategy by deployment: local masters keep the fast local checkpoint; cluster masters get
+lineage-preserving ``persist(MEMORY_AND_DISK)``.  Cluster mode can't be
+spun up in tests, so the persist-path tests pin ``session._session_mode``
+to the branch a cluster master takes.
 """
 
 from __future__ import annotations
@@ -13,8 +14,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark import session
 from lms_etl_pipeline_spark.session import (
-    MATERIALIZE_CONF,
     _materialize_mode,
     _session_mode,
     default_parallelism,
@@ -39,13 +40,6 @@ def test_mode_keyed_off_master(master, expect):
     assert _materialize_mode(master) == expect
 
 
-def test_conf_override_beats_master():
-    assert _materialize_mode("local[2]", "persist") == "persist"
-    assert _materialize_mode("yarn", "local-checkpoint") == "local-checkpoint"
-    with pytest.raises(ValueError):
-        _materialize_mode("local[2]", "bogus")
-
-
 def test_local_session_takes_checkpoint_path(spark):
     out = materialize(spark.range(10).select(F.col("id")))
     # a local checkpoint truncates lineage: the logical plan is a scan of
@@ -54,31 +48,31 @@ def test_local_session_takes_checkpoint_path(spark):
     assert out.count() == 10
 
 
-def test_persist_path_pinned_via_override(spark):
-    """Cluster mode can't be spun up in tests; the conf override exercises
-    the exact branch a cluster master would take — persisted
-    MEMORY_AND_DISK, lineage preserved, cache populated eagerly."""
+def _pin_persist(monkeypatch):
+    monkeypatch.setattr(session, "_session_mode", lambda spark: "persist")
+
+
+def test_persist_path_pinned_via_override(spark, monkeypatch):
+    """The branch a cluster master takes: persisted MEMORY_AND_DISK,
+    lineage preserved, cache populated eagerly."""
     from pyspark.storagelevel import StorageLevel
 
-    spark.conf.set(MATERIALIZE_CONF, "persist")
+    _pin_persist(monkeypatch)
+    out = materialize(spark.range(10).select(F.col("id")))
     try:
-        df = spark.range(10).select(F.col("id"))
-        out = materialize(df)
         assert out.storageLevel == StorageLevel.MEMORY_AND_DISK
         # lineage preserved: the original scan is still in the plan
         assert "Range" in out._jdf.queryExecution().analyzed().toString()
         assert out.count() == 10
     finally:
-        spark.conf.unset(MATERIALIZE_CONF)
         out.unpersist()
 
 
 def test_unknown_master_defaults_to_persist():
-    """ADVICE r9: a session that hides ``spark.master`` (Spark Connect)
+    """A session that hides ``spark.master`` (Spark Connect)
     typically FRONTS a real cluster — the safe default is the
     lineage-preserving persist path, not a silent local[*] guess."""
     assert _materialize_mode(None) == "persist"
-    assert _materialize_mode(None, "local-checkpoint") == "local-checkpoint"
 
 
 class _RaisingConf:
@@ -108,12 +102,7 @@ def test_session_mode_connect_fallbacks():
     run here — these stubs reproduce exactly what the client raises)."""
     with pytest.warns(UserWarning, match="persist"):
         assert _session_mode(_FakeSession({})) == "persist"
-    # an explicit override silences the guess entirely
-    assert (
-        _session_mode(_FakeSession({MATERIALIZE_CONF: "local-checkpoint"}))
-        == "local-checkpoint"
-    )
-    # classic session shape: master readable, no override
+    # classic session shape: master readable
     assert _session_mode(_FakeSession({"spark.master": "local[4]"})) == "local-checkpoint"
     assert _session_mode(_FakeSession({"spark.master": "yarn"})) == "persist"
 
@@ -126,20 +115,18 @@ def test_default_parallelism_connect_fallbacks():
     assert default_parallelism(_FakeSession({}), fallback=7) == 7
 
 
-def test_release_unpersists_only_in_persist_mode(spark):
+def test_release_unpersists_only_in_persist_mode(spark, monkeypatch):
     from pyspark.storagelevel import StorageLevel
 
     # persist mode: release() frees the cache (lineage survives, so the
     # frame stays usable — it just recomputes)
-    spark.conf.set(MATERIALIZE_CONF, "persist")
-    try:
+    with monkeypatch.context() as m:
+        _pin_persist(m)
         out = materialize(spark.range(10).select(F.col("id")))
         assert out.storageLevel == StorageLevel.MEMORY_AND_DISK
         release(out)
         assert out.storageLevel == StorageLevel.NONE
         assert out.count() == 10
-    finally:
-        spark.conf.unset(MATERIALIZE_CONF)
     # local-checkpoint mode: release() must be a NO-OP — the checkpoint
     # blocks are the only copy behind a truncated lineage
     out = materialize(spark.range(10).select(F.col("id")))
@@ -149,9 +136,9 @@ def test_release_unpersists_only_in_persist_mode(spark):
     assert out.count() == 10
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
-def test_iterative_loops_bound_live_caches_in_persist_mode(spark, tmp_path):
-    """ADVICE r9 (medium): iterative loops must unpersist superseded
+@pytest.mark.slow  # >14 s: gated from the default run
+def test_iterative_loops_bound_live_caches_in_persist_mode(spark, tmp_path, monkeypatch):
+    """Iterative loops must unpersist superseded
     frames — a 20-iteration run must NOT hold 20 full-dataset caches.
     A checkpoint dir is set (standard practice for iterative Spark on a
     cluster): loop barriers whose body references the previous frame twice
@@ -162,35 +149,32 @@ def test_iterative_loops_bound_live_caches_in_persist_mode(spark, tmp_path):
     from lms_etl_pipeline_spark.operators.ml import kmeans_fit
 
     jsc = spark.sparkContext._jsc
-    spark.conf.set(MATERIALIZE_CONF, "persist")
+    _pin_persist(monkeypatch)
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        base = jsc.getPersistentRDDs().size()
-        # a depth-8 chain forces several label-propagation iterations
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, 9)], "a long, b long"
-        )
-        cc = connected_components(edges)
-        assert cc.count() == 9
-        # live caches: the symmetrized edges + the final label frame only
-        assert jsc.getPersistentRDDs().size() - base <= 2
+    base = jsc.getPersistentRDDs().size()
+    # a depth-8 chain forces several label-propagation iterations
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 9)], "a long, b long"
+    )
+    cc = connected_components(edges)
+    assert cc.count() == 9
+    # live caches: the symmetrized edges + the final label frame only
+    assert jsc.getPersistentRDDs().size() - base <= 2
 
-        base = jsc.getPersistentRDDs().size()
-        pts = spark.createDataFrame(
-            [(i, [float(i % 7), float((i * 3) % 5)]) for i in range(40)],
-            "id long, vec array<double>",
-        )
-        stats: dict = {}
-        assign, cent = kmeans_fit(pts, k=3, max_iter=10, stats=stats)
-        assert assign.count() == 40
-        assert stats["iterations"] >= 2
-        # live caches: pts + final assignment + final centroids
-        assert jsc.getPersistentRDDs().size() - base <= 3
-    finally:
-        spark.conf.unset(MATERIALIZE_CONF)
+    base = jsc.getPersistentRDDs().size()
+    pts = spark.createDataFrame(
+        [(i, [float(i % 7), float((i * 3) % 5)]) for i in range(40)],
+        "id long, vec array<double>",
+    )
+    stats: dict = {}
+    assign, cent = kmeans_fit(pts, k=3, max_iter=10, stats=stats)
+    assert assign.count() == 40
+    assert stats["iterations"] >= 2
+    # live caches: pts + final assignment + final centroids
+    assert jsc.getPersistentRDDs().size() - base <= 3
 
 
-def test_persist_path_runs_an_iterative_consumer(spark):
+def test_persist_path_runs_an_iterative_consumer(spark, monkeypatch):
     """connected_components (3 materialize sites, iterative) must converge
     identically under the persist strategy — the cluster-mode behavior."""
     from lms_etl_pipeline_spark.operators.graph import connected_components
@@ -199,12 +183,6 @@ def test_persist_path_runs_an_iterative_consumer(spark):
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)], "a long, b long"
     )
     want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20, 23: 20}
-    spark.conf.set(MATERIALIZE_CONF, "persist")
-    try:
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components(edges).collect()
-        }
-    finally:
-        spark.conf.unset(MATERIALIZE_CONF)
+    _pin_persist(monkeypatch)
+    got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
     assert got == want

@@ -6,15 +6,18 @@ dates, missing values)."""
 from __future__ import annotations
 
 import json
+import re
 import sqlite3
 import threading
 from functools import partial
 from http.server import BaseHTTPRequestHandler, HTTPServer
+from urllib.parse import parse_qs, urlparse
 
 import pytest
 from pyspark.sql import types as T
 
 from lms_etl_pipeline_spark import pipeline
+from lms_etl_pipeline_spark.sources.csv_io import read_csv
 from lms_etl_pipeline_spark.sources.rest import RestSource
 
 USERS = [
@@ -35,13 +38,33 @@ USERS = [
 ]
 
 
+#: user id -> department, for the stub's ``_filter`` handling
+DEPARTMENTS = {1: "O'Brien", 2: "D2"}
+
+#: an OData string literal: quotes inside it are doubled
+_DEPT_FILTER = re.compile(r"departmentId eq '((?:[^']|'')*)'")
+
+
 class _Api(BaseHTTPRequestHandler):
+    filters: list[str] = []
+
     def log_message(self, *a):
         pass
 
     def do_GET(self):
+        users = USERS
+        flt = parse_qs(urlparse(self.path).query).get("_filter")
+        if flt:
+            _Api.filters.append(flt[0])
+            m = _DEPT_FILTER.fullmatch(flt[0])
+            if not m:
+                self.send_error(400, "malformed _filter")
+                return
+            want = m.group(1).replace("''", "'")
+            users = [u for u in USERS if DEPARTMENTS[u["id"]] == want]
+        n = len(users)
         body = json.dumps(
-            {"totalItems": 2, "limit": 100, "offset": 0, "returnedItems": 2, "users": USERS}
+            {"totalItems": n, "limit": 100, "offset": 0, "returnedItems": n, "users": users}
         ).encode()
         self.send_response(200)
         self.send_header("Content-Type", "application/json")
@@ -153,6 +176,24 @@ def test_extract_load_end_to_end(spark, api, tmp_path):
     assert rows[2][3] is None
     # T3 strict_strings: NULL externalId became the reference's ' ' fill
     assert rows[2][1] == " "
+
+
+def test_extract_escapes_a_quoted_department_id(spark, api, tmp_path):
+    """A quote inside the department id reaches the API doubled (OData's
+    string-literal escape), so the server filters on the whole value."""
+    _Api.filters.clear()
+    csv_path = str(tmp_path / "snapshot")
+    pipeline.run_extract(
+        spark,
+        RestSource(api),
+        API_SCHEMA,
+        csv_path,
+        department_id="O'Brien",
+        rename_map=dict(pipeline.etl.LMS_RENAME_MAP),
+    )
+    assert _Api.filters == ["departmentId eq 'O''Brien'"]
+    rows = read_csv(spark, csv_path, CSV_SCHEMA).collect()
+    assert [r.lms_user_id for r in rows] == [1]
 
 
 def test_extract_failure_publishes(spark, tmp_path):

@@ -4,6 +4,7 @@ against a local paginated HTTP server."""
 from __future__ import annotations
 
 import json
+import re
 import threading
 from http.server import BaseHTTPRequestHandler, HTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -19,6 +20,10 @@ USERS = [
 ]
 
 
+#: an OData string literal: quotes inside it are doubled
+_DEPT_FILTER = re.compile(r"departmentId eq '((?:[^']|'')*)'")
+
+
 class _PagedApi(BaseHTTPRequestHandler):
     requests: list[dict] = []
 
@@ -29,9 +34,12 @@ class _PagedApi(BaseHTTPRequestHandler):
         q = {k: v[0] for k, v in parse_qs(urlparse(self.path).query).items()}
         _PagedApi.requests.append(q)
         rows = USERS
-        flt = q.get("_filter", "")
-        if flt.startswith("departmentId eq "):
-            want = flt.split("'")[1]
+        if "_filter" in q:
+            m = _DEPT_FILTER.fullmatch(q["_filter"])
+            if not m:
+                self.send_error(400, "malformed _filter")
+                return
+            want = m.group(1).replace("''", "'")
             rows = [u for u in rows if u["departmentId"] == want]
         total = len(rows)
         off, lim = int(q.get("offset", 0)), int(q.get("limit", 100))
@@ -91,6 +99,20 @@ def test_equality_filter_pushes_to_api(registered, api):
     assert len(rows) == len([u for u in USERS if u["departmentId"] == "D1"])
     # every request carried the pushed predicate
     assert all(q.get("_filter") == "departmentId eq 'D1'" for q in _PagedApi.requests)
+
+
+def test_quoted_filter_value_pushes_escaped(registered, api):
+    """A quote inside a pushed value reaches the API doubled (OData's
+    string-literal escape), so the server filters on the whole value."""
+    USERS.append({"id": 100, "firstName": "obrien", "departmentId": "O'Brien"})
+    _PagedApi.requests.clear()
+    try:
+        rows = _read(registered, api).filter(F.col("departmentId") == "O'Brien").collect()
+    finally:
+        del USERS[N_USERS:]  # restore module fixture state for other tests
+    assert [r.id for r in rows] == [100]
+    assert _PagedApi.requests
+    assert all(q.get("_filter") == "departmentId eq 'O''Brien'" for q in _PagedApi.requests)
 
 
 class _IgnoresFilterApi(_PagedApi):
