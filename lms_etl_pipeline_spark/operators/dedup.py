@@ -29,6 +29,10 @@ Execution-shape notes (these dominated the first benchmark):
   self-join (ReusedExchange) instead of recomputing the corpus scan.
 - Exact Jaccard verification recomputes shingles *after* joining the (few)
   candidate pairs, never for the whole corpus a second time.
+
+DuckDB twins: the ``*_sql`` builders render each stage as oracle CTEs over
+a relation of ``(doc_id, sh)`` shingle sets, so every oracle that chains
+these stages spells them once, here, beside the Spark code they mirror.
 """
 
 from __future__ import annotations
@@ -152,6 +156,26 @@ def with_minhash(
     return hashed.select(F.col(id_col), *minhash_signature(F.col("_hs"), k))
 
 
+def minhash_sql(src: str, k: int = 8) -> str:
+    """DuckDB twin of ``with_minhash`` over ``src`` (doc_id, sh): CTEs
+    ``hs_t`` (the base hashes, reduced below MH_P, with ``sh`` kept) and
+    ``sigs`` (doc_id, h0..h{k-1}).  Sets with no shingles are dropped."""
+    base = (
+        "LIST_TRANSFORM(sh, s -> TRY_CAST(CONCAT('0x', SUBSTRING(MD5(s), 1, 15))"
+        f" AS BIGINT) % {MH_P})"
+    )
+    slots = ",\n             ".join(
+        f"LIST_MIN(LIST_TRANSFORM(hs, h -> ({MH_A[i]} * h + {MH_B[i]}) % {MH_P})) AS h{i}"
+        for i in range(k)
+    )
+    return f"""hs_t AS (SELECT doc_id, sh, {base} AS hs FROM {src} WHERE LEN(sh) > 0),
+    sigs AS (
+      SELECT doc_id,
+             {slots}
+      FROM hs_t
+    )"""
+
+
 def lsh_bands(sigs: DataFrame, id_col: str, k: int = 8, bands: int = 4) -> DataFrame:
     """Fold a k-slot signature into ``bands`` band-hashes, long form.
 
@@ -174,6 +198,69 @@ def lsh_bands(sigs: DataFrame, id_col: str, k: int = 8, bands: int = 4) -> DataF
     return sigs.select(
         F.col(id_col), F.posexplode(band_arr).alias("band", "band_hash")
     )
+
+
+def _band_slots(k: int, bands: int) -> list[range]:
+    """The signature slots each band hashes, as ``lsh_bands`` lays them out."""
+    rows = k // bands
+    return [range(b * rows, (b + 1) * rows) for b in range(bands)]
+
+
+def band_match_sql(x: str, y: str, k: int = 8, bands: int = 4) -> str:
+    """DuckDB predicate: signature rows ``x`` and ``y`` agree on every slot
+    of at least one band — the pair would be an LSH candidate."""
+    return " OR ".join(
+        "(" + " AND ".join(f"{x}.h{i} = {y}.h{i}" for i in slots) + ")"
+        for slots in _band_slots(k, bands)
+    )
+
+
+def lsh_candidates_sql(
+    pair: str = "l.doc_id < r.doc_id",
+    name: str = "cands",
+    k: int = 8,
+    bands: int = 4,
+) -> str:
+    """DuckDB twin of ``lsh_bands`` plus the band equi-join, over the
+    ``sigs`` CTE of ``minhash_sql``: CTEs ``bands`` (doc_id, band,
+    band_hash) and ``name`` (distinct a, b).  ``pair`` filters the joined
+    sides ``l`` and ``r``: a self-join keeps ``l.doc_id < r.doc_id``; a
+    delta-vs-index join selects the delta on ``l`` and the index on ``r``.
+    """
+    band_hash = [
+        "MD5(" + " || '|' || ".join(f"CAST(h{i} AS VARCHAR)" for i in slots) + ")"
+        for slots in _band_slots(k, bands)
+    ]
+    union = "".join(
+        f"\n      UNION ALL SELECT doc_id, {b}, {h} FROM sigs"
+        for b, h in enumerate(band_hash[1:], start=1)
+    )
+    return f"""bands AS (
+      SELECT doc_id, 0 AS band,
+             {band_hash[0]} AS band_hash FROM sigs{union}
+    ),
+    {name} AS (
+      SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
+      FROM bands l JOIN bands r ON l.band = r.band AND l.band_hash = r.band_hash
+      WHERE {pair}
+    )"""
+
+
+def jaccard_verified_sql(
+    cands: str, sets: str, threshold: float = 0.5, score: bool = False
+) -> str:
+    """DuckDB twin of the exact-Jaccard verification in ``near_dup_pairs``
+    and ``jaccard_pairs_prefix``: a SELECT of the candidate pairs (a, b) of
+    CTE ``cands`` whose shingle sets in ``sets`` (doc_id, sh) have Jaccard
+    >= ``threshold``; ``score`` adds the ``jaccard`` column."""
+    inter = "LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s)))"
+    jac = f"CAST({inter} AS DOUBLE) / (LEN(sa.sh) + LEN(sb.sh) - {inter})"
+    cols = f"c.a, c.b, {jac} AS jaccard" if score else "c.a, c.b"
+    return f"""SELECT {cols}
+      FROM {cands} c
+      JOIN {sets} sa ON sa.doc_id = c.a
+      JOIN {sets} sb ON sb.doc_id = c.b
+      WHERE {jac} >= {threshold}"""
 
 
 def near_dup_pairs(
@@ -307,7 +394,7 @@ def jaccard_pairs_prefix(
     pref = sh.select(
         "_id", "_n", F.explode(F.slice("_sh", F.lit(1), prefix_len)).alias("_g")
     )
-    # Length filter (round 12 — the PPJoin companion bound): J(A,B) >= t
+    # Length filter (the PPJoin companion bound): J(A,B) >= t
     # forces min(|A|,|B|) >= t * max(|A|,|B|) (the intersection is at most
     # the smaller set and at least t times the union).  Pairs violating it
     # can only fail the final jaccard >= t filter, so pruning them BEFORE
@@ -334,6 +421,24 @@ def jaccard_pairs_prefix(
         .select("a", "b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
+
+
+def prefix_candidates_sql(src: str, name: str = "cands", threshold: float = 0.5) -> str:
+    """DuckDB twin of the ``order='lex'`` prefix filter in
+    ``jaccard_pairs_prefix``, over ``src`` (doc_id, sh) with each set
+    already sorted: CTEs ``nz`` (non-empty sets with size ``n``), ``pref``
+    (the exploded prefixes) and ``name`` (distinct a < b sharing a prefix
+    element).  Pairs still need ``jaccard_verified_sql``."""
+    return f"""nz AS (SELECT doc_id, sh, LEN(sh) AS n FROM {src} WHERE LEN(sh) > 0),
+    pref AS (
+      SELECT doc_id,
+             UNNEST(LIST_SLICE(sh, 1, n - CAST(CEIL({threshold} * n) AS BIGINT) + 1)) AS g
+      FROM nz
+    ),
+    {name} AS (
+      SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
+      FROM pref l JOIN pref r ON l.g = r.g AND l.doc_id < r.doc_id
+    )"""
 
 
 def simhash64(text_col: Column | str) -> Column:

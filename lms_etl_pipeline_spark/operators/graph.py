@@ -42,8 +42,8 @@ def connected_components(
     a similarity graph that deep signals a pathological giant component
     (i.e. a thresholding bug), which should fail loudly, not silently.
     """
-    # Materialize the edge list ONCE (round 12, guide §2.4/§1.2): the
-    # upstream subtree (e.g. an LSH pipeline) is expensive, and the old
+    # Materialize the edge list ONCE: the upstream subtree (e.g. an LSH
+    # pipeline) is expensive, and the old
     # symmetrized-union barrier evaluated it TWICE — once per union branch
     # — inside the materializing job.  Checkpoint |E| rows instead and
     # derive the symmetric view lazily: each iteration then re-reads the
@@ -60,7 +60,7 @@ def connected_components(
         # the convergence check then reads the materialized frame instead
         # of joining old vs new labels in a second per-iteration job.
         if it == 0:
-            # Iteration 0 folded into ONE aggregation (round 12): initial
+            # Iteration 0 folded into ONE aggregation: initial
             # labels ARE the node ids, so min-over-(self ∪ neighbors) is
             # just least(u, min(v)) grouped by u — no init-labels frame,
             # no distinct (subsumed by the groupBy), no join.  Every node
@@ -111,7 +111,7 @@ def connected_components(
                 "_old",
             )
         # materialization barrier: the convergence count IS the
-        # materializing action (round 12 — ``eager=False`` saves the
+        # materializing action (``eager=False`` saves the
         # separate populate-job per iteration; the filter applies above
         # the barrier, so the full frame is persisted/checkpointed by the
         # same job that counts the updates).  cut_lineage is REQUIRED
@@ -131,3 +131,17 @@ def connected_components(
         f"connected_components did not converge in {max_iter} iterations - "
         "suspiciously deep similarity graph (check the pairing threshold)"
     )
+
+
+def components_sql(pairs: str) -> str:
+    """DuckDB twin of ``connected_components`` over the CTE ``pairs``
+    (a, b): CTEs ``sym``, ``reach`` (the recursive transitive closure) and
+    ``comps`` (node, component = the minimum reachable node id).  The
+    enclosing query must start ``WITH RECURSIVE``."""
+    return f"""sym AS (SELECT a AS u, b AS v FROM {pairs} UNION ALL SELECT b, a FROM {pairs}),
+    reach AS (
+      SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM sym)
+      UNION
+      SELECT reach.node, sym.v FROM reach JOIN sym ON reach.r = sym.u
+    ),
+    comps AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node)"""

@@ -33,23 +33,25 @@ def _sq_dist(a, b) -> F.Column:
     return F.aggregate(diffs, F.lit(0.0).cast("double"), lambda acc, p: acc + p)
 
 
-def kmeans_assign(points: DataFrame, centroids: DataFrame) -> DataFrame:
+def kmeans_assign(
+    points: DataFrame, centroids: DataFrame, id_col: str = "id", vec_col: str = "vec"
+) -> DataFrame:
     """Nearest-centroid assignment.
 
-    ``points``: (id, vec) as columns ``id``, ``vec``; ``centroids``:
-    (cid, cvec).  The centroid table broadcasts (k rows); the corpus
-    streams through once — no shuffle of the points.  Ties break on the
-    lowest cid, so assignment is deterministic.
-    Returns (id, cluster, d2).
+    ``points``: columns ``id_col``, ``vec_col``; ``centroids``: (cid,
+    cvec).  The centroid table broadcasts (k rows); the corpus streams
+    through once — no shuffle of the points.  Ties break on the lowest
+    cid, so assignment is deterministic.
+    Returns (id_col, cluster, d2).
     """
     pairs = points.crossJoin(F.broadcast(centroids)).select(
-        "id", "cid", _sq_dist(F.col("vec"), F.col("cvec")).alias("d2")
+        id_col, "cid", _sq_dist(F.col(vec_col), F.col("cvec")).alias("d2")
     )
-    w = Window.partitionBy("id").orderBy("d2", "cid")
+    w = Window.partitionBy(id_col).orderBy("d2", "cid")
     return (
-        pairs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("id", F.col("cid").alias("cluster"), "d2")
+        pairs.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(id_col, F.col("cid").alias("cluster"), "d2")
     )
 
 

@@ -1,4 +1,4 @@
-"""Corpus ML / retrieval / graph-signal plans (round 4 widening).
+"""Corpus ML / retrieval / graph-signal plans.
 
 Five operator families a production training-data platform runs that were
 not yet first-class in the catalog:
@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators import vectors as vec
+from lms_etl_pipeline_spark.operators.ml import kmeans_assign
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.session import materialize
 from lms_etl_pipeline_spark.plans.curation import _BUCKET_SQL, _bucket
@@ -288,31 +289,7 @@ def _d2_sql(a: str, c: str) -> str:
     return " + ".join(terms)
 
 
-def _d2(a, c) -> F.Column:
-    diffs = F.zip_with(
-        a, c, lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double"))
-    )
-    return F.aggregate(diffs, F.lit(0.0).cast("double"), lambda acc, p: acc + p)
-
-
-def _assign(e: DataFrame, cent: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the k-row centroid table,
-    one linear scan of the corpus, argmin via (d2, cid) window."""
-    pairs = e.crossJoin(F.broadcast(cent)).select(
-        "vec_id", "cid", _d2(F.col("embedding"), F.col("cvec")).alias("d2")
-    )
-    w = Window.partitionBy("vec_id").orderBy("d2", "cid")
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cid").alias("cluster"), "d2")
-    )
-
-
-@query(
-    "kmeans_lloyd",
-    oracle=f"""
+_KMEANS_ORACLE = f"""
     WITH c0 AS (SELECT vec_id AS cid, embedding AS cvec
                 FROM embeddings WHERE vec_id < {_KMEANS_K}),
     p1 AS (SELECT e.vec_id, c.cid,
@@ -346,8 +323,10 @@ def _assign(e: DataFrame, cent: DataFrame) -> DataFrame:
       SELECT vec_id, cid AS cluster, d2 AS dist,
              ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
       FROM p2) WHERE rn = 1
-    """,
-)
+    """
+
+
+@query("kmeans_lloyd", oracle=_KMEANS_ORACLE)
 def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two unrolled Lloyd iterations of k-means (k=8, centroids seeded from
     the first k vectors — deterministic, no random init): assign → recompute
@@ -367,7 +346,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     c0 = e.filter(F.col("vec_id") < _KMEANS_K).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
     )
-    a1 = _assign(e, c0).select("vec_id", "cluster")
+    a1 = kmeans_assign(e, c0, "vec_id", "embedding").select("vec_id", "cluster")
     m = a1.join(e, "vec_id").select(
         "cluster", F.posexplode("embedding").alias("pos", "val")
     )
@@ -414,7 +393,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform("s", lambda x: x["v"]).alias("cvec"),
         )
     )
-    a2 = _assign(e, c1)
+    a2 = kmeans_assign(e, c1, "vec_id", "embedding")
     # dist is emitted UNROUNDED: the squared-L2 fold is bit-identical
     # across engines (left-assoc, identical rounded centroid inputs), so
     # a cosmetic ROUND(4) only adds the round-tie hazard — fuzz seed 37
@@ -482,7 +461,7 @@ def pagerank_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     then DECIMAL-summed (order-independent), per repo convention."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    # Round 12 (guide §2.4): materialize the edge list and node set ONCE —
+    # Materialize the edge list and node set ONCE —
     # the unrolled 3-iteration plan references edges (contrib), nodes
     # (re-rank join), deg and nn per iteration, so the lazy form re-derived
     # the orders⋈lineitem+distinct subtree up to ~a dozen times per run
@@ -761,9 +740,7 @@ _FP_OF_TOKS = "MD5(COALESCE(ARRAY_TO_STRING(LIST_SORT(LIST_DISTINCT(toks)), ' ')
 
 def _inc_dedup_oracle() -> str:
     from lms_etl_pipeline_spark.operators import dedup as dd
-    from lms_etl_pipeline_spark.plans.llm import _BASE_HASHES, _minhash_slots_sql
 
-    jac_inter = "LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s)))"
     return f"""
     WITH toks_t AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
     b AS (SELECT * FROM toks_t WHERE doc_id % 10 = {_BATCH_MOD}),
@@ -772,27 +749,13 @@ def _inc_dedup_oracle() -> str:
             WHERE doc_id % 10 != {_BATCH_MOD}),
     exact_drop AS (SELECT doc_id FROM bfp WHERE fp IN (SELECT fp FROM ifp)),
     sh_all AS (SELECT doc_id, {_SH_OF_TOKS} AS sh FROM toks_t),
-    hs_t AS (SELECT doc_id, sh, {_BASE_HASHES} AS hs FROM sh_all
-             WHERE LEN(sh) > 0),
-    sigs AS (SELECT doc_id, {_minhash_slots_sql(8)} FROM hs_t),
-    bands AS (
-      SELECT doc_id, 0 AS band,
-             MD5(CAST(h0 AS VARCHAR) || '|' || CAST(h1 AS VARCHAR)) AS band_hash FROM sigs
-      UNION ALL SELECT doc_id, 1, MD5(CAST(h2 AS VARCHAR) || '|' || CAST(h3 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 2, MD5(CAST(h4 AS VARCHAR) || '|' || CAST(h5 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 3, MD5(CAST(h6 AS VARCHAR) || '|' || CAST(h7 AS VARCHAR)) FROM sigs
-    ),
-    cands AS (
-      SELECT DISTINCT lb.doc_id AS bdoc, rb.doc_id AS idoc
-      FROM bands lb JOIN bands rb
-        ON lb.band = rb.band AND lb.band_hash = rb.band_hash
-      WHERE lb.doc_id % 10 = {_BATCH_MOD} AND rb.doc_id % 10 != {_BATCH_MOD}),
+    {dd.minhash_sql("sh_all")},
+    {dd.lsh_candidates_sql(
+        f"l.doc_id % 10 = {_BATCH_MOD} AND r.doc_id % 10 != {_BATCH_MOD}")},
     near_drop AS (
-      SELECT DISTINCT c.bdoc AS doc_id FROM cands c
-      JOIN sh_all sa ON sa.doc_id = c.bdoc
-      JOIN sh_all sb ON sb.doc_id = c.idoc
-      WHERE CAST({jac_inter} AS DOUBLE)
-              / (LEN(sa.sh) + LEN(sb.sh) - {jac_inter}) >= {_INC_JACCARD})
+      SELECT DISTINCT a AS doc_id
+      FROM ({dd.jaccard_verified_sql("cands", "sh_all", _INC_JACCARD)})
+    )
     SELECT b.doc_id, b.lang FROM b
     WHERE b.doc_id NOT IN (SELECT doc_id FROM exact_drop)
       AND b.doc_id NOT IN (SELECT doc_id FROM near_drop)

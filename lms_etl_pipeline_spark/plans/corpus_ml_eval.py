@@ -1,5 +1,5 @@
 """Corpus-ML evaluation / sketch / mix-assembly plans — the second half of
-the round-4/5 corpus-ML widening, split from ``plans/corpus_ml.py`` along
+the corpus-ML plans, split from ``plans/corpus_ml.py`` along
 its section boundaries (repo convention: plan modules stay <= ~1,100 LoC).
 
 Families here: dense-ANN recall evaluation, the dataset datasheet profile,
@@ -22,10 +22,9 @@ from lms_etl_pipeline_spark.operators.rank import global_running_sum
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.plans.corpus_ml import (
     _BATCH_MOD,
-    _KMEANS_K,
+    _KMEANS_ORACLE,
     _SEMDEDUP_TAU,
     _cos_sql,
-    _d2_sql,
     kmeans_lloyd,
     semdedup_embedding,
 )
@@ -394,37 +393,10 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_kmeans_oracle() -> str:
-    """Chain the kmeans_lloyd oracle's assignment CTEs with the within-
+    """The kmeans_lloyd oracle's assignment chained with the within-
     cluster cosine dedup — the full SemDeDup pipeline in one SQL twin."""
     return f"""
-    WITH c0 AS (SELECT vec_id AS cid, embedding AS cvec
-                FROM embeddings WHERE vec_id < {_KMEANS_K}),
-    p1 AS (SELECT e.vec_id, c.cid,
-                  {_d2_sql("e.embedding", "c.cvec")} AS d2
-           FROM embeddings e CROSS JOIN c0 c),
-    a1 AS (SELECT vec_id, cid AS cluster FROM (
-             SELECT vec_id, cid,
-                    ROW_NUMBER() OVER (PARTITION BY vec_id
-                                       ORDER BY d2, cid) AS rn
-             FROM p1) WHERE rn = 1),
-    m AS (SELECT a1.cluster,
-                 GENERATE_SUBSCRIPTS(e.embedding, 1) AS pos,
-                 UNNEST(e.embedding) AS val
-          FROM a1 JOIN embeddings e USING (vec_id)),
-    c1e AS (SELECT cluster, pos,
-                   ROUND(CAST(SUM(CAST(val AS DECIMAL(27,8))) AS DOUBLE)
-                         / COUNT(*), 6) AS v
-            FROM m GROUP BY 1, 2),
-    c1 AS (SELECT cluster AS cid, LIST(v ORDER BY pos) AS cvec
-           FROM c1e GROUP BY 1),
-    p2 AS (SELECT e.vec_id, c.cid,
-                  {_d2_sql("e.embedding", "c.cvec")} AS d2
-           FROM embeddings e CROSS JOIN c1 c),
-    a2 AS (SELECT vec_id, cid AS cluster FROM (
-             SELECT vec_id, cid,
-                    ROW_NUMBER() OVER (PARTITION BY vec_id
-                                       ORDER BY d2, cid) AS rn
-             FROM p2) WHERE rn = 1)
+    WITH a2 AS (SELECT vec_id, cluster FROM ({_KMEANS_ORACLE}))
     SELECT a.vec_id, aa.cluster FROM embeddings a
     JOIN a2 aa ON aa.vec_id = a.vec_id
     WHERE NOT EXISTS (
@@ -722,7 +694,7 @@ def token_budget_selection_sharded(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Graph + co-occurrence analytics over the events stream (round 5)
+# Graph + co-occurrence analytics over the events stream
 # ---------------------------------------------------------------------------
 
 
@@ -866,7 +838,7 @@ def eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pass@k estimation — the code-eval harness aggregate (Chen et al.
     2021, "Evaluating Large Language Models Trained on Code"): each task
     (here: user) has n sampled attempts (events) of which c are correct
-    (value > 0 — exercising the round-10 negative-metric axis), and the
+    (value > 0 — exercising the fuzzer's negative-metric axis), and the
     unbiased estimator is ``1 - C(n-c, k) / C(n, k)``.
 
     Exactness: the binomial ratio is evaluated as the left-associative

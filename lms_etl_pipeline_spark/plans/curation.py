@@ -24,10 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators import bpe
+from lms_etl_pipeline_spark.operators import dedup as dd
 from lms_etl_pipeline_spark.operators import text as tx
+from lms_etl_pipeline_spark.operators.graph import components_sql, connected_components
 from lms_etl_pipeline_spark.plans import anchors
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.plans.llm import _TOKS
+from lms_etl_pipeline_spark.plans.llm import _SHINGLES, _TOKS
 from lms_etl_pipeline_spark.session import (
     default_parallelism,
     materialize,
@@ -300,62 +302,18 @@ def domain_mixture_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- leakage-safe splits + tokenizer apply ----------------------------------
 
-# The verified MinHash-LSH -> exact-Jaccard -> transitive-closure chain from
-# plans/llm.py (dedup_clusters), reused verbatim so the cluster definition
-# is identical in both engines.
-from lms_etl_pipeline_spark.plans.llm import (  # noqa: E402
-    _BASE_HASHES,
-    _SHINGLES,
-    _minhash_slots_sql,
-)
-
-_CLUSTER_CTE = f"""
-    WITH RECURSIVE sh_t AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
-    hs_t AS (SELECT doc_id, sh, {_BASE_HASHES} AS hs FROM sh_t WHERE LEN(sh) > 0),
-    sigs AS (
-      SELECT doc_id,
-             {_minhash_slots_sql(8)}
-      FROM hs_t
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band,
-             MD5(CAST(h0 AS VARCHAR) || '|' || CAST(h1 AS VARCHAR)) AS band_hash FROM sigs
-      UNION ALL SELECT doc_id, 1, MD5(CAST(h2 AS VARCHAR) || '|' || CAST(h3 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 2, MD5(CAST(h4 AS VARCHAR) || '|' || CAST(h5 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 3, MD5(CAST(h6 AS VARCHAR) || '|' || CAST(h7 AS VARCHAR)) FROM sigs
-    ),
-    cands AS (
-      SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-      FROM bands l JOIN bands r ON l.band = r.band AND l.band_hash = r.band_hash
-      WHERE l.doc_id < r.doc_id
-    ),
-    pairs AS (
-      SELECT c.a, c.b
-      FROM cands c
-      JOIN sh_t sa ON sa.doc_id = c.a
-      JOIN sh_t sb ON sb.doc_id = c.b
-      WHERE CAST(LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))) AS DOUBLE)
-              / (LEN(sa.sh) + LEN(sb.sh) - LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))))
-              >= 0.5
-    ),
-    sym AS (SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b, a FROM pairs),
-    reach AS (
-      SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM sym)
-      UNION
-      SELECT reach.node, sym.v
-      FROM reach JOIN sym ON reach.r = sym.u
-    ),
-    comp AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node)
-"""
-
 
 @query(
     "split_leakage_safe",
-    oracle=_CLUSTER_CTE
-    + f""",
+    oracle=f"""
+    WITH RECURSIVE sh_t AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
+    {dd.minhash_sql("sh_t")},
+    {dd.lsh_candidates_sql()},
+    pairs AS ({dd.jaccard_verified_sql("cands", "sh_t")}),
+    {components_sql("pairs")},
     rep AS (
       SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS cluster_rep
-      FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
+      FROM documents d LEFT JOIN comps c ON c.node = d.doc_id
     )
     SELECT doc_id, cluster_rep,
            CASE WHEN {_BUCKET_SQL.format(c="cluster_rep")} % 100 < 80 THEN 'train'
@@ -378,9 +336,6 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     their own representative.  Scale: the component labels are |paired
     docs| rows — tiny vs the corpus — so the final join broadcasts; the
     expensive stage is the same banded LSH that is already linear."""
-    from lms_etl_pipeline_spark.operators import dedup as dd
-    from lms_etl_pipeline_spark.operators.graph import connected_components
-
     d = load_table(spark, sf_dir, "documents")
     pairs = dd.near_dup_pairs(d, "doc_id", "text")
     comp = connected_components(pairs.select("a", "b"))
@@ -699,50 +654,11 @@ _RECALL_SLICE = anchors.AnchorSlice("doc_id", 5000, kind="contract")
       SELECT doc_id, LIST_SORT({_SHINGLES}) AS sh FROM documents
       WHERE {_RECALL_SLICE.sql}
     ),
-    nz AS (SELECT doc_id, sh, LEN(sh) AS n FROM sh_srt WHERE LEN(sh) > 0),
-    pref AS (
-      SELECT doc_id,
-             UNNEST(LIST_SLICE(sh, 1, n - CAST(CEIL(0.5 * n) AS BIGINT) + 1)) AS g
-      FROM nz
-    ),
-    pcands AS (
-      SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-      FROM pref l JOIN pref r ON l.g = r.g AND l.doc_id < r.doc_id
-    ),
-    truth AS (
-      SELECT c.a, c.b FROM pcands c
-      JOIN nz sa ON sa.doc_id = c.a
-      JOIN nz sb ON sb.doc_id = c.b
-      WHERE CAST(LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))) AS DOUBLE)
-              / (sa.n + sb.n - LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))))
-              >= 0.5
-    ),
-    hs_t AS (SELECT doc_id, sh, {_BASE_HASHES} AS hs FROM sh_srt WHERE LEN(sh) > 0),
-    sigs AS (
-      SELECT doc_id,
-             {_minhash_slots_sql(8)}
-      FROM hs_t
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band,
-             MD5(CAST(h0 AS VARCHAR) || '|' || CAST(h1 AS VARCHAR)) AS band_hash FROM sigs
-      UNION ALL SELECT doc_id, 1, MD5(CAST(h2 AS VARCHAR) || '|' || CAST(h3 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 2, MD5(CAST(h4 AS VARCHAR) || '|' || CAST(h5 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 3, MD5(CAST(h6 AS VARCHAR) || '|' || CAST(h7 AS VARCHAR)) FROM sigs
-    ),
-    lcands AS (
-      SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-      FROM bands l JOIN bands r ON l.band = r.band AND l.band_hash = r.band_hash
-      WHERE l.doc_id < r.doc_id
-    ),
-    lsh AS (
-      SELECT c.a, c.b FROM lcands c
-      JOIN nz sa ON sa.doc_id = c.a
-      JOIN nz sb ON sb.doc_id = c.b
-      WHERE CAST(LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))) AS DOUBLE)
-              / (sa.n + sb.n - LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))))
-              >= 0.5
-    )
+    {dd.prefix_candidates_sql("sh_srt", "pcands")},
+    truth AS ({dd.jaccard_verified_sql("pcands", "nz")}),
+    {dd.minhash_sql("sh_srt")},
+    {dd.lsh_candidates_sql(name="lcands")},
+    lsh AS ({dd.jaccard_verified_sql("lcands", "nz")})
     SELECT (SELECT COUNT(*) FROM truth) AS n_true,
            (SELECT COUNT(*) FROM truth t JOIN lsh l ON t.a = l.a AND t.b = l.b)
                AS n_found,
@@ -774,8 +690,6 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the box's disk.  A recall measurement on a fixed 5000-doc slice grades
     the (k=8, bands=4) choice just as well as the full corpus would; the
     corpus-scale approximate path (near_dup_pairs_lsh) is unbounded."""
-    from lms_etl_pipeline_spark.operators import dedup as dd
-
     d = _RECALL_SLICE.apply(load_table(spark, sf_dir, "documents"))
     truth = dd.jaccard_pairs_prefix(
         d, "doc_id", "text", n=3, threshold=0.5,

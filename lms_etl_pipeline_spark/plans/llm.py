@@ -109,13 +109,17 @@ def curated_corpus_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFr
     lossless: lang comes back from directory names, data columns from the
     files, and the pruned read returns exactly the oracle's rows.
     """
+    import tempfile
+
     from lms_etl_pipeline_spark.sources.parquet_io import read_partitioned, write_partitioned
 
     d = load_table(spark, sf_dir, "documents")
     gated = d.select(
         "doc_id", "lang", F.size(tx.tokens("text")).alias("n_tokens")
     ).filter(F.col("n_tokens").between(20, 1000))
-    path = "/root/repo/.scratch/curated_by_lang"
+    # A fresh directory per build: the read-back is lazy, so a shared path
+    # would let a concurrent build overwrite the files this frame scans.
+    path = tempfile.mkdtemp(prefix="curated_by_lang_")
     write_partitioned(gated, path, ["lang"])
     # Explicit schema on the read-back: when the gate matched ZERO rows the
     # layout holds no files and schema inference would raise
@@ -396,29 +400,12 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DuckDB twins of operators.dedup.minhash_signature: one md5-derived base
-# hash per shingle (reduced below MH_P), then k affine transforms mod MH_P.
-_BASE_HASHES = (
-    "LIST_TRANSFORM(sh, s -> TRY_CAST(CONCAT('0x', SUBSTRING(MD5(s), 1, 15)) AS BIGINT)"
-    f" % {dd.MH_P})"
-)
-
-
-def _minhash_slots_sql(k: int) -> str:
-    return ",\n             ".join(
-        f"LIST_MIN(LIST_TRANSFORM(hs, h -> ({dd.MH_A[i]} * h + {dd.MH_B[i]}) % {dd.MH_P})) AS h{i}"
-        for i in range(k)
-    )
-
-
 @query(
     "minhash_signatures",
     oracle=f"""
     WITH sh_t AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
-    hs_t AS (SELECT doc_id, {_BASE_HASHES} AS hs FROM sh_t WHERE LEN(sh) > 0)
-    SELECT doc_id,
-             {_minhash_slots_sql(8)}
-    FROM hs_t
+    {dd.minhash_sql("sh_t")}
+    SELECT * FROM sigs
     """,
 )
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -433,34 +420,9 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     "near_dup_pairs_lsh",
     oracle=f"""
     WITH sh_t AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
-    hs_t AS (SELECT doc_id, sh, {_BASE_HASHES} AS hs FROM sh_t WHERE LEN(sh) > 0),
-    sigs AS (
-      SELECT doc_id,
-             {_minhash_slots_sql(8)}
-      FROM hs_t
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band,
-             MD5(CAST(h0 AS VARCHAR) || '|' || CAST(h1 AS VARCHAR)) AS band_hash FROM sigs
-      UNION ALL SELECT doc_id, 1, MD5(CAST(h2 AS VARCHAR) || '|' || CAST(h3 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 2, MD5(CAST(h4 AS VARCHAR) || '|' || CAST(h5 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 3, MD5(CAST(h6 AS VARCHAR) || '|' || CAST(h7 AS VARCHAR)) FROM sigs
-    ),
-    cands AS (
-      SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-      FROM bands l JOIN bands r ON l.band = r.band AND l.band_hash = r.band_hash
-      WHERE l.doc_id < r.doc_id
-    )
-    SELECT c.a, c.b,
-           CAST(LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))) AS DOUBLE)
-             / (LEN(sa.sh) + LEN(sb.sh) - LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))))
-             AS jaccard
-    FROM cands c
-    JOIN sh_t sa ON sa.doc_id = c.a
-    JOIN sh_t sb ON sb.doc_id = c.b
-    WHERE CAST(LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))) AS DOUBLE)
-             / (LEN(sa.sh) + LEN(sb.sh) - LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))))
-             >= 0.5
+    {dd.minhash_sql("sh_t")},
+    {dd.lsh_candidates_sql()}
+    {dd.jaccard_verified_sql("cands", "sh_t", score=True)}
     """,
 )
 def near_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -577,28 +539,11 @@ def text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH sh_t AS (
       SELECT doc_id, LIST_SORT({_SHINGLES}) AS sh FROM documents
     ),
-    nz AS (SELECT doc_id, sh, LEN(sh) AS n FROM sh_t WHERE LEN(sh) > 0),
-    pref AS (
-      SELECT doc_id,
-             UNNEST(LIST_SLICE(sh, 1, n - CAST(CEIL(0.5 * n) AS BIGINT) + 1)) AS g
-      FROM nz
-    ),
-    cands AS (
-      SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-      FROM pref l JOIN pref r ON l.g = r.g AND l.doc_id < r.doc_id
-    ),
-    pos AS (
-      SELECT c.a AS anchor, c.b AS positive
-      FROM cands c
-      JOIN nz sa ON sa.doc_id = c.a
-      JOIN nz sb ON sb.doc_id = c.b
-      WHERE CAST(LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))) AS DOUBLE)
-               / (sa.n + sb.n - LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))))
-               >= 0.5
-    ),
+    {dd.prefix_candidates_sql("sh_t")},
+    pos AS ({dd.jaccard_verified_sql("cands", "nz")}),
     bound AS (SELECT MAX(doc_id) + 1 AS nd FROM documents),
     step0 AS (
-      SELECT anchor, positive, nd, (anchor * 7919 + 31) % nd AS r0
+      SELECT a AS anchor, b AS positive, nd, (a * 7919 + 31) % nd AS r0
       FROM pos CROSS JOIN bound
     ),
     step1 AS (
@@ -646,26 +591,8 @@ def contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH sh_t AS (
       SELECT doc_id, LIST_SORT({_SHINGLES}) AS sh FROM documents
     ),
-    nz AS (SELECT doc_id, sh, LEN(sh) AS n FROM sh_t WHERE LEN(sh) > 0),
-    pref AS (
-      SELECT doc_id,
-             UNNEST(LIST_SLICE(sh, 1, n - CAST(CEIL(0.5 * n) AS BIGINT) + 1)) AS g
-      FROM nz
-    ),
-    cands AS (
-      SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-      FROM pref l JOIN pref r ON l.g = r.g AND l.doc_id < r.doc_id
-    )
-    SELECT c.a, c.b,
-           CAST(LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))) AS DOUBLE)
-             / (sa.n + sb.n - LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))))
-             AS jaccard
-    FROM cands c
-    JOIN nz sa ON sa.doc_id = c.a
-    JOIN nz sb ON sb.doc_id = c.b
-    WHERE CAST(LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))) AS DOUBLE)
-             / (sa.n + sb.n - LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))))
-             >= 0.5
+    {dd.prefix_candidates_sql("sh_t")}
+    {dd.jaccard_verified_sql("cands", "nz", score=True)}
     """,
 )
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

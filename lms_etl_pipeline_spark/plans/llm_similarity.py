@@ -6,10 +6,10 @@ stay <= ~1,100 LoC).
 Families here: winnowing fingerprints, near-dup transitive clustering,
 the end-to-end corpus curation pipeline, SimHash, exact/LSH/IVF
 kNN over embeddings, embedding statistics and centroids, and the UDTF /
-pandas-UDAF / applyInPandas surface.  Tokenize/shingle/minhash SQL
-fragments and the quality/dedup primitives stay in ``plans/llm`` and are
-imported from there; scope and determinism conventions are that module's
-docstring.
+pandas-UDAF / applyInPandas surface.  Tokenize/shingle SQL fragments
+stay in ``plans/llm``; the dedup stages' DuckDB twins live beside their
+Spark operators (``operators/dedup``, ``operators/graph``).  Scope and
+determinism conventions are ``plans/llm``'s docstring.
 """
 
 from __future__ import annotations
@@ -23,12 +23,11 @@ from lms_etl_pipeline_spark.operators import dedup as dd
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators import vectors as vec
 from lms_etl_pipeline_spark.plans.catalog import query
+from lms_etl_pipeline_spark.operators.graph import components_sql, connected_components
 from lms_etl_pipeline_spark.plans.llm import (
     EMB_DIM,
-    _BASE_HASHES,
     _SHINGLES,
     _TOKS,
-    _minhash_slots_sql,
     near_dup_pairs_lsh,
 )
 from lms_etl_pipeline_spark.session import (
@@ -84,41 +83,11 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_clusters",
     oracle=f"""
     WITH RECURSIVE sh_t AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
-    hs_t AS (SELECT doc_id, sh, {_BASE_HASHES} AS hs FROM sh_t WHERE LEN(sh) > 0),
-    sigs AS (
-      SELECT doc_id,
-             {_minhash_slots_sql(8)}
-      FROM hs_t
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band,
-             MD5(CAST(h0 AS VARCHAR) || '|' || CAST(h1 AS VARCHAR)) AS band_hash FROM sigs
-      UNION ALL SELECT doc_id, 1, MD5(CAST(h2 AS VARCHAR) || '|' || CAST(h3 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 2, MD5(CAST(h4 AS VARCHAR) || '|' || CAST(h5 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 3, MD5(CAST(h6 AS VARCHAR) || '|' || CAST(h7 AS VARCHAR)) FROM sigs
-    ),
-    cands AS (
-      SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-      FROM bands l JOIN bands r ON l.band = r.band AND l.band_hash = r.band_hash
-      WHERE l.doc_id < r.doc_id
-    ),
-    pairs AS (
-      SELECT c.a, c.b
-      FROM cands c
-      JOIN sh_t sa ON sa.doc_id = c.a
-      JOIN sh_t sb ON sb.doc_id = c.b
-      WHERE CAST(LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))) AS DOUBLE)
-              / (LEN(sa.sh) + LEN(sb.sh) - LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))))
-              >= 0.5
-    ),
-    sym AS (SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b, a FROM pairs),
-    reach AS (
-      SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM sym)
-      UNION
-      SELECT reach.node, sym.v
-      FROM reach JOIN sym ON reach.r = sym.u
-    )
-    SELECT node, MIN(r) AS component FROM reach GROUP BY node
+    {dd.minhash_sql("sh_t")},
+    {dd.lsh_candidates_sql()},
+    pairs AS ({dd.jaccard_verified_sql("cands", "sh_t")}),
+    {components_sql("pairs")}
+    SELECT * FROM comps
     """,
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,8 +96,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the step that turns pairwise matches into keep-one-per-cluster dedup.
     The oracle computes the same components via a recursive-CTE transitive
     closure + MIN(reachable)."""
-    from lms_etl_pipeline_spark.operators.graph import connected_components
-
     docs = load_table(spark, sf_dir, "documents")
     pairs = dd.near_dup_pairs(docs, "doc_id", "text")
     return connected_components(pairs.select("a", "b"))
@@ -161,40 +128,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
              i -> ARRAY_TO_STRING(LIST_SLICE(toks, i, i + 2), ' '))) AS sh
       FROM survivors
     ),
-    hs_t AS (SELECT doc_id, sh, {_BASE_HASHES} AS hs FROM sh_t WHERE LEN(sh) > 0),
-    sigs AS (
-      SELECT doc_id,
-             {_minhash_slots_sql(8)}
-      FROM hs_t
-    ),
-    bands AS (
-      SELECT doc_id, 0 AS band,
-             MD5(CAST(h0 AS VARCHAR) || '|' || CAST(h1 AS VARCHAR)) AS band_hash FROM sigs
-      UNION ALL SELECT doc_id, 1, MD5(CAST(h2 AS VARCHAR) || '|' || CAST(h3 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 2, MD5(CAST(h4 AS VARCHAR) || '|' || CAST(h5 AS VARCHAR)) FROM sigs
-      UNION ALL SELECT doc_id, 3, MD5(CAST(h6 AS VARCHAR) || '|' || CAST(h7 AS VARCHAR)) FROM sigs
-    ),
-    cands AS (
-      SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-      FROM bands l JOIN bands r ON l.band = r.band AND l.band_hash = r.band_hash
-      WHERE l.doc_id < r.doc_id
-    ),
-    pairs AS (
-      SELECT c.a, c.b
-      FROM cands c
-      JOIN sh_t sa ON sa.doc_id = c.a
-      JOIN sh_t sb ON sb.doc_id = c.b
-      WHERE CAST(LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))) AS DOUBLE)
-              / (LEN(sa.sh) + LEN(sb.sh) - LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s))))
-              >= 0.5
-    ),
-    sym AS (SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b, a FROM pairs),
-    reach AS (
-      SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM sym)
-      UNION
-      SELECT reach.node, sym.v FROM reach JOIN sym ON reach.r = sym.u
-    ),
-    comps AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node),
+    {dd.minhash_sql("sh_t")},
+    {dd.lsh_candidates_sql()},
+    pairs AS ({dd.jaccard_verified_sql("cands", "sh_t")}),
+    {components_sql("pairs")},
     dropped AS (SELECT node FROM comps WHERE node != component)
     SELECT s.doc_id, s.lang, LEN(s.toks) AS n_tokens
     FROM survivors s
@@ -221,8 +158,6 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, not once per consumer — and hands the array to the LSH stage
     (``tokens_col=``), which skips both of its re-tokenizations.  Measured
     matched min-of-3 at sf0.1: 3.40 -> 2.87 s wall, identical results."""
-    from lms_etl_pipeline_spark.operators.graph import connected_components
-
     d = load_table(spark, sf_dir, "documents")
     # spread the corpus before the tokenize/HOF feature stage:
     # a single-split fixture otherwise runs the whole quality pass on one

@@ -1,6 +1,6 @@
 """Similarity-calibration plans: the measurements that certify the
 engine's approximate similarity paths with exactly-checkable numbers
-(split from plans/graph_retrieval.py in round 10, at the 1,100-LoC module
+(split from plans/graph_retrieval.py at the 1,100-LoC module
 convention boundary — registry unchanged).
 
 Matryoshka truncation eval (retrieval overlap at reduced embedding
@@ -241,28 +241,18 @@ _SC_THEORY = tuple(
 )
 
 
-def _sc_oracle() -> str:
-    from lms_etl_pipeline_spark.plans.llm import (
-        _BASE_HASHES,
-        _SHINGLES,
-        _minhash_slots_sql,
-    )
+def _anchor_pairs_sql(cols: str) -> str:
+    """Oracle CTEs through ``scored``: every anchor-slice doc pair sharing
+    a shingle, as ``inter i`` (ia < ib, ni shared shingles) joined to both
+    set sizes ``sa``/``sb`` and both signatures ``x``/``y``.  ``scored``
+    holds the exact Jaccard ``j`` plus the SELECT list ``cols``."""
+    from lms_etl_pipeline_spark.plans.llm import _SHINGLES
 
-    # CAST('<repr>' AS DOUBLE): a bare float literal parses via DECIMAL in
-    # DuckDB and double-rounds one ulp off the double Spark injects (the
-    # wilson hazard class; fuzz seed 2 hit it on theory bucket values)
-    theory_case = " ".join(
-        f"WHEN {b} THEN CAST('{_SC_THEORY[b]!r}' AS DOUBLE)" for b in range(10)
-    )
     return f"""
     WITH sh_t AS (
       SELECT doc_id, {_SHINGLES} AS sh FROM documents
       WHERE doc_id < {_SC_ID_CAP}),
-    hs_t AS (SELECT doc_id, sh, {_BASE_HASHES} AS hs FROM sh_t WHERE LEN(sh) >= 1),
-    sigs AS (
-      SELECT doc_id,
-             {_minhash_slots_sql(8)}
-      FROM hs_t),
+    {dd.minhash_sql("sh_t")},
     ex AS (SELECT doc_id, UNNEST(sh) AS s FROM sh_t),
     sz AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY 1),
     inter AS (
@@ -270,16 +260,62 @@ def _sc_oracle() -> str:
       FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
       GROUP BY 1, 2),
     scored AS (
-      SELECT i.ia, i.ib,
-             CAST(i.ni AS DOUBLE) / (sa.n + sb.n - i.ni) AS j,
-             ((x.h0 = y.h0 AND x.h1 = y.h1) OR (x.h2 = y.h2 AND x.h3 = y.h3)
-              OR (x.h4 = y.h4 AND x.h5 = y.h5)
-              OR (x.h6 = y.h6 AND x.h7 = y.h7)) AS cand
+      SELECT CAST(i.ni AS DOUBLE) / (sa.n + sb.n - i.ni) AS j, {cols}
       FROM inter i
       JOIN sz sa ON sa.doc_id = i.ia
       JOIN sz sb ON sb.doc_id = i.ib
       JOIN sigs x ON x.doc_id = i.ia
-      JOIN sigs y ON y.doc_id = i.ib),
+      JOIN sigs y ON y.doc_id = i.ib)"""
+
+
+def _anchor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every anchor-slice doc pair (ia < ib) sharing a shingle: ``ni``
+    shared shingles, set sizes ``na``/``nb`` and signature slots
+    ``xa{i}``/``yb{i}`` — the frame both calibration queries score."""
+    from lms_etl_pipeline_spark.operators import text as tx
+
+    d = load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") < _SC_ID_CAP
+    )
+    sigs = dd.with_minhash(d, "doc_id", "text", k=8)
+    sh = d.select(
+        "doc_id",
+        F.explode(F.array_distinct(tx.shingles(tx.tokens("text"), n=3))).alias("s"),
+    )
+    sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    a = sh.select(F.col("doc_id").alias("ia"), "s")
+    b = sh.select(F.col("doc_id").alias("ib"), "s")
+    inter = (
+        a.join(b, "s")
+        .filter(F.col("ia") < F.col("ib"))
+        .groupBy("ia", "ib")
+        .agg(F.count("*").alias("ni"))
+    )
+    sa = sz.select(F.col("doc_id").alias("ia"), F.col("n").alias("na"))
+    sb = sz.select(F.col("doc_id").alias("ib"), F.col("n").alias("nb"))
+    x = sigs.select(
+        F.col("doc_id").alias("ia"), *[F.col(f"h{i}").alias(f"xa{i}") for i in range(8)]
+    )
+    y = sigs.select(
+        F.col("doc_id").alias("ib"), *[F.col(f"h{i}").alias(f"yb{i}") for i in range(8)]
+    )
+    return inter.join(sa, "ia").join(sb, "ib").join(x, "ia").join(y, "ib")
+
+
+def _jaccard() -> F.Column:
+    """Exact shingle Jaccard of an ``_anchor_pairs`` row, bit-identical to
+    the oracle's ``j``."""
+    return F.col("ni").cast("double") / (F.col("na") + F.col("nb") - F.col("ni"))
+
+
+def _sc_oracle() -> str:
+    # CAST('<repr>' AS DOUBLE): a bare float literal parses via DECIMAL in
+    # DuckDB and double-rounds one ulp off the double Spark injects (the
+    # wilson hazard class; fuzz seed 2 hit it on theory bucket values)
+    theory_case = " ".join(
+        f"WHEN {b} THEN CAST('{_SC_THEORY[b]!r}' AS DOUBLE)" for b in range(10)
+    )
+    return _anchor_pairs_sql(f"({dd.band_match_sql('x', 'y')}) AS cand") + f""",
     bucketed AS (
       SELECT LEAST(CAST(FLOOR(j * 10) AS INTEGER), 9) AS bucket, cand
       FROM scored)
@@ -314,49 +350,16 @@ def lsh_s_curve_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     `with_minhash` path.  In production the curve is computed on a
     sampled slice exactly like this one.
     """
-    d = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _SC_ID_CAP
-    )
-    from lms_etl_pipeline_spark.operators import text as tx
-
-    sigs = dd.with_minhash(d, "doc_id", "text", k=8)
-    sh = d.select(
-        "doc_id",
-        F.explode(F.array_distinct(tx.shingles(tx.tokens("text"), n=3))).alias("s"),
-    )
-    sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("ia"), "s")
-    b = sh.select(F.col("doc_id").alias("ib"), "s")
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("ia") < F.col("ib"))
-        .groupBy("ia", "ib")
-        .agg(F.count("*").alias("ni"))
-    )
-    sa = sz.select(F.col("doc_id").alias("ia"), F.col("n").alias("na"))
-    sb = sz.select(F.col("doc_id").alias("ib"), F.col("n").alias("nb"))
-    x = sigs.select(
-        F.col("doc_id").alias("ia"), *[F.col(f"h{i}").alias(f"xa{i}") for i in range(8)]
-    )
-    y = sigs.select(
-        F.col("doc_id").alias("ib"), *[F.col(f"h{i}").alias(f"yb{i}") for i in range(8)]
-    )
     cand = (
         ((F.col("xa0") == F.col("yb0")) & (F.col("xa1") == F.col("yb1")))
         | ((F.col("xa2") == F.col("yb2")) & (F.col("xa3") == F.col("yb3")))
         | ((F.col("xa4") == F.col("yb4")) & (F.col("xa5") == F.col("yb5")))
         | ((F.col("xa6") == F.col("yb6")) & (F.col("xa7") == F.col("yb7")))
     )
-    j = F.col("ni").cast("double") / (F.col("na") + F.col("nb") - F.col("ni"))
-    scored = (
-        inter.join(sa, "ia")
-        .join(sb, "ib")
-        .join(x, "ia")
-        .join(y, "ib")
-        .select(
-            F.least(F.floor(j * 10).cast("int"), F.lit(9)).alias("bucket"),
-            cand.alias("cand"),
-        )
+    j = _jaccard()
+    scored = _anchor_pairs(spark, sf_dir).select(
+        F.least(F.floor(j * 10).cast("int"), F.lit(9)).alias("bucket"),
+        cand.alias("cand"),
     )
     theory = F.element_at(
         F.array(*[F.lit(v) for v in _SC_THEORY]), F.col("bucket") + 1
@@ -389,38 +392,10 @@ def lsh_s_curve_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mh_err_oracle() -> str:
-    from lms_etl_pipeline_spark.plans.llm import (
-        _BASE_HASHES,
-        _SHINGLES,
-        _minhash_slots_sql,
-    )
-
     match_sum = " + ".join(
         f"CASE WHEN x.h{i} = y.h{i} THEN 1 ELSE 0 END" for i in range(8)
     )
-    return f"""
-    WITH sh_t AS (
-      SELECT doc_id, {_SHINGLES} AS sh FROM documents
-      WHERE doc_id < {_SC_ID_CAP}),
-    hs_t AS (SELECT doc_id, sh, {_BASE_HASHES} AS hs FROM sh_t WHERE LEN(sh) >= 1),
-    sigs AS (
-      SELECT doc_id,
-             {_minhash_slots_sql(8)}
-      FROM hs_t),
-    ex AS (SELECT doc_id, UNNEST(sh) AS s FROM sh_t),
-    sz AS (SELECT doc_id, COUNT(*) AS n FROM ex GROUP BY 1),
-    inter AS (
-      SELECT a.doc_id AS ia, b.doc_id AS ib, COUNT(*) AS ni
-      FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    scored AS (
-      SELECT CAST(i.ni AS DOUBLE) / (sa.n + sb.n - i.ni) AS j,
-             ({match_sum}) AS n_match
-      FROM inter i
-      JOIN sz sa ON sa.doc_id = i.ia
-      JOIN sz sb ON sb.doc_id = i.ib
-      JOIN sigs x ON x.doc_id = i.ia
-      JOIN sigs y ON y.doc_id = i.ib),
+    return _anchor_pairs_sql(f"({match_sum}) AS n_match") + """,
     err AS (
       SELECT LEAST(CAST(FLOOR(j * 10) AS INTEGER), 9) AS bucket,
              CAST(ROUND(ABS(CAST(n_match AS DOUBLE) / 8 - j), 9)
@@ -451,49 +426,16 @@ def minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same anchor layout as the s-curve — inverted-shingle
     equi-join, signatures from the verified `with_minhash` path.
     """
-    from lms_etl_pipeline_spark.operators import text as tx
-
-    d = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _SC_ID_CAP
-    )
-    sigs = dd.with_minhash(d, "doc_id", "text", k=8)
-    sh = d.select(
-        "doc_id",
-        F.explode(F.array_distinct(tx.shingles(tx.tokens("text"), n=3))).alias("s"),
-    )
-    sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("ia"), "s")
-    b = sh.select(F.col("doc_id").alias("ib"), "s")
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("ia") < F.col("ib"))
-        .groupBy("ia", "ib")
-        .agg(F.count("*").alias("ni"))
-    )
-    sa = sz.select(F.col("doc_id").alias("ia"), F.col("n").alias("na"))
-    sb = sz.select(F.col("doc_id").alias("ib"), F.col("n").alias("nb"))
-    x = sigs.select(
-        F.col("doc_id").alias("ia"), *[F.col(f"h{i}").alias(f"xa{i}") for i in range(8)]
-    )
-    y = sigs.select(
-        F.col("doc_id").alias("ib"), *[F.col(f"h{i}").alias(f"yb{i}") for i in range(8)]
-    )
     n_match = None
     for i in range(8):
         t = F.when(F.col(f"xa{i}") == F.col(f"yb{i}"), 1).otherwise(0)
         n_match = t if n_match is None else n_match + t
-    j = F.col("ni").cast("double") / (F.col("na") + F.col("nb") - F.col("ni"))
-    scored = (
-        inter.join(sa, "ia")
-        .join(sb, "ib")
-        .join(x, "ia")
-        .join(y, "ib")
-        .select(
-            F.least(F.floor(j * 10).cast("int"), F.lit(9)).alias("bucket"),
-            F.round(F.abs(n_match.cast("double") / 8 - j), 9)
-            .cast("decimal(18,9)")
-            .alias("abs_err"),
-        )
+    j = _jaccard()
+    scored = _anchor_pairs(spark, sf_dir).select(
+        F.least(F.floor(j * 10).cast("int"), F.lit(9)).alias("bucket"),
+        F.round(F.abs(n_match.cast("double") / 8 - j), 9)
+        .cast("decimal(18,9)")
+        .alias("abs_err"),
     )
     return (
         scored.groupBy("bucket")

@@ -45,27 +45,33 @@ def _q(ident: str) -> str:
 def merge_sql(
     table: str, staging: str, key_cols: list[str], value_cols: list[str]
 ) -> str:
-    """ANSI ``MERGE INTO`` from a staging table (Derby/Postgres 15+/most)."""
+    """ANSI ``MERGE INTO`` from a staging table (Derby/Postgres 15+/most).
+    A key-only table (no value columns) has nothing to update, so only its
+    missing keys are inserted."""
     on = " AND ".join(f"t.{_q(k)} = s.{_q(k)}" for k in key_cols)
     sets = ", ".join(f"t.{_q(c)} = s.{_q(c)}" for c in value_cols)
+    matched = f"WHEN MATCHED THEN UPDATE SET {sets} " if value_cols else ""
     cols = ", ".join(_q(c) for c in key_cols + value_cols)
     vals = ", ".join(f"s.{_q(c)}" for c in key_cols + value_cols)
     return (
         f"MERGE INTO {table} t USING {staging} s ON ({on}) "
-        f"WHEN MATCHED THEN UPDATE SET {sets} "
-        f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
+        f"{matched}WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({vals})"
     )
 
 
 def on_conflict_sql(table: str, key_cols: list[str], value_cols: list[str]) -> str:
     """Postgres/SQLite ``INSERT ... ON CONFLICT`` with qmark placeholders —
-    the reference's statement (s3_to_rds_lambda.py:74-79) parameterized."""
+    the reference's statement (s3_to_rds_lambda.py:74-79) parameterized.
+    A key-only table (a link table such as enrollments) has nothing to
+    update: a conflicting row is already there, so the statement does
+    nothing."""
     cols = key_cols + value_cols
     placeholders = ", ".join("?" for _ in cols)
     sets = ", ".join(f"{c} = EXCLUDED.{c}" for c in value_cols)
+    action = f"DO UPDATE SET {sets}" if value_cols else "DO NOTHING"
     return (
         f"INSERT INTO {table} ({', '.join(cols)}) VALUES ({placeholders}) "
-        f"ON CONFLICT ({', '.join(key_cols)}) DO UPDATE SET {sets}"
+        f"ON CONFLICT ({', '.join(key_cols)}) {action}"
     )
 
 
@@ -99,7 +105,7 @@ def upsert_via_staging(
     # JDBC writer used — no Python DB driver needed).  ``properties`` (the
     # standard carrier for user/password) must reach this connection too,
     # not just the staging write, or the merge fails against any
-    # authenticated database (round-2 advisory).
+    # authenticated database.
     jvm = df.sparkSession._jvm
     jprops = jvm.java.util.Properties()
     for k, v in (properties or {}).items():
@@ -166,15 +172,18 @@ def ledgered_batch_sink(
     key_cols: list[str],
     ledger_table: str = "__batch_ledger",
 ) -> Callable[[DataFrame, int], None]:
-    """Exactly-once-effect ``foreachBatch`` sink via a batch-id ledger.
+    """Idempotent ``foreachBatch`` sink: a keyed upsert plus a batch-id
+    ledger that skips re-execution.
 
-    The keyed upsert alone makes *row* replays converge, but a replayed
-    micro-batch still re-executes its writes (and any side effects).  The
-    ledger closes that gap: each batch id is recorded in ``ledger_table``
-    in the SAME transaction scope as the data; a replayed batch id is
-    detected and skipped entirely.  This is the standard
-    idempotent-foreachBatch recipe for Structured Streaming sinks whose
-    target database can hold a one-column ledger.
+    Correctness comes from the upsert: every partition's rows land through
+    ``upsert_via_foreach_partition``, so applying a batch twice converges to
+    the same rows.  The ledger is an optimization on top.  After the upsert
+    commits, the batch id is recorded in ``ledger_table`` in a SEPARATE,
+    later transaction; a batch id already in the ledger is skipped without
+    touching the data.  If the sink fails between the two commits, the
+    batch is not in the ledger, so its replay re-runs the upsert (which
+    converges) and then records the id once.  The data and the ledger row
+    are not atomic, so side effects beyond the keyed rows may repeat.
 
     Returns a ``(batch_df, batch_id) -> None`` callable for
     ``run_available_now`` / ``writeStream.foreachBatch``.

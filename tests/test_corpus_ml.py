@@ -205,9 +205,9 @@ def test_k_anonymity_classes_partition_the_corpus(spark):
 
 
 def test_kmeans_assign_on_separated_literal_clusters(spark):
-    """_assign must put points with their obvious centroid: two well-
+    """kmeans_assign must put points with their obvious centroid: two well-
     separated 1-hot-ish clusters in 4-d, literal data, no oracle involved."""
-    from lms_etl_pipeline_spark.plans.corpus_ml import _assign
+    from lms_etl_pipeline_spark.operators.ml import kmeans_assign
 
     pts = spark.createDataFrame(
         [
@@ -222,7 +222,10 @@ def test_kmeans_assign_on_separated_literal_clusters(spark):
         [(100, [10.0, 10.0, 0.0, 0.0]), (200, [0.0, 0.0, 10.0, 10.0])],
         "cid LONG, cvec ARRAY<DOUBLE>",
     )
-    got = {r.vec_id: r.cluster for r in _assign(pts, cent).collect()}
+    got = {
+        r.vec_id: r.cluster
+        for r in kmeans_assign(pts, cent, "vec_id", "embedding").collect()
+    }
     assert got == {0: 100, 1: 100, 2: 200, 3: 200}
 
 

@@ -155,3 +155,57 @@ def test_jaccard_pairs_prefix_df_order_same_results(spark):
         for r in dd.jaccard_pairs_prefix(df, "id", "t", threshold=0.4, order="df").collect()
     }
     assert lex == byfreq and (1, 4) in lex
+
+
+def _twin_corpus(spark):
+    """One near-duplicate pair (1, 2), one exact duplicate (3, 4), one doc
+    too short to shingle — as a Spark frame and a DuckDB ``documents``."""
+    import duckdb
+
+    rows = [
+        (1, DOC),
+        (2, DOC + " tonight"),
+        (3, "completely different words about completely other things entirely now"),
+        (4, "completely different words about completely other things entirely now"),
+        (5, "tiny doc"),
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    return spark.createDataFrame(rows, "doc_id BIGINT, text STRING"), con
+
+
+def test_lsh_sql_twin_matches_near_dup_pairs(spark):
+    from lms_etl_pipeline_spark.plans.llm import _SHINGLES
+
+    df, con = _twin_corpus(spark)
+    sql = f"""
+    WITH sh_t AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
+    {dd.minhash_sql("sh_t")},
+    {dd.lsh_candidates_sql()}
+    {dd.jaccard_verified_sql("cands", "sh_t", score=True)}
+    """
+    duck = {(a, b): j for a, b, j in con.execute(sql).fetchall()}
+    spark_pairs = {
+        (r.a, r.b): r.jaccard for r in dd.near_dup_pairs(df, "doc_id", "text").collect()
+    }
+    assert duck == spark_pairs
+    assert duck == {(1, 2): 11 / 12, (3, 4): 1.0}
+
+
+def test_prefix_sql_twin_matches_jaccard_pairs_prefix(spark):
+    from lms_etl_pipeline_spark.plans.llm import _SHINGLES
+
+    df, con = _twin_corpus(spark)
+    sql = f"""
+    WITH sh_t AS (SELECT doc_id, LIST_SORT({_SHINGLES}) AS sh FROM documents),
+    {dd.prefix_candidates_sql("sh_t")}
+    {dd.jaccard_verified_sql("cands", "nz", score=True)}
+    """
+    duck = {(a, b): j for a, b, j in con.execute(sql).fetchall()}
+    spark_pairs = {
+        (r.a, r.b): r.jaccard
+        for r in dd.jaccard_pairs_prefix(df, "doc_id", "text", n=3, threshold=0.5).collect()
+    }
+    assert duck == spark_pairs
+    assert duck == {(1, 2): 11 / 12, (3, 4): 1.0}

@@ -101,7 +101,9 @@ FIXED_BY_SEED = {
     # double's shortest repr carries the full binary value) and
     # quantizing the centroid mean in exact integer arithmetic; dist is
     # now emitted as the raw bit-identical squared-L2 fold.
-    37: ["kmeans_lloyd"],
+    # semdedup_kmeans chains the kmeans_lloyd oracle, so it carries the
+    # same fix and is pinned on the same seed.
+    37: ["kmeans_lloyd", "semdedup_kmeans"],
     # seed 43: a NINTH class — OUTPUT-VOLUME blow-up, not a value
     # divergence: the trainer axis's dense `w####` singleton vocabulary
     # has >2M genuine distance-1 pairs, so the ungated SymSpell pair set

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from lms_etl_pipeline_spark.operators.graph import connected_components
+from lms_etl_pipeline_spark.operators.graph import components_sql, connected_components
 
 
 def _comps(spark, pairs, **kw):
@@ -43,7 +43,7 @@ def test_empty_edges(spark):
 
 
 def test_duplicate_selfloop_and_reversed_edges(spark):
-    # Round 12: iteration 0 is a plain groupBy over the symmetric view
+    # Iteration 0 is a plain groupBy over the symmetric view
     # (least(u, min v)) — pin that edge multiplicity, self-loops, and
     # edges listed in either direction neither duplicate nodes in the
     # output nor change the min-label fixpoint.
@@ -52,3 +52,24 @@ def test_duplicate_selfloop_and_reversed_edges(spark):
     rows = out.collect()
     assert len(rows) == 3  # exactly one row per node
     assert {r.component for r in rows} == {2}
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        [(i, i + 1) for i in range(1, 12)],  # diameter-11 chain
+        [(9, 2), (2, 9), (4, 9), (4, 4), (9, 2)],  # duplicate, self-loop, reversed
+    ],
+    ids=["chain", "dup_selfloop_reversed"],
+)
+def test_components_sql_matches_operator(spark, pairs):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE edges (a BIGINT, b BIGINT)")
+    con.executemany("INSERT INTO edges VALUES (?, ?)", pairs)
+    duck = con.execute(
+        f"WITH RECURSIVE {components_sql('edges')} SELECT node, component FROM comps"
+    ).fetchall()
+    _, out = _comps(spark, pairs)
+    assert sorted(duck) == sorted((r.node, r.component) for r in out.collect())

@@ -125,3 +125,28 @@ def test_compact_refuses_partitioned_root(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="hive-partitioned"):
         compact_small_files(spark, path)
+
+
+def test_curated_write_uses_a_fresh_directory_per_build(spark):
+    """Each build of ``curated_corpus_partitioned_write`` writes and reads
+    back its own directory outside the checkout, so two builds (or two
+    concurrent runs) never scan each other's files."""
+    from pathlib import Path
+
+    from lms_etl_pipeline_spark.plans.catalog import all_oracles
+    from lms_etl_pipeline_spark.plans.llm import curated_corpus_partitioned_write
+    from tools.check_oracle import duck_views
+
+    repo = Path(__file__).resolve().parents[1]
+    con = duck_views(SF_SMOKE)
+    try:
+        want = len(con.execute(all_oracles()["curated_corpus_partitioned_write"]).fetchall())
+    finally:
+        con.close()
+    first = curated_corpus_partitioned_write(spark, SF_SMOKE)
+    second = curated_corpus_partitioned_write(spark, SF_SMOKE)
+    files = [set(df.inputFiles()) for df in (first, second)]
+    assert files[0] and files[1] and not files[0] & files[1]
+    for f in files[0] | files[1]:
+        assert not Path(f.removeprefix("file:")).resolve().is_relative_to(repo), f
+    assert first.count() == second.count() == want

@@ -39,7 +39,7 @@ class TestForeachPartitionUpsert:
         con.commit()
         con.close()
 
-    @pytest.mark.slow  # >14 s: gated from the default run (round 13)
+    @pytest.mark.slow  # >14 s: gated from the default run
     def test_insert_then_update_then_idempotent(self, spark, people_df, tmp_path):
         db = str(tmp_path / "t.db")
         self._setup_db(db)
@@ -73,6 +73,32 @@ class TestForeachPartitionUpsert:
         )
         assert len(_sqlite_state(db)) == 57
 
+    def test_key_only_table_upserts_idempotently(self, spark, tmp_path):
+        """A link table has no value columns: the upsert must still be valid
+        SQL, and a replay must leave the rows as they were."""
+        db = str(tmp_path / "k.db")
+        con = sqlite3.connect(db)
+        con.execute(
+            "CREATE TABLE enrollments (user_id INTEGER, course_id INTEGER,"
+            " PRIMARY KEY (user_id, course_id))"
+        )
+        con.commit()
+        con.close()
+        df = spark.createDataFrame(
+            [(1, 10), (1, 11), (2, 10)], "user_id BIGINT, course_id BIGINT"
+        ).coalesce(1)
+        factory = partial(sqlite3.connect, db, timeout=30)
+        for _ in range(2):
+            jdbc_upsert.upsert_via_foreach_partition(
+                df, factory, "enrollments", ["user_id", "course_id"]
+            )
+        con = sqlite3.connect(db)
+        try:
+            rows = sorted(con.execute("SELECT user_id, course_id FROM enrollments"))
+        finally:
+            con.close()
+        assert rows == [(1, 10), (1, 11), (2, 10)]
+
 
 class TestStagingMerge:
     def test_merge_into_derby(self, spark, people_df, tmp_path):
@@ -100,6 +126,28 @@ class TestStagingMerge:
         assert rows == [(1, "ann", 10.0), (2, "bob", 99.0), (3, "cat", 30.0)]
         # S6: JDBC catalog introspection — schema comes back typed
         assert [f.name.lower() for f in back.schema.fields] == ["id", "name", "score"]
+
+    def test_key_only_merge_into_derby(self, spark, tmp_path):
+        """MERGE for a link table: no WHEN MATCHED clause to render, and a
+        replayed batch inserts nothing new."""
+        url = f"jdbc:derby:{tmp_path}/linkdb;create=true"
+        conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+        conn.createStatement().executeUpdate(
+            'CREATE TABLE enrollments ("user_id" BIGINT NOT NULL,'
+            ' "course_id" BIGINT NOT NULL, PRIMARY KEY ("user_id", "course_id"))'
+        )
+        conn.close()
+        df = spark.createDataFrame(
+            [(1, 10), (1, 11), (2, 10)], "user_id BIGINT, course_id BIGINT"
+        )
+        for _ in range(2):
+            jdbc_upsert.upsert_via_staging(df, url, "enrollments", ["user_id", "course_id"])
+        back = spark.read.format("jdbc").option("url", url).option(
+            "dbtable", "enrollments"
+        ).load()
+        assert sorted((r.user_id, r.course_id) for r in back.collect()) == [
+            (1, 10), (1, 11), (2, 10)
+        ]
 
 
 class TestErrorChannel:

@@ -326,6 +326,64 @@ def test_ledgered_batch_sink_skips_replayed_batches(spark, tmp_path):
     assert ledger == [7, 8]
 
 
+def test_ledgered_batch_sink_replays_a_batch_whose_ledger_write_failed(spark, tmp_path):
+    """The ledger row commits after the upsert, in its own transaction.  When
+    that write fails, the batch is not recorded: its replay re-runs the
+    upsert, converges, and records the batch id exactly once."""
+    import os
+    import sqlite3
+
+    import pytest
+
+    from lms_etl_pipeline_spark.sinks.jdbc_upsert import ledgered_batch_sink
+
+    db = str(tmp_path / "ledger.db")
+    fuse = str(tmp_path / "fail_next_ledger_insert")
+    open(fuse, "w").close()
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE people (id INTEGER PRIMARY KEY, name TEXT)")
+    con.commit()
+    con.close()
+
+    def factory():
+        c = sqlite3.connect(db, timeout=30)
+
+        def deny_one_ledger_insert(action, table, *_):
+            if action == sqlite3.SQLITE_INSERT and table == "__batch_ledger" and (
+                os.path.exists(fuse)
+            ):
+                os.remove(fuse)
+                return sqlite3.SQLITE_DENY
+            return sqlite3.SQLITE_OK
+
+        c.set_authorizer(deny_one_ledger_insert)
+        return c
+
+    def state():
+        c = sqlite3.connect(db)
+        try:
+            rows = sorted(c.execute("SELECT id, name FROM people").fetchall())
+            ledger = [x[0] for x in c.execute("SELECT batch_id FROM __batch_ledger")]
+        finally:
+            c.close()
+        return rows, ledger
+
+    sink = ledgered_batch_sink(factory, "people", ["id"])
+    batch = spark.createDataFrame([(1, "ann"), (2, "bob")], "id INT, name STRING")
+    with pytest.raises(sqlite3.DatabaseError):
+        sink(batch, 7)
+    # the upsert committed, the ledger row did not
+    assert state() == ([(1, "ann"), (2, "bob")], [])
+
+    # drift a row, so the replay's upsert is observable
+    c = sqlite3.connect(db)
+    c.execute("UPDATE people SET name = 'stale' WHERE id = 1")
+    c.commit()
+    c.close()
+    sink(batch, 7)
+    assert state() == ([(1, "ann"), (2, "bob")], [7])
+
+
 def test_stream_static_enrichment_broadcasts_the_dim(spark, tmp_path):
     """Stream-static join: file-streamed events enriched with a static user
     dimension; every input row survives (left join), matches carry the dim

@@ -33,9 +33,10 @@ Exit 1 if any unallowed red flag is found or any declared bound is exceeded.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Queries whose cross join is the algorithm.  Value = the DECLARED upper
 # bound on the rows of every cartesian/nested-loop small side in the plan,
@@ -162,8 +163,7 @@ ALLOW_GLOBAL_WINDOW: dict[str, int] = {
 }
 
 # Broadcast-hash-join BUILD SIDES derived from a corpus table — the last
-# allowlisted-claim class that rested on docstring arguments (VERDICT r8
-# "What's wrong #2").  A broadcast of an eval-gram set, a contaminated-id
+# allowlisted-claim class that rested on docstring arguments.  A broadcast of an eval-gram set, a contaminated-id
 # set, a near-dup component table, or a corpus vocabulary is only
 # scale-safe under a CONTRACTION argument ("benchmarks are KBs, corpora
 # are TBs"); this table turns each argument into a measured bound: the
@@ -218,7 +218,7 @@ ALLOW_BROADCAST: dict[str, tuple[str, float]] = {
 
 
 # CORPUS-PROPORTIONAL window inputs: a global window whose input grows
-# with a named table.  EMPTY since round 7: every former entry (14
+# with a named table.  EMPTY: every former entry (14
 # queries — equi-depth quantiles, Lorenz/Pareto curves, percentile
 # ranks, ROC sweeps, sweep-line concurrency, RFM quartiles, rank-sum
 # tests) was rewritten onto operators/rank.py's bucketed prefix

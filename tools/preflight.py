@@ -7,9 +7,11 @@ regressions, and refuses on the first non-zero exit:
                                          whole-catalog oracle gate at sf0.001
 2. ``pytest perfbench/tests -q``       — the benchmark's own tests: a renamed
                                          or reshaped name it wraps fails here
-3. ``tools/check_oracle.py <sf_dir>``  — full-catalog DuckDB differential
-4. ``tools/audit_plans.py <sf_dir>``   — physical-plan scale-red-flag audit
-5. ``tools/skew_stress.py --gate``     — skew mitigation: mitigated ==
+3. ``pytest tests/ -m slow -q``        — the invariants too slow for the
+                                         default run (fuzz/scale sweeps)
+4. ``tools/check_oracle.py <sf_dir>``  — full-catalog DuckDB differential
+5. ``tools/audit_plans.py <sf_dir>``   — physical-plan scale-red-flag audit
+6. ``tools/skew_stress.py --gate``     — skew mitigation: mitigated ==
                                          unmitigated results, AQE skew-split
                                          fires, the salt spreads the hot key
 
@@ -31,6 +33,7 @@ from pathlib import Path
 STEPS = lambda sf_dir: [  # noqa: E731
     ("pytest", [sys.executable, "-m", "pytest", "tests/", "-q"]),
     ("perfbench_tests", [sys.executable, "-m", "pytest", "perfbench/tests", "-q"]),
+    ("slow_tests", [sys.executable, "-m", "pytest", "tests/", "-m", "slow", "-q"]),
     ("check_oracle", [sys.executable, "tools/check_oracle.py", sf_dir]),
     ("audit_plans", [sys.executable, "tools/audit_plans.py", sf_dir]),
     ("skew_gate", [sys.executable, "tools/skew_stress.py", "--gate"]),

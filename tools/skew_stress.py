@@ -30,7 +30,7 @@ Usage: python tools/skew_stress.py [N_rows] [hot_frac]
        (defaults 10_000_000 rows, 0.20 hot; SCALING.md also records the
        40_000_000 / 0.50 cell)
        python tools/skew_stress.py --gate
-       (round-8 preflight mode: reduced N=2M, REPS=1, and the claims are
+       (preflight mode: reduced N=2M, REPS=1, and the claims are
        verified MECHANICALLY instead of by wall clock — timing at reduced
        N on a loaded box is noise, so the standing regression gate
        asserts (1) mitigated == unmitigated results, (2) AQE's skew
@@ -43,10 +43,11 @@ Output: a Markdown section for SCALING.md (plus PASS/FAIL in gate mode).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 GATE = "--gate" in sys.argv
 _args = [a for a in sys.argv[1:] if not a.startswith("--")]
