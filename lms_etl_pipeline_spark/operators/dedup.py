@@ -54,6 +54,13 @@ MH_P = 2147483647  # 2^31 - 1 (prime)
 MH_A = (1640531527, 2027808487, 1812433253, 1181783497, 1779033703, 1013904223, 1294968747, 997807123)
 MH_B = (1013904223, 1779033703, 997807123, 1294968747, 1640531527, 1812433253, 2027808487, 1181783497)
 
+#: the production near-dup layout: k signature slots in b bands of k/b
+#: rows, verified at exact shingle Jaccard >= JACCARD_T.  The Spark
+#: operators default to it and the DuckDB twins render it.
+LSH_K = 8
+LSH_BANDS = 4
+JACCARD_T = 0.5
+
 
 def base_hash(item: Column) -> Column:
     """Engine-portable integer hash of a string, reduced below MH_P."""
@@ -62,7 +69,7 @@ def base_hash(item: Column) -> Column:
     )
 
 
-def minhash_signature(hashed: Column, k: int = 8) -> list[Column]:
+def minhash_signature(hashed: Column, k: int = LSH_K) -> list[Column]:
     """k minhash slots over a BIGINT-array column of base hashes.
 
     ``hashed`` must be a *materialized column attribute* (built with
@@ -114,7 +121,7 @@ def with_minhash(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 8,
+    k: int = LSH_K,
     partitions: int | None = None,
     tokens_col: str | None = None,
     _part: DataFrame | None = None,
@@ -156,17 +163,17 @@ def with_minhash(
     return hashed.select(F.col(id_col), *minhash_signature(F.col("_hs"), k))
 
 
-def minhash_sql(src: str, k: int = 8) -> str:
+def minhash_sql(src: str) -> str:
     """DuckDB twin of ``with_minhash`` over ``src`` (doc_id, sh): CTEs
     ``hs_t`` (the base hashes, reduced below MH_P, with ``sh`` kept) and
-    ``sigs`` (doc_id, h0..h{k-1}).  Sets with no shingles are dropped."""
+    ``sigs`` (doc_id, h0..h{LSH_K-1}).  Sets with no shingles are dropped."""
     base = (
         "LIST_TRANSFORM(sh, s -> TRY_CAST(CONCAT('0x', SUBSTRING(MD5(s), 1, 15))"
         f" AS BIGINT) % {MH_P})"
     )
     slots = ",\n             ".join(
         f"LIST_MIN(LIST_TRANSFORM(hs, h -> ({MH_A[i]} * h + {MH_B[i]}) % {MH_P})) AS h{i}"
-        for i in range(k)
+        for i in range(LSH_K)
     )
     return f"""hs_t AS (SELECT doc_id, sh, {base} AS hs FROM {src} WHERE LEN(sh) > 0),
     sigs AS (
@@ -176,7 +183,16 @@ def minhash_sql(src: str, k: int = 8) -> str:
     )"""
 
 
-def lsh_bands(sigs: DataFrame, id_col: str, k: int = 8, bands: int = 4) -> DataFrame:
+def band_slots(k: int = LSH_K, bands: int = LSH_BANDS) -> list[range]:
+    """The signature slots each LSH band hashes: band b holds the k/b
+    consecutive slots from b*(k/b)."""
+    rows = k // bands
+    return [range(b * rows, (b + 1) * rows) for b in range(bands)]
+
+
+def lsh_bands(
+    sigs: DataFrame, id_col: str, k: int = LSH_K, bands: int = LSH_BANDS
+) -> DataFrame:
     """Fold a k-slot signature into ``bands`` band-hashes, long form.
 
     Two docs land in the same (band, band_hash) bucket iff all slots of that
@@ -184,15 +200,10 @@ def lsh_bands(sigs: DataFrame, id_col: str, k: int = 8, bands: int = 4) -> DataF
     equi-join.  One ``posexplode`` pass: the signature row is read once,
     never once per band.
     """
-    rows = k // bands
     band_arr = F.array(
         *[
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.col(f"h{b * rows + r}").cast("string") for r in range(rows)]
-                )
-            )
-            for b in range(bands)
+            F.md5(F.concat_ws("|", *[F.col(f"h{i}").cast("string") for i in slots]))
+            for slots in band_slots(k, bands)
         ]
     )
     return sigs.select(
@@ -200,27 +211,16 @@ def lsh_bands(sigs: DataFrame, id_col: str, k: int = 8, bands: int = 4) -> DataF
     )
 
 
-def _band_slots(k: int, bands: int) -> list[range]:
-    """The signature slots each band hashes, as ``lsh_bands`` lays them out."""
-    rows = k // bands
-    return [range(b * rows, (b + 1) * rows) for b in range(bands)]
-
-
-def band_match_sql(x: str, y: str, k: int = 8, bands: int = 4) -> str:
+def band_match_sql(x: str, y: str) -> str:
     """DuckDB predicate: signature rows ``x`` and ``y`` agree on every slot
     of at least one band — the pair would be an LSH candidate."""
     return " OR ".join(
         "(" + " AND ".join(f"{x}.h{i} = {y}.h{i}" for i in slots) + ")"
-        for slots in _band_slots(k, bands)
+        for slots in band_slots()
     )
 
 
-def lsh_candidates_sql(
-    pair: str = "l.doc_id < r.doc_id",
-    name: str = "cands",
-    k: int = 8,
-    bands: int = 4,
-) -> str:
+def lsh_candidates_sql(pair: str = "l.doc_id < r.doc_id", name: str = "cands") -> str:
     """DuckDB twin of ``lsh_bands`` plus the band equi-join, over the
     ``sigs`` CTE of ``minhash_sql``: CTEs ``bands`` (doc_id, band,
     band_hash) and ``name`` (distinct a, b).  ``pair`` filters the joined
@@ -229,7 +229,7 @@ def lsh_candidates_sql(
     """
     band_hash = [
         "MD5(" + " || '|' || ".join(f"CAST(h{i} AS VARCHAR)" for i in slots) + ")"
-        for slots in _band_slots(k, bands)
+        for slots in band_slots()
     ]
     union = "".join(
         f"\n      UNION ALL SELECT doc_id, {b}, {h} FROM sigs"
@@ -246,13 +246,11 @@ def lsh_candidates_sql(
     )"""
 
 
-def jaccard_verified_sql(
-    cands: str, sets: str, threshold: float = 0.5, score: bool = False
-) -> str:
+def jaccard_verified_sql(cands: str, sets: str, score: bool = False) -> str:
     """DuckDB twin of the exact-Jaccard verification in ``near_dup_pairs``
     and ``jaccard_pairs_prefix``: a SELECT of the candidate pairs (a, b) of
     CTE ``cands`` whose shingle sets in ``sets`` (doc_id, sh) have Jaccard
-    >= ``threshold``; ``score`` adds the ``jaccard`` column."""
+    >= ``JACCARD_T``; ``score`` adds the ``jaccard`` column."""
     inter = "LEN(LIST_FILTER(sa.sh, s -> LIST_CONTAINS(sb.sh, s)))"
     jac = f"CAST({inter} AS DOUBLE) / (LEN(sa.sh) + LEN(sb.sh) - {inter})"
     cols = f"c.a, c.b, {jac} AS jaccard" if score else "c.a, c.b"
@@ -260,16 +258,16 @@ def jaccard_verified_sql(
       FROM {cands} c
       JOIN {sets} sa ON sa.doc_id = c.a
       JOIN {sets} sb ON sb.doc_id = c.b
-      WHERE {jac} >= {threshold}"""
+      WHERE {jac} >= {JACCARD_T}"""
 
 
 def near_dup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 8,
-    bands: int = 4,
-    threshold: float = 0.5,
+    k: int = LSH_K,
+    bands: int = LSH_BANDS,
+    threshold: float = JACCARD_T,
     tokens_col: str | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs verified by exact shingle Jaccard.
@@ -320,7 +318,7 @@ def jaccard_pairs_prefix(
     id_col: str,
     text_col: str,
     n: int = 3,
-    threshold: float = 0.5,
+    threshold: float = JACCARD_T,
     num_partitions: int | None = None,
     order: str = "lex",
 ) -> DataFrame:
@@ -423,7 +421,7 @@ def jaccard_pairs_prefix(
     )
 
 
-def prefix_candidates_sql(src: str, name: str = "cands", threshold: float = 0.5) -> str:
+def prefix_candidates_sql(src: str, name: str = "cands") -> str:
     """DuckDB twin of the ``order='lex'`` prefix filter in
     ``jaccard_pairs_prefix``, over ``src`` (doc_id, sh) with each set
     already sorted: CTEs ``nz`` (non-empty sets with size ``n``), ``pref``
@@ -432,7 +430,7 @@ def prefix_candidates_sql(src: str, name: str = "cands", threshold: float = 0.5)
     return f"""nz AS (SELECT doc_id, sh, LEN(sh) AS n FROM {src} WHERE LEN(sh) > 0),
     pref AS (
       SELECT doc_id,
-             UNNEST(LIST_SLICE(sh, 1, n - CAST(CEIL({threshold} * n) AS BIGINT) + 1)) AS g
+             UNNEST(LIST_SLICE(sh, 1, n - CAST(CEIL({JACCARD_T} * n) AS BIGINT) + 1)) AS g
       FROM nz
     ),
     {name} AS (
@@ -472,9 +470,9 @@ def dedup_delta_against_index(
     index: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 8,
-    bands: int = 4,
-    threshold: float = 0.5,
+    k: int = LSH_K,
+    bands: int = LSH_BANDS,
+    threshold: float = JACCARD_T,
 ) -> DataFrame:
     """Admit only delta rows that are neither an exact canonical-fingerprint
     duplicate of ``index`` nor an LSH-candidate with verified shingle

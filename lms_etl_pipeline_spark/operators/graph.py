@@ -133,12 +133,12 @@ def connected_components(
     )
 
 
-def components_sql(pairs: str) -> str:
+def components_sql() -> str:
     """DuckDB twin of ``connected_components`` over the CTE ``pairs``
     (a, b): CTEs ``sym``, ``reach`` (the recursive transitive closure) and
     ``comps`` (node, component = the minimum reachable node id).  The
     enclosing query must start ``WITH RECURSIVE``."""
-    return f"""sym AS (SELECT a AS u, b AS v FROM {pairs} UNION ALL SELECT b, a FROM {pairs}),
+    return """sym AS (SELECT a AS u, b AS v FROM pairs UNION ALL SELECT b, a FROM pairs),
     reach AS (
       SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM sym)
       UNION

@@ -727,7 +727,6 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: doc_id % 10 == _BATCH_MOD plays the "newly arrived batch"; the rest is the
 #: already-curated index.
 _BATCH_MOD = 7
-_INC_JACCARD = 0.5
 
 _SH_OF_TOKS = (
     "LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, GREATEST(LEN(toks) - 1, 1)), "
@@ -754,7 +753,7 @@ def _inc_dedup_oracle() -> str:
         f"l.doc_id % 10 = {_BATCH_MOD} AND r.doc_id % 10 != {_BATCH_MOD}")},
     near_drop AS (
       SELECT DISTINCT a AS doc_id
-      FROM ({dd.jaccard_verified_sql("cands", "sh_all", _INC_JACCARD)})
+      FROM ({dd.jaccard_verified_sql("cands", "sh_all")})
     )
     SELECT b.doc_id, b.lang FROM b
     WHERE b.doc_id NOT IN (SELECT doc_id FROM exact_drop)
@@ -782,9 +781,7 @@ def incremental_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % 10 == _BATCH_MOD
-    admitted = dedup_delta_against_index(
-        d.filter(is_batch), d.filter(~is_batch), threshold=_INC_JACCARD
-    )
+    admitted = dedup_delta_against_index(d.filter(is_batch), d.filter(~is_batch))
     return admitted.select("doc_id", "lang")
 
 

@@ -310,7 +310,7 @@ def domain_mixture_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     {dd.minhash_sql("sh_t")},
     {dd.lsh_candidates_sql()},
     pairs AS ({dd.jaccard_verified_sql("cands", "sh_t")}),
-    {components_sql("pairs")},
+    {components_sql()},
     rep AS (
       SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS cluster_rep
       FROM documents d LEFT JOIN comps c ON c.node = d.doc_id
@@ -692,7 +692,7 @@ def lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale approximate path (near_dup_pairs_lsh) is unbounded."""
     d = _RECALL_SLICE.apply(load_table(spark, sf_dir, "documents"))
     truth = dd.jaccard_pairs_prefix(
-        d, "doc_id", "text", n=3, threshold=0.5,
+        d, "doc_id", "text", n=3,
         num_partitions=default_parallelism(spark),
     ).select("a", "b")
     lsh = dd.near_dup_pairs(d, "doc_id", "text").select("a", "b")

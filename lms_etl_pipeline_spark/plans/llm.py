@@ -109,6 +109,8 @@ def curated_corpus_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFr
     lossless: lang comes back from directory names, data columns from the
     files, and the pruned read returns exactly the oracle's rows.
     """
+    import atexit
+    import shutil
     import tempfile
 
     from lms_etl_pipeline_spark.sources.parquet_io import read_partitioned, write_partitioned
@@ -119,7 +121,9 @@ def curated_corpus_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFr
     ).filter(F.col("n_tokens").between(20, 1000))
     # A fresh directory per build: the read-back is lazy, so a shared path
     # would let a concurrent build overwrite the files this frame scans.
+    # Lazy is also why it lives until the process exits, not the call.
     path = tempfile.mkdtemp(prefix="curated_by_lang_")
+    atexit.register(shutil.rmtree, path, True)
     write_partitioned(gated, path, ["lang"])
     # Explicit schema on the read-back: when the gate matched ZERO rows the
     # layout holds no files and schema inference would raise
@@ -413,7 +417,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash family is engine-portable, so these exact signatures are
     differentially verified against DuckDB."""
     d = load_table(spark, sf_dir, "documents")
-    return dd.with_minhash(d, "doc_id", "text", k=8)
+    return dd.with_minhash(d, "doc_id", "text")
 
 
 @query(
@@ -430,7 +434,7 @@ def near_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle Jaccard >= 0.5.  Candidate generation is an equi-join on the
     band hash — cost is |candidates|, never N²."""
     d = load_table(spark, sf_dir, "documents")
-    return dd.near_dup_pairs(d, "doc_id", "text", k=8, bands=4, threshold=0.5)
+    return dd.near_dup_pairs(d, "doc_id", "text")
 
 
 @query(
@@ -568,7 +572,7 @@ def contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection plus one 1-row broadcast (corpus-size bound).
     """
     pos = dd.jaccard_pairs_prefix(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.5,
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=3,
         num_partitions=default_parallelism(spark),
     ).select(F.col("a").alias("anchor"), F.col("b").alias("positive"))
     nd = load_table(spark, sf_dir, "documents").agg(
@@ -612,7 +616,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     return dd.jaccard_pairs_prefix(
-        d, "doc_id", "text", n=3, threshold=0.5,
+        d, "doc_id", "text", n=3,
         num_partitions=default_parallelism(spark),
     )
 

@@ -86,7 +86,7 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     {dd.minhash_sql("sh_t")},
     {dd.lsh_candidates_sql()},
     pairs AS ({dd.jaccard_verified_sql("cands", "sh_t")}),
-    {components_sql("pairs")}
+    {components_sql()}
     SELECT * FROM comps
     """,
 )
@@ -131,7 +131,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     {dd.minhash_sql("sh_t")},
     {dd.lsh_candidates_sql()},
     pairs AS ({dd.jaccard_verified_sql("cands", "sh_t")}),
-    {components_sql("pairs")},
+    {components_sql()},
     dropped AS (SELECT node FROM comps WHERE node != component)
     SELECT s.doc_id, s.lang, LEN(s.toks) AS n_tokens
     FROM survivors s

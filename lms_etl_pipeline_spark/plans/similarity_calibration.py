@@ -14,6 +14,9 @@ tools/audit_plans.py.  Numeric discipline as in plans/timeseries.py.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -234,10 +237,11 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SC_ID_CAP = 400
 #: theoretical banded-MinHash candidate probability 1-(1-s^r)^b at each
-#: jaccard-decile midpoint, for r=2 rows x b=4 bands — injected as the
-#: SAME Python double literals into both engines.
+#: jaccard-decile midpoint, for the production r rows x b bands — injected
+#: as the SAME Python double literals into both engines.
 _SC_THEORY = tuple(
-    1.0 - (1.0 - ((b + 0.5) / 10.0) ** 2) ** 4 for b in range(10)
+    1.0 - (1.0 - ((b + 0.5) / 10.0) ** (dd.LSH_K // dd.LSH_BANDS)) ** dd.LSH_BANDS
+    for b in range(10)
 )
 
 
@@ -277,7 +281,7 @@ def _anchor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _SC_ID_CAP
     )
-    sigs = dd.with_minhash(d, "doc_id", "text", k=8)
+    sigs = dd.with_minhash(d, "doc_id", "text")
     sh = d.select(
         "doc_id",
         F.explode(F.array_distinct(tx.shingles(tx.tokens("text"), n=3))).alias("s"),
@@ -294,10 +298,12 @@ def _anchor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa = sz.select(F.col("doc_id").alias("ia"), F.col("n").alias("na"))
     sb = sz.select(F.col("doc_id").alias("ib"), F.col("n").alias("nb"))
     x = sigs.select(
-        F.col("doc_id").alias("ia"), *[F.col(f"h{i}").alias(f"xa{i}") for i in range(8)]
+        F.col("doc_id").alias("ia"),
+        *[F.col(f"h{i}").alias(f"xa{i}") for i in range(dd.LSH_K)],
     )
     y = sigs.select(
-        F.col("doc_id").alias("ib"), *[F.col(f"h{i}").alias(f"yb{i}") for i in range(8)]
+        F.col("doc_id").alias("ib"),
+        *[F.col(f"h{i}").alias(f"yb{i}") for i in range(dd.LSH_K)],
     )
     return inter.join(sa, "ia").join(sb, "ib").join(x, "ia").join(y, "ib")
 
@@ -350,11 +356,12 @@ def lsh_s_curve_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     `with_minhash` path.  In production the curve is computed on a
     sampled slice exactly like this one.
     """
-    cand = (
-        ((F.col("xa0") == F.col("yb0")) & (F.col("xa1") == F.col("yb1")))
-        | ((F.col("xa2") == F.col("yb2")) & (F.col("xa3") == F.col("yb3")))
-        | ((F.col("xa4") == F.col("yb4")) & (F.col("xa5") == F.col("yb5")))
-        | ((F.col("xa6") == F.col("yb6")) & (F.col("xa7") == F.col("yb7")))
+    cand = reduce(
+        operator.or_,
+        [
+            reduce(operator.and_, [F.col(f"xa{i}") == F.col(f"yb{i}") for i in slots])
+            for slots in dd.band_slots()
+        ],
     )
     j = _jaccard()
     scored = _anchor_pairs(spark, sf_dir).select(
@@ -393,12 +400,12 @@ def lsh_s_curve_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mh_err_oracle() -> str:
     match_sum = " + ".join(
-        f"CASE WHEN x.h{i} = y.h{i} THEN 1 ELSE 0 END" for i in range(8)
+        f"CASE WHEN x.h{i} = y.h{i} THEN 1 ELSE 0 END" for i in range(dd.LSH_K)
     )
-    return _anchor_pairs_sql(f"({match_sum}) AS n_match") + """,
+    return _anchor_pairs_sql(f"({match_sum}) AS n_match") + f""",
     err AS (
       SELECT LEAST(CAST(FLOOR(j * 10) AS INTEGER), 9) AS bucket,
-             CAST(ROUND(ABS(CAST(n_match AS DOUBLE) / 8 - j), 9)
+             CAST(ROUND(ABS(CAST(n_match AS DOUBLE) / {dd.LSH_K} - j), 9)
                   AS DECIMAL(18,9)) AS abs_err
       FROM scored)
     SELECT bucket,
@@ -427,13 +434,13 @@ def minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join, signatures from the verified `with_minhash` path.
     """
     n_match = None
-    for i in range(8):
+    for i in range(dd.LSH_K):
         t = F.when(F.col(f"xa{i}") == F.col(f"yb{i}"), 1).otherwise(0)
         n_match = t if n_match is None else n_match + t
     j = _jaccard()
     scored = _anchor_pairs(spark, sf_dir).select(
         F.least(F.floor(j * 10).cast("int"), F.lit(9)).alias("bucket"),
-        F.round(F.abs(n_match.cast("double") / 8 - j), 9)
+        F.round(F.abs(n_match.cast("double") / dd.LSH_K - j), 9)
         .cast("decimal(18,9)")
         .alias("abs_err"),
     )

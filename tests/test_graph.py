@@ -66,10 +66,10 @@ def test_components_sql_matches_operator(spark, pairs):
     import duckdb
 
     con = duckdb.connect()
-    con.execute("CREATE TABLE edges (a BIGINT, b BIGINT)")
-    con.executemany("INSERT INTO edges VALUES (?, ?)", pairs)
+    con.execute("CREATE TABLE pairs (a BIGINT, b BIGINT)")
+    con.executemany("INSERT INTO pairs VALUES (?, ?)", pairs)
     duck = con.execute(
-        f"WITH RECURSIVE {components_sql('edges')} SELECT node, component FROM comps"
+        f"WITH RECURSIVE {components_sql()} SELECT node, component FROM comps"
     ).fetchall()
     _, out = _comps(spark, pairs)
     assert sorted(duck) == sorted((r.node, r.component) for r in out.collect())

@@ -127,10 +127,13 @@ def test_compact_refuses_partitioned_root(spark, tmp_path):
         compact_small_files(spark, path)
 
 
-def test_curated_write_uses_a_fresh_directory_per_build(spark):
+def test_curated_write_uses_a_fresh_directory_per_build(spark, monkeypatch):
     """Each build of ``curated_corpus_partitioned_write`` writes and reads
     back its own directory outside the checkout, so two builds (or two
-    concurrent runs) never scan each other's files."""
+    concurrent runs) never scan each other's files; each build registers
+    the removal of its directory at exit, so repeated runs leave no trees."""
+    import atexit
+    import shutil
     from pathlib import Path
 
     from lms_etl_pipeline_spark.plans.catalog import all_oracles
@@ -138,6 +141,8 @@ def test_curated_write_uses_a_fresh_directory_per_build(spark):
     from tools.check_oracle import duck_views
 
     repo = Path(__file__).resolve().parents[1]
+    at_exit = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a: at_exit.append((fn, a)))
     con = duck_views(SF_SMOKE)
     try:
         want = len(con.execute(all_oracles()["curated_corpus_partitioned_write"]).fetchall())
@@ -150,3 +155,9 @@ def test_curated_write_uses_a_fresh_directory_per_build(spark):
     for f in files[0] | files[1]:
         assert not Path(f.removeprefix("file:")).resolve().is_relative_to(repo), f
     assert first.count() == second.count() == want
+    cleanups = [(fn, a) for fn, a in at_exit if fn is shutil.rmtree]
+    roots = {str(a[0]) for _, a in cleanups}
+    assert len(roots) == 2 and all(Path(r).exists() for r in roots)
+    for fn, a in cleanups:
+        fn(*a)
+    assert not any(Path(r).exists() for r in roots)
