@@ -120,7 +120,7 @@ def hl_double(prefix: str, scale: int = 0) -> str:
     recombination would).  Embed in an F.expr finalizer.
 
     This is THE finalizer for plain (unrounded) hi/lo sums; the
-    round-to-4dp form is :func:`hl_round4`.  The only legitimate inline
+    round-to-4dp form is :func:`hl_round_4dp`.  The only legitimate inline
     decompositions left are the ones these two cannot express — q1's
     three-way c10 split and q9's signed half-away rounding
     (plans/relational.py), each documented at its call site."""
@@ -128,7 +128,7 @@ def hl_double(prefix: str, scale: int = 0) -> str:
     return rec if scale == 0 else f"({rec} / {10**scale}.0D)"
 
 
-def hl_round4(prefix: str) -> str:
+def hl_round_4dp(prefix: str) -> str:
     """SQL fragment finalizing a NON-NEGATIVE scale-6 hi/lo unit sum as a
     4-dp-rounded double: drop the sum's last two unit digits with
     round-half-up (``(lo + 50) DIV 100``; hi contributes ``hi * 10^4``

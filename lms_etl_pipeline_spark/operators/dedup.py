@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from lms_etl_pipeline_spark.operators.text import shingles, tokens
+from lms_etl_pipeline_spark.operators.text import hash60, hash60_sql, shingles, tokens
 from lms_etl_pipeline_spark.session import materialize
 
 
@@ -64,9 +64,7 @@ JACCARD_T = 0.5
 
 def base_hash(item: Column) -> Column:
     """Engine-portable integer hash of a string, reduced below MH_P."""
-    return (
-        F.conv(F.substring(F.md5(item), 1, 15), 16, 10).cast("bigint") % F.lit(MH_P)
-    )
+    return hash60(item) % F.lit(MH_P)
 
 
 def minhash_signature(hashed: Column, k: int = LSH_K) -> list[Column]:
@@ -167,10 +165,7 @@ def minhash_sql(src: str) -> str:
     """DuckDB twin of ``with_minhash`` over ``src`` (doc_id, sh): CTEs
     ``hs_t`` (the base hashes, reduced below MH_P, with ``sh`` kept) and
     ``sigs`` (doc_id, h0..h{LSH_K-1}).  Sets with no shingles are dropped."""
-    base = (
-        "LIST_TRANSFORM(sh, s -> TRY_CAST(CONCAT('0x', SUBSTRING(MD5(s), 1, 15))"
-        f" AS BIGINT) % {MH_P})"
-    )
+    base = f"LIST_TRANSFORM(sh, s -> {hash60_sql('s')} % {MH_P})"
     slots = ",\n             ".join(
         f"LIST_MIN(LIST_TRANSFORM(hs, h -> ({MH_A[i]} * h + {MH_B[i]}) % {MH_P})) AS h{i}"
         for i in range(LSH_K)

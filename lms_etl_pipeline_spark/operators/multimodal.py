@@ -3,7 +3,7 @@ processed with Arrow-batched ``mapInPandas`` (SURVEY.md §2.12 last row).
 
 Each *decode* step ships two paths, per the build contract:
 
-- ``decode=\"real\"`` (round 11) decodes genuine container formats with
+- ``decode=\"real\"`` decodes genuine container formats with
   what the sandbox actually has: WAV/PCM via the stdlib ``wave`` module
   (8/16/32-bit, any channel count) and PPM/PGM (P6/P5 binary netpbm) via
   pure byte arithmetic + numpy — including a real nearest-neighbor image
@@ -228,7 +228,7 @@ def parse_y4m(payload: bytes, max_frames: int | None = None):
             break
         # spec: frame params (if any) are space-prefixed — 'FRAME' must be
         # followed by '\n' or ' ', else a corrupt marker (b"FRAMExyz\n")
-        # would silently parse as a frame header (round-12 advisory)
+        # would silently parse as a frame header
         if payload[i : i + 5] != b"FRAME" or payload[i + 5 : i + 6] not in (
             b"\n",
             b" ",
@@ -325,7 +325,7 @@ def decode_image_features(df: DataFrame, decode: str = "fake") -> DataFrame:
     pseudo width/height (bytes mod 509 / mod 293 — coprime so the pair
     varies), and the mean byte value (the vectorized-batch-compute part).
 
-    ``real`` decode (round 11) parses binary netpbm (P6 PPM / P5 PGM) by
+    ``real`` decode parses binary netpbm (P6 PPM / P5 PGM) by
     pure byte arithmetic and emits true dimensions + per-channel means;
     a payload that is not parseable netpbm yields a NULL-featured row.
     """
@@ -410,7 +410,7 @@ def resize_images(
     per-batch vectorized).
 
     ``fake`` 'resizes' by deterministic stride subsampling of the byte
-    stream to ``target_bytes``.  ``real`` (round 11) decodes binary netpbm
+    stream to ``target_bytes``.  ``real`` decodes binary netpbm
     and performs a TRUE nearest-neighbor resample to ``target_wh``,
     re-encoding as P6 PPM — pure integer index arithmetic, no PIL; a
     non-netpbm payload yields a NULL payload row.
@@ -465,7 +465,7 @@ def decode_audio_features(df: DataFrame, decode: str = "fake") -> DataFrame:
     """Audio feature extraction over a binary column.
 
     ``fake`` derives pseudo-features from the raw bytes (differentially
-    testable against DuckDB).  ``real`` (round 11) decodes RIFF/WAV PCM
+    testable against DuckDB).  ``real`` decodes RIFF/WAV PCM
     with the stdlib ``wave`` module — true sample rate, channel count,
     per-channel sample count, duration, and RMS amplitude over the
     zero-centered interleaved samples; an unparseable payload yields a

@@ -46,6 +46,11 @@ def tokens(text: Column | str, sep: str = r"\s+") -> Column:
     return F.filter(F.split(c, sep), lambda t: t != F.lit(""))
 
 
+def tokens_sql(expr: str = "text", sep: str = r"\s+") -> str:
+    """DuckDB twin of ``tokens``: RE2 split on ``sep``, empties removed."""
+    return f"LIST_FILTER(REGEXP_SPLIT_TO_ARRAY({expr}, '{sep}'), t -> t != '')"
+
+
 def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
@@ -61,6 +66,16 @@ def shingles(toks: Column, n: int = 3) -> Column:
         lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)]),
     )
     return F.when(F.size(toks) >= n, build).otherwise(F.array().cast("array<string>"))
+
+
+def ngrams_sql(toks: str, n: int) -> str:
+    """DuckDB twin of ``shingles``: the ordered word-n-gram list of the
+    token list ``toks`` (empty below ``n`` tokens).  Wrap it in
+    ``LIST_DISTINCT`` for the shingle set."""
+    return (
+        f"LIST_TRANSFORM(RANGE(1, GREATEST(LEN({toks}) - {n - 2}, 1)), "
+        f"i -> ARRAY_TO_STRING(LIST_SLICE({toks}, i, i + {n - 1}), ' '))"
+    )
 
 
 def explode_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -122,18 +137,34 @@ def fingerprint_of(toks: Column) -> Column:
     return F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks))))
 
 
+def fingerprint_sql(toks: str) -> str:
+    """DuckDB twin of ``fingerprint_of``.  COALESCE: DuckDB's
+    ARRAY_TO_STRING([]) is NULL where Spark's concat_ws gives '', and a
+    zero-token doc must hash to MD5('') on both engines."""
+    return f"MD5(COALESCE(ARRAY_TO_STRING(LIST_SORT(LIST_DISTINCT({toks})), ' '), ''))"
+
+
+def hash60(s: Column) -> Column:
+    """Engine-portable 60-bit integer hash of a string column: the first
+    15 hex digits of its md5, as a BIGINT.  It costs more than xxhash64,
+    but DuckDB computes the identical value (``hash60_sql``)."""
+    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
+
+
+def hash60_sql(expr: str) -> str:
+    """DuckDB twin of ``hash60`` over the VARCHAR expression ``expr``."""
+    return f"TRY_CAST(CONCAT('0x', SUBSTRING(MD5({expr}), 1, 15)) AS BIGINT)"
+
+
 def kgram_hashes(toks: Column, k: int = 3) -> Column:
     """Engine-portable 60-bit integer hash per k-gram: md5 prefix as int.
 
     ``toks`` must be a materialized column attribute (see dedup module
-    docstring on interpreted higher-order re-evaluation).  The md5-prefix
-    scheme costs more than xxhash64 but lets the DuckDB oracle compute
-    identical values (``TRY_CAST('0x'||SUBSTRING(MD5(g),1,15) AS BIGINT)``).
+    docstring on interpreted higher-order re-evaluation).  Each k-gram
+    goes through ``hash60``, so the DuckDB oracle computes identical
+    values with ``hash60_sql``.
     """
-    return F.transform(
-        shingles(toks, n=k),
-        lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("bigint"),
-    )
+    return F.transform(shingles(toks, n=k), hash60)
 
 
 def winnow_hashes(hs: Column, w: int = 4) -> Column:

@@ -89,3 +89,14 @@ def dot_sql(left: str, right: str, dim: int) -> str:
     return " + ".join(
         f"CAST({left}[{i}] AS DOUBLE) * CAST({right}[{i}] AS DOUBLE)" for i in range(1, dim + 1)
     )
+
+
+def cosine_sql(a: str, b: str, dim: int) -> str:
+    """DuckDB twin of ``cosine`` over the first ``dim`` elements."""
+    return cosine_of_sql(dot_sql(a, b, dim), dot_sql(a, a, dim), dot_sql(b, b, dim))
+
+
+def cosine_of_sql(ab: str, aa: str, bb: str) -> str:
+    """Cosine from its three inner products: ab / (sqrt(aa) * sqrt(bb)).
+    DuckDB 1.0 returns NULL for a division by 0.0, as try_divide does."""
+    return f"({ab}) / (SQRT({aa}) * SQRT({bb}))"

@@ -1,4 +1,4 @@
-"""Behavioral / recommender analytics plans (round 5b widening).
+"""Behavioral / recommender analytics plans.
 
 Composites product-analytics and recommendation teams run daily that
 were not yet first-class.  The first wave:
@@ -32,9 +32,10 @@ rounded double divisions of identical exact operands.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators.rank import (
     global_ntile,
     global_running_agg,
@@ -43,6 +44,16 @@ from lms_etl_pipeline_spark.operators.rank import (
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.session import materialize
 from lms_etl_pipeline_spark.sources.tables import load_table
+
+
+def ab_arm() -> Column:
+    """The A/B experiment split: a user's arm (0 or 1) is the salted
+    ``hash60`` of its id, so both engines assign every user identically."""
+    return tx.hash60(F.concat(F.lit("ab1|"), F.col("user_id").cast("string"))) % 2
+
+
+#: DuckDB twin of ``ab_arm``.
+AB_ARM_SQL = tx.hash60_sql("CONCAT('ab1|', CAST(user_id AS VARCHAR))") + " % 2"
 
 _CF_BASKET_CAP = 50   # drop power-customers above this many distinct parts
 _CF_MIN_COOC = 3      # minimum co-purchase support for a candidate pair
@@ -107,7 +118,7 @@ def item_cooccurrence_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     sz = cp.groupBy("o_custkey").agg(F.count("*").alias("basket"))
-    # Round 12: materialize the capped incidence frame — FOUR consumers
+    # Materialize the capped incidence frame — FOUR consumers
     # (item_n, both self-join sides, via `directed` twice) otherwise each
     # re-run the orders⋈lineitem join + distinct + basket-cap semi-join
     # (guide §2.4; the self-join sides shared an exchange, item_n did not).
@@ -419,7 +430,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    # Round 12: materialize the edge list once — a1/h1/a2 AND every
+    # Materialize the edge list once — a1/h1/a2 AND every
     # normalizer broadcast build otherwise re-derive the
     # orders⋈lineitem+distinct subtree (same fix as pagerank_graph).
     edges = materialize(
@@ -594,13 +605,10 @@ def pareto_front_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ab_test_lift_report",
-    oracle="""
+    oracle=f"""
     WITH assign AS (
       SELECT DISTINCT user_id,
-             CASE WHEN TRY_CAST(CONCAT('0x',
-                    SUBSTRING(MD5(CONCAT('ab1|', CAST(user_id AS VARCHAR))),
-                              1, 15)) AS BIGINT) % 2 = 0
-                  THEN 'A' ELSE 'B' END AS variant
+             CASE WHEN {AB_ARM_SQL} = 0 THEN 'A' ELSE 'B' END AS variant
       FROM events),
     per_user AS (
       SELECT a.user_id, a.variant,
@@ -655,20 +663,8 @@ def ab_test_lift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the user key.
     """
     e = load_table(spark, sf_dir, "events")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab1|"), F.col("user_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
     assign = e.select("user_id").distinct().select(
-        "user_id", F.when(bucket == 0, "A").otherwise("B").alias("variant")
+        "user_id", F.when(ab_arm() == 0, "A").otherwise("B").alias("variant")
     )
     spend = (
         e.filter(F.col("event_type") == "purchase")

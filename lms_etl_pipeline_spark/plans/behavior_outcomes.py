@@ -1,5 +1,5 @@
 """Behavioral outcome / journey analytics — the second half of the
-round-5b behavior widening, split from ``plans/behavior.py`` along its
+behavior plans, split from ``plans/behavior.py`` along its
 section boundaries (repo convention: plan modules stay <= ~1,100 LoC).
 
 Families here: recursive hierarchy rollup (ancestor-chain rewrite),
@@ -853,7 +853,7 @@ def interarrival_time_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the empirical base for any Poisson-rate assumption a streaming
     watermark choice rests on (pairs with ``watermark_loss_curve``).
 
-    Determinism (round-8 fuzz finding): engine-native PERCENTILE_CONT
+    Determinism (a fuzz-fixture finding): engine-native PERCENTILE_CONT
     interpolates in DOUBLE, and at microsecond-gap magnitudes (~1e12) the
     double ulp (~2.4e-4) EXCEEDS the 4-dp rounding the repo convention
     relies on — seed-0 of tools/fuzz_fixture.py produced a last-ulp

@@ -1,5 +1,5 @@
-"""Warehouse / business-analytics plans (split from the round-5c
-sequences wave).
+"""Warehouse / business-analytics plans (split from the sequence
+plans).
 
 Gaps-and-islands activity streaks, SCD2 point-in-time snapshots, FIFO
 returns allocation, surrogate-key and state-machine audits, weekly
@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans import anchors
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.sources.tables import load_table
@@ -267,10 +268,7 @@ def fifo_returns_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sk_arm(table: str, key: str) -> str:
-    h = (
-        f"TRY_CAST(CONCAT('0x', SUBSTRING(MD5(CAST({key} AS VARCHAR)), 1, 15))"
-        " AS BIGINT)"
-    )
+    h = tx.hash60_sql(f"CAST({key} AS VARCHAR)")
     return f"""
     SELECT '{table}' AS table_name,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -315,9 +313,7 @@ def surrogate_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("part", "p_partkey"),
     ):
         t = load_table(spark, sf_dir, table)
-        h = F.conv(F.substring(F.md5(F.col(key).cast("string")), 1, 15), 16, 10).cast(
-            "bigint"
-        )
+        h = tx.hash60(F.col(key).cast("string"))
         arms.append(
             t.agg(
                 F.count("*").cast("bigint").alias("n_rows"),
@@ -990,13 +986,9 @@ _N_SHARDS = 8
     "export_shard_manifest",
     oracle=f"""
     WITH d AS (
-      SELECT TRY_CAST(CONCAT('0x', SUBSTRING(
-               MD5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % {_N_SHARDS}
-               AS shard,
-             LEN(LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'),
-                             t -> t != '')) AS n_toks,
-             TRY_CAST(CONCAT('0x', SUBSTRING(MD5(text), 1, 15)) AS BIGINT)
-               AS h
+      SELECT {tx.hash60_sql("CAST(doc_id AS VARCHAR)")} % {_N_SHARDS} AS shard,
+             LEN({tx.tokens_sql()}) AS n_toks,
+             {tx.hash60_sql("text")} AS h
       FROM documents)
     SELECT shard,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1024,14 +1016,8 @@ def export_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; the hash combine is mergeable across any shard/executor split.
     """
     d = load_table(spark, sf_dir, "documents")
-    shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % _N_SHARDS
-    )
-    h = F.conv(F.substring(F.md5(F.col("text")), 1, 15), 16, 10).cast("bigint")
-    from lms_etl_pipeline_spark.operators import text as tx
-
+    shard = tx.hash60(F.col("doc_id").cast("string")) % _N_SHARDS
+    h = tx.hash60(F.col("text"))
     return (
         d.select(
             shard.alias("shard"),

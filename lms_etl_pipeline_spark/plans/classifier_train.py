@@ -106,7 +106,6 @@ from pyspark.sql import functions as F
 from lms_etl_pipeline_spark import session
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.plans.llm import _TOKS
 from lms_etl_pipeline_spark.session import release
 from lms_etl_pipeline_spark.sources.tables import load_table
 
@@ -145,7 +144,7 @@ _FEATS_SQL = f"""
                CAST(LEN(LIST_DISTINCT(toks)) AS BIGINT) AS x2,
                CAST(LEN(LIST_FILTER(toks, x -> x IN {_STOPLIST_SQL}))
                     AS BIGINT) AS x3
-        FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
+        FROM (SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents)
         WHERE LEN(toks) > 0
       )
     ),

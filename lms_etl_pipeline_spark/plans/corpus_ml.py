@@ -40,8 +40,7 @@ from lms_etl_pipeline_spark.operators import vectors as vec
 from lms_etl_pipeline_spark.operators.ml import kmeans_assign
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.session import materialize
-from lms_etl_pipeline_spark.plans.curation import _BUCKET_SQL, _bucket
-from lms_etl_pipeline_spark.plans.llm import _TOKS, EMB_DIM
+from lms_etl_pipeline_spark.plans.llm import EMB_DIM
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 _N_SHARDS = 8
@@ -50,7 +49,7 @@ _N_SHARDS = 8
 @query(
     "corpus_shuffle_deterministic",
     oracle=f"""
-    WITH h AS (SELECT doc_id, {_BUCKET_SQL.format(c="doc_id")} AS hk FROM documents)
+    WITH h AS (SELECT doc_id, {tx.hash60_sql("CAST(doc_id AS VARCHAR)")} AS hk FROM documents)
     SELECT doc_id, hk % {_N_SHARDS} AS shard,
            ROW_NUMBER() OVER (PARTITION BY hk % {_N_SHARDS} ORDER BY hk, doc_id)
                AS pos
@@ -69,7 +68,7 @@ def corpus_shuffle_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of that sort (same keys, same order).
     """
     d = load_table(spark, sf_dir, "documents")
-    h = d.select("doc_id", _bucket(F.col("doc_id")).alias("hk"))
+    h = d.select("doc_id", tx.hash60(F.col("doc_id").cast("string")).alias("hk"))
     sharded = h.withColumn("shard", F.col("hk") % _N_SHARDS)
     w = Window.partitionBy("shard").orderBy("hk", "doc_id")
     return sharded.select(
@@ -100,7 +99,7 @@ def _bm25_queries_sql() -> str:
 
 
 _BM25_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, {_TOKS} AS tk FROM documents),
+    WITH toks AS (SELECT doc_id, {tx.tokens_sql()} AS tk FROM documents),
     dl AS (SELECT doc_id, LEN(tk) AS dl FROM toks),
     stats AS (SELECT CAST(SUM(dl) AS DOUBLE) / COUNT(*) AS avgdl,
                      COUNT(*) AS n_docs FROM dl),
@@ -214,13 +213,6 @@ def bm25_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDEDUP_TAU = 0.3
 
 
-def _cos_sql(a: str, b: str) -> str:
-    return (
-        f"({vec.dot_sql(a, b, EMB_DIM)}) / "
-        f"(SQRT({vec.dot_sql(a, a, EMB_DIM)}) * SQRT({vec.dot_sql(b, b, EMB_DIM)}))"
-    )
-
-
 @query(
     "semdedup_embedding",
     oracle=f"""
@@ -228,7 +220,7 @@ def _cos_sql(a: str, b: str) -> str:
     WHERE NOT EXISTS (
       SELECT 1 FROM embeddings b
       WHERE b.label = a.label AND b.vec_id < a.vec_id
-        AND {_cos_sql("a.embedding", "b.embedding")} > {_SEMDEDUP_TAU})
+        AND {vec.cosine_sql("a.embedding", "b.embedding", EMB_DIM)} > {_SEMDEDUP_TAU})
     """,
 )
 def semdedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -528,14 +520,11 @@ _RRF_TOPK = 10
 
 
 def _dense_topk_sql() -> str:
-    d_qe = vec.dot_sql("e.embedding", "q.embedding", EMB_DIM)
-    d_qq = vec.dot_sql("q.embedding", "q.embedding", EMB_DIM)
-    d_ee = vec.dot_sql("e.embedding", "e.embedding", EMB_DIM)
     return f"""
     WITH q AS (SELECT * FROM embeddings WHERE vec_id < {_RRF_QIDS}),
     pairs AS (
       SELECT q.vec_id AS qid, e.vec_id AS doc_id,
-             ({d_qe}) / (SQRT({d_qq}) * SQRT({d_ee})) AS cosine
+             {vec.cosine_sql("q.embedding", "e.embedding", EMB_DIM)} AS cosine
       FROM q CROSS JOIN embeddings e WHERE e.vec_id != q.vec_id)
     SELECT qid, doc_id, rk FROM (
       SELECT qid, doc_id,
@@ -638,7 +627,7 @@ _PMI_TOPK = 50
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, GENERATE_SUBSCRIPTS(tk, 1) AS pos, UNNEST(tk) AS term
-      FROM (SELECT doc_id, {_TOKS} AS tk FROM documents)),
+      FROM (SELECT doc_id, {tx.tokens_sql()} AS tk FROM documents)),
     offs(off) AS (VALUES (1), (2)),
     pairs AS (
       SELECT LEAST(t1.term, t2.term) AS w1, GREATEST(t1.term, t2.term) AS w2
@@ -724,30 +713,23 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental dedup: new batch vs existing corpus index
 # ---------------------------------------------------------------------------
 
+#: the delta-batch convention of every incremental and drift query:
 #: doc_id % 10 == _BATCH_MOD plays the "newly arrived batch"; the rest is the
 #: already-curated index.
 _BATCH_MOD = 7
-
-_SH_OF_TOKS = (
-    "LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, GREATEST(LEN(toks) - 1, 1)), "
-    "i -> ARRAY_TO_STRING(LIST_SLICE(toks, i, i + 2), ' ')))"
-)
-# COALESCE: DuckDB ARRAY_TO_STRING([]) is NULL; Spark concat_ws is '' —
-# zero-token docs must share MD5('') on both engines (hostile-text sweep)
-_FP_OF_TOKS = "MD5(COALESCE(ARRAY_TO_STRING(LIST_SORT(LIST_DISTINCT(toks)), ' '), ''))"
 
 
 def _inc_dedup_oracle() -> str:
     from lms_etl_pipeline_spark.operators import dedup as dd
 
     return f"""
-    WITH toks_t AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
+    WITH toks_t AS (SELECT doc_id, lang, {tx.tokens_sql()} AS toks FROM documents),
     b AS (SELECT * FROM toks_t WHERE doc_id % 10 = {_BATCH_MOD}),
-    bfp AS (SELECT doc_id, {_FP_OF_TOKS} AS fp FROM b),
-    ifp AS (SELECT DISTINCT {_FP_OF_TOKS} AS fp FROM toks_t
+    bfp AS (SELECT doc_id, {tx.fingerprint_sql("toks")} AS fp FROM b),
+    ifp AS (SELECT DISTINCT {tx.fingerprint_sql("toks")} AS fp FROM toks_t
             WHERE doc_id % 10 != {_BATCH_MOD}),
     exact_drop AS (SELECT doc_id FROM bfp WHERE fp IN (SELECT fp FROM ifp)),
-    sh_all AS (SELECT doc_id, {_SH_OF_TOKS} AS sh FROM toks_t),
+    sh_all AS (SELECT doc_id, LIST_DISTINCT({tx.ngrams_sql("toks", 3)}) AS sh FROM toks_t),
     {dd.minhash_sql("sh_all")},
     {dd.lsh_candidates_sql(
         f"l.doc_id % 10 = {_BATCH_MOD} AND r.doc_id % 10 != {_BATCH_MOD}")},

@@ -24,12 +24,10 @@ from lms_etl_pipeline_spark.plans.corpus_ml import (
     _BATCH_MOD,
     _KMEANS_ORACLE,
     _SEMDEDUP_TAU,
-    _cos_sql,
     kmeans_lloyd,
     semdedup_embedding,
 )
-from lms_etl_pipeline_spark.plans.curation import _BUCKET_SQL, _bucket
-from lms_etl_pipeline_spark.plans.llm import _TOKS, EMB_DIM
+from lms_etl_pipeline_spark.plans.llm import EMB_DIM
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -58,9 +56,7 @@ def _bucket_sql(col: str) -> str:
 
 
 def _ann_recall_oracle() -> str:
-    d_qe = vec.dot_sql("e.embedding", "q.embedding", EMB_DIM)
-    d_qq = vec.dot_sql("q.embedding", "q.embedding", EMB_DIM)
-    d_ee = vec.dot_sql("e.embedding", "e.embedding", EMB_DIM)
+    cos = vec.cosine_sql("q.embedding", "e.embedding", EMB_DIM)
     return f"""
     WITH bkt AS (SELECT vec_id, embedding,
                         {_bucket_sql("embedding")} AS bucket FROM embeddings),
@@ -68,7 +64,7 @@ def _ann_recall_oracle() -> str:
       SELECT q_id, n_id FROM (
         SELECT q.vec_id AS q_id, e.vec_id AS n_id,
                ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-                 ({d_qe}) / (SQRT({d_qq}) * SQRT({d_ee})) DESC, e.vec_id) AS rk
+                 {cos} DESC, e.vec_id) AS rk
         FROM embeddings q CROSS JOIN embeddings e
         WHERE q.vec_id < {_ANN_QIDS} AND e.vec_id != q.vec_id)
       WHERE rk <= {_ANN_K}),
@@ -76,7 +72,7 @@ def _ann_recall_oracle() -> str:
       SELECT q_id, n_id FROM (
         SELECT q.vec_id AS q_id, e.vec_id AS n_id,
                ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-                 ({d_qe}) / (SQRT({d_qq}) * SQRT({d_ee})) DESC, e.vec_id) AS rk
+                 {cos} DESC, e.vec_id) AS rk
         FROM bkt q JOIN bkt e ON e.bucket = q.bucket AND e.vec_id != q.vec_id
         WHERE q.vec_id < {_ANN_QIDS})
       WHERE rk <= {_ANN_K})
@@ -181,7 +177,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_datasheet",
     oracle=f"""
-    WITH t AS (SELECT lang, LEN({_TOKS}) AS n_toks, n_chars,
+    WITH t AS (SELECT lang, LEN({tx.tokens_sql()}) AS n_toks, n_chars,
                       doc_id % 10 = {_BATCH_MOD} AS in_delta
                FROM documents),
     tot AS (SELECT COUNT(*) AS total_docs, SUM(n_toks) AS total_toks FROM t)
@@ -251,7 +247,7 @@ _WS_M = 1 << 30
     oracle=f"""
     WITH h AS (
       SELECT doc_id, lang, n_chars,
-             ({_BUCKET_SQL.format(c="doc_id")}) % {_WS_M} + 1 AS hm
+             ({tx.hash60_sql("CAST(doc_id AS VARCHAR)")}) % {_WS_M} + 1 AS hm
       FROM documents WHERE n_chars > 0),
     keyed AS (
       SELECT doc_id, lang, n_chars,
@@ -279,7 +275,7 @@ def weighted_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions (min-k of min-ks), which is why this algorithm is THE
     distributed weighted-sampling standard."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    hm = _bucket(F.col("doc_id")) % _WS_M + 1
+    hm = tx.hash60(F.col("doc_id").cast("string")) % _WS_M + 1
     keyed = d.select(
         "doc_id",
         "lang",
@@ -307,19 +303,12 @@ _CMS_TOPK = 10
 
 
 def _cms_cell_sql(term_expr: str, d: int) -> str:
-    return (
-        f"(TRY_CAST(CONCAT('0x', SUBSTRING(MD5('{d}|' || {term_expr}), 1, 15)) "
-        f"AS BIGINT)) % {_CMS_W}"
-    )
+    salted = f"'{d}|' || {term_expr}"
+    return f"({tx.hash60_sql(salted)}) % {_CMS_W}"
 
 
 def _cms_cell(term, d: int) -> F.Column:
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{d}|"), term)), 1, 15), 16, 10
-        ).cast("bigint")
-        % _CMS_W
-    )
+    return tx.hash60(F.concat(F.lit(f"{d}|"), term)) % _CMS_W
 
 
 def _cms_oracle() -> str:
@@ -333,7 +322,7 @@ def _cms_oracle() -> str:
     )
     least = "LEAST(" + ", ".join(f"c{d}.est" for d in range(_CMS_D)) + ")"
     return f"""
-    WITH toks AS (SELECT UNNEST({_TOKS}) AS term FROM documents),
+    WITH toks AS (SELECT UNNEST({tx.tokens_sql()}) AS term FROM documents),
     tc AS (SELECT term, COUNT(*) AS n FROM toks GROUP BY term),
     cells AS (
       {cells_union}),
@@ -402,7 +391,7 @@ def _semdedup_kmeans_oracle() -> str:
     WHERE NOT EXISTS (
       SELECT 1 FROM embeddings b JOIN a2 bb ON bb.vec_id = b.vec_id
       WHERE bb.cluster = aa.cluster AND b.vec_id < a.vec_id
-        AND {_cos_sql("a.embedding", "b.embedding")} > {_SEMDEDUP_TAU})
+        AND {vec.cosine_sql("a.embedding", "b.embedding", EMB_DIM)} > {_SEMDEDUP_TAU})
     """
 
 
@@ -533,7 +522,7 @@ def psi_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "lang_id_confusion",
     oracle=f"""
-    WITH t AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, lang, {tx.tokens_sql()} AS toks FROM documents),
     hits AS (
       SELECT doc_id, lang,
              LEN(LIST_FILTER(toks, x -> x IN ('the','a','an','and','of','to','is'))) AS en_hits,
@@ -589,8 +578,8 @@ _BUDGET_TOKENS = 20_000
     "token_budget_selection",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, LEN({_TOKS}) AS n_toks,
-             {_BUCKET_SQL.format(c="doc_id")} AS hk
+      SELECT doc_id, lang, LEN({tx.tokens_sql()}) AS n_toks,
+             {tx.hash60_sql("CAST(doc_id AS VARCHAR)")} AS hk
       FROM documents),
     ordered AS (
       SELECT doc_id, lang, n_toks,
@@ -626,7 +615,7 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.size(tx.tokens("text")).alias("n_toks"),
-        _bucket(F.col("doc_id")).alias("hk"),
+        tx.hash60(F.col("doc_id").cast("string")).alias("hk"),
     )
     return (
         global_running_sum(
@@ -648,8 +637,8 @@ _BUDGET_TOKENS_PER_LANG = 5_000
     "token_budget_selection_sharded",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, LEN({_TOKS}) AS n_toks,
-             {_BUCKET_SQL.format(c="doc_id")} AS hk
+      SELECT doc_id, lang, LEN({tx.tokens_sql()}) AS n_toks,
+             {tx.hash60_sql("CAST(doc_id AS VARCHAR)")} AS hk
       FROM documents),
     ordered AS (
       SELECT doc_id, lang, n_toks,
@@ -679,7 +668,7 @@ def token_budget_selection_sharded(spark: SparkSession, sf_dir: str) -> DataFram
         "doc_id",
         "lang",
         F.size(tx.tokens("text")).alias("n_toks"),
-        _bucket(F.col("doc_id")).alias("hk"),
+        tx.hash60(F.col("doc_id").cast("string")).alias("hk"),
     )
     w = (
         Window.partitionBy("lang")

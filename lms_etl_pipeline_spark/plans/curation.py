@@ -11,7 +11,7 @@ engine along the training-data axis the build mandates, over the
 
 Determinism / oracle strategy: every op is exactly differential-testable.
 Counts and document frequencies are integers; selection uses the
-engine-portable md5-prefix hash (``operators.dedup.base_hash`` recipe);
+engine-portable md5-prefix hash (``operators.text.hash60``);
 the only floating point is single IEEE ops on exact integer inputs
 (division, sqrt — bit-identical across engines) except the char-LM
 log-prob sum, which is rounded at 1e-4 per the repo convention
@@ -29,7 +29,6 @@ from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators.graph import components_sql, connected_components
 from lms_etl_pipeline_spark.plans import anchors
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.plans.llm import _SHINGLES, _TOKS
 from lms_etl_pipeline_spark.session import (
     default_parallelism,
     materialize,
@@ -37,35 +36,15 @@ from lms_etl_pipeline_spark.session import (
 )
 from lms_etl_pipeline_spark.sources.tables import load_table
 
-# DuckDB fragment: distinct word-5-gram set (mirrors tx.shingles(toks, 5)).
-_G5 = (
-    "LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, GREATEST(LEN({t}) - 3, 1)), "
-    "i -> ARRAY_TO_STRING(LIST_SLICE({t}, i, i + 4), ' ')))"
-).format(t=_TOKS)
-
-# DuckDB fragment: distinct word-3-gram set (mirrors tx.shingles(toks, 3)).
-_G3 = (
-    "LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, GREATEST(LEN({t}) - 1, 1)), "
-    "i -> ARRAY_TO_STRING(LIST_SLICE({t}, i, i + 2), ' ')))"
-).format(t=_TOKS)
-
 #: Every doc_id ≡ 0 (mod 29) plays the held-out benchmark set.
 _EVAL_MOD = 29
-
-#: engine-portable md5-prefix bucket (same family as operators.dedup.base_hash)
-_BUCKET_SQL = (
-    "TRY_CAST(CONCAT('0x', SUBSTRING(MD5(CAST({c} AS VARCHAR)), 1, 15)) AS BIGINT)"
-)
-
-
-def _bucket(c) -> F.Column:
-    return F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("bigint")
 
 
 @query(
     "decontaminate_ngram_overlap",
     oracle=f"""
-    WITH t AS (SELECT doc_id, lang, {_G5} AS g FROM documents),
+    WITH t AS (SELECT doc_id, lang, LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 5)}) AS g
+               FROM documents),
     ev AS (SELECT DISTINCT UNNEST(g) AS gram FROM t WHERE doc_id % {_EVAL_MOD} = 0),
     tr AS (SELECT doc_id, lang, g FROM t WHERE doc_id % {_EVAL_MOD} != 0),
     hit AS (SELECT DISTINCT doc_id
@@ -123,7 +102,8 @@ _BP_MAX_RATIO = 0.10
 @query(
     "boilerplate_ngram_filter",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_G3} AS g FROM documents),
+    WITH t AS (SELECT doc_id, LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)}) AS g
+               FROM documents),
     p AS (SELECT doc_id, UNNEST(g) AS gram FROM t),
     d AS (SELECT gram, COUNT(*) AS df FROM p GROUP BY gram)
     SELECT doc_id,
@@ -262,7 +242,7 @@ def charlm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM c, m)
     SELECT d.doc_id, d.lang
     FROM documents d JOIN t USING (lang)
-    WHERE {_BUCKET_SQL.format(c="d.doc_id")} % 10000 < t.thr
+    WHERE {tx.hash60_sql("CAST(d.doc_id AS VARCHAR)")} % 10000 < t.thr
     """,
 )
 def domain_mixture_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -295,7 +275,7 @@ def domain_mixture_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         d.join(F.broadcast(thr), "lang")
-        .filter(_bucket(F.col("doc_id")) % 10000 < F.col("thr"))
+        .filter(tx.hash60(F.col("doc_id").cast("string")) % 10000 < F.col("thr"))
         .select("doc_id", "lang")
     )
 
@@ -306,7 +286,8 @@ def domain_mixture_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "split_leakage_safe",
     oracle=f"""
-    WITH RECURSIVE sh_t AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
+    WITH RECURSIVE sh_t AS (SELECT doc_id, LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)}) AS sh
+                            FROM documents),
     {dd.minhash_sql("sh_t")},
     {dd.lsh_candidates_sql()},
     pairs AS ({dd.jaccard_verified_sql("cands", "sh_t")}),
@@ -316,8 +297,8 @@ def domain_mixture_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents d LEFT JOIN comps c ON c.node = d.doc_id
     )
     SELECT doc_id, cluster_rep,
-           CASE WHEN {_BUCKET_SQL.format(c="cluster_rep")} % 100 < 80 THEN 'train'
-                WHEN {_BUCKET_SQL.format(c="cluster_rep")} % 100 < 90 THEN 'val'
+           CASE WHEN {tx.hash60_sql("CAST(cluster_rep AS VARCHAR)")} % 100 < 80 THEN 'train'
+                WHEN {tx.hash60_sql("CAST(cluster_rep AS VARCHAR)")} % 100 < 90 THEN 'val'
                 ELSE 'test' END AS split
     FROM rep
     """,
@@ -340,7 +321,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dd.near_dup_pairs(d, "doc_id", "text")
     comp = connected_components(pairs.select("a", "b"))
     rep = F.coalesce(F.col("component"), F.col("doc_id"))
-    bucket = _bucket(rep) % 100
+    bucket = tx.hash60(rep.cast("string")) % 100
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )
@@ -383,7 +364,7 @@ _VOCAB_K = 24
            CAST(SUM(CASE WHEN vid = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_unk,
            STRING_AGG(CAST(vid AS VARCHAR), ' ' ORDER BY ord) AS token_ids
     FROM mapped GROUP BY doc_id
-    """.format(toks=_TOKS),
+    """.format(toks=tx.tokens_sql()),
 )
 def tokenize_to_vocab_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer APPLICATION at corpus scale: build a frequency-ranked
@@ -437,7 +418,7 @@ _SPAN_MIN_TOKENS = 16
     "span_corruption_samples",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
+      SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents
     ),
     eligible AS (
       SELECT doc_id, toks, LEN(toks) AS n
@@ -445,7 +426,7 @@ _SPAN_MIN_TOKENS = 16
     ),
     spans AS (
       SELECT doc_id, toks, n,
-             CAST({_BUCKET_SQL.format(c="doc_id")} % (n - {_SPAN_LEN}) + 1 AS BIGINT)
+             CAST({tx.hash60_sql("CAST(doc_id AS VARCHAR)")} % (n - {_SPAN_LEN}) + 1 AS BIGINT)
                  AS span_start
       FROM eligible
     )
@@ -482,7 +463,7 @@ def span_corruption_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n", F.size("toks")
     )
     eligible = toked.filter(F.col("n") >= _SPAN_MIN_TOKENS)
-    span_start = (_bucket(F.col("doc_id")) % (F.col("n") - _SPAN_LEN) + 1).cast(
+    span_start = (tx.hash60(F.col("doc_id").cast("string")) % (F.col("n") - _SPAN_LEN) + 1).cast(
         "bigint"
     )
     spans = eligible.withColumn("span_start", span_start)
@@ -511,7 +492,7 @@ _STABLE_K = 5
     oracle=f"""
     WITH h AS (
       SELECT doc_id, lang,
-             {_BUCKET_SQL.format(c="doc_id")} AS hkey
+             {tx.hash60_sql("CAST(doc_id AS VARCHAR)")} AS hkey
       FROM documents
     ),
     r AS (
@@ -536,7 +517,7 @@ def sample_stable_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     w = Window.partitionBy("lang").orderBy(
-        _bucket(F.col("doc_id")).asc(), F.col("doc_id").asc()
+        tx.hash60(F.col("doc_id").cast("string")).asc(), F.col("doc_id").asc()
     )
     return (
         d.select("doc_id", "lang", F.row_number().over(w).alias("rank"))
@@ -548,12 +529,13 @@ def sample_stable_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quality_ranker_auc",
     oracle=f"""
     WITH labeled AS (
-      SELECT doc_id, LEN({_TOKS}) AS score,
-             (LEN({_TOKS}) BETWEEN 20 AND 1000
-              AND CAST(LEN(LIST_FILTER({_TOKS}, x -> x IN
+      SELECT doc_id, LEN({tx.tokens_sql()}) AS score,
+             (LEN({tx.tokens_sql()}) BETWEEN 20 AND 1000
+              AND CAST(LEN(LIST_FILTER({tx.tokens_sql()}, x -> x IN
                     ('the','a','an','and','of','to','in','is','on'))) AS DOUBLE)
-                  / LEN({_TOKS}) <= 0.5
-              AND CAST(LEN(LIST_DISTINCT({_TOKS})) AS DOUBLE) / LEN({_TOKS}) > 0.05)
+                  / LEN({tx.tokens_sql()}) <= 0.5
+              AND CAST(LEN(LIST_DISTINCT({tx.tokens_sql()})) AS DOUBLE)
+                  / LEN({tx.tokens_sql()}) > 0.05)
                  AS label
       FROM documents
     ),
@@ -651,7 +633,8 @@ _RECALL_SLICE = anchors.AnchorSlice("doc_id", 5000, kind="contract")
     "lsh_recall_eval",
     oracle=f"""
     WITH sh_srt AS (
-      SELECT doc_id, LIST_SORT({_SHINGLES}) AS sh FROM documents
+      SELECT doc_id, LIST_SORT(LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)})) AS sh
+      FROM documents
       WHERE {_RECALL_SLICE.sql}
     ),
     {dd.prefix_candidates_sql("sh_srt", "pcands")},
@@ -729,7 +712,7 @@ _GOPHER_STOPS_SQL = "('the','a','an','and','of','to','in','is','on')"
 @query(
     "gopher_quality_rules",
     oracle=f"""
-    WITH t AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, lang, {tx.tokens_sql()} AS toks FROM documents),
     m AS (
       SELECT doc_id, lang,
              LEN(toks) AS n_words,
@@ -808,7 +791,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- BPE tokenizer training (merge-rule learning) ----------------------------
 
 _BPE_ITERS = 3
-_BPE_ORACLE = bpe.train_merges_sql(_TOKS, _BPE_ITERS)
+_BPE_ORACLE = bpe.train_merges_sql(tx.tokens_sql(), _BPE_ITERS)
 
 
 @query("bpe_train_merges", oracle=_BPE_ORACLE)

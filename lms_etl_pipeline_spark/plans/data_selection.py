@@ -1,4 +1,4 @@
-"""Importance-weighted training-data selection (round 11): DSIR.
+"""Importance-weighted training-data selection: DSIR.
 
 Data Selection via Importance Resampling (Xie et al. 2023,
 arXiv:2302.03169) picks pretraining documents that look like a small
@@ -44,8 +44,6 @@ from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.plans.curation import _BUCKET_SQL, _bucket
-from lms_etl_pipeline_spark.plans.llm import _TOKS
 from lms_etl_pipeline_spark.session import materialize, release, spread_for_cpu
 from lms_etl_pipeline_spark.sources.tables import load_table
 
@@ -61,7 +59,7 @@ _TARGET_SQL = "lang = 'en'"
 # Shared SQL prefix: unigram+bigram features -> hashed bucket per
 # occurrence, with the doc's target-membership flag.
 _FEATS_CTE = f"""
-    toks AS (SELECT doc_id, ({_TARGET_SQL}) AS is_t, {_TOKS} AS tk
+    toks AS (SELECT doc_id, ({_TARGET_SQL}) AS is_t, {tx.tokens_sql()} AS tk
              FROM documents),
     feats AS (SELECT doc_id, is_t,
                      CASE WHEN LEN(tk) >= 2
@@ -70,7 +68,7 @@ _FEATS_CTE = f"""
                                  i -> tk[i] || ' ' || tk[i + 1]))
                           ELSE tk END AS fs
               FROM toks),
-    fb AS (SELECT doc_id, is_t, {_BUCKET_SQL.format(c="f")} % {_DSIR_B} AS b
+    fb AS (SELECT doc_id, is_t, {tx.hash60_sql("CAST(f AS VARCHAR)")} % {_DSIR_B} AS b
            FROM (SELECT doc_id, is_t, UNNEST(fs) AS f FROM feats)),
     model AS (SELECT b,
                      CAST(SUM(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT)
@@ -96,8 +94,8 @@ def _feature_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     are materialized behind a ``repartition`` BEFORE the interpreted
     zip_with/md5 work — a small parquet corpus scans as ONE task, and
     without the exchange the whole CPU-heavy feature pass runs on a
-    single core (the operators/dedup.py discipline; round 11 perf pass:
-    this was the entire 3.2 s exec of `dsir_importance_selection` at
+    single core (the operators/dedup.py discipline; without it this was
+    the entire 3.2 s exec of `dsir_importance_selection` at
     sf0.1, ~4 s single-task -> sub-second across 32).
     """
     d = load_table(spark, sf_dir, "documents")
@@ -117,7 +115,7 @@ def _feature_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fs = F.when(n >= 2, F.concat(F.col("tk"), bigr)).otherwise(F.col("tk"))
     return base.select("doc_id", "is_t", F.explode(fs).alias("f")).select(
-        "doc_id", "is_t", (_bucket(F.col("f")) % _DSIR_B).alias("b")
+        "doc_id", "is_t", (tx.hash60(F.col("f").cast("string")) % _DSIR_B).alias("b")
     )
 
 
@@ -168,9 +166,8 @@ def dsir_hashed_ngram_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row totals broadcast — the output is ``_DSIR_B`` rows however big
     the corpus is (vocabulary hashing bounds the model, Xie et al. §2.2).
 
-    Round 12 (guide §2.4 — remove redundant passes): the builder now
-    resolves the bucket-bounded counts EAGERLY (one ``collect``,
-    <= ``_DSIR_B`` rows by construction) and derives totals + λ from the
+    No redundant passes: the builder resolves the bucket-bounded counts
+    EAGERLY (one ``collect``, <= ``_DSIR_B`` rows by construction) and derives totals + λ from the
     local relation.  Previously ``tot`` was a broadcast whose build job
     re-ran the whole tokenize/explode/md5 feature pass — TWO full corpus
     scans per execution; now there is exactly one.  λ is computed by the
@@ -218,7 +215,7 @@ def dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject, not a global sort.  Only the emitted weight
     is cast back to DOUBLE.
 
-    NOTE (round-12 advisory): this builder executes EAGERLY — the top-k
+    NOTE: this builder executes EAGERLY — the top-k
     is resolved inside (bounded ``collect``, {64} rows) so the shared
     feature cache can be released before returning, matching
     ``quantile_exact_selection``'s cache-lifetime pattern.  Explain-only
@@ -237,7 +234,7 @@ def dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "is_t", "b")
         .agg(F.count("*").alias("c"))
     )
-    # Round 12 (guide §2.4 — remove redundant passes): resolve the
+    # No redundant passes: resolve the
     # bucket-bounded model ONCE (<= _DSIR_B rows by construction) and
     # derive λ from the resulting LOCAL relation.  Previously tot and lam
     # were two separate broadcast-build jobs, EACH re-aggregating the

@@ -31,7 +31,7 @@ nothing corpus-sized ever collects, the selected set is K rows.
 Oracle: a generated K-round CTE chain (argmax via ORDER BY … LIMIT 1,
 MATERIALIZED at each reuse point), the ``bpe_train_merges_deep`` pattern.
 
-Round 1 has an empty selected set: ``maxsim_u`` is defined as 0 there
+The first pick has an empty selected set: ``maxsim_u`` is defined as 0 there
 (the penalty over an empty set), so `score2_u = rel_u` — identical
 convention in both engines.
 """
@@ -135,8 +135,7 @@ def mmr_diverse_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per round — the pick, its relevance, its max similarity to
     the prior picks, and the doubled MMR score, all BIGINT.
     """
-    # Round 12 (guide §1.2 — fix the distributed algorithm first): the
-    # greedy loop is now INCREMENTAL.  The old form recomputed every
+    # The greedy loop is INCREMENTAL.  The old form recomputed every
     # candidate's dot products against ALL prior picks each round
     # (Σ(r−1)·n = O(K²n) interpreted dots) and paid a corpus-keyed
     # groupBy shuffle + a rel join per round.  MMR's max is associative:
@@ -155,7 +154,7 @@ def mmr_diverse_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maxsim over the EMPTY selected set starts at a sentinel minimum
     # (−2^62 — dots are bounded |·| ≤ d·U² ≈ 6.4e13, far above it), NOT 0:
     # dot products can be negative, and flooring at 0 would overstate the
-    # penalty for anti-correlated candidates.  Round 1 emits the
+    # penalty for anti-correlated candidates.  The first pick emits the
     # conventional (maxsim=0, score2=rel) pair explicitly, as before.
     state = materialize(
         xu.crossJoin(F.broadcast(qv)).select(

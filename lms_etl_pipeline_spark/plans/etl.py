@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 
 from lms_etl_pipeline_spark import etl
 from lms_etl_pipeline_spark.plans.catalog import query
+from lms_etl_pipeline_spark.session import scratch_dir
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 _PROPS_SCHEMA = "k BIGINT"
@@ -217,18 +218,11 @@ def etl_users_pipeline_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 def csv_roundtrip_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink + scan (reference S4/S5): write with header, read back with
     an explicit schema (no inferSchema) — proving the interchange hop is
-    lossless for typed data.  Scratch space is scoped by fixture dir and
-    rooted at the package location (same discipline as the ORC sink)."""
-    from pathlib import Path
-
+    lossless for typed data."""
     from lms_etl_pipeline_spark.sources.csv_io import read_csv, write_csv
 
     n = load_table(spark, sf_dir, "nation")
-    path = str(
-        Path(__file__).resolve().parents[2]
-        / ".scratch"
-        / f"nation_csv_{Path(sf_dir).name}"
-    )
+    path = scratch_dir("nation_csv_")
     write_csv(n, path)
     schema = T.StructType(
         [
@@ -255,18 +249,10 @@ def orc_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the checked plan — proving the hop is lossless AND optimizer-visible,
     not just byte-preserving. Oracle runs on the parquet original: equality
     holds iff the ORC round trip changed nothing."""
-    from pathlib import Path
-
     from lms_etl_pipeline_spark.functions.numeric import dec_sum
 
     o = load_table(spark, sf_dir, "orders")
-    # Scratch sink scoped by fixture dir (concurrent runs against different
-    # SFs don't race) and rooted at the package location, not a literal path.
-    path = str(
-        Path(__file__).resolve().parents[2]
-        / ".scratch"
-        / f"orders_orc_{Path(sf_dir).name}"
-    )
+    path = scratch_dir("orders_orc_")
     o.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return (
@@ -287,21 +273,14 @@ def jsonl_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition, line-splittable on read) and come back through the explicit-
     schema PERMISSIVE scan; the differential check pins that arbitrary
     corpus text (embedded quotes/newlines are JSON-escaped) survives the
-    round trip byte-for-byte.  Scratch space is scoped by fixture dir and
-    rooted at the package location (same discipline as the ORC sink).
+    round trip byte-for-byte.
     """
-    from pathlib import Path
-
     from lms_etl_pipeline_spark.sources.jsonl_io import read_jsonl, write_jsonl
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    path = str(
-        Path(__file__).resolve().parents[2]
-        / ".scratch"
-        / f"documents_jsonl_{Path(sf_dir).name}"
-    )
+    path = scratch_dir("documents_jsonl_")
     write_jsonl(d, path)
     schema = T.StructType(
         [

@@ -1,4 +1,4 @@
-"""Data-governance / integrity plans (round 5b widening).
+"""Data-governance / integrity plans.
 
 Four engine-level ETL-governance operators a production warehouse runs on
 every load, which the reference pipeline's single-table upsert

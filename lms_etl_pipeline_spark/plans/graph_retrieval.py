@@ -1,13 +1,13 @@
 """Graph-traversal, retrieval-eval, and dedup-calibration plans (split
-from the round-5c sequences wave).
+from the sequence plans).
 
 Bounded BFS over the customer→supplier order graph, common-neighbor node
 similarity, MRR/NDCG ranking metrics, shingle-containment pairs,
 first-in-window dedup, and B-cubed blocking quality.  The
 similarity-CALIBRATION measurements (Matryoshka truncation, centroid
 drift, LSH s-curve, MinHash estimator error) moved to
-plans/similarity_calibration.py in round 10 (1,100-LoC module
-convention; registry unchanged).
+plans/similarity_calibration.py (1,100-LoC module convention;
+registry unchanged).
 
 Scale shapes: every hop/probe is an equi-join (frontier x edges, band x
 band); all-pairs shapes exist only as bounded id-range calibration
@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators import dedup as dd
+from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators import vectors as vec
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.plans.llm import EMB_DIM
@@ -136,9 +137,6 @@ _IDCG_PREFIX = [round(sum(_DCG_W_R[: i + 1]), 9) for i in range(_NDCG_K)]
 
 
 def _retrieval_oracle() -> str:
-    d_qn = vec.dot_sql("q.embedding", "n.embedding", EMB_DIM)
-    d_qq = vec.dot_sql("q.embedding", "q.embedding", EMB_DIM)
-    d_nn = vec.dot_sql("n.embedding", "n.embedding", EMB_DIM)
     w_case = " ".join(
         f"WHEN {r} THEN {_DCG_W_R[r - 1]!r}" for r in range(1, _NDCG_K + 1)
     )
@@ -153,7 +151,7 @@ def _retrieval_oracle() -> str:
              (n.label = q.label) AS rel,
              ROW_NUMBER() OVER (
                PARTITION BY q.vec_id
-               ORDER BY ({d_qn}) / (SQRT({d_qq}) * SQRT({d_nn})) DESC,
+               ORDER BY {vec.cosine_sql("q.embedding", "n.embedding", EMB_DIM)} DESC,
                         n.vec_id ASC) AS rk
       FROM q, embeddings n WHERE n.vec_id <> q.vec_id),
     top AS (SELECT * FROM ranked WHERE rk <= {_NDCG_K}),
@@ -416,16 +414,10 @@ _CONT_THRESHOLD = 0.5
     "ngram_containment_pairs",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id,
-             LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), x -> x != '')
-               AS toks
+      SELECT doc_id, {tx.tokens_sql()} AS toks
       FROM documents WHERE doc_id < {_CONT_ID_CAP}),
     sh AS (
-      SELECT doc_id,
-             UNNEST(LIST_DISTINCT(LIST_TRANSFORM(
-               RANGE(1, GREATEST(LEN(toks) - 1, 1)),
-               i -> ARRAY_TO_STRING(LIST_SLICE(toks, i, i + 2), ' '))))
-               AS s
+      SELECT doc_id, UNNEST(LIST_DISTINCT({tx.ngrams_sql("toks", 3)})) AS s
       FROM t),
     sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
     inter AS (
@@ -462,8 +454,6 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs only; the shingle join here shuffles on the shingle
     key, never docs².
     """
-    from lms_etl_pipeline_spark.operators import text as tx
-
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _CONT_ID_CAP
     )
@@ -507,13 +497,11 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "b3_blocking_eval",
-    oracle=r"""
+    oracle=f"""
     WITH lab AS (
       SELECT doc_id,
              SUBSTRING(text, 1, 64) AS pred,
-             MD5(COALESCE(ARRAY_TO_STRING(LIST_SORT(LIST_DISTINCT(
-               LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\s+'), t -> t != ''))),
-               ' '), '')) AS gold
+             {tx.fingerprint_sql(tx.tokens_sql())} AS gold
       FROM documents),
     np AS (SELECT pred, COUNT(*) AS n_p FROM lab GROUP BY 1),
     ng AS (SELECT gold, COUNT(*) AS n_g FROM lab GROUP BY 1),
@@ -562,8 +550,6 @@ def b3_blocking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     back on the labels — never doc x doc; the label tables are
     cluster-count-sized.
     """
-    from lms_etl_pipeline_spark.operators import text as tx
-
     d = load_table(spark, sf_dir, "documents")
     lab = d.select(
         "doc_id",

@@ -20,18 +20,10 @@ from pyspark.sql import functions as F
 from lms_etl_pipeline_spark.operators import dedup as dd
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.session import default_parallelism, spread_for_cpu
+from lms_etl_pipeline_spark.session import default_parallelism, scratch_dir, spread_for_cpu
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 EMB_DIM = 64
-
-# DuckDB fragment: whitespace tokens with empties removed (mirrors tx.tokens).
-_TOKS = r"LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\s+'), t -> t != '')"
-# DuckDB fragment: distinct word-3-gram shingle set (mirrors tx.shingles, n=3).
-_SHINGLES = (
-    "LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, GREATEST(LEN({t}) - 1, 1)), "
-    "i -> ARRAY_TO_STRING(LIST_SLICE({t}, i, i + 2), ' ')))"
-).format(t=_TOKS)
 
 
 # ---------------------------------------------------------------------------
@@ -42,7 +34,7 @@ _SHINGLES = (
 @query(
     "text_token_stats",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
+    WITH t AS (SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents)
     SELECT doc_id,
            LEN(toks) AS n_tokens,
            LEN(LIST_DISTINCT(toks)) AS n_distinct,
@@ -67,7 +59,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "doc_quality_filter",
     oracle=f"""
-    WITH t AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents)
+    WITH t AS (SELECT doc_id, lang, {tx.tokens_sql()} AS toks FROM documents)
     SELECT doc_id, lang,
            LEN(toks) AS n_tokens,
            CAST(LEN(LIST_DISTINCT(toks)) AS DOUBLE) / LEN(toks) AS ttr
@@ -93,7 +85,7 @@ def doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "curated_corpus_partitioned_write",
     oracle=f"""
-    WITH t AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents)
+    WITH t AS (SELECT doc_id, lang, {tx.tokens_sql()} AS toks FROM documents)
     SELECT doc_id, lang, LEN(toks) AS n_tokens
     FROM t
     WHERE LEN(toks) BETWEEN 20 AND 1000
@@ -109,21 +101,13 @@ def curated_corpus_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFr
     lossless: lang comes back from directory names, data columns from the
     files, and the pruned read returns exactly the oracle's rows.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     from lms_etl_pipeline_spark.sources.parquet_io import read_partitioned, write_partitioned
 
     d = load_table(spark, sf_dir, "documents")
     gated = d.select(
         "doc_id", "lang", F.size(tx.tokens("text")).alias("n_tokens")
     ).filter(F.col("n_tokens").between(20, 1000))
-    # A fresh directory per build: the read-back is lazy, so a shared path
-    # would let a concurrent build overwrite the files this frame scans.
-    # Lazy is also why it lives until the process exits, not the call.
-    path = tempfile.mkdtemp(prefix="curated_by_lang_")
-    atexit.register(shutil.rmtree, path, True)
+    path = scratch_dir("curated_by_lang_")
     write_partitioned(gated, path, ["lang"])
     # Explicit schema on the read-back: when the gate matched ZERO rows the
     # layout holds no files and schema inference would raise
@@ -138,7 +122,7 @@ def curated_corpus_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFr
 @query(
     "text_language_id",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents),
     hits AS (
       SELECT doc_id,
              LEN(LIST_FILTER(toks, x -> x IN ('the','a','an','and','of','to','is'))) AS en_hits,
@@ -198,7 +182,7 @@ def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tfidf_cosine_pairs",
     oracle=f"""
     WITH terms AS (
-      SELECT doc_id, UNNEST({_TOKS}) AS term FROM documents WHERE doc_id < 150
+      SELECT doc_id, UNNEST({tx.tokens_sql()}) AS term FROM documents WHERE doc_id < 150
     ),
     tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY 1, 2),
     dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
@@ -256,7 +240,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tf_idf_top_terms",
     oracle=f"""
     WITH terms AS (
-      SELECT doc_id, UNNEST({_TOKS}) AS term FROM documents
+      SELECT doc_id, UNNEST({tx.tokens_sql()}) AS term FROM documents
     ), tf AS (
       SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY 1, 2
     ), dfreq AS (
@@ -293,12 +277,11 @@ def tf_idf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             LIST_FILTER({_TOKS}, x -> x NOT IN
+             LIST_FILTER({tx.tokens_sql()}, x -> x NOT IN
                ('the','a','an','and','of','to','in','is','on')) AS toks
       FROM documents
     ), grams AS (
-      SELECT UNNEST(LIST_TRANSFORM(RANGE(1, GREATEST(LEN(toks), 1)),
-                    i -> ARRAY_TO_STRING(LIST_SLICE(toks, i, i + 1), ' '))) AS bigram
+      SELECT UNNEST({tx.ngrams_sql("toks", 2)}) AS bigram
       FROM t WHERE LEN(toks) >= 2
     )
     SELECT bigram, COUNT(*) AS n
@@ -333,7 +316,7 @@ _NEG_SQL = "('bad','terrible','awful','hate','worst','sad','poor','wrong')"
 @query(
     "text_sentiment_lexicon",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
+    WITH t AS (SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents)
     SELECT doc_id,
            LEN(LIST_FILTER(toks, x -> x IN {_POS_SQL})) AS pos_hits,
            LEN(LIST_FILTER(toks, x -> x IN {_NEG_SQL})) AS neg_hits,
@@ -386,7 +369,7 @@ def dedup_exact_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH fp AS (
       SELECT doc_id,
-             MD5(COALESCE(ARRAY_TO_STRING(LIST_SORT(LIST_DISTINCT({_TOKS})), ' '), '')) AS fingerprint
+             {tx.fingerprint_sql(tx.tokens_sql())} AS fingerprint
       FROM documents
     )
     SELECT fingerprint, MIN(doc_id) AS canonical_id, COUNT(*) AS n_docs
@@ -407,7 +390,8 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "minhash_signatures",
     oracle=f"""
-    WITH sh_t AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
+    WITH sh_t AS (SELECT doc_id, LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)}) AS sh
+                  FROM documents),
     {dd.minhash_sql("sh_t")}
     SELECT * FROM sigs
     """,
@@ -423,7 +407,8 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "near_dup_pairs_lsh",
     oracle=f"""
-    WITH sh_t AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
+    WITH sh_t AS (SELECT doc_id, LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)}) AS sh
+                  FROM documents),
     {dd.minhash_sql("sh_t")},
     {dd.lsh_candidates_sql()}
     {dd.jaccard_verified_sql("cands", "sh_t", score=True)}
@@ -440,11 +425,10 @@ def near_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "doc_repetition_signals",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents),
     bg AS (
       SELECT doc_id,
-             UNNEST(LIST_TRANSFORM(RANGE(1, LEN(toks)),
-                    i -> ARRAY_TO_STRING(LIST_SLICE(toks, i, i + 1), ' '))) AS bigram
+             UNNEST({tx.ngrams_sql("toks", 2)}) AS bigram
       FROM t WHERE LEN(toks) >= 2
     ),
     cnt AS (SELECT doc_id, bigram, COUNT(*) AS c FROM bg GROUP BY doc_id, bigram)
@@ -541,7 +525,8 @@ def text_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     "contrastive_triplets",
     oracle=f"""
     WITH sh_t AS (
-      SELECT doc_id, LIST_SORT({_SHINGLES}) AS sh FROM documents
+      SELECT doc_id, LIST_SORT(LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)})) AS sh
+      FROM documents
     ),
     {dd.prefix_candidates_sql("sh_t")},
     pos AS ({dd.jaccard_verified_sql("cands", "nz")}),
@@ -593,7 +578,8 @@ def contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ngram_jaccard_pairs",
     oracle=f"""
     WITH sh_t AS (
-      SELECT doc_id, LIST_SORT({_SHINGLES}) AS sh FROM documents
+      SELECT doc_id, LIST_SORT(LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)})) AS sh
+      FROM documents
     ),
     {dd.prefix_candidates_sql("sh_t")}
     {dd.jaccard_verified_sql("cands", "nz", score=True)}
@@ -715,7 +701,7 @@ def doc_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "doc_quality_score_logistic",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents),
     feats AS (
       SELECT doc_id,
              LEN(toks) AS n_tokens,
@@ -759,7 +745,7 @@ def doc_quality_score_logistic(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "doc_chunk_sliding",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents),
     nz AS (SELECT doc_id, toks, LEN(toks) AS n FROM t WHERE LEN(toks) > 0),
     idx AS (
       SELECT doc_id, toks, n,
@@ -810,7 +796,7 @@ def doc_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_pack_sequences",
     oracle=f"""
-    WITH t AS (SELECT doc_id, lang, LEN({_TOKS}) AS n_tokens FROM documents),
+    WITH t AS (SELECT doc_id, lang, LEN({tx.tokens_sql()}) AS n_tokens FROM documents),
     runs AS (
       SELECT doc_id, lang, n_tokens,
              SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
@@ -852,11 +838,10 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dataset_split_assign",
-    oracle="""
+    oracle=f"""
     WITH h AS (
       SELECT doc_id, lang,
-             TRY_CAST(CONCAT('0x', SUBSTRING(MD5(CAST(doc_id AS VARCHAR)), 1, 15))
-                      AS BIGINT) % 100 AS bucket
+             {tx.hash60_sql("CAST(doc_id AS VARCHAR)")} % 100 AS bucket
       FROM documents
     )
     SELECT doc_id, lang,
@@ -871,16 +856,12 @@ def dataset_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable document id — the scale-correct split: no ``rand()`` (task
     retries would reassign rows), no global sort, reproducible across runs,
     engines, and partitionings, and any late-arriving document lands in a
-    stable split.  The md5-prefix hash is the engine-portable family used
-    by MinHash (`operators.dedup.base_hash`), so the oracle computes the
+    stable split.  The hash is ``operators.text.hash60``, which MinHash
+    also uses, and the oracle's ``hash60_sql`` computes the
     identical buckets.
     """
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 100
-    )
+    bucket = tx.hash60(F.col("doc_id").cast("string")) % 100
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )

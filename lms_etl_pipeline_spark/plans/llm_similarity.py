@@ -26,8 +26,6 @@ from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.operators.graph import components_sql, connected_components
 from lms_etl_pipeline_spark.plans.llm import (
     EMB_DIM,
-    _SHINGLES,
-    _TOKS,
     near_dup_pairs_lsh,
 )
 from lms_etl_pipeline_spark.session import (
@@ -40,15 +38,11 @@ from lms_etl_pipeline_spark.sources.tables import load_table
 @query(
     "dedup_winnowing",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents),
     g AS (
       SELECT doc_id,
-             LIST_TRANSFORM(
-               CASE WHEN LEN(toks) >= 3
-                    THEN LIST_TRANSFORM(RANGE(1, LEN(toks) - 1),
-                         i -> ARRAY_TO_STRING(LIST_SLICE(toks, i, i + 2), ' '))
-                    ELSE [] END,
-               gr -> TRY_CAST(CONCAT('0x', SUBSTRING(MD5(gr), 1, 15)) AS BIGINT)) AS hs
+             LIST_TRANSFORM({tx.ngrams_sql("toks", 3)},
+                            gr -> {tx.hash60_sql("gr")}) AS hs
       FROM t
     ),
     fp AS (
@@ -82,7 +76,8 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE sh_t AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
+    WITH RECURSIVE sh_t AS (SELECT doc_id, LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)}) AS sh
+                            FROM documents),
     {dd.minhash_sql("sh_t")},
     {dd.lsh_candidates_sql()},
     pairs AS ({dd.jaccard_verified_sql("cands", "sh_t")}),
@@ -105,7 +100,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_curation_pipeline",
     oracle=f"""
     WITH RECURSIVE toks_t AS (
-      SELECT doc_id, lang, {_TOKS} AS toks FROM documents
+      SELECT doc_id, lang, {tx.tokens_sql()} AS toks FROM documents
     ),
     quality AS (
       SELECT doc_id, lang, toks FROM toks_t
@@ -117,15 +112,14 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_kept AS (
       SELECT MIN(doc_id) AS doc_id
       FROM quality
-      GROUP BY MD5(COALESCE(ARRAY_TO_STRING(LIST_SORT(LIST_DISTINCT(toks)), ' '), ''))
+      GROUP BY {tx.fingerprint_sql("toks")}
     ),
     survivors AS (
       SELECT q.doc_id, q.lang, q.toks FROM quality q
       JOIN exact_kept k ON q.doc_id = k.doc_id
     ),
     sh_t AS (
-      SELECT doc_id, LIST_DISTINCT(LIST_TRANSFORM(RANGE(1, GREATEST(LEN(toks) - 1, 1)),
-             i -> ARRAY_TO_STRING(LIST_SLICE(toks, i, i + 2), ' '))) AS sh
+      SELECT doc_id, LIST_DISTINCT({tx.ngrams_sql("toks", 3)}) AS sh
       FROM survivors
     ),
     {dd.minhash_sql("sh_t")},
@@ -217,14 +211,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_oracle(k: int = 5, n_queries: int = 5) -> str:
-    d_qe = vec.dot_sql("e.embedding", "q.embedding", EMB_DIM)
-    d_qq = vec.dot_sql("q.embedding", "q.embedding", EMB_DIM)
-    d_ee = vec.dot_sql("e.embedding", "e.embedding", EMB_DIM)
     return f"""
     WITH q AS (SELECT * FROM embeddings WHERE vec_id < {n_queries}),
     pairs AS (
       SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-             ({d_qe}) / (SQRT({d_qq}) * SQRT({d_ee})) AS cosine
+             {vec.cosine_sql("q.embedding", "e.embedding", EMB_DIM)} AS cosine
       FROM q CROSS JOIN embeddings e
       WHERE e.vec_id != q.vec_id
     ),
@@ -281,9 +272,6 @@ def knn_cosine_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_filtered_oracle(k: int = 5, n_queries: int = 5) -> str:
-    d_qe = vec.dot_sql("e.embedding", "q.embedding", EMB_DIM)
-    d_qq = vec.dot_sql("q.embedding", "q.embedding", EMB_DIM)
-    d_ee = vec.dot_sql("e.embedding", "e.embedding", EMB_DIM)
     return f"""
     WITH q AS (SELECT * FROM embeddings WHERE vec_id < {n_queries}),
     corpus AS (
@@ -293,7 +281,7 @@ def _knn_filtered_oracle(k: int = 5, n_queries: int = 5) -> str:
     ),
     pairs AS (
       SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-             ({d_qe}) / (SQRT({d_qq}) * SQRT({d_ee})) AS cosine
+             {vec.cosine_sql("q.embedding", "e.embedding", EMB_DIM)} AS cosine
       FROM q CROSS JOIN corpus e
       WHERE e.vec_id != q.vec_id
     ),
@@ -491,13 +479,9 @@ def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH e AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300)
     SELECT a.vec_id AS a, b.vec_id AS b,
-           ROUND(({vec.dot_sql('a.embedding', 'b.embedding', EMB_DIM)})
-                 / (SQRT({vec.dot_sql('a.embedding', 'a.embedding', EMB_DIM)})
-                    * SQRT({vec.dot_sql('b.embedding', 'b.embedding', EMB_DIM)})), 6) AS cosine
+           ROUND({vec.cosine_sql("a.embedding", "b.embedding", EMB_DIM)}, 6) AS cosine
     FROM e a JOIN e b ON a.vec_id < b.vec_id
-    WHERE ({vec.dot_sql('a.embedding', 'b.embedding', EMB_DIM)})
-          / (SQRT({vec.dot_sql('a.embedding', 'a.embedding', EMB_DIM)})
-             * SQRT({vec.dot_sql('b.embedding', 'b.embedding', EMB_DIM)})) >= 0.4
+    WHERE {vec.cosine_sql("a.embedding", "b.embedding", EMB_DIM)} >= 0.4
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:

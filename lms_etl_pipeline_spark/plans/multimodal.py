@@ -103,7 +103,7 @@ _PPM_W = 16
     """,
 )
 def multimodal_ppm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image-codec certificate (round 11) — the netpbm twin of
+    """REAL image-codec certificate — the netpbm twin of
     `multimodal_wav_decode_real`: synthesize a genuine binary P6 PPM per
     document (16 px wide, text bytes as RGB samples zero-padded to the
     last row), decode it with the pure-byte-arithmetic netpbm path
@@ -166,7 +166,7 @@ def multimodal_ppm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_wav_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio-codec certificate (round 11, VERDICT #4): synthesize a
+    """REAL audio-codec certificate: synthesize a
     genuine RIFF/WAV container per document (PCM16 mono @16 kHz, samples =
     the text's byte pairs, zero-padded to even length), decode it with the
     stdlib ``wave``-module path (`operators.multimodal.parse_wav`), and
@@ -252,7 +252,7 @@ _Y4M_YBYTES = _Y4M_W * _Y4M_H
     """,
 )
 def multimodal_y4m_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video-codec certificate (round 11) — closes the LAST codec
+    """REAL video-codec certificate — closes the LAST codec
     seam: synthesize a genuine YUV4MPEG2 stream per document (8x4 luma
     C420jpeg at NTSC 30000/1001 fps; each frame's Y plane carries the next
     32 text bytes zero-padded, chroma planes pinned at 0x80), decode it

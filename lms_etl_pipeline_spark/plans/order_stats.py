@@ -64,7 +64,7 @@ def quantile_exact_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     works when the column is 100 TB.  Output: one row per quantile with
     the exact cents and the decoded money value (one IEEE division,
     bit-identical cross-engine).  Empty column -> empty result, mirroring
-    the oracle's empty join (sf0 degenerate sweep, round 11).
+    the oracle's empty join (the sf0 degenerate sweep).
     """
     li = load_table(spark, sf_dir, "lineitem")
     cents = materialize(

@@ -31,7 +31,7 @@ axes) ⇒ |xu| ≤ 10^6, per-dim diff² ≤ 4·10^12, per-subspace d2 ≤
 margin; the documented precondition is |x| ≤ ~300 (diff² ≤ 3.6·10^17,
 subspace sum ≤ 2.9·10^18 < int64 max).  Cross-row mean SUMs widen to
 DECIMAL(38,0)/HUGEINT *internally*; every OUTPUT column is INT/BIGINT
-(the round-11 no-decimal-output rule, ``tools/check_oracle.py``).
+(the no-decimal-output rule, ``tools/check_oracle.py``).
 
 Scale posture (100 TB):
 
@@ -252,7 +252,7 @@ def _argmin_code(
     shuffle (struct ordering = lexicographic ⇒ d2-then-cid tiebreak).
     ``keep_vec=True`` carries the subvector through so a consumer that
     needs (assignment, xv) pairs — the Lloyd mean — does not have to join
-    the assignment back to ``xs`` (round 12: that join was an SMJ with two
+    the assignment back to ``xs`` (that join would be an SMJ with two
     corpus-sized array-payload exchanges in every PQ query)."""
     best = F.array_min(
         F.transform(
@@ -293,7 +293,7 @@ def _train_book(xs: DataFrame) -> DataFrame:
     BIGINT out)."""
     # keep_vec carries xv with the assignment — the old a0 ⋈ xs join (SMJ,
     # two corpus-sized exchanges of array payloads) folds into the same
-    # map-only pass (round 12, guide §2.4); rows are identical because the
+    # map-only pass; rows are identical because the
     # join was 1:1 on (vec_id, s) by construction.
     a0 = _argmin_code(xs, _book_rows_to_arrays(_seed_book(xs)), keep_vec=True)
     m = a0.select("s", "cid", F.posexplode("xv").alias("pos", "xu"))

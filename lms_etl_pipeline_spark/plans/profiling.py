@@ -1,5 +1,5 @@
 """Distribution profiling, probabilistic membership, and OLAP-composite
-plans (round 5b widening).
+plans.
 
 Operators a production data platform runs for corpus QA, membership
 indexing, statistics, and profiling that were not yet first-class.
@@ -37,8 +37,8 @@ The first wave:
 - **RFM segmentation** (``rfm_segmentation``) — recency/frequency/monetary
   quartile codes per customer, the standard behavioral-cohort cut.
 
-Later waves live in the round-8 sibling modules (the r5 <=1100-LoC
-module-size convention): ``profiling_distributions`` (overlap matrix,
+Later waves live in the sibling modules (the <=1100-LoC module-size
+convention): ``profiling_distributions`` (overlap matrix,
 dedup-savings histogram, seasonal profile, quantile normalization,
 length-matching resample, n-gram novelty, key skew, CUSUM, column
 profiler, exact SimHash pairs, Flesch, correlation matrix, grouped OLS,
@@ -67,7 +67,8 @@ from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.functions.numeric import dec_sum
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.plans.llm import _TOKS, EMB_DIM
+from lms_etl_pipeline_spark.plans.corpus_ml import _BATCH_MOD
+from lms_etl_pipeline_spark.plans.llm import EMB_DIM
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators.rank import (
     attach_global_rank,
@@ -76,14 +77,6 @@ from lms_etl_pipeline_spark.operators.rank import (
     with_uniform_key_buckets,
 )
 from lms_etl_pipeline_spark.sources.tables import load_table
-
-#: DuckDB twin of tx.fingerprint (md5 of the sorted distinct-token set).
-# COALESCE: DuckDB ARRAY_TO_STRING([]) is NULL; Spark concat_ws is '' —
-# zero-token docs must share MD5('') on both engines (hostile-text sweep)
-_FP_SQL = f"MD5(COALESCE(ARRAY_TO_STRING(LIST_SORT(LIST_DISTINCT({_TOKS})), ' '), ''))"
-
-#: delta-batch convention shared with corpus_ml (doc_id % 10 == 7 = newest).
-_BATCH_MOD = 7
 
 # --------------------------------------------------------------------------
 # Bloom-filter membership probe
@@ -94,18 +87,13 @@ _BLOOM_K = 4             # hash functions
 _BLOOM_WORD = 32         # bits per bitmap word (masks stay positive int64)
 
 # Engine-portable position j for a text: md5-prefix bucket of a salted key.
-_BLOOM_POS_SQL = (
-    "TRY_CAST(CONCAT('0x', SUBSTRING(MD5(CONCAT('bloom{j}|', text)), 1, 15))"
-    f" AS BIGINT) % {_BLOOM_M}"
-)
+def _bloom_pos_sql(j: int) -> str:
+    key = f"CONCAT('bloom{j}|', text)"
+    return f"{tx.hash60_sql(key)} % {_BLOOM_M}"
 
 
 def _bloom_pos(j: int) -> F.Column:
-    key = F.concat(F.lit(f"bloom{j}|"), F.col("text"))
-    return (
-        F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint")
-        % _BLOOM_M
-    )
+    return tx.hash60(F.concat(F.lit(f"bloom{j}|"), F.col("text"))) % _BLOOM_M
 
 
 @query(
@@ -118,7 +106,7 @@ def _bloom_pos(j: int) -> F.Column:
       SELECT DISTINCT pos FROM idx, (
         SELECT UNNEST(RANGE(0, {_BLOOM_K})) AS j) h,
       LATERAL (SELECT CASE h.j
-        {"".join(f"WHEN {j} THEN ({_BLOOM_POS_SQL.format(j=j)}) " for j in range(_BLOOM_K))}
+        {"".join(f"WHEN {j} THEN ({_bloom_pos_sql(j)}) " for j in range(_BLOOM_K))}
         END AS pos) p),
     bitmap AS (
       SELECT pos // {_BLOOM_WORD} AS word,
@@ -126,7 +114,7 @@ def _bloom_pos(j: int) -> F.Column:
       FROM idx_pos GROUP BY 1),
     probe AS (
       SELECT d.doc_id, d.text, CASE h.j
-        {"".join(f"WHEN {j} THEN ({_BLOOM_POS_SQL.format(j=j)}) " for j in range(_BLOOM_K))}
+        {"".join(f"WHEN {j} THEN ({_bloom_pos_sql(j)}) " for j in range(_BLOOM_K))}
         END AS pos
       FROM delta d, (SELECT UNNEST(RANGE(0, {_BLOOM_K})) AS j) h),
     hits AS (
@@ -234,7 +222,7 @@ _SPAN_N = 8  # tokens per gram
 @query(
     "dup_ngram_spans",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents),
     grams AS (
       SELECT doc_id, UNNEST(g.i) AS pos,
              ARRAY_TO_STRING(LIST_SLICE(toks, UNNEST(g.i),
@@ -346,7 +334,7 @@ def dup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
            -- DuckDB ARRAY_TO_STRING([]) is NULL; Spark array_join([]) is ''
            COALESCE(ARRAY_TO_STRING(kept, ' '), '') AS cleaned_text
     FROM k
-    """.format(toks=_TOKS, n=_SPAN_N, n1=_SPAN_N - 1, n2=_SPAN_N - 2),
+    """.format(toks=tx.tokens_sql(), n=_SPAN_N, n1=_SPAN_N - 1, n2=_SPAN_N - 2),
 )
 def dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REMOVAL half of substring-level dedup (Lee et al. 2022): rewrite
@@ -423,7 +411,7 @@ _ENTROPY_MIN = 2.5  # bits; below = repeated-token boilerplate
 @query(
     "token_entropy_filter",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents),
     counts AS (
       SELECT doc_id, tok, COUNT(*) AS c
       FROM (SELECT doc_id, UNNEST(toks) AS tok FROM t) x
@@ -497,7 +485,7 @@ _ZIPF_TOPN = 100
     oracle=f"""
     WITH counts AS (
       SELECT tok, COUNT(*) AS n
-      FROM (SELECT UNNEST({_TOKS}) AS tok FROM documents) x
+      FROM (SELECT UNNEST({tx.tokens_sql()}) AS tok FROM documents) x
       GROUP BY tok),
     top AS (
       SELECT tok, n, ROW_NUMBER() OVER (ORDER BY n DESC, tok) AS rk

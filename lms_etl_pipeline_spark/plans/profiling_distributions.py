@@ -1,6 +1,6 @@
 """Distribution, drift, and statistical profiling plans (split from
-plans/profiling.py in round 8 — the r5 module-size convention, <=1100 LoC
-per plan module; registry and semantics unchanged).
+plans/profiling.py by the module-size convention, <=1100 LoC per plan
+module; registry and semantics unchanged).
 
 Sections: cross-source duplicate overlap matrix, duplicate-cluster size
 histogram, seasonal (hour-of-day) profile, per-source quantile
@@ -27,9 +27,6 @@ from lms_etl_pipeline_spark.operators.rank import (
 )
 from lms_etl_pipeline_spark.plans import anchors
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.plans.curation import _BUCKET_SQL, _G3, _bucket
-from lms_etl_pipeline_spark.plans.llm import _TOKS
-from lms_etl_pipeline_spark.plans.profiling import _FP_SQL
 from lms_etl_pipeline_spark.session import materialize, spread_for_cpu
 from lms_etl_pipeline_spark.sources.tables import load_table
 
@@ -41,7 +38,7 @@ from lms_etl_pipeline_spark.sources.tables import load_table
 @query(
     "source_overlap_matrix",
     oracle=f"""
-    WITH fp AS (SELECT DISTINCT source, {_FP_SQL} AS f FROM documents)
+    WITH fp AS (SELECT DISTINCT source, {tx.fingerprint_sql(tx.tokens_sql())} AS f FROM documents)
     SELECT a.source AS src_a, b.source AS src_b,
            CAST(COUNT(*) AS BIGINT) AS n_shared_fp
     FROM fp a JOIN fp b ON a.f = b.f AND a.source < b.source
@@ -85,7 +82,8 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_cluster_size_histogram",
     oracle=f"""
-    WITH g AS (SELECT {_FP_SQL} AS f, COUNT(*) AS sz FROM documents GROUP BY 1)
+    WITH g AS (SELECT {tx.fingerprint_sql(tx.tokens_sql())} AS f, COUNT(*) AS sz
+               FROM documents GROUP BY 1)
     SELECT sz AS cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
            CAST(SUM(sz) AS BIGINT) AS n_docs,
            CAST(SUM(sz) - COUNT(*) AS BIGINT) AS n_removable
@@ -240,7 +238,7 @@ _MATCH_BINS = 10
       SELECT b.doc_id, b.source, b.decile, s.ns,
              ROW_NUMBER() OVER (
                PARTITION BY b.source, b.decile
-               ORDER BY {_BUCKET_SQL.format(c="b.doc_id")}, b.doc_id) AS rk
+               ORDER BY {tx.hash60_sql("CAST(b.doc_id AS VARCHAR)")}, b.doc_id) AS rk
       FROM binned b JOIN src_n s USING (source))
     SELECT doc_id, source, decile
     FROM ranked
@@ -275,7 +273,7 @@ def length_match_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source", "decile")
     src_n = binned.groupBy("source").agg(F.count("*").alias("ns"))
     w = Window.partitionBy("source", "decile").orderBy(
-        _bucket(F.col("doc_id")), "doc_id"
+        tx.hash60(F.col("doc_id").cast("string")), "doc_id"
     )
     return (
         binned.join(F.broadcast(src_n), "source")
@@ -296,7 +294,8 @@ def length_match_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ngram_novelty_rate",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_G3} AS g FROM documents),
+    WITH t AS (SELECT doc_id, LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)}) AS g
+               FROM documents),
     sh AS (SELECT doc_id, UNNEST(g) AS s FROM t),
     first_seen AS (SELECT s, MIN(doc_id) AS first_doc FROM sh GROUP BY s)
     SELECT sh.doc_id,
@@ -324,8 +323,8 @@ def ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-sized work (the ``incremental_corpus_dedup`` posture).
     """
     d = load_table(spark, sf_dir, "documents")
-    # Round 12: this query had the known interpreted-HOF/single-split
-    # pitfall UNFIXED (tokens() inlined inside shingles inside explode, on
+    # This query avoids the known interpreted-HOF/single-split
+    # pitfall (tokens() inlined inside shingles inside explode, on
     # a one-split scan, with the whole subtree evaluated once per
     # consumer — first_seen AND the join left side).  Same fix as
     # boilerplate_ngram_filter: materialize tokens as a column, spread
@@ -618,12 +617,11 @@ _SH_HAM = 2  # near-dup threshold; 3 blocks guarantee recall by pigeonhole
 _SH_MAX_DOCS = 2000
 _SH_SLICE = anchors.AnchorSlice("doc_id", _SH_MAX_DOCS, kind="contract")
 
-_SH_H = "TRY_CAST(CONCAT('0x', SUBSTRING(MD5(tok), 1, 15)) AS BIGINT)"
 _SH_SIG = " + ".join(
     f"CASE WHEN s{b} >= 0 THEN {1 << b} ELSE 0 END" for b in range(_SH_BITS)
 )
 _SH_SUMS = ",\n             ".join(
-    f"SUM(CASE WHEN ({_SH_H} >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
+    f"SUM(CASE WHEN ({tx.hash60_sql('tok')} >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
     for b in range(_SH_BITS)
 )
 
@@ -632,7 +630,7 @@ _SH_SUMS = ",\n             ".join(
     "simhash_exact_pairs",
     oracle=f"""
     WITH tok_t AS (
-      SELECT doc_id, UNNEST(LIST_DISTINCT({_TOKS})) AS tok FROM documents
+      SELECT doc_id, UNNEST(LIST_DISTINCT({tx.tokens_sql()})) AS tok FROM documents
       WHERE {_SH_SLICE.sql}),
     sums AS (
       SELECT doc_id,
@@ -681,7 +679,7 @@ def simhash_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id", F.explode(F.array_distinct(tx.tokens("text"))).alias("tok")
     )
-    h = _bucket(F.col("tok"))
+    h = tx.hash60(F.col("tok").cast("string"))
     sums = toks.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -743,7 +741,7 @@ def simhash_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             LEN({_TOKS}) AS words,
+             LEN({tx.tokens_sql()}) AS words,
              GREATEST(LEN(REGEXP_EXTRACT_ALL(text, '[.!?]+')), 1) AS sents,
              LEN(REGEXP_EXTRACT_ALL(text, '[aeiouyAEIOUY]+')) AS sylls
       FROM documents)

@@ -1,6 +1,6 @@
 """Corpus-quality, retrieval-calibration, and drift-evaluation plans
-(split from plans/profiling.py in round 8 — the r5 module-size convention,
-<=1100 LoC per plan module; registry and semantics unchanged).
+(split from plans/profiling.py by the module-size convention, <=1100 LoC
+per plan module; registry and semantics unchanged).
 
 Sections: max token run-length QA, tokenizer fertility by language, MIPS
 retrieval + pairwise-cosine calibration, exact weighted median, SymSpell
@@ -20,8 +20,8 @@ from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.plans.llm import _TOKS, EMB_DIM
-from lms_etl_pipeline_spark.plans.profiling import _BATCH_MOD, _FP_SQL
+from lms_etl_pipeline_spark.plans.llm import EMB_DIM
+from lms_etl_pipeline_spark.plans.corpus_ml import _BATCH_MOD
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -32,7 +32,7 @@ from lms_etl_pipeline_spark.sources.tables import load_table
 @query(
     "max_token_runlength",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents),
     pos AS (
       SELECT doc_id, UNNEST(g.i) AS i,
              toks[UNNEST(g.i)] AS tok
@@ -105,7 +105,7 @@ _BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
     oracle=f"""
     WITH t AS (
       SELECT lang,
-             LEN({_TOKS}) AS words,
+             LEN({tx.tokens_sql()}) AS words,
              LEN(REGEXP_EXTRACT_ALL(text, '{_BPE_RE}')) AS bpe_toks,
              n_chars
       FROM documents)
@@ -227,10 +227,7 @@ _PAIR_THRESH = 0.4
     WITH e AS (SELECT vec_id, embedding FROM embeddings
                WHERE vec_id < {_PAIR_BOUND}),
     pairs AS (
-      SELECT ROUND(({vec.dot_sql('a.embedding', 'b.embedding', EMB_DIM)})
-                 / (SQRT({vec.dot_sql('a.embedding', 'a.embedding', EMB_DIM)})
-                    * SQRT({vec.dot_sql('b.embedding', 'b.embedding', EMB_DIM)})),
-                 6) AS cosine
+      SELECT ROUND({vec.cosine_sql("a.embedding", "b.embedding", EMB_DIM)}, 6) AS cosine
       FROM e a JOIN e b ON a.vec_id < b.vec_id)
     SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
            ROUND(CAST(SUM(CAST(cosine AS DECIMAL(18,6))) AS DOUBLE)
@@ -390,7 +387,7 @@ _SYM_FREQ_RATIO = 4
     oracle=f"""
     WITH vocab AS (
       SELECT tok, COUNT(*) AS freq
-      FROM (SELECT UNNEST({_TOKS}) AS tok FROM documents) x
+      FROM (SELECT UNNEST({tx.tokens_sql()}) AS tok FROM documents) x
       GROUP BY tok HAVING LENGTH(tok) >= {_SYM_MIN_LEN}),
     dels AS (
       SELECT tok, freq,
@@ -517,10 +514,7 @@ _SWEEP_THRESHOLDS = (0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
     WITH e AS (SELECT vec_id, embedding FROM embeddings
                WHERE vec_id < {_PAIR_BOUND}),
     pairs AS (
-      SELECT ROUND(({vec.dot_sql('a.embedding', 'b.embedding', EMB_DIM)})
-                 / (SQRT({vec.dot_sql('a.embedding', 'a.embedding', EMB_DIM)})
-                    * SQRT({vec.dot_sql('b.embedding', 'b.embedding', EMB_DIM)})),
-                 6) AS cosine
+      SELECT ROUND({vec.cosine_sql("a.embedding", "b.embedding", EMB_DIM)}, 6) AS cosine
       FROM e a JOIN e b ON a.vec_id < b.vec_id),
     tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM pairs),
     thr AS (SELECT UNNEST(ARRAY[{", ".join(f"CAST({t} AS DOUBLE)" for t in _SWEEP_THRESHOLDS)}])
@@ -685,7 +679,7 @@ def forecast_backtest_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mdm_golden_record",
     oracle=f"""
     WITH fp AS (
-      SELECT doc_id, source, n_chars, {_FP_SQL} AS f FROM documents),
+      SELECT doc_id, source, n_chars, {tx.fingerprint_sql(tx.tokens_sql())} AS f FROM documents),
     ranked AS (
       SELECT doc_id, source, n_chars, f,
              ROW_NUMBER() OVER (PARTITION BY f
@@ -962,7 +956,7 @@ def cramers_v_association(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dup_rate_by_source",
     oracle=f"""
-    WITH fp AS (SELECT doc_id, source, {_FP_SQL} AS f FROM documents),
+    WITH fp AS (SELECT doc_id, source, {tx.fingerprint_sql(tx.tokens_sql())} AS f FROM documents),
     csize AS (SELECT f, COUNT(*) AS sz FROM fp GROUP BY f)
     SELECT fp.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CASE WHEN c.sz > 1 THEN 1 ELSE 0 END) AS BIGINT)

@@ -24,7 +24,7 @@ from lms_etl_pipeline_spark.functions.numeric import (
     dec,
     dec_sum,
     hl_double,
-    hl_round4,
+    hl_round_4dp,
     hl_sums,
     units,
 )
@@ -159,7 +159,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_linestatus",
             F.expr("sq4 / 10000.0D").alias("sum_qty"),
             F.expr(hl_double("p", 4)).alias("sum_base_price"),
-            F.expr(hl_round4("m")).alias("sum_disc_price"),
+            F.expr(hl_round_4dp("m")).alias("sum_disc_price"),
             F.expr(
                 "(chhi * 1000000.0D + chlo + (clo + 500000) DIV 1000000) / 10000.0D"
             ).alias("sum_charge"),
@@ -244,7 +244,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cube("l_returnflag", "l_linestatus")
         .agg(*hl_sums("r6u", "r", non_negative=True), F.count("*").alias("n"))
         .withColumn(
-            "revenue", F.expr(hl_round4("r"))
+            "revenue", F.expr(hl_round_4dp("r"))
         )
         .drop("rhi", "rlo")
     )
@@ -544,7 +544,7 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-order-nondeterministic, so the engine convention is an explicit
     ``array_sort`` on top — reproducible AND comparable across engines.
     The list is serialized with ``array_join`` because the driver's
-    pandas-based comparator cannot hash raw array cells (round-2 crash)."""
+    pandas-based comparator cannot hash raw array cells."""
     return (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") < 50)
@@ -647,7 +647,7 @@ def filter_project_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet scan (PushedFilters in explain); revenue is computed in exact
     decimal then canonicalized via ROUND(..,4)→DOUBLE so both engines emit
     the identical IEEE value (decimal result *scale* differs between Spark
-    and DuckDB, which round-2's driver hashed differently).
+    and DuckDB, which a value hasher sees as different values).
     """
     li = load_table(spark, sf_dir, "lineitem")
     return li.filter(

@@ -17,7 +17,7 @@ from lms_etl_pipeline_spark.functions.numeric import (
     dec,
     dec_sum,
     hl_double,
-    hl_round4,
+    hl_round_4dp,
     hl_sums,
     units,
 )
@@ -130,7 +130,7 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The right side is a filtered supplier subset: in the fixtures every
     customer nation also has a supplier, so the unfiltered difference is
-    structurally empty (round-2's 0=0 green exercised nothing)."""
+    structurally empty (a 0=0 match would exercise nothing)."""
     c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = (
         load_table(spark, sf_dir, "supplier")
@@ -238,7 +238,7 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(*hl_sums("r6u", "r", non_negative=True))
         .withColumn(
-            "revenue", F.expr(hl_round4("r"))
+            "revenue", F.expr(hl_round_4dp("r"))
         )
         .drop("rhi", "rlo")
     )

@@ -16,10 +16,11 @@ from lms_etl_pipeline_spark.functions.numeric import (
     dec,
     dec_sum,
     hl_double,
-    hl_round4,
+    hl_round_4dp,
     hl_sums,
     units,
 )
+from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.plans.relational import _REVENUE_SQL, _rev6
 from lms_etl_pipeline_spark.sources import bucketed
@@ -73,7 +74,7 @@ def flagship_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(*hl_sums("r6u", "r", non_negative=True), F.count("*").alias("n_items"))
         .select(
             "r_name",
-            F.expr(hl_round4("r")).alias(
+            F.expr(hl_round_4dp("r")).alias(
                 "revenue"
             ),
             "n_items",
@@ -193,7 +194,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: 8-relation join (nation twice) with selective
     filters on three different dimensions.  The part filter is
     ``p_type = 'STANDARD'`` (the fixtures use single-word p_type values;
-    TPC-H's '%BRASS%' selected nothing, making round-2's green vacuous).
+    TPC-H's '%BRASS%' selects nothing, which would make the match vacuous).
 
     Scale: Catalyst orders the joins; every dimension (customer excepted)
     broadcasts, so the only shuffles are lineitem⋈orders on orderkey and
@@ -224,7 +225,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").alias("o_year"), "supp_nation")
         .agg(*hl_sums("r6u", "r", non_negative=True), F.count("*").alias("n_items"))
         .withColumn(
-            "revenue", F.expr(hl_round4("r"))
+            "revenue", F.expr(hl_round_4dp("r"))
         )
         .drop("rhi", "rlo")
     )
@@ -722,7 +723,7 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("r6u", _rev6())
         .agg(*hl_sums("r6u", "r", non_negative=True), F.count("*").alias("n_items"))
         .withColumn(
-            "revenue", F.expr(hl_round4("r"))
+            "revenue", F.expr(hl_round_4dp("r"))
         )
         .drop("rhi", "rlo")
     )
@@ -796,7 +797,7 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_items"),
         )
         .select(
-            F.expr(f"{hl_double('n', 4)} / {hl_round4('d')}").alias("promo_revenue_pct"),
+            F.expr(f"{hl_double('n', 4)} / {hl_round_4dp('d')}").alias("promo_revenue_pct"),
             "n_items",
         )
     )
@@ -825,11 +826,9 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "explode_outer_arrays",
-    oracle=r"""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id,
-             LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(SUBSTRING(text, 1, 40), '\s+'), x -> x != '')
-               AS toks
+      SELECT doc_id, {tx.tokens_sql("SUBSTRING(text, 1, 40)")} AS toks
       FROM documents WHERE doc_id % 25 = 0
     )
     SELECT doc_id,
@@ -841,7 +840,7 @@ def explode_outer_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """explode_outer: rows with empty arrays survive as a NULL row (the
     left-join flavor of flattening — plain explode silently drops them)."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
-    toks = F.filter(F.split(F.substring("text", 1, 40), r"\s+"), lambda t: t != F.lit(""))
+    toks = tx.tokens(F.substring("text", 1, 40))
     return d.select("doc_id", F.explode_outer(toks).alias("tok"))
 
 

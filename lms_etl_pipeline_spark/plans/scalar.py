@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.sources.tables import load_table
 
@@ -79,7 +80,7 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     .999999-microsecond timestamp diverges by one second (fuzz seed 20,
     the sub-day knife-edge axis: 23:59:59.999999 → 999302399 vs
     999302400).  The oracle therefore floors in exact integer microseconds
-    — and (round 11, advisory) via a SIGN-SPLIT integer floor rather than
+    — and via a SIGN-SPLIT integer floor rather than
     bare ``//``, because DuckDB ``//`` truncates toward zero (-7//2 = -3)
     while Spark floors, so a pre-1970 instant would diverge by one second
     the moment a fuzz axis crosses the epoch.  The oracle is now
@@ -140,7 +141,7 @@ def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scalar_array_funcs",
-    oracle=r"""
+    oracle=f"""
     SELECT doc_id,
            LEN(toks) AS n_toks,
            toks[1] AS first_tok,
@@ -150,9 +151,7 @@ def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
            LEN(LIST_DISTINCT(toks)) AS n_distinct,
            LIST_SORT(LIST_DISTINCT(toks))[1] AS min_tok
     FROM (
-      SELECT doc_id,
-             LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\s+'), t -> t != '') AS toks
-      FROM documents
+      SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents
     )
     """,
 )
@@ -160,7 +159,7 @@ def scalar_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array scalar battery over tokenized documents: size/element_at/
     contains/slice/distinct/sort — all native array expressions."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", r"\s+"), lambda t: t != F.lit(""))
+    toks = tx.tokens("text")
     # try_element_at + a >=1 index guard: a zero-token document (empty or
     # whitespace-only text) must yield NULL heads/tails like DuckDB's
     # 1-based list indexing, not an ANSI abort; the oracle's first3
@@ -321,11 +320,9 @@ def case_when_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scalar_higher_order_funcs",
-    oracle=r"""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id,
-             LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\s+'), x -> x != '') AS toks
-      FROM documents
+      SELECT doc_id, {tx.tokens_sql()} AS toks FROM documents
     )
     SELECT doc_id,
            LEN(LIST_FILTER(toks, x -> LENGTH(x) > 3)) AS n_long,
@@ -345,7 +342,7 @@ def scalar_higher_order_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically).  ``pos_weighted_chars`` exercises zip_with against a
     generated index sequence, the canonical positional-fold shape."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", r"\s+"), lambda x: x != F.lit(""))
+    toks = tx.tokens("text")
     d = d.select("doc_id", toks.alias("_toks"))
     lens = F.transform("_toks", lambda x: F.length(x))
     zero = F.lit(0).cast("bigint")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators import dedup as dd
+from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators import vectors as vec
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.plans.llm import EMB_DIM
@@ -34,18 +35,12 @@ _MRL_DIM = 16
 
 
 def _mrl_oracle() -> str:
-    full_qn = vec.dot_sql("q.embedding", "n.embedding", EMB_DIM)
-    full_qq = vec.dot_sql("q.embedding", "q.embedding", EMB_DIM)
-    full_nn = vec.dot_sql("n.embedding", "n.embedding", EMB_DIM)
-    tr_qn = vec.dot_sql("q.embedding", "n.embedding", _MRL_DIM)
-    tr_qq = vec.dot_sql("q.embedding", "q.embedding", _MRL_DIM)
-    tr_nn = vec.dot_sql("n.embedding", "n.embedding", _MRL_DIM)
     return f"""
     WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
     pairs AS (
       SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-             ({full_qn}) / (SQRT({full_qq}) * SQRT({full_nn})) AS cos_full,
-             ({tr_qn}) / (SQRT({tr_qq}) * SQRT({tr_nn})) AS cos_tr
+             {vec.cosine_sql("q.embedding", "n.embedding", EMB_DIM)} AS cos_full,
+             {vec.cosine_sql("q.embedding", "n.embedding", _MRL_DIM)} AS cos_tr
       FROM q, embeddings n WHERE n.vec_id <> q.vec_id),
     rk AS (
       SELECT q_id, n_id,
@@ -153,18 +148,21 @@ def _centroid_sql(pred: str, alias: str) -> str:
       GROUP BY dim)"""
 
 
+def _d12_sum(term: str) -> str:
+    """Each term rounded at 1e-12, then DECIMAL-summed (order-independent)."""
+    return f"SUM(CAST(ROUND({term}, 12) AS DECIMAL(28,12)))"
+
+
 @query(
     "embedding_centroid_drift",
     oracle=f"""
     WITH {_centroid_sql("vec_id % 10 <> 7", "ci")},
     {_centroid_sql("vec_id % 10 = 7", "cd")}
     SELECT CAST(COUNT(*) AS BIGINT) AS n_dims,
-           ROUND(SQRT(SUM(CAST(ROUND((ci.c - cd.c) * (ci.c - cd.c), 12)
-                               AS DECIMAL(28,12)))), 8) AS l2_drift,
-           ROUND(SUM(CAST(ROUND(ci.c * cd.c, 12) AS DECIMAL(28,12)))
-                 / (SQRT(SUM(CAST(ROUND(ci.c * ci.c, 12) AS DECIMAL(28,12))))
-                    * SQRT(SUM(CAST(ROUND(cd.c * cd.c, 12) AS DECIMAL(28,12))))),
-                 8) AS centroid_cosine
+           ROUND(SQRT({_d12_sum("(ci.c - cd.c) * (ci.c - cd.c)")}), 8) AS l2_drift,
+           ROUND({vec.cosine_of_sql(
+               _d12_sum("ci.c * cd.c"), _d12_sum("ci.c * ci.c"), _d12_sum("cd.c * cd.c")
+           )}, 8) AS centroid_cosine
     FROM ci JOIN cd ON cd.dim = ci.dim
     """,
 )
@@ -250,11 +248,9 @@ def _anchor_pairs_sql(cols: str) -> str:
     a shingle, as ``inter i`` (ia < ib, ni shared shingles) joined to both
     set sizes ``sa``/``sb`` and both signatures ``x``/``y``.  ``scored``
     holds the exact Jaccard ``j`` plus the SELECT list ``cols``."""
-    from lms_etl_pipeline_spark.plans.llm import _SHINGLES
-
     return f"""
     WITH sh_t AS (
-      SELECT doc_id, {_SHINGLES} AS sh FROM documents
+      SELECT doc_id, LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)}) AS sh FROM documents
       WHERE doc_id < {_SC_ID_CAP}),
     {dd.minhash_sql("sh_t")},
     ex AS (SELECT doc_id, UNNEST(sh) AS s FROM sh_t),
@@ -276,8 +272,6 @@ def _anchor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every anchor-slice doc pair (ia < ib) sharing a shingle: ``ni``
     shared shingles, set sizes ``na``/``nb`` and signature slots
     ``xa{i}``/``yb{i}`` — the frame both calibration queries score."""
-    from lms_etl_pipeline_spark.operators import text as tx
-
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _SC_ID_CAP
     )

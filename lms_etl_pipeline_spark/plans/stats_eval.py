@@ -1,5 +1,5 @@
 """Statistical-testing and experiment-evaluation plans (split from the
-round-5c sequences wave).
+sequence plans).
 
 LLR collocations, systematic stratified sampling, A/B sample-size
 planning, quantile treatment effects, Wilson intervals, difference-in-
@@ -19,10 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators.rank import (
     global_running_agg,
     with_uniform_key_buckets,
 )
+from lms_etl_pipeline_spark.plans.behavior import AB_ARM_SQL, ab_arm
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.sources.tables import load_table
 
@@ -37,18 +39,11 @@ _LLR_MIN_PAIR = 8
     "llr_collocations",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id,
-             LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), t -> t != '')
-               AS t
-      FROM documents),
-    bg AS (
-      SELECT UNNEST(LIST_TRANSFORM(RANGE(1, GREATEST(LEN(t), 1)),
-                    i -> ARRAY_TO_STRING(LIST_SLICE(t, i, i + 1), ' ')))
-               AS bigram
-      FROM toks),
+      SELECT doc_id, {tx.tokens_sql()} AS t FROM documents),
+    bg AS (SELECT UNNEST({tx.ngrams_sql("t", 2)}) AS bigram FROM toks),
     pc AS MATERIALIZED (SELECT bigram, COUNT(*) AS k11 FROM bg GROUP BY 1),
     parts AS MATERIALIZED (
-      -- MATERIALIZED (round 11, fuzz seed 43): parts is referenced by r,
+      -- MATERIALIZED: parts is referenced by r,
       -- c, AND the cells join; DuckDB's default CTE inlining re-expands
       -- the whole tokenize/UNNEST pipeline per reference and the join
       -- over the inlined trees went pathological on a 112k-unique-bigram
@@ -98,8 +93,6 @@ def llr_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is scanned once.  The w1/w2 marginal joins are equi-joins on
     word — the same layout as the TF-IDF family.
     """
-    from lms_etl_pipeline_spark.operators import text as tx
-
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(tx.tokens("text").alias("t"))
     bigrams = toks.select(
@@ -295,12 +288,10 @@ def ab_sample_size_planning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ab_quantile_treatment_effect",
-    oracle="""
+    oracle=f"""
     WITH assign AS (
       SELECT user_id,
-             TRY_CAST(CONCAT('0x', SUBSTRING(
-               MD5(CONCAT('ab1|', CAST(user_id AS VARCHAR))), 1, 15))
-               AS BIGINT) % 2 AS arm,
+             {AB_ARM_SQL} AS arm,
              SUM(CAST(value AS DECIMAL(18,6))) AS spend
       FROM events WHERE event_type = 'purchase'
       GROUP BY 1),
@@ -338,24 +329,12 @@ def ab_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_percentile at fleet scale.
     """
     e = load_table(spark, sf_dir, "events")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab1|"), F.col("user_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
     assign = (
         e.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
         .agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("spend"))
         .select(
-            bucket.alias("arm"),
+            ab_arm().alias("arm"),
             (F.col("spend") * 1_000_000).cast("decimal(38,0)").alias("s_fp"),
         )
     )
@@ -484,16 +463,14 @@ def wilson_conversion_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "diff_in_differences",
-    oracle="""
+    oracle=f"""
     WITH mid AS (
       SELECT MIN(CAST(ts AS DATE)) + CAST(FLOOR(
                DATEDIFF('day', MIN(CAST(ts AS DATE)), MAX(CAST(ts AS DATE)))
                / 2) AS INTEGER) AS m
       FROM events),
     cell AS (
-      SELECT TRY_CAST(CONCAT('0x', SUBSTRING(
-               MD5(CONCAT('ab1|', CAST(e.user_id AS VARCHAR))), 1, 15))
-               AS BIGINT) % 2 AS arm,
+      SELECT {AB_ARM_SQL} AS arm,
              CAST(CAST(e.ts AS DATE) >= mid.m AS INTEGER) AS period,
              CAST(e.value AS DECIMAL(18,6)) AS v
       FROM events e CROSS JOIN mid
@@ -538,23 +515,11 @@ def diff_in_differences(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("int"),
         ).alias("m")
     )
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab1|"), F.col("user_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
     cell = (
         e.filter(F.col("event_type") == "purchase")
         .crossJoin(F.broadcast(mid))
         .select(
-            arm.alias("arm"),
+            ab_arm().alias("arm"),
             (F.to_date("ts") >= F.col("m")).cast("int").alias("period"),
             F.col("value").cast("decimal(18,6)").alias("v"),
         )
@@ -722,9 +687,7 @@ _BURST_MIN_DF = 20
     "term_burstiness",
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, UNNEST(LIST_FILTER(
-               REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), t -> t != '')) AS w
-      FROM documents),
+      SELECT doc_id, UNNEST({tx.tokens_sql()}) AS w FROM documents),
     per_doc AS (
       SELECT w, doc_id, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
     stats AS (
@@ -755,8 +718,6 @@ def term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combinable on uniform hash keys; never materializes a
     docs x vocab matrix.
     """
-    from lms_etl_pipeline_spark.operators import text as tx
-
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tx.tokens("text")).alias("w"))
     per_doc = tok.groupBy("w", "doc_id").agg(F.count("*").alias("tf"))
@@ -779,12 +740,10 @@ def term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mann_whitney_arms",
-    oracle="""
+    oracle=f"""
     WITH assign AS (
       SELECT user_id,
-             TRY_CAST(CONCAT('0x', SUBSTRING(
-               MD5(CONCAT('ab1|', CAST(user_id AS VARCHAR))), 1, 15))
-               AS BIGINT) % 2 AS arm,
+             {AB_ARM_SQL} AS arm,
              CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS HUGEINT)
                AS s_fp
       FROM events WHERE event_type = 'purchase'
@@ -836,24 +795,12 @@ def mann_whitney_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales; closing is a 1-row reduction.
     """
     e = load_table(spark, sf_dir, "events")
-    arm = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab1|"), F.col("user_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
     assign = (
         e.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
         .agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("spend"))
         .select(
-            arm.alias("arm"),
+            ab_arm().alias("arm"),
             (F.col("spend") * 1_000_000).cast("decimal(38,0)").alias("s_fp"),
         )
     )

@@ -1,4 +1,4 @@
-"""Time-series model plans (split from the round-5c sequences wave).
+"""Time-series model plans (split from the sequence plans).
 
 Operators over the ordered daily/hourly metric series: EWMA smoothing,
 autocorrelation, PAA/SAX symbolization, pinball-loss quantile-forecast
@@ -373,9 +373,9 @@ def pinball_loss_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning), completing the eval suite beside ``forecast_backtest_eval``
     (point forecasts) and ``retrieval_mrr_ndcg`` (rankings).
 
-    Determinism — EXACT INTEGER END TO END (round-9 fuzz seed 16): the
-    earlier form rounded per-day losses at 6 dp, and ``ROUND(q*err, 6)``
-    on an inexact double splits the engines when the product sits within
+    Determinism — EXACT INTEGER END TO END: rounding per-day losses at
+    6 dp would not do, because ``ROUND(q*err, 6)`` on an inexact double
+    splits the engines when the product sits within
     an ulp of a .5 boundary (the double-round-tie class; one test day of
     seed 16 landed there and shifted a truncated mean by 1e-6).  Now the
     daily series is exact micro-units; the train quantile interpolates

@@ -40,7 +40,6 @@ from lms_etl_pipeline_spark import session
 from lms_etl_pipeline_spark.operators import bpe
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.plans.llm import _TOKS
 from lms_etl_pipeline_spark.session import materialize, release
 from lms_etl_pipeline_spark.sources.tables import load_table
 
@@ -53,7 +52,7 @@ _OUT_SCHEMA = (
     "pair_count bigint, corpus_tokens_after bigint"
 )
 
-_DEEP_ORACLE = bpe.train_merges_sql(_TOKS, _DEEP_MERGES)
+_DEEP_ORACLE = bpe.train_merges_sql(tx.tokens_sql(), _DEEP_MERGES)
 
 
 def _merge_distributed(dk: DataFrame, n_merges: int):
@@ -138,12 +137,12 @@ _ENC_MERGES = 8
 
 
 _ENC_ORACLE = (
-    bpe.merges_sql(_TOKS, _ENC_MERGES)
+    bpe.merges_sql(tx.tokens_sql(), _ENC_MERGES)
     + f""",
     toks AS (
       SELECT doc_id, UNNEST(tk) AS word,
              UNNEST(RANGE(1, LEN(tk) + 1)) AS pos
-      FROM (SELECT doc_id, {_TOKS} AS tk FROM documents)
+      FROM (SELECT doc_id, {tx.tokens_sql()} AS tk FROM documents)
     ),
     j AS (SELECT t.doc_id, t.pos, e.syms
           FROM toks t JOIN d{_ENC_MERGES + 1} e USING (word))

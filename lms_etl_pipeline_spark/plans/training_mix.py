@@ -1,4 +1,4 @@
-"""Training-mix assembly operators (round 5): the curriculum/mixing layer
+"""Training-mix assembly operators: the curriculum/mixing layer
 that sits between a curated corpus and a training run.
 
 Ten ops a large-scale LLM-data pipeline runs after curation and before
@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators.rank import global_ntile
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.plans.llm import _TOKS
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 _MERGE_TOPK = 32
@@ -38,7 +37,7 @@ _MIX_ALPHA = 0.7
 @query(
     "bpe_pair_merges",
     oracle=f"""
-    WITH t AS (SELECT {_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT {tx.tokens_sql()} AS toks FROM documents),
     pairs AS (
       SELECT UNNEST(LIST_TRANSFORM(RANGE(1, LEN(toks)),
                                    i -> toks[i] || ' ' || toks[i + 1])) AS pair
@@ -115,7 +114,7 @@ _CAL_SCORE_SQL = f"""
                  - 3.0 * CAST(LEN(LIST_FILTER(toks, x -> x IN
                      ('the','a','an','and','of','to','in','is','on')))
                        AS DOUBLE) / LEN(toks)))), 6) AS score
-    FROM (SELECT doc_id, n_chars, {_TOKS} AS toks FROM documents)
+    FROM (SELECT doc_id, n_chars, {tx.tokens_sql()} AS toks FROM documents)
     WHERE LEN(toks) > 0
 """
 
@@ -186,7 +185,7 @@ def score_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             ROUND(CAST(n_chars AS DOUBLE) / (LEN({_TOKS}) + 1), 6)
+             ROUND(CAST(n_chars AS DOUBLE) / (LEN({tx.tokens_sql()}) + 1), 6)
                  AS difficulty
       FROM documents)
     SELECT doc_id, difficulty,
@@ -234,7 +233,7 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT doc_id, lang,
-             ROUND(CAST(n_chars AS DOUBLE) / (LEN({_TOKS}) + 1), 6)
+             ROUND(CAST(n_chars AS DOUBLE) / (LEN({tx.tokens_sql()}) + 1), 6)
                  AS difficulty
       FROM documents)
     SELECT doc_id, lang, difficulty,
@@ -278,7 +277,7 @@ def curriculum_phases_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mixture_temperature_weights",
     oracle=f"""
     WITH l AS (
-      SELECT lang, CAST(SUM(LEN({_TOKS})) AS BIGINT) AS n_toks
+      SELECT lang, CAST(SUM(LEN({tx.tokens_sql()})) AS BIGINT) AS n_toks
       FROM documents GROUP BY lang),
     s AS (
       SELECT lang, n_toks,
@@ -337,14 +336,15 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: sentence boundary: a period and one space
+_SENT_SEP = r"\. "
+
+
 @query(
     "intra_doc_dedup",
-    oracle=r"""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id,
-             LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\. '), s -> s != '')
-                 AS sents
-      FROM documents)
+      SELECT doc_id, {tx.tokens_sql(sep=_SENT_SEP)} AS sents FROM documents)
     SELECT doc_id,
            CAST(LEN(sents) AS BIGINT) AS n_sents,
            CAST(LEN(LIST_DISTINCT(sents)) AS BIGINT) AS n_uniq,
@@ -365,7 +365,7 @@ def intra_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions inside whole-stage codegen; no explode, no shuffle, no
     state.  The cheapest possible 100 TB pass."""
     d = load_table(spark, sf_dir, "documents")
-    sents = F.filter(F.split("text", r"\. "), lambda s: s != F.lit(""))
+    sents = tx.tokens("text", _SENT_SEP)
     t = d.select("doc_id", sents.alias("_s")).filter(F.size("_s") > 0)
     n_sents = F.size("_s").cast("long")
     n_uniq = F.size(F.array_distinct("_s")).cast("long")
@@ -387,9 +387,9 @@ _PACK_BUDGET = 4096
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             MD5(ARRAY_TO_STRING(LIST_SLICE({_TOKS}, 1, {_PREFIX_TOKENS}), ' '))
+             MD5(ARRAY_TO_STRING(LIST_SLICE({tx.tokens_sql()}, 1, {_PREFIX_TOKENS}), ' '))
                  AS prefix_key
-      FROM documents WHERE LEN({_TOKS}) >= {_PREFIX_TOKENS})
+      FROM documents WHERE LEN({tx.tokens_sql()}) >= {_PREFIX_TOKENS})
     SELECT prefix_key,
            COUNT(*) AS n_docs,
            MIN(doc_id) AS keep_doc_id
@@ -426,7 +426,7 @@ def prefix_dup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source_reputation",
     oracle=f"""
     WITH t AS (
-      SELECT source, {_TOKS} AS toks, n_chars FROM documents),
+      SELECT source, {tx.tokens_sql()} AS toks, n_chars FROM documents),
     f AS (
       SELECT source, n_chars,
              LEN(toks) AS n_toks,
@@ -483,7 +483,7 @@ def source_reputation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dataset_mix_allocation",
     oracle=f"""
     WITH l AS (
-      SELECT lang, CAST(SUM(LEN({_TOKS})) AS BIGINT) AS n_toks
+      SELECT lang, CAST(SUM(LEN({tx.tokens_sql()})) AS BIGINT) AS n_toks
       FROM documents GROUP BY lang),
     s AS (
       SELECT lang, n_toks,
@@ -555,7 +555,7 @@ def dataset_mix_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "packing_efficiency",
     oracle=f"""
-    WITH t AS (SELECT doc_id, lang, LEN({_TOKS}) AS n_tokens FROM documents),
+    WITH t AS (SELECT doc_id, lang, LEN({tx.tokens_sql()}) AS n_tokens FROM documents),
     runs AS (
       SELECT doc_id, lang, n_tokens,
              SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id

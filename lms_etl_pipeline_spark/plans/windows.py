@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.sources.tables import load_table
 
@@ -372,11 +373,10 @@ def events_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "timeseries_interpolate_linear",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT event_id, user_id, ts, value, epoch_us(ts) AS us,
-             TRY_CAST(CONCAT('0x', SUBSTRING(MD5(CAST(event_id AS VARCHAR)), 1, 15))
-                      AS BIGINT) % 4 = 0 AS masked
+             {tx.hash60_sql("CAST(event_id AS VARCHAR)")} % 4 = 0 AS masked
       FROM events WHERE user_id < 50
     ),
     w AS (
@@ -417,11 +417,7 @@ def timeseries_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame
     (last/first IGNORE NULLS over prefix/suffix frames); per-key state is
     bounded by a user's event count — no self-join, no spine explosion."""
     e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 50)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 4
-    )
+    bucket = tx.hash60(F.col("event_id").cast("string")) % 4
     us = F.unix_micros(F.col("ts"))
     e = e.select(
         "event_id", "user_id", "ts", "value",

@@ -15,7 +15,10 @@ One place to encode the engine's execution posture so every entry point
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -215,6 +218,17 @@ def release(df) -> None:
 #: small columns is a few hundred MB, inside a normal driver heap; callers
 #: fall back to a distributed loop above it.
 LOCAL_COLLECT_BUDGET_ROWS = 8_000_000
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory outside the checkout for one build of a sink that
+    writes and then reads back.  The read-back is lazy, so a shared path
+    would let a second build (or a concurrent run) overwrite the files an
+    earlier frame scans; lazy is also why the directory lives until the
+    process exits, not the call."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def collect_bounded(df):

@@ -38,10 +38,10 @@ def write_bucketed(
     ``mode="overwrite"`` also reclaims an ORPHANED warehouse location: a
     fresh session's in-memory catalog has no entry for a previous run's
     managed table, so Spark's own overwrite can't see it and refuses with
-    LOCATION_ALREADY_EXISTS (found round 11 when the bucketed join became
-    a driver-run query — every driver verify is a fresh session).
+    LOCATION_ALREADY_EXISTS (every driver verify is a fresh session, so a
+    driver-run bucketed join hits this).
 
-    Reclaim guards (round-12 advisory): only a LOCAL warehouse
+    Reclaim guards: only a LOCAL warehouse
     (``file:`` / schemeless) is reclaimed — for hdfs:/s3a: warehouses the
     local path would name a different filesystem entirely, so those
     surface Spark's LOCATION_ALREADY_EXISTS instead of a silent wrong-disk

@@ -8,6 +8,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators import dedup as dd
+from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators import vectors as vec
 
 DOC = "the quick brown fox jumps over the lazy dog again and again today"
@@ -176,11 +177,10 @@ def _twin_corpus(spark):
 
 
 def test_lsh_sql_twin_matches_near_dup_pairs(spark):
-    from lms_etl_pipeline_spark.plans.llm import _SHINGLES
-
     df, con = _twin_corpus(spark)
+    sh = f"LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)})"
     sql = f"""
-    WITH sh_t AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents),
+    WITH sh_t AS (SELECT doc_id, {sh} AS sh FROM documents),
     {dd.minhash_sql("sh_t")},
     {dd.lsh_candidates_sql()}
     {dd.jaccard_verified_sql("cands", "sh_t", score=True)}
@@ -194,11 +194,10 @@ def test_lsh_sql_twin_matches_near_dup_pairs(spark):
 
 
 def test_prefix_sql_twin_matches_jaccard_pairs_prefix(spark):
-    from lms_etl_pipeline_spark.plans.llm import _SHINGLES
-
     df, con = _twin_corpus(spark)
+    sh = f"LIST_DISTINCT({tx.ngrams_sql(tx.tokens_sql(), 3)})"
     sql = f"""
-    WITH sh_t AS (SELECT doc_id, LIST_SORT({_SHINGLES}) AS sh FROM documents),
+    WITH sh_t AS (SELECT doc_id, LIST_SORT({sh}) AS sh FROM documents),
     {dd.prefix_candidates_sql("sh_t")}
     {dd.jaccard_verified_sql("cands", "nz", score=True)}
     """

@@ -127,17 +127,25 @@ def test_compact_refuses_partitioned_root(spark, tmp_path):
         compact_small_files(spark, path)
 
 
-def test_curated_write_uses_a_fresh_directory_per_build(spark, monkeypatch):
-    """Each build of ``curated_corpus_partitioned_write`` writes and reads
-    back its own directory outside the checkout, so two builds (or two
-    concurrent runs) never scan each other's files; each build registers
-    the removal of its directory at exit, so repeated runs leave no trees."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "curated_corpus_partitioned_write",
+        "csv_roundtrip_nation",
+        "orc_roundtrip_orders",
+        "jsonl_roundtrip_documents",
+    ],
+)
+def test_roundtrip_sink_uses_a_fresh_directory_per_build(spark, monkeypatch, name):
+    """Each build of a write-then-read-back sink writes and reads back its
+    own directory outside the checkout, so two builds (or two concurrent
+    runs) never scan each other's files; each build registers the removal
+    of its directory at exit, so repeated runs leave no trees."""
     import atexit
     import shutil
     from pathlib import Path
 
-    from lms_etl_pipeline_spark.plans.catalog import all_oracles
-    from lms_etl_pipeline_spark.plans.llm import curated_corpus_partitioned_write
+    from lms_etl_pipeline_spark.plans.catalog import all_oracles, all_queries
     from tools.check_oracle import duck_views
 
     repo = Path(__file__).resolve().parents[1]
@@ -145,11 +153,12 @@ def test_curated_write_uses_a_fresh_directory_per_build(spark, monkeypatch):
     monkeypatch.setattr(atexit, "register", lambda fn, *a: at_exit.append((fn, a)))
     con = duck_views(SF_SMOKE)
     try:
-        want = len(con.execute(all_oracles()["curated_corpus_partitioned_write"]).fetchall())
+        want = len(con.execute(all_oracles()[name]).fetchall())
     finally:
         con.close()
-    first = curated_corpus_partitioned_write(spark, SF_SMOKE)
-    second = curated_corpus_partitioned_write(spark, SF_SMOKE)
+    build = all_queries()[name]
+    first = build(spark, SF_SMOKE)
+    second = build(spark, SF_SMOKE)
     files = [set(df.inputFiles()) for df in (first, second)]
     assert files[0] and files[1] and not files[0] & files[1]
     for f in files[0] | files[1]:

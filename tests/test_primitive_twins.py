@@ -1,0 +1,149 @@
+"""Cross-engine primitives: each Spark function and its DuckDB twin return
+the same values on hand-built edge inputs, and each primitive is spelled
+once in the engine, so the oracles cannot drift from the plans."""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+import duckdb
+import pytest
+from pyspark.sql import functions as F
+
+from lms_etl_pipeline_spark.operators import text as tx
+from lms_etl_pipeline_spark.operators import vectors as vec
+from lms_etl_pipeline_spark.plans.behavior import AB_ARM_SQL, ab_arm
+from lms_etl_pipeline_spark.plans.training_mix import _SENT_SEP
+
+DOCS = [
+    (0, ""),
+    (1, "   "),
+    (2, "a\tb\nc\r\nd"),
+    (3, "x\u00a0y z"),  # NBSP is not a separator on either engine
+    (4, "one"),
+    (5, "one two"),
+    (6, "one two three"),
+    (7, "a a b a a b"),
+    (8, "the cat sat. the cat sat. on the mat.  . end"),
+    (9, "w1 w2 w3 w4 w5 w6 w7"),
+]
+
+VECS = [
+    (0, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),
+    (1, [0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),  # zero vector: NULL, not an abort
+    (2, [0.0, 0.0, 0.0], [0.0, 0.0, 0.0]),
+    (3, [1.0, 0.0, 0.0], [0.0, 1.0, 0.0]),
+    (4, [-1.5, 2.25, 0.1], [2.0, -4.0, -1.0]),
+]
+
+
+@pytest.fixture(scope="module")
+def engines(spark):
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", DOCS)
+    con.execute("CREATE TABLE vecs (id BIGINT, a DOUBLE[], b DOUBLE[])")
+    con.executemany("INSERT INTO vecs VALUES (?, ?, ?)", VECS)
+    docs = spark.createDataFrame(DOCS, "doc_id BIGINT, text STRING")
+    vecs = spark.createDataFrame(VECS, "id BIGINT, a ARRAY<DOUBLE>, b ARRAY<DOUBLE>")
+    yield docs, vecs, con
+    con.close()
+
+
+def _both(spark_df, key, spark_col, con, table, sql):
+    got_spark = {r[0]: r[1] for r in spark_df.select(key, spark_col).collect()}
+    got_duck = dict(con.execute(f"SELECT {key}, {sql} FROM {table}").fetchall())
+    return got_spark, got_duck
+
+
+def _doc_twin(engines, spark_col, sql):
+    docs, _, con = engines
+    got_spark, got_duck = _both(docs, "doc_id", spark_col, con, "docs", sql)
+    assert got_spark == got_duck
+    return got_spark
+
+
+def test_hash60_twin(engines):
+    got = _doc_twin(engines, tx.hash60(F.col("text")), tx.hash60_sql("text"))
+    assert all(0 <= h < 1 << 60 for h in got.values())
+
+
+@pytest.mark.parametrize("sep", [r"\s+", _SENT_SEP])
+def test_tokens_twin(engines, sep):
+    got = _doc_twin(engines, tx.tokens("text", sep), tx.tokens_sql(sep=sep))
+    if sep == r"\s+":
+        assert got[0] == got[1] == []
+        assert got[2] == ["a", "b", "c", "d"]
+        assert got[3] == ["x\u00a0y", "z"]
+    else:
+        assert got[8] == ["the cat sat", "the cat sat", "on the mat", " ", "end"]
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+@pytest.mark.parametrize("as_set", [False, True], ids=["list", "set"])
+def test_ngrams_twin(engines, n, as_set):
+    grams = tx.shingles(tx.tokens("text"), n)
+    grams_sql = tx.ngrams_sql(tx.tokens_sql(), n)
+    if as_set:  # DuckDB's LIST_DISTINCT keeps no order: compare sorted
+        grams = F.array_sort(F.array_distinct(grams))
+        grams_sql = f"LIST_SORT(LIST_DISTINCT({grams_sql}))"
+    got = _doc_twin(engines, grams, grams_sql)
+    assert got[4] == [] and len(got[9]) == 8 - n
+
+
+def test_fingerprint_twin(engines):
+    got = _doc_twin(
+        engines, tx.fingerprint_of(tx.tokens("text")), tx.fingerprint_sql(tx.tokens_sql())
+    )
+    assert got[0] == got[1]  # zero-token docs share MD5('') on both engines
+
+
+def test_cosine_twin(engines):
+    _, vecs, con = engines
+    got_spark, got_duck = _both(
+        vecs, "id", vec.cosine(F.col("a"), F.col("b")), con, "vecs", vec.cosine_sql("a", "b", 3)
+    )
+    assert got_spark == got_duck
+    assert got_spark[1] is None and got_spark[2] is None and got_spark[3] == 0.0
+
+
+def test_ab_arm_twin(spark):
+    users = [(u,) for u in range(-3, 200)]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE events (user_id BIGINT)")
+    con.executemany("INSERT INTO events VALUES (?)", users)
+    df = spark.createDataFrame(users, "user_id BIGINT")
+    got_spark, got_duck = _both(df, "user_id", ab_arm(), con, "events", AB_ARM_SQL)
+    con.close()
+    assert got_spark == got_duck
+    assert set(got_spark.values()) == {0, 1}
+
+
+# Each primitive's spelling, and how often it may occur in the engine at
+# most: once for each Spark function and SQL twin above, twice for the two
+# sides of the A/B arm, and six list slices: the n-gram twin plus five that
+# are not n-grams (chunks, a token prefix, the first three tokens, two
+# position-keyed grams).
+SPELLINGS = {
+    r"F\.conv\(\s*F\.substring\(": 1,
+    r"SUBSTRING\(\s*MD5\(": 1,
+    r"REGEXP_SPLIT_TO_ARRAY\(": 1,
+    r"F\.filter\(F\.split\(": 1,
+    r"/\s*\(SQRT\(": 1,
+    r"MD5\(COALESCE\(ARRAY_TO_STRING\(LIST_SORT\(LIST_DISTINCT\(": 1,
+    r"ab1\|": 2,
+    r"ARRAY_TO_STRING\(LIST_SLICE\(": 6,
+}
+
+
+@pytest.mark.parametrize("pattern", list(SPELLINGS))
+def test_primitive_is_spelled_once(pattern):
+    root = Path(__file__).resolve().parents[1] / "lms_etl_pipeline_spark"
+    hits = [
+        f"{p.relative_to(root)}:{s[: m.start()].count(chr(10)) + 1}"
+        for p in sorted(root.rglob("*.py"))
+        for s in [p.read_text()]
+        for m in re.finditer(pattern, s)
+    ]
+    assert len(hits) <= SPELLINGS[pattern], hits

@@ -123,7 +123,6 @@ def test_sharded_budget_matches_global_per_lang(spark):
     slice (same hash order, same budget)."""
     import __spark_entry__ as em
     from tests.conftest import SF_SMOKE
-    from lms_etl_pipeline_spark.plans.corpus_ml import _bucket
     from lms_etl_pipeline_spark.plans.corpus_ml_eval import _BUDGET_TOKENS_PER_LANG
     from lms_etl_pipeline_spark.operators import text as tx
     from lms_etl_pipeline_spark.sources.tables import load_table
@@ -133,7 +132,7 @@ def test_sharded_budget_matches_global_per_lang(spark):
         "doc_id",
         "lang",
         F.size(tx.tokens("text")).alias("n_toks"),
-        _bucket(F.col("doc_id")).alias("hk"),
+        tx.hash60(F.col("doc_id").cast("string")).alias("hk"),
     )
     langs = [r[0] for r in sharded.select("lang").distinct().collect()]
     assert len(langs) >= 2
