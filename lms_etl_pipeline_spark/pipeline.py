@@ -6,11 +6,14 @@ Two entry points mirroring the reference's two Lambda handlers:
   (`/root/reference/src/lms_to_s3_lambda.py:192-225`):
   REST scan with pushed filter -> drop pagination meta -> flatten ->
   bulk rename -> pack custom_fields -> CSV sink.  ONE lazy DataFrame plan
-  plus a sink action.
+  over an Arrow-built frame plus a sink action; no Python worker task runs.
 - ``run_load``     <- ``s3_to_rds_lambda.lambda_handler``
   (`/root/reference/src/s3_to_rds_lambda.py:132-164`):
   CSV scan (explicit schema) -> target-schema alignment (try_cast, T1-T6)
-  -> format-strict datetime parse (T7) -> keyed JDBC upsert (S7).
+  -> format-strict datetime parse (T7) -> keyed JDBC upsert (S7).  A
+  snapshot within ``session.LOCAL_COLLECT_BUDGET_ROWS`` is upserted from
+  the driver in one transaction, as the reference does; a larger one per
+  executor partition.
 
 Both are wrapped in the error channel (S8): any failure publishes and
 re-raises.  The streaming twin of ``run_load`` is

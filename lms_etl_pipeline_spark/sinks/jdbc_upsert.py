@@ -12,26 +12,45 @@ SURVEY.md §2.11):
    then ONE set-based ``MERGE INTO`` runs inside the database.  The merge
    is a single transaction over indexed keys; total data movement is the
    same as a plain append, and the database does what databases are good at.
-2. ``upsert_via_foreach_partition`` — the reference-shaped path.  Each
-   executor partition opens its own DB-API connection and executes batched
-   ``INSERT ... ON CONFLICT`` statements in a per-partition transaction —
-   ``df.foreachPartition`` + ``executemany``, exactly the reference's
-   statement, but per-partition instead of whole-dataset-on-one-thread.
-   The connection factory is injected (psycopg2 in production, sqlite3 in
-   tests) so the sink is testable without a Postgres server.
+2. ``upsert_via_foreach_partition`` — the reference-shaped path: batched
+   ``INSERT ... ON CONFLICT`` statements through ``executemany``, exactly
+   the reference's statement.  A frame of at most
+   ``session.LOCAL_COLLECT_BUDGET_ROWS`` rows is collected once as Arrow
+   and written from the driver on ONE connection in ONE transaction, like
+   the reference's handler.  A larger frame (or one with a column type the
+   driver arm does not bind, such as arrays or structs) runs per partition
+   instead: each executor partition opens its own DB-API connection and
+   commits its own transaction (``df.foreachPartition``).  The connection
+   factory is injected (psycopg2 in production, sqlite3 in tests) so the
+   sink is testable without a Postgres server.
 
-Retry semantics: a partition that fails rolls back its own transaction;
-Spark retries the task; the replayed ``ON CONFLICT`` batch converges to the
-same rows.  No cross-partition transaction is attempted — global atomicity
-comes from the staging+MERGE strategy instead.
+Retry semantics: either arm rolls back the transaction it was in when a
+statement fails and raises.  Spark retries a failed partition task; a
+driver-arm failure fails the call, and the caller (a streaming replay, a
+re-run of the load) runs it again.  Either way the replayed ``ON
+CONFLICT`` rows converge to the same table.  No cross-partition
+transaction is attempted — global atomicity over budget comes from the
+staging+MERGE strategy instead.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Iterator
+from itertools import islice
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row
+from pyspark.sql import types as T
+
+from lms_etl_pipeline_spark import session
+
+#: column types the driver arm binds exactly as a ``Row`` would hand them
+#: to the connection; a frame with any other type runs per partition.
+DRIVER_BOUND_TYPES = (
+    T.NumericType, T.StringType, T.BinaryType, T.BooleanType,
+    T.DateType, T.TimestampType, T.TimestampNTZType,
+)
 
 
 def _q(ident: str) -> str:
@@ -121,6 +140,44 @@ def upsert_via_staging(
         conn.close()
 
 
+def _write_rows(
+    connection_factory: Callable[[], Any], sql: str, rows: Iterable[tuple], batch_size: int
+) -> None:
+    """Run ``sql`` over ``rows`` in ``batch_size`` ``executemany`` chunks on
+    one connection, in one transaction: commit at the end, roll back and
+    re-raise on any failure."""
+    conn = connection_factory()
+    try:
+        cur = conn.cursor()
+        it = iter(rows)
+        while batch := list(islice(it, batch_size)):
+            cur.executemany(sql, batch)
+        conn.commit()
+    except Exception:
+        conn.rollback()
+        raise
+    finally:
+        conn.close()
+
+
+def _bound_column(column: pa.Array, dtype: T.DataType) -> list:
+    """One Arrow column as the Python values a ``Row`` carries.  Arrow
+    hands a TIMESTAMP back tz-aware in UTC, a ``Row`` as a naive local
+    datetime; bind the ``Row`` value, so both arms write the same text."""
+    if isinstance(dtype, T.TimestampType):
+        return [dtype.fromInternal(us) for us in column.cast(pa.int64()).to_pylist()]
+    return column.to_pylist()
+
+
+def _arrow_rows(
+    frame: pa.Table, schema: T.StructType, cols: list[str], chunk: int
+) -> Iterator[tuple]:
+    """``frame``'s rows as bind tuples in ``cols`` order, converted
+    ``chunk`` rows at a time, so only one chunk is ever Python objects."""
+    for batch in frame.to_batches(max_chunksize=chunk):
+        yield from zip(*(_bound_column(batch.column(c), schema[c].dataType) for c in cols))
+
+
 def upsert_via_foreach_partition(
     df: DataFrame,
     connection_factory: Callable[[], Any],
@@ -128,40 +185,38 @@ def upsert_via_foreach_partition(
     key_cols: list[str],
     batch_size: int = 1000,
 ) -> None:
-    """Executor-side batched ``INSERT ... ON CONFLICT`` upsert.
+    """Batched ``INSERT ... ON CONFLICT`` upsert.
 
     ``connection_factory`` must be a picklable zero-arg callable returning a
     DB-API connection (e.g. ``functools.partial(psycopg2.connect, dsn)`` or
-    ``functools.partial(sqlite3.connect, path)``).  Each partition runs one
-    transaction; batches of ``batch_size`` rows go through ``executemany``.
-    Idempotent: replaying a partition converges to identical table state.
+    ``functools.partial(sqlite3.connect, path)``).  Batches of
+    ``batch_size`` rows go through ``executemany``.
+
+    In budget (at most ``session.LOCAL_COLLECT_BUDGET_ROWS`` rows, every
+    column of a ``DRIVER_BOUND_TYPES`` type) the frame is collected once as
+    Arrow and written on one driver connection in one transaction; no
+    Python worker task runs.  The collect reads at most one row past the
+    budget; that row is the over-budget signal.  Over budget, each
+    partition runs one transaction on its own connection, and the frame is
+    computed again for that pass.  Idempotent either way: replaying a
+    frame or a partition converges to identical table state.
     """
     value_cols = [c for c in df.columns if c not in key_cols]
     cols = key_cols + value_cols
     sql = on_conflict_sql(table, key_cols, value_cols)
 
+    if all(isinstance(f.dataType, DRIVER_BOUND_TYPES) for f in df.schema.fields):
+        budget = session.LOCAL_COLLECT_BUDGET_ROWS
+        frame = df.limit(budget + 1).toArrow()
+        if frame.num_rows <= budget:
+            rows = _arrow_rows(frame, df.schema, cols, batch_size)
+            _write_rows(connection_factory, sql, rows, batch_size)
+            return
+
     def write_partition(rows: Iterator[Row]) -> None:
-        conn = connection_factory()
-        try:
-            cur = conn.cursor()
-            batch: list[tuple] = []
-
-            def flush(b: Iterable[tuple]) -> None:
-                cur.executemany(sql, list(b))
-
-            for row in rows:
-                batch.append(tuple(row[c] for c in cols))
-                if len(batch) >= batch_size:
-                    flush(batch)
-                    batch = []
-            if batch:
-                flush(batch)
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            conn.close()
+        _write_rows(
+            connection_factory, sql, (tuple(row[c] for c in cols) for row in rows), batch_size
+        )
 
     df.foreachPartition(write_partition)
 
@@ -175,12 +230,13 @@ def ledgered_batch_sink(
     """Idempotent ``foreachBatch`` sink: a keyed upsert plus a batch-id
     ledger that skips re-execution.
 
-    Correctness comes from the upsert: every partition's rows land through
-    ``upsert_via_foreach_partition``, so applying a batch twice converges to
-    the same rows.  The ledger is an optimization on top.  After the upsert
-    commits, the batch id is recorded in ``ledger_table`` in a SEPARATE,
-    later transaction; a batch id already in the ledger is skipped without
-    touching the data.  If the sink fails between the two commits, the
+    Correctness comes from the upsert: the batch's rows land through
+    ``upsert_via_foreach_partition`` (one driver transaction within the
+    collect budget, one per partition above it), so applying a batch twice
+    converges to the same rows.  The ledger is an optimization on top.
+    After the upsert commits, the batch id is recorded in ``ledger_table``
+    in a SEPARATE, later transaction; a batch id already in the ledger is
+    skipped without touching the data.  If the sink fails between the two commits, the
     batch is not in the ledger, so its replay re-runs the upsert (which
     converges) and then records the id once.  The data and the ledger row
     are not atomic, so side effects beyond the keyed rows may repeat.

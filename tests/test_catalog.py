@@ -49,6 +49,37 @@ def test_first_50_follow_the_rotation_policy():
     assert modules <= {QUERIES[n].__module__ for n in first50}
 
 
+#: the head of ``queries()``; see ``test_catalog_head_is_pinned``
+PINNED_HEAD = (
+    "flagship_regional_revenue", "events_session_window", "q1_pricing_summary",
+    "q3_shipping_priority", "unpivot_measures", "scalar_string_funcs",
+    "window_row_number_rank", "events_tumbling_window", "text_token_stats",
+    "dedup_winnowing", "etl_flatten_json_props", "multimodal_image_decode",
+    "decontaminate_ngram_overlap", "bpe_train_merges_deep", "quality_classifier_train",
+    "corpus_shuffle_deterministic", "ann_recall_eval", "bpe_pair_merges",
+    "bloom_filter_probe", "source_overlap_matrix", "max_token_runlength",
+    "item_cooccurrence_cf", "hierarchy_rollup_tree", "fk_integrity_audit",
+    "ewma_smoothing", "khop_reachability", "matryoshka_truncation_eval",
+    "llr_collocations", "activity_streaks", "quantile_exact_selection",
+    "dsir_hashed_ngram_model", "pq_codebook_train", "mmr_diverse_selection",
+    "agg_distinct_counts", "q10_returned_items", "subquery_correlated",
+    "scalar_date_funcs", "window_topk_per_group", "events_sliding_window",
+    "doc_quality_filter", "dedup_clusters", "etl_rename_bulk",
+    "multimodal_frame_sample", "boilerplate_ngram_filter", "bpe_encode_corpus",
+    "quality_classifier_predict", "bm25_retrieval_topk", "corpus_datasheet",
+    "domain_cap_filter", "dup_ngram_spans",
+)
+
+
+def test_catalog_head_is_pinned():
+    """The round-robin takes plan modules in registration order, which is
+    import order: a plan module that imports another registers that
+    module's queries first and reorders the first-50 window without any
+    other trace.  A reorder must be deliberate: update ``PINNED_HEAD``
+    with it."""
+    assert tuple(QUERIES)[: len(PINNED_HEAD)] == PINNED_HEAD
+
+
 @pytest.fixture(scope="module")
 def duck():
     with duck_views(SF_SMOKE) as con:

@@ -21,6 +21,7 @@ USERS = [
 
 class _Handler(BaseHTTPRequestHandler):
     seen: list[tuple[str, dict, dict]] = []  # (path, query, headers)
+    users: list[dict] = USERS  # the page served; a test may swap it
 
     def log_message(self, *a):  # silence
         pass
@@ -44,11 +45,11 @@ class _Handler(BaseHTTPRequestHandler):
         q = {k: v[0] for k, v in parse_qs(parsed.query).items()}
         # urllib title-cases header names; store lowercased for assertions
         _Handler.seen.append((parsed.path, q, {k.lower(): v for k, v in self.headers.items()}))
-        users = USERS
+        users = _Handler.users
         flt = q.get("_filter", "")
         if flt.startswith("departmentId eq "):
             want = flt.split("'")[1]
-            users = [u for u in USERS if u["departmentId"] == want]
+            users = [u for u in users if u["departmentId"] == want]
         self._send(
             {"totalItems": len(users), "limit": 100, "offset": 0,
              "returnedItems": len(users), "users": users}
@@ -105,3 +106,40 @@ def test_filter_pushdown_interpolates_value(server, spark):
 def test_unknown_logical_table_raises(server, spark):
     with pytest.raises(KeyError):
         RestSource(server).read_table(spark, "nope", SCHEMA)
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [("id", 1.5), ("id", "1"), ("isActive", 1)],
+    ids=["fractional_id", "string_id", "integer_isActive"],
+)
+def test_read_table_rejects_a_mistyped_value(server, spark, monkeypatch, field, value):
+    """A value of the wrong JSON type raises at ``read_table``: Arrow's own
+    conversion would truncate 1.5 into a BIGINT without a word."""
+    schema = T.StructType(SCHEMA.fields + [T.StructField("isActive", T.BooleanType())])
+    bad = {**USERS[1], "isActive": True, field: value}
+    monkeypatch.setattr(_Handler, "users", [{**USERS[0], "isActive": False}, bad])
+    with pytest.raises((TypeError, ValueError)):
+        RestSource(server).read_table(spark, "list_users", schema)
+
+
+def test_empty_page_reads_as_an_empty_typed_frame(server, spark, monkeypatch):
+    monkeypatch.setattr(_Handler, "users", [])
+    df = RestSource(server).read_table(spark, "list_users", SCHEMA)
+    assert df.schema == SCHEMA
+    assert df.collect() == []
+
+
+def test_missing_key_reads_as_null(server, spark, monkeypatch):
+    nested = T.StructType(SCHEMA.fields + [
+        T.StructField("customFields", T.StructType([T.StructField("cohort", T.StringType())])),
+    ])
+    monkeypatch.setattr(_Handler, "users", [
+        {"id": 1, "firstName": "Ann", "departmentId": "D1", "customFields": {}},
+        {"id": 2, "externalId": "x2", "departmentId": "D2"},
+    ])
+    df = RestSource(server).read_table(spark, "list_users", nested)
+    assert df.schema == nested
+    rows = {r.id: r for r in df.collect()}
+    assert rows[1].externalId is None and rows[1].customFields.cohort is None
+    assert rows[2].firstName is None and rows[2].customFields is None

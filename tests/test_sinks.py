@@ -10,10 +10,13 @@ Derby through Spark's own JDBC writer — a real JDBC round trip.
 from __future__ import annotations
 
 import sqlite3
+from datetime import date, datetime
+from decimal import Decimal
 from functools import partial
 
 import pytest
 
+from lms_etl_pipeline_spark import session
 from lms_etl_pipeline_spark.sinks import error_channel, jdbc_upsert
 
 
@@ -39,7 +42,6 @@ class TestForeachPartitionUpsert:
         con.commit()
         con.close()
 
-    @pytest.mark.slow  # >14 s: gated from the default run
     def test_insert_then_update_then_idempotent(self, spark, people_df, tmp_path):
         db = str(tmp_path / "t.db")
         self._setup_db(db)
@@ -98,6 +100,90 @@ class TestForeachPartitionUpsert:
         finally:
             con.close()
         assert rows == [(1, 10), (1, 11), (2, 10)]
+
+
+#: one value column per type the driver arm binds, each with a NULL
+TYPED_VALUES = {
+    "BIGINT": [-(2**63), 0, 2**62],
+    "INT": [-(2**31), 7, 2**31 - 1],
+    "DOUBLE": [-0.5, 1e-300, 2.5e300],
+    "STRING": ["", "O'Brien", "\u00fcn\u00efc\u00f8de"],
+    "BOOLEAN": [True, False, True],
+    "DATE": [date(1969, 12, 31), date(2000, 2, 29), date(2038, 1, 19)],
+    "TIMESTAMP": [
+        datetime(1969, 12, 31, 23, 59, 59, 999999),
+        datetime(2024, 3, 10, 2, 30),
+        datetime(2038, 1, 19, 3, 14, 8, 1),
+    ],
+    "DECIMAL(12,3)": [Decimal("-1.500"), Decimal("0.000"), Decimal("123456789.125")],
+    "BINARY": [bytearray(b""), bytearray(b"\x00\xff"), bytearray(b"abc")],
+}
+
+
+def _typed_upsert(spark, db, sql_type, values):
+    """Upsert ``(id, v)`` rows of one value type into a fresh sqlite table
+    with no column affinity, so each bound value is stored as it came."""
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE typed (id INTEGER PRIMARY KEY, v)")
+    con.execute("INSERT INTO typed VALUES (1, 'stale')")
+    con.commit()
+    con.close()
+
+    def factory():
+        import decimal
+        import sqlite3
+
+        sqlite3.register_adapter(decimal.Decimal, str)  # as psycopg2 binds NUMERIC
+        return sqlite3.connect(db, timeout=30)
+
+    rows = list(enumerate(values + [None], start=1))
+    df = spark.createDataFrame(rows, f"id BIGINT, v {sql_type}").coalesce(1)
+    jdbc_upsert.upsert_via_foreach_partition(df, factory, "typed", ["id"])
+    con = sqlite3.connect(db)
+    try:
+        return con.execute("SELECT id, v, typeof(v) FROM typed ORDER BY id").fetchall()
+    finally:
+        con.close()
+
+
+class TestUpsertArms:
+    """A frame within ``session.LOCAL_COLLECT_BUDGET_ROWS`` is written from
+    the driver through Arrow; a larger one per partition through ``Row``s.
+    Both must bind the same values."""
+
+    @pytest.mark.parametrize("sql_type", list(TYPED_VALUES))
+    def test_both_arms_write_the_same_rows(self, spark, tmp_path, monkeypatch, sql_type):
+        values = TYPED_VALUES[sql_type]
+        driver = _typed_upsert(spark, str(tmp_path / "driver.db"), sql_type, values)
+        monkeypatch.setattr(session, "LOCAL_COLLECT_BUDGET_ROWS", 0)
+        partitions = _typed_upsert(spark, str(tmp_path / "partitions.db"), sql_type, values)
+        assert driver == partitions
+        assert len(driver) == len(values) + 1 and driver[-1][1:] == (None, "null")
+
+    def test_budget_picks_the_arm(self, spark, people_df, tmp_path, monkeypatch):
+        db = str(tmp_path / "arm.db")
+        factory = partial(sqlite3.connect, db, timeout=30)
+        con = factory()
+        con.execute("CREATE TABLE people (id INTEGER PRIMARY KEY, name TEXT, score REAL)")
+        con.commit()
+        con.close()
+        df = people_df.coalesce(1)
+        real = type(df).foreachPartition
+        calls = []
+
+        def counted(self, f):
+            calls.append(f)
+            return real(self, f)
+
+        monkeypatch.setattr(type(df), "foreachPartition", counted)
+        jdbc_upsert.upsert_via_foreach_partition(df, factory, "people", ["id"])
+        assert calls == []
+        assert _sqlite_state(db) == [(1, "ann", 10.0), (2, "bob", 20.0)]
+
+        monkeypatch.setattr(session, "LOCAL_COLLECT_BUDGET_ROWS", 1)
+        jdbc_upsert.upsert_via_foreach_partition(df, factory, "people", ["id"])
+        assert len(calls) == 1
+        assert _sqlite_state(db) == [(1, "ann", 10.0), (2, "bob", 20.0)]
 
 
 class TestStagingMerge:

@@ -23,7 +23,6 @@ def _write_batch(spark, path, rows):
     spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(path)
 
 
-@pytest.mark.slow  # >14 s: gated from the default run
 def test_available_now_incremental_upsert(spark, tmp_path):
     landing = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
