@@ -145,3 +145,24 @@ def components_sql() -> str:
       SELECT reach.node, sym.v FROM reach JOIN sym ON reach.r = sym.u
     ),
     comps AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node)"""
+
+
+def order_flow_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """The order flow as a distinct bipartite edge list: ``src`` =
+    ``'c' || o_custkey`` → ``dst`` = ``'s' || l_suppkey`` for every
+    customer that bought a line item from the supplier."""
+    return (
+        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+        .select(
+            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
+        )
+        .distinct()
+    )
+
+
+def order_flow_edges_sql() -> str:
+    """DuckDB twin of ``order_flow_edges`` over ``orders`` and ``lineitem``."""
+    return """SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
+                      's' || CAST(l_suppkey AS VARCHAR) AS dst
+      FROM orders JOIN lineitem ON o_orderkey = l_orderkey"""

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators import text as tx
+from lms_etl_pipeline_spark.operators.graph import order_flow_edges, order_flow_edges_sql
 from lms_etl_pipeline_spark.operators.rank import (
     global_ntile,
     global_running_agg,
@@ -383,11 +384,8 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hits_hubs_authorities",
-    oracle="""
-    WITH edges AS (
-      SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                      's' || CAST(l_suppkey AS VARCHAR) AS dst
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+    oracle=f"""
+    WITH edges AS ({order_flow_edges_sql()}),
     a1 AS (SELECT dst AS node, CAST(COUNT(*) AS DOUBLE) AS a FROM edges
            GROUP BY dst),
     a1n AS (SELECT node, a / (SELECT SUM(CAST(a AS DECIMAL(38,12))) FROM a1)
@@ -433,14 +431,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the edge list once — a1/h1/a2 AND every
     # normalizer broadcast build otherwise re-derive the
     # orders⋈lineitem+distinct subtree (same fix as pagerank_graph).
-    edges = materialize(
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = materialize(order_flow_edges(o, li))
     dec = lambda c: F.sum(c.cast("decimal(38,12)")).cast("double")  # noqa: E731
     a1 = edges.groupBy(F.col("dst").alias("node")).agg(
         F.count("*").cast("double").alias("a")

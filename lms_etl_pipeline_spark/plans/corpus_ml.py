@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators import vectors as vec
+from lms_etl_pipeline_spark.operators.graph import order_flow_edges, order_flow_edges_sql
 from lms_etl_pipeline_spark.operators.ml import kmeans_assign
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.session import materialize
@@ -252,10 +253,7 @@ def semdedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") == F.col("b_label"))
         & (F.col("b_id") < F.col("vec_id"))
         & (
-            F.try_divide(
-                vec.dot(F.col("embedding"), F.col("b_emb")),
-                F.col("_na") * F.col("_nb"),
-            )
+            vec.cosine(F.col("embedding"), F.col("b_emb"), F.col("_na"), F.col("_nb"))
             > _SEMDEDUP_TAU
         ),
         "left_semi",
@@ -421,10 +419,7 @@ def _pr_iter_sql(prev: str, out: str) -> str:
 @query(
     "pagerank_graph",
     oracle=f"""
-    WITH edges AS (
-      SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                      's' || CAST(l_suppkey AS VARCHAR) AS dst
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+    WITH edges AS ({order_flow_edges_sql()}),
     nodes AS (SELECT src AS node FROM edges
               UNION SELECT dst FROM edges),
     nn AS (SELECT COUNT(*) AS n FROM nodes),
@@ -460,14 +455,7 @@ def pagerank_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (exchange reuse only covers identical exchanges, not the
     # differently-aggregated consumers).  The curation-pipeline barrier
     # pattern; values unchanged (oracle re-verified).
-    edges = materialize(
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = materialize(order_flow_edges(o, li))
     nodes = materialize(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -520,18 +508,13 @@ _RRF_TOPK = 10
 
 
 def _dense_topk_sql() -> str:
-    return f"""
-    WITH q AS (SELECT * FROM embeddings WHERE vec_id < {_RRF_QIDS}),
-    pairs AS (
-      SELECT q.vec_id AS qid, e.vec_id AS doc_id,
-             {vec.cosine_sql("q.embedding", "e.embedding", EMB_DIM)} AS cosine
-      FROM q CROSS JOIN embeddings e WHERE e.vec_id != q.vec_id)
-    SELECT qid, doc_id, rk FROM (
-      SELECT qid, doc_id,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY cosine DESC, doc_id) AS rk
-      FROM pairs) WHERE rk <= {_RRF_TOPK}
-    """
+    topk = vec.cosine_topk_sql(
+        f"SELECT vec_id, embedding FROM embeddings WHERE vec_id < {_RRF_QIDS}",
+        "SELECT vec_id, embedding FROM embeddings",
+        _RRF_TOPK,
+        EMB_DIM,
+    )
+    return f"SELECT q_id AS qid, n_id AS doc_id, rk FROM ({topk})"
 
 
 @query(
@@ -566,37 +549,11 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-term expression (no group sum), so it is bit-deterministic."""
     bm = bm25_retrieval_topk(spark, sf_dir).filter(F.col("qid") < _RRF_QIDS)
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < _RRF_QIDS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        vec.norm(F.col("embedding")).alias("_nq"),
-    )
-    n = e.select(
-        F.col("vec_id").alias("doc_id"),
-        F.col("embedding").alias("n_emb"),
-        vec.norm(F.col("embedding")).alias("_nn"),
-    )
-    dense_pairs = (
-        F.broadcast(q)
-        .crossJoin(n)
-        .filter(F.col("doc_id") != F.col("qid"))
-        # per-row norms below the join (1 fold per pair, not 3)
-        .select(
-            "qid",
-            "doc_id",
-            F.try_divide(
-                vec.dot(F.col("q_emb"), F.col("n_emb")), F.col("_nq") * F.col("_nn")
-            ).alias("cosine"),
-        )
-    )
-    wd = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("doc_id"))
-    dn = (
-        dense_pairs.withColumn("rk", F.row_number().over(wd))
-        .filter(F.col("rk") <= _RRF_TOPK)
-        .select("qid", "doc_id", "rk")
-    )
+    dn = vec.top_k(vec.cosine_pairs(e.filter(F.col("vec_id") < _RRF_QIDS), e), _RRF_TOPK)
     bm_r = bm.select("qid", "doc_id", F.col("rk").alias("rk_bm"))
-    dn_r = dn.select("qid", "doc_id", F.col("rk").alias("rk_dn"))
+    dn_r = dn.select(
+        F.col("q_id").alias("qid"), F.col("n_id").alias("doc_id"), F.col("rk").alias("rk_dn")
+    )
     fused = bm_r.join(dn_r, ["qid", "doc_id"], "full_outer").select(
         "qid",
         "doc_id",

@@ -56,26 +56,20 @@ def _bucket_sql(col: str) -> str:
 
 
 def _ann_recall_oracle() -> str:
-    cos = vec.cosine_sql("q.embedding", "e.embedding", EMB_DIM)
+    exact = vec.cosine_topk_sql(
+        f"SELECT vec_id, embedding FROM embeddings WHERE vec_id < {_ANN_QIDS}",
+        "SELECT vec_id, embedding FROM embeddings",
+        _ANN_K,
+        EMB_DIM,
+    )
+    approx = vec.cosine_topk_sql(
+        f"SELECT * FROM bkt WHERE vec_id < {_ANN_QIDS}", "SELECT * FROM bkt", _ANN_K, EMB_DIM, on="bucket"
+    )
     return f"""
     WITH bkt AS (SELECT vec_id, embedding,
                         {_bucket_sql("embedding")} AS bucket FROM embeddings),
-    exact AS (
-      SELECT q_id, n_id FROM (
-        SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-                 {cos} DESC, e.vec_id) AS rk
-        FROM embeddings q CROSS JOIN embeddings e
-        WHERE q.vec_id < {_ANN_QIDS} AND e.vec_id != q.vec_id)
-      WHERE rk <= {_ANN_K}),
-    approx AS (
-      SELECT q_id, n_id FROM (
-        SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-                 {cos} DESC, e.vec_id) AS rk
-        FROM bkt q JOIN bkt e ON e.bucket = q.bucket AND e.vec_id != q.vec_id
-        WHERE q.vec_id < {_ANN_QIDS})
-      WHERE rk <= {_ANN_K})
+    exact AS (SELECT q_id, n_id FROM ({exact})),
+    approx AS (SELECT q_id, n_id FROM ({approx}))
     SELECT x.q_id, COUNT(*) AS n_true,
            CAST(COALESCE(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END), 0)
                 AS BIGINT) AS n_found,
@@ -103,62 +97,18 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lms_etl_pipeline_spark.plans.llm_similarity import HYPERPLANES
 
     e = load_table(spark, sf_dir, "embeddings")
-
-    def topk(pairs: DataFrame) -> DataFrame:
-        w = Window.partitionBy("q_id").orderBy(
-            F.col("cosine").desc(), F.col("n_id").asc()
-        )
-        return (
-            pairs.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= _ANN_K)
-            .select("q_id", "n_id")
-        )
-
-    # Norms precomputed once per row below the joins (1 interpreted fold
-    # per candidate pair instead of 3; bit-identical output).
-    pair_cos = F.try_divide(
-        vec.dot(F.col("q_emb"), F.col("n_emb")), F.col("_nq") * F.col("_nn")
-    )
-    q = e.filter(F.col("vec_id") < _ANN_QIDS).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        vec.norm(F.col("embedding")).alias("_nq"),
-    )
-    n = e.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        vec.norm(F.col("embedding")).alias("_nn"),
-    )
-    exact = topk(
-        F.broadcast(q)
-        .crossJoin(n)
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select("q_id", "n_id", pair_cos.alias("cosine"))
-    )
+    exact = vec.top_k(vec.cosine_pairs(e.filter(F.col("vec_id") < _ANN_QIDS), e), _ANN_K)
     bucketed = e.select(
         "vec_id",
         "embedding",
         vec.hyperplane_bucket(F.col("embedding"), HYPERPLANES).alias("bucket"),
     )
-    qb = bucketed.filter(F.col("vec_id") < _ANN_QIDS).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        vec.norm(F.col("embedding")).alias("_nq"),
-        "bucket",
+    approx = vec.top_k(
+        vec.cosine_pairs(bucketed.filter(F.col("vec_id") < _ANN_QIDS), bucketed, on="bucket"),
+        _ANN_K,
     )
-    nb = bucketed.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        vec.norm(F.col("embedding")).alias("_nn"),
-        "bucket",
-    )
-    approx = topk(
-        qb.join(nb, "bucket")
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select("q_id", "n_id", pair_cos.alias("cosine"))
-    )
-    found = exact.join(
-        approx.withColumn("_hit", F.lit(1)), ["q_id", "n_id"], "left"
+    found = exact.select("q_id", "n_id").join(
+        approx.select("q_id", "n_id", F.lit(1).alias("_hit")), ["q_id", "n_id"], "left"
     )
     return found.groupBy("q_id").agg(
         F.count("*").alias("n_true"),
@@ -425,10 +375,7 @@ def semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("cluster") == F.col("b_cluster"))
         & (F.col("b_id") < F.col("vec_id"))
         & (
-            F.try_divide(
-                vec.dot(F.col("embedding"), F.col("b_emb")),
-                F.col("_na") * F.col("_nb"),
-            )
+            vec.cosine(F.col("embedding"), F.col("b_emb"), F.col("_na"), F.col("_nb"))
             > _SEMDEDUP_TAU
         ),
         "left_semi",

@@ -143,18 +143,17 @@ def _retrieval_oracle() -> str:
     idcg_case = " ".join(
         f"WHEN {i + 1} THEN {_IDCG_PREFIX[i]!r}" for i in range(_NDCG_K)
     )
+    topk = vec.cosine_topk_sql(
+        "SELECT vec_id, embedding, label AS q_label FROM q",
+        "SELECT vec_id, embedding, label AS n_label FROM embeddings",
+        _NDCG_K,
+        EMB_DIM,
+    )
     return f"""
     WITH q AS (SELECT vec_id, embedding, label FROM embeddings
                WHERE vec_id < {_N_RETRIEVAL_Q}),
-    ranked AS (
-      SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-             (n.label = q.label) AS rel,
-             ROW_NUMBER() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY {vec.cosine_sql("q.embedding", "n.embedding", EMB_DIM)} DESC,
-                        n.vec_id ASC) AS rk
-      FROM q, embeddings n WHERE n.vec_id <> q.vec_id),
-    top AS (SELECT * FROM ranked WHERE rk <= {_NDCG_K}),
+    top AS (
+      SELECT q_id, n_id, (n_label = q_label) AS rel, rk FROM ({topk})),
     lc AS (SELECT label, COUNT(*) AS cnt FROM embeddings GROUP BY 1),
     nrel AS (
       SELECT q.vec_id AS q_id,
@@ -193,45 +192,16 @@ def retrieval_mrr_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup on the capped relevant count.  One final rounded division.
 
     Scale: the {_N_RETRIEVAL_Q}-query set broadcasts and the corpus
-    streams through once (linear scan), the `knn_cosine_exact` layout; the
+    streams through once (linear scan, ``vec.cosine_pairs``); the
     per-query relevant-count is the same broadcast against a hash
     aggregate.  Metrics aggregate over top-k rows only.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < _N_RETRIEVAL_Q).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("label").alias("q_label"),
-        vec.norm(F.col("embedding")).alias("_nq"),
+    qs = e.filter(F.col("vec_id") < _N_RETRIEVAL_Q)
+    pairs = vec.cosine_pairs(qs, e).select(
+        "q_id", "n_id", (F.col("n_label") == F.col("q_label")).alias("rel"), "cosine"
     )
-    n = e.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("label").alias("n_label"),
-        vec.norm(F.col("embedding")).alias("_nn"),
-    )
-    pairs = (
-        F.broadcast(q)
-        .crossJoin(n)
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "n_id",
-            (F.col("n_label") == F.col("q_label")).alias("rel"),
-            # try_divide: zero-norm vectors => NULL cosine (hostile sweep)
-            F.try_divide(
-                vec.dot(F.col("q_emb"), F.col("n_emb")),
-                F.col("_nq") * F.col("_nn"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("n_id").asc()
-    )
-    top = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _NDCG_K)
-    )
+    top = vec.top_k(pairs, _NDCG_K)
     # CASE rank -> literal weight, identical literal set as the oracle.
     weight = F.when(
         F.col("rk") == 1, F.lit(_DCG_W_R[0]).cast("decimal(18,9)")
@@ -252,7 +222,7 @@ def retrieval_mrr_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lc = e.groupBy(F.col("label")).agg(F.count("*").alias("cnt"))
     nrel = (
-        q.select("q_id", "q_label")
+        qs.select(F.col("vec_id").alias("q_id"), F.col("label").alias("q_label"))
         .join(F.broadcast(lc), F.col("q_label") == F.col("label"))
         .select(
             "q_id",

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators import dedup as dd
@@ -211,21 +211,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_oracle(k: int = 5, n_queries: int = 5) -> str:
-    return f"""
-    WITH q AS (SELECT * FROM embeddings WHERE vec_id < {n_queries}),
-    pairs AS (
-      SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-             {vec.cosine_sql("q.embedding", "e.embedding", EMB_DIM)} AS cosine
-      FROM q CROSS JOIN embeddings e
-      WHERE e.vec_id != q.vec_id
-    ),
-    ranked AS (
-      SELECT q_id, n_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id ASC) AS rk
-      FROM pairs
+    topk = vec.cosine_topk_sql(
+        f"SELECT vec_id, embedding FROM embeddings WHERE vec_id < {n_queries}",
+        "SELECT vec_id, embedding FROM embeddings",
+        k,
+        EMB_DIM,
     )
-    SELECT q_id, n_id, rk, cosine FROM ranked WHERE rk <= {k}
-    """
+    return f"SELECT q_id, n_id, rk, cosine FROM ({topk})"
 
 
 @query("knn_cosine_exact", oracle=_knn_oracle())
@@ -236,62 +228,19 @@ def knn_cosine_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (linear scan).  Bit-identical to the oracle because the dot product is
     a left-assoc double fold on both engines."""
     e = load_table(spark, sf_dir, "embeddings")
-    # Norms are computed ONCE PER ROW on each side below the join, not per
-    # pair above it: this third of the interpreted fold work is O(|Q|+|N|)
-    # instead of O(|Q|·|N|), and the emitted float is bit-identical (same
-    # ops in the same order — sqrt evaluated earlier, not differently).
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        vec.norm(F.col("embedding")).alias("_nq"),
-    )
-    n = e.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        vec.norm(F.col("embedding")).alias("_nn"),
-    )
-    pairs = (
-        F.broadcast(q)
-        .crossJoin(n)
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "n_id",
-            F.try_divide(
-                vec.dot(F.col("q_emb"), F.col("n_emb")),
-                F.col("_nq") * F.col("_nn"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("q_id", "n_id", "rk", "cosine")
-    )
+    pairs = vec.cosine_pairs(e.filter(F.col("vec_id") < 5), e)
+    return vec.top_k(pairs, 5).select("q_id", "n_id", "rk", "cosine")
 
 
 def _knn_filtered_oracle(k: int = 5, n_queries: int = 5) -> str:
-    return f"""
-    WITH q AS (SELECT * FROM embeddings WHERE vec_id < {n_queries}),
-    corpus AS (
-      SELECT e.vec_id, e.embedding FROM embeddings e
-      JOIN documents d ON d.doc_id = e.vec_id
-      WHERE d.lang = 'en'
-    ),
-    pairs AS (
-      SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-             {vec.cosine_sql("q.embedding", "e.embedding", EMB_DIM)} AS cosine
-      FROM q CROSS JOIN corpus e
-      WHERE e.vec_id != q.vec_id
-    ),
-    ranked AS (
-      SELECT q_id, n_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id ASC) AS rk
-      FROM pairs
+    topk = vec.cosine_topk_sql(
+        f"SELECT vec_id, embedding FROM embeddings WHERE vec_id < {n_queries}",
+        """SELECT e.vec_id, e.embedding FROM embeddings e
+           JOIN documents d ON d.doc_id = e.vec_id WHERE d.lang = 'en'""",
+        k,
+        EMB_DIM,
     )
-    SELECT q_id, n_id, rk, cosine FROM ranked WHERE rk <= {k}
-    """
+    return f"SELECT q_id, n_id, rk, cosine FROM ({topk})"
 
 
 @query("knn_filtered_exact", oracle=_knn_filtered_oracle())
@@ -303,43 +252,16 @@ def knn_filtered_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     selectivity directly cuts compute — and the filtered result is exact,
     not a post-filtered approximation that can return < k rows.
 
-    Scale: same broadcast-queries × linear-corpus-scan shape as
-    ``knn_cosine_exact``; the metadata join rides the same scan.
+    Scale: ``vec.cosine_pairs``' broadcast-queries × linear-corpus-scan
+    shape; the metadata join rides the same scan.
     """
     e = load_table(spark, sf_dir, "embeddings")
     d = load_table(spark, sf_dir, "documents")
-    corpus = (
-        e.join(d.filter(F.col("lang") == "en"), e.vec_id == d.doc_id)
-        .select(
-            F.col("vec_id").alias("n_id"),
-            F.col("embedding").alias("n_emb"),
-            vec.norm(F.col("embedding")).alias("_nn"),
-        )
+    corpus = e.join(d.filter(F.col("lang") == "en"), e.vec_id == d.doc_id).select(
+        "vec_id", "embedding"
     )
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        vec.norm(F.col("embedding")).alias("_nq"),
-    )
-    pairs = (
-        F.broadcast(q)
-        .crossJoin(corpus)
-        .filter(F.col("n_id") != F.col("q_id"))
-        # per-row norms below the join (1 fold per pair, not 3)
-        .select(
-            "q_id",
-            "n_id",
-            F.try_divide(
-                vec.dot(F.col("q_emb"), F.col("n_emb")), F.col("_nq") * F.col("_nn")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("q_id", "n_id", "rk", "cosine")
-    )
+    pairs = vec.cosine_pairs(e.filter(F.col("vec_id") < 5), corpus)
+    return vec.top_k(pairs, 5).select("q_id", "n_id", "rk", "cosine")
 
 
 # Fixed literal hyperplanes (versioned constants — reproducible bucketing).
@@ -361,36 +283,8 @@ def knn_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = e.select(
         "vec_id", "embedding", vec.hyperplane_bucket(F.col("embedding"), HYPERPLANES).alias("bucket")
     )
-    q = bucketed.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        vec.norm(F.col("embedding")).alias("_nq"),
-        "bucket",
-    )
-    n = bucketed.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        vec.norm(F.col("embedding")).alias("_nn"),
-        "bucket",
-    )
-    pairs = (
-        q.join(n, "bucket")
-        .filter(F.col("n_id") != F.col("q_id"))
-        # per-row norms below the join (1 fold per pair, not 3)
-        .select(
-            "q_id",
-            "n_id",
-            F.try_divide(
-                vec.dot(F.col("q_emb"), F.col("n_emb")), F.col("_nq") * F.col("_nn")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", "n_id", "rk", "cosine")
-    )
+    pairs = vec.cosine_pairs(bucketed.filter(F.col("vec_id") < 20), bucketed, on="bucket")
+    return vec.top_k(pairs, 3).select("q_id", "n_id", "rk", "cosine")
 
 
 @query("knn_cosine_ivf", oracle=None)
@@ -440,38 +334,12 @@ def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "_scores"
         )
 
-    corpus = (
-        best_cells(e.select(F.col("vec_id").alias("n_id"), F.col("embedding")), 1)
-        .withColumnRenamed("embedding", "n_emb")
-        .withColumn("_nn", vec.norm(F.col("n_emb")))
-    )
-    qset = (
-        best_cells(
-            e.filter(F.col("vec_id") < 20).select(F.col("vec_id").alias("q_id"), F.col("embedding")), 2
-        )
-        .withColumnRenamed("embedding", "q_emb")
-        .withColumn("_nq", vec.norm(F.col("q_emb")))
-    )
-    pairs = (
-        corpus.join(F.broadcast(qset), "cell")
-        .filter(F.col("n_id") != F.col("q_id"))
-        # norms precomputed per row below the join (1 fold per pair, not 3)
-        .select(
-            "q_id",
-            "n_id",
-            F.try_divide(
-                vec.dot(F.col("q_emb"), F.col("n_emb")), F.col("_nq") * F.col("_nn")
-            ).alias("cosine"),
-        )
-        # a (q, n) pair can appear via both probed cells
-        .dropDuplicates(["q_id", "n_id"])
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("q_id", "n_id", "rk", "cosine")
-    )
+    # each corpus row lands in exactly one cell and a query's probed cells
+    # are distinct, so every (q, n) pair joins at most once
+    corpus = best_cells(e.select("vec_id", "embedding"), 1)
+    qset = best_cells(e.filter(F.col("vec_id") < 20).select("vec_id", "embedding"), 2)
+    pairs = vec.cosine_pairs(F.broadcast(qset), corpus, on="cell")
+    return vec.top_k(pairs, 3).select("q_id", "n_id", "rk", "cosine")
 
 
 @query(
@@ -509,10 +377,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.crossJoin(b)
         .filter(F.col("a") < F.col("b"))
         .withColumn(
-            "cosine",
-            F.try_divide(
-                vec.dot(F.col("ea"), F.col("eb")), F.col("_na") * F.col("_nb")
-            ),
+            "cosine", vec.cosine(F.col("ea"), F.col("eb"), F.col("_na"), F.col("_nb"))
         )
         .filter(F.col("cosine") >= 0.4)
         .select("a", "b", F.round("cosine", 6).alias("cosine"))

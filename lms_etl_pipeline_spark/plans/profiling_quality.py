@@ -258,15 +258,9 @@ def embedding_pairwise_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = e.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
     b = e.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
-    # try_divide: a zero-norm vector (failed encoder output) makes the
-    # cosine undefined — NULL, not an ANSI abort (hostile-text sweep)
-    cos = F.round(
-        F.try_divide(
-            vec.dot(F.col("ea"), F.col("eb")),
-            vec.norm(F.col("ea")) * vec.norm(F.col("eb")),
-        ),
-        6,
-    )
+    # a zero-norm vector (failed encoder output) makes the cosine
+    # undefined — NULL, not an ANSI abort (hostile-text sweep)
+    cos = F.round(vec.cosine(F.col("ea"), F.col("eb")), 6)
     pairs = (
         a.crossJoin(b).filter(F.col("a") < F.col("b")).select(cos.alias("cosine"))
     )
@@ -549,15 +543,9 @@ def semdedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = e.select(F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
     b = e.select(F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
-    # try_divide: a zero-norm vector (failed encoder output) makes the
-    # cosine undefined — NULL, not an ANSI abort (hostile-text sweep)
-    cos = F.round(
-        F.try_divide(
-            vec.dot(F.col("ea"), F.col("eb")),
-            vec.norm(F.col("ea")) * vec.norm(F.col("eb")),
-        ),
-        6,
-    )
+    # a zero-norm vector (failed encoder output) makes the cosine
+    # undefined — NULL, not an ANSI abort (hostile-text sweep)
+    cos = F.round(vec.cosine(F.col("ea"), F.col("eb")), 6)
     pairs = (
         a.crossJoin(b).filter(F.col("a") < F.col("b")).select(cos.alias("cosine"))
     )

@@ -76,36 +76,18 @@ def matryoshka_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     trunc = F.slice(F.col("embedding"), 1, _MRL_DIM)
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        vec.norm(F.col("embedding")).alias("_nq"),
-        trunc.alias("q_tr"),
-        vec.norm(trunc).alias("_nq_tr"),
-    )
-    n = e.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        vec.norm(F.col("embedding")).alias("_nn"),
-        trunc.alias("n_tr"),
-        vec.norm(trunc).alias("_nn_tr"),
-    )
-    pairs = (
-        F.broadcast(q)
-        .crossJoin(n)
-        .filter(F.col("n_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "n_id",
-            F.try_divide(
-                vec.dot(F.col("q_emb"), F.col("n_emb")),
-                F.col("_nq") * F.col("_nn"),
-            ).alias("cos_full"),
-            F.try_divide(
-                vec.dot(F.col("q_tr"), F.col("n_tr")),
-                F.col("_nq_tr") * F.col("_nn_tr"),
-            ).alias("cos_tr"),
-        )
+
+    def with_tr(df: DataFrame) -> DataFrame:
+        # the truncated prefix and its norm, once per row like the full ones
+        return df.select("vec_id", "embedding", trunc.alias("tr"), vec.norm(trunc).alias("tr_norm"))
+
+    pairs = vec.cosine_pairs(with_tr(e.filter(F.col("vec_id") < 10)), with_tr(e)).select(
+        "q_id",
+        "n_id",
+        F.col("cosine").alias("cos_full"),
+        vec.cosine(
+            F.col("q_tr"), F.col("n_tr"), F.col("q_tr_norm"), F.col("n_tr_norm")
+        ).alias("cos_tr"),
     )
     wf = Window.partitionBy("q_id").orderBy(
         F.col("cos_full").desc(), F.col("n_id").asc()

@@ -208,3 +208,14 @@ def test_prefix_sql_twin_matches_jaccard_pairs_prefix(spark):
     }
     assert duck == spark_pairs
     assert duck == {(1, 2): 11 / 12, (3, 4): 1.0}
+
+
+def test_knn_cosine_ivf_pairs_are_unique(spark):
+    """Each corpus row sits in one cell and a query probes two distinct
+    cells, so no (query, neighbour) pair can join twice."""
+    from lms_etl_pipeline_spark.plans.llm_similarity import knn_cosine_ivf
+    from tests.conftest import SF_SMOKE
+
+    rows = knn_cosine_ivf(spark, SF_SMOKE).select("q_id", "n_id").collect()
+    assert rows
+    assert len({(r.q_id, r.n_id) for r in rows}) == len(rows)

@@ -101,11 +101,59 @@ def test_fingerprint_twin(engines):
 
 def test_cosine_twin(engines):
     _, vecs, con = engines
-    got_spark, got_duck = _both(
-        vecs, "id", vec.cosine(F.col("a"), F.col("b")), con, "vecs", vec.cosine_sql("a", "b", 3)
-    )
+    a, b = F.col("a"), F.col("b")
+    # the plain form and the pre-normed one (norms taken below a join)
+    for cos in (vec.cosine(a, b), vec.cosine(a, b, vec.norm(a), vec.norm(b))):
+        got_spark, got_duck = _both(vecs, "id", cos, con, "vecs", vec.cosine_sql("a", "b", 3))
+        assert got_spark == got_duck
+        assert got_spark[1] is None and got_spark[2] is None and got_spark[3] == 0.0
+
+
+TOPK_VECS = [
+    (0, [1.0, 0.0, 0.0], 1),
+    (1, [0.0, 0.0, 0.0], 1),  # zero-vector query: every cosine is NULL
+    (2, [0.0, 0.5, 0.5], 2),  # alone in bucket 2
+    (3, [1.0, 1.0, 0.0], 1),
+    (4, [2.0, 2.0, 0.0], 1),  # exactly 3's cosine to every query: 3 ranks first
+    (5, [0.0, 0.0, 0.0], 1),  # zero-vector neighbour: NULL ranks last
+    (6, [-1.0, 0.5, 0.25], 1),
+    (7, [0.125, -2.0, 3.0], 3),
+]
+
+
+@pytest.mark.parametrize("on, k", [(None, 10), (None, 2), ("bucket", 10), ("bucket", 2)])
+def test_cosine_topk_twin(spark, on, k):
+    """top_k(cosine_pairs(...)) and cosine_topk_sql return the same rows;
+    k = 10 is more than any query's candidates."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE tv (vec_id BIGINT, embedding FLOAT[], bucket INT)")
+    con.executemany("INSERT INTO tv VALUES (?, ?, ?)", TOPK_VECS)
+    tv = spark.createDataFrame(TOPK_VECS, "vec_id BIGINT, embedding ARRAY<FLOAT>, bucket INT")
+    got = vec.top_k(vec.cosine_pairs(tv.filter(F.col("vec_id") < 3), tv, on), k)
+    cols = sorted(got.columns)
+    got_spark = sorted((tuple(r[c] for c in cols) for r in got.collect()), key=repr)
+
+    def side(s: str, where: str = "") -> str:  # Spark prefixes a non-key column
+        return f"SELECT vec_id, embedding, bucket{'' if on else f' AS {s}_bucket'} FROM tv{where}"
+
+    sql = vec.cosine_topk_sql(side("q", " WHERE vec_id < 3"), side("n"), k, 3, on)
+    got_duck = sorted(con.execute(f"SELECT {', '.join(cols)} FROM ({sql})").fetchall(), key=repr)
+    con.close()
     assert got_spark == got_duck
-    assert got_spark[1] is None and got_spark[2] is None and got_spark[3] == 0.0
+
+    rows = [dict(zip(cols, r)) for r in got_spark]
+    rank = {(r["q_id"], r["n_id"]): r["rk"] for r in rows}
+    assert all(q != n for q, n in rank)
+    n_cands = 5 if on else 7
+    assert sorted(rk for (q, _), rk in rank.items() if q == 0) == list(range(1, min(k, n_cands) + 1))
+    assert rank[(0, 3)] == 1 and rank[(0, 4)] == 2
+    if k == 10:
+        assert rank[(0, 5)] == n_cands  # the NULL cosine ranks last
+        assert [n for (q, n), _ in sorted(rank.items(), key=lambda x: x[1]) if q == 1] == (
+            [0, 3, 4, 5, 6] if on else [0, 2, 3, 4, 5, 6, 7]
+        )
+    if on:
+        assert not any(q == 2 for q, _ in rank)  # the singleton bucket has no pairs
 
 
 def test_ab_arm_twin(spark):
@@ -124,7 +172,12 @@ def test_ab_arm_twin(spark):
 # most: once for each Spark function and SQL twin above, twice for the two
 # sides of the A/B arm, and six list slices: the n-gram twin plus five that
 # are not n-grams (chunks, a token prefix, the first three tokens, two
-# position-keyed grams).
+# position-keyed grams).  The per-row norm projection is spelled once in
+# ``cosine_pairs`` and five times in three all-pairs joins with no query
+# side: ``dedup_embedding_cosine``'s a < b pairs and the two SemDeDup
+# semi-joins.  The ranked-cosine SQL window is ``cosine_topk_sql``'s plus
+# the two of ``matryoshka_truncation_eval``, which ranks every candidate
+# twice, at full and at truncated dimension.
 SPELLINGS = {
     r"F\.conv\(\s*F\.substring\(": 1,
     r"SUBSTRING\(\s*MD5\(": 1,
@@ -134,6 +187,9 @@ SPELLINGS = {
     r"MD5\(COALESCE\(ARRAY_TO_STRING\(LIST_SORT\(LIST_DISTINCT\(": 1,
     r"ab1\|": 2,
     r"ARRAY_TO_STRING\(LIST_SLICE\(": 6,
+    r"try_divide\(\s*(vec\.)?dot\(": 1,
+    r'norm\(F\.col\("embedding"\)\)\.alias\(': 6,
+    r"PARTITION BY q[\w.]*\s+ORDER BY\s+(cos\w*|\{[^}]*cos[^}]*\})\s+DESC": 3,
 }
 
 
