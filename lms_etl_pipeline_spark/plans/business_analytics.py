@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans import anchors
 from lms_etl_pipeline_spark.plans.catalog import query
+from lms_etl_pipeline_spark.session import local_frame
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -873,7 +874,7 @@ def state_machine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("curr"),
     ).filter(F.col("prev").isNotNull())
     allowed = F.broadcast(
-        sparkdf_from_pairs(spark, _ALLOWED_TRANSITIONS)
+        local_frame(spark, _ALLOWED_TRANSITIONS, "a string, b string")
     )
     return (
         seq.join(
@@ -886,10 +887,6 @@ def state_machine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("prev", "curr", "n", "is_violation")
     )
 
-
-def sparkdf_from_pairs(spark: SparkSession, pairs) -> DataFrame:
-    """Tiny literal lookup table (broadcast side of contract joins)."""
-    return spark.createDataFrame(list(pairs), "a string, b string")
 
 # --------------------------------------------------------------------------
 # Business-days latency

@@ -329,7 +329,7 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         (it, *(divmod(loss, _LIMB) if loss is not None else (None, None)), *ws)
         for it, loss, *ws in history
     ]
-    return spark.createDataFrame(rows, _TRAIN_SCHEMA)
+    return session.local_frame(spark, rows, _TRAIN_SCHEMA)
 
 
 @query("quality_classifier_predict", oracle=_PREDICT_ORACLE)

@@ -40,7 +40,7 @@ from lms_etl_pipeline_spark.operators import vectors as vec
 from lms_etl_pipeline_spark.operators.graph import order_flow_edges, order_flow_edges_sql
 from lms_etl_pipeline_spark.operators.ml import kmeans_assign
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.session import materialize
+from lms_etl_pipeline_spark.session import local_frame, materialize
 from lms_etl_pipeline_spark.plans.llm import EMB_DIM
 from lms_etl_pipeline_spark.sources.tables import load_table
 
@@ -154,7 +154,8 @@ def bm25_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
         F.count("*").alias("n_docs"),
     )
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [(qid, t) for qid, terms in _BM25_QUERIES for t in terms],
         "qid INT, term STRING",
     )

@@ -733,10 +733,6 @@ def event_type_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pass@k estimation (code-eval harness aggregate)
 # --------------------------------------------------------------------------
 
-#: pass@k is estimated at these k (the HumanEval convention's small ks)
-_PASS_KS = (1, 5)
-
-
 def _pass_ratio_sql(k: int) -> str:
     """1 - C(n-c, k)/C(n, k) as a LEFT-ASSOCIATIVE product of k single
     correctly-rounded double divisions ((n-c-i)/(n-i), i ascending) — the

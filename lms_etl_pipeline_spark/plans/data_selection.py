@@ -44,7 +44,12 @@ from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.session import materialize, release, spread_for_cpu
+from lms_etl_pipeline_spark.session import (
+    local_frame,
+    materialize,
+    release,
+    spread_for_cpu,
+)
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 #: hashed-feature buckets — vocabulary-bounded model size (paper uses 10k;
@@ -167,15 +172,16 @@ def dsir_hashed_ngram_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus is (vocabulary hashing bounds the model, Xie et al. §2.2).
 
     No redundant passes: the builder resolves the bucket-bounded counts
-    EAGERLY (one ``collect``, <= ``_DSIR_B`` rows by construction) and derives totals + λ from the
-    local relation.  Previously ``tot`` was a broadcast whose build job
+    EAGERLY (one ``collect``, <= ``_DSIR_B`` rows by construction) and
+    derives totals + λ from the local relation ``session.local_frame``
+    builds from them.  Previously ``tot`` was a broadcast whose build job
     re-ran the whole tokenize/explode/md5 feature pass — TWO full corpus
     scans per execution; now there is exactly one.  λ is computed by the
     same Spark expressions over the same 256 inputs (oracle re-verified).
     Explain-only callers pay the corpus scan at construction time.
     """
     model_agg, _ = _model(spark, sf_dir)
-    model = spark.createDataFrame(model_agg.collect(), model_agg.schema)
+    model = local_frame(spark, model_agg.collect(), model_agg.schema)
     tot = model.agg(
         F.sum("n_target").cast("bigint").alias("nt"),
         F.sum("n_source").cast("bigint").alias("ns"),
@@ -220,7 +226,7 @@ def dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature cache can be released before returning, matching
     ``quantile_exact_selection``'s cache-lifetime pattern.  Explain-only
     callers pay the corpus scan at construction time; the returned frame
-    is a local relation.
+    is the local relation ``session.local_frame`` builds from the top-k.
     """
     # ONE pass over the exploded feature stream: the doc x bucket counts
     # (with the doc-level target flag carried through the grouping) feed
@@ -248,7 +254,7 @@ def dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_target"),
         F.sum("c").cast("bigint").alias("n_source"),
     )
-    model = spark.createDataFrame(model_agg.collect(), model_agg.schema)
+    model = local_frame(spark, model_agg.collect(), model_agg.schema)
     tot = model.agg(
         F.sum("n_target").cast("bigint").alias("nt"),
         F.sum("n_source").cast("bigint").alias("ns"),
@@ -269,4 +275,4 @@ def dsir_importance_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the top-k is tiny: resolve it while the cache is alive, then free it
     rows = out.collect()
     release(dbc)
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.plans.llm import EMB_DIM
-from lms_etl_pipeline_spark.session import materialize, release
+from lms_etl_pipeline_spark.session import local_frame, materialize, release
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 #: greedy selection rounds (= subset size); data-independent
@@ -215,7 +215,8 @@ def mmr_diverse_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         sel_ids.append(pick[1])
         last_xv = list(r["xv"])
     release(state)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         history,
         "round int, vec_id bigint, rel_u bigint, maxsim_u bigint, "
         "score2_u bigint",

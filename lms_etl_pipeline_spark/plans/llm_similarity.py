@@ -30,6 +30,7 @@ from lms_etl_pipeline_spark.plans.llm import (
 )
 from lms_etl_pipeline_spark.session import (
     default_parallelism,
+    local_frame,
     materialize,
     spread_for_cpu,
 )
@@ -310,8 +311,8 @@ def knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # an empty corpus has no centroids and no neighbors — return the
         # empty result with the contract schema instead of feeding a
         # zero-row centroid matrix to the scoring UDF (numpy AxisError)
-        return spark.createDataFrame(
-            [], "q_id BIGINT, n_id BIGINT, rk INT, cosine DOUBLE"
+        return local_frame(
+            spark, [], "q_id BIGINT, n_id BIGINT, rk INT, cosine DOUBLE"
         )
 
     def best_cells(df: DataFrame, nprobe: int) -> DataFrame:

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from lms_etl_pipeline_spark.operators.selection import quantiles_by_radix
 from lms_etl_pipeline_spark.plans.catalog import query
-from lms_etl_pipeline_spark.session import materialize, release
+from lms_etl_pipeline_spark.session import local_frame, materialize, release
 from lms_etl_pipeline_spark.sources.tables import load_table
 
 #: quantiles reported by quantile_exact_selection (lower-nearest rank:
@@ -79,4 +79,4 @@ def quantile_exact_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         release(cents)
-    return spark.createDataFrame(rows, _OUT_SCHEMA)
+    return local_frame(spark, rows, _OUT_SCHEMA)

@@ -100,13 +100,13 @@ def train_merges(spark: SparkSession, docs: DataFrame, n_merges: int) -> DataFra
         merges = bpe.learn_merges_local(
             [(r["freq"], r["syms"]) for r in rows], n_merges
         )
-        return spark.createDataFrame(merges, _OUT_SCHEMA)
+        return session.local_frame(spark, merges, _OUT_SCHEMA)
     # every merge materializes its own frame, so the dictionary
     # collect_bounded materialized is released once the loop is done
     out = _train_distributed(dk, n_merges)
     release(dk)
     if out is None:  # empty corpus: no pairs to merge anywhere
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return session.local_frame(spark, [], _OUT_SCHEMA)
     return out
 
 
@@ -179,7 +179,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         enc = bpe.encode_dictionary_local(
             [(r["word"], r["freq"], r["syms"]) for r in rows], _ENC_MERGES
         )
-        ed = spark.createDataFrame(enc, "word string, syms array<string>")
+        ed = session.local_frame(spark, enc, "word string, syms array<string>")
     else:
         cur = dk
         for _, cur in _merge_distributed(dk, _ENC_MERGES):

@@ -11,6 +11,10 @@ One place to encode the engine's execution posture so every entry point
 - Arrow on for any pandas interchange (vectorized batches, never per-row).
 - Shuffle partitions sized by env (local runs want ~cores; a real cluster
   overrides via spark-submit conf, and AQE coalesces the rest).
+
+It also holds the driver-row seams: :func:`collect_bounded` takes a frame
+to the driver under a row budget, and :func:`local_frame` is the one way
+driver rows become a frame.
 """
 
 from __future__ import annotations
@@ -20,7 +24,10 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # Defaults chosen for the local[32] harness; on a real cluster every one of
 # these is expected to be overridden by spark-submit/cluster conf, and AQE
@@ -257,6 +264,38 @@ def collect_bounded(df):
         return None, frame
     release(frame)
     return rows, None
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A one-partition frame of the driver-held ``rows``, typed by
+    ``schema`` (a ``StructType`` or a DDL string): the way back from
+    :func:`collect_bounded`.
+
+    A row is a tuple, a ``Row`` or a dict read by field name, where a
+    missing key reads as NULL; a struct value is a dict.  Every row is
+    type-checked first: the Arrow conversion alone would truncate 1.5 in a
+    BIGINT column to 1, where ``createDataFrame`` over Python rows raises.
+    The frame is built from one Arrow table in the JVM; Python rows would
+    plan a scan over a pickled RDD, one Python-worker task per
+    default-parallelism slice.  The coalesce also keeps the optimizer from
+    folding the caller's projections into the local relation, which it
+    would evaluate row by row, interpreted, on the driver; a caller's
+    filter still moves below it and is folded in while planning."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    verify = T._make_type_verifier(schema)
+    names = schema.fieldNames()
+    cols: list[list] = [[] for _ in names]
+    for row in rows:
+        verify(row)
+        values = [row.get(n) for n in names] if isinstance(row, dict) else row
+        for col, v in zip(cols, values):
+            col.append(v)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def get_spark(app_name: str = "lms-etl-pipeline-spark", **overrides: str) -> SparkSession:

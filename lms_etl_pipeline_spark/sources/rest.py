@@ -1,13 +1,11 @@
 """REST source connector (reference S1/S2/S3: authenticated LMS API scans,
 ``/root/reference/src/lms_to_s3_lambda.py:16-66``).
 
-Driver-side fetch -> a type check of every row against an EXPLICIT schema
--> an Arrow table -> ``spark.createDataFrame(table, schema)`` — the
-Lambda-parity shape (the reference pulls one department snapshot per run;
-a driver-side fetch is the honest design for that volume).  The Arrow
-hand-off builds the frame in the JVM directly; ``createDataFrame(rows,
-schema)`` would route the rows through a Python worker task first.  For
-genuinely large REST corpora the same ``RestSource``
+Driver-side fetch -> ``session.local_frame`` against an EXPLICIT schema
+(every row type-checked, the frame built from an Arrow table in the JVM,
+no Python worker task) — the Lambda-parity shape (the reference pulls one
+department snapshot per run; a driver-side fetch is the honest design for
+that volume).  For genuinely large REST corpora the same ``RestSource``
 endpoint/params contract would back a DataSource V2 reader with
 ``SupportsPushDownFilters``; the pushdown *transport* is already here:
 ``filters`` renders to the API's OData-style ``_filter`` query param
@@ -26,10 +24,10 @@ import urllib.request
 from dataclasses import dataclass, field
 from typing import Any
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+
+from lms_etl_pipeline_spark.session import local_frame
 
 #: logical name -> endpoint template (reference S3 routing,
 #: lms_to_s3_lambda.py:54-66).  ``{course_id}`` is filled from params.
@@ -145,24 +143,14 @@ class RestSource:
         Pagination metadata is dropped (O2); nested objects survive as
         struct columns for ``etl.flatten_struct`` (O3); a missing key reads
         as NULL.  Explicit schema only — inference over an API response is
-        nondeterministic.  Each row is checked against ``schema`` before
-        the Arrow conversion, which would otherwise truncate a fractional
-        value into an integer column without a word: a value of the wrong
-        type raises, as ``createDataFrame(rows, schema)`` does.
+        nondeterministic.  The page becomes one partition through
+        ``session.local_frame``, so a value of the wrong type raises.
         """
         endpoint = ENDPOINTS[logical_name].format(**(params or {}))
         doc = self.fetch(endpoint, params=None, filters=filters)
         for k in PAGINATION_KEYS:
             doc.pop(k, None)
-        rows = doc.get(rows_key, doc.get("results", []))
-        verify = T._make_type_verifier(schema)
-        for row in rows:
-            verify(row)
-        table = pa.Table.from_pylist(rows, to_arrow_schema(schema))
-        # One page is one partition.  The coalesce also keeps the optimizer
-        # from folding the caller's projections into the local relation,
-        # which it would evaluate row by row, interpreted, on the driver.
-        return spark.createDataFrame(table, schema).coalesce(1)
+        return local_frame(spark, doc.get(rows_key, doc.get("results", [])), schema)
 
     # -- plumbing -----------------------------------------------------------
     def _headers(self) -> dict[str, str]:

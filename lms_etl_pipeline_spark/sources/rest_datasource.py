@@ -67,28 +67,22 @@ class _RestOptions:
 class RestApiReader(_RestOptions, DataSourceReader):
     def __init__(self, schema, options: dict):
         super().__init__(schema, options)
-        self.trust_pushdown = options.get("trust_pushdown", "false").lower() == "true"
         self._pushed: dict[str, str] = {}
 
     # -- pushdown -----------------------------------------------------------
     def pushFilters(self, filters: Sequence) -> Iterator:
         """Translate equality predicates to the API's ``_filter`` param.
 
-        By default every filter — including the pushed ones — is yielded
-        back so Spark re-applies it post-scan: REST APIs commonly ignore
-        unknown query params, and a server that drops ``_filter`` would
-        otherwise silently return unfiltered rows as if they matched.
-        Pushdown still prunes network traffic when the API honors it;
-        ``.option("trust_pushdown", "true")`` opts into consuming the
-        filters for servers known to enforce them.
+        Every filter — including the pushed ones — is yielded back so Spark
+        re-applies it post-scan: REST APIs commonly ignore unknown query
+        params, and a server that drops ``_filter`` would otherwise
+        silently return unfiltered rows as if they matched.  Pushdown
+        still prunes network traffic when the API honors it.
         """
         for f in filters:
             if isinstance(f, EqualTo) and len(f.attribute) == 1:
                 self._pushed[f.attribute[0]] = str(f.value)
-                if not self.trust_pushdown:
-                    yield f
-            else:
-                yield f
+            yield f
 
     def _params(self, extra: dict) -> dict:
         p = dict(extra)

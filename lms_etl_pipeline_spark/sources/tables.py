@@ -28,11 +28,6 @@ TABLE_NAMES: tuple[str, ...] = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale factor.
-BROADCAST_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier", "part"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

@@ -1,8 +1,8 @@
 """Semantic tests for plans/diversity.py (MMR diverse selection).
 
 Value-level cross-engine equality is covered by tools/check_oracle.py;
-these pin the greedy-MMR semantics: picks are distinct, round 1 is the
-pure-relevance argmax, every later round maximizes rel−maxsim over the
+these pin the greedy-MMR semantics: picks are distinct, the first pick is
+the pure-relevance argmax, every later pick maximizes rel−maxsim over the
 remaining candidates (verified against a local brute-force replay), and
 the penalty really suppresses near-duplicates of already-picked vectors.
 """
@@ -101,7 +101,7 @@ def _write_embeddings(spark, out_dir, vecs):
 
 
 def test_mmr_k_boundary_exhausts_exactly(spark, tmp_path):
-    """Fuzz-aimed edge (VERDICT r11 next-round #6): with exactly K vectors
+    """Fuzz-aimed edge: with exactly K vectors
     the greedy loop must consume every candidate (K rounds, no round
     starves), and with n < K it must stop early at n rows instead of
     erroring on an empty candidate frame."""
@@ -130,7 +130,7 @@ def test_mmr_all_ties_pick_ascending_vec_id(spark, tmp_path):
     _write_embeddings(spark, str(tmp_path), vecs)
     out = sorted(mmr_diverse_selection(spark, str(tmp_path)).collect(), key=lambda r: r.round)
     assert [r.vec_id for r in out] == list(range(_MMR_K))
-    # rel is identical for every pick; from round 2 on maxsim == rel (the
+    # rel is identical for every pick; from the second pick on maxsim == rel (the
     # remaining candidates are duplicates of a selected vector)
     rels = {r.rel_u for r in out}
     assert len(rels) == 1

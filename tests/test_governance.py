@@ -1,4 +1,4 @@
-"""Behavioral invariants for plans/governance.py (round-5b ops).
+"""Behavioral invariants for plans/governance.py.
 
 Value-level cross-engine equality is covered by tools/check_oracle.py;
 these pin the semantic contracts a hash comparison can't express —

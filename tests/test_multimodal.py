@@ -35,7 +35,7 @@ def _ppm(w, h, px_bytes, magic=b"P6", header_comment=False):
 
 
 def test_image_real_decode_p6_p5_and_corrupt(spark):
-    """Round 11: REAL netpbm decode by pure byte arithmetic — true dims +
+    """REAL netpbm decode by pure byte arithmetic — true dims +
     per-channel means for P6/P5, NULL-featured rows (never task failure)
     for anything else."""
     red_green = _ppm(2, 1, bytes([255, 0, 0, 0, 255, 0]), header_comment=True)
@@ -57,7 +57,7 @@ def test_image_real_decode_p6_p5_and_corrupt(spark):
 
 
 def test_image_real_and_fake_share_plumbing(spark):
-    """Differential pin (VERDICT r10 #4): the SAME payload runs through
+    """Differential pin: the SAME payload runs through
     both featurizers — the fake path sees the container bytes (length,
     md5), the real path sees the decoded pixels; ids line up 1:1."""
     img = _ppm(3, 2, bytes(range(18)))
@@ -105,7 +105,7 @@ def test_resize_stride_subsample(spark):
     assert rows[2].resized_bytes == 2  # already smaller than target
 
 def test_resize_real_nearest_neighbor_exact(spark):
-    """Round 11: TRUE nearest-neighbor resize of a decoded netpbm image,
+    """TRUE nearest-neighbor resize of a decoded netpbm image,
     re-encoded as P6 — exact floor index map (dst*src)//dst_len, verified
     pixel-for-pixel, plus decode-roundtrip of the output payload."""
     import numpy as np
@@ -135,7 +135,7 @@ def test_resize_real_nearest_neighbor_exact(spark):
 
 
 def test_wav_real_decode_all_widths_and_corrupt(spark, tmp_path):
-    """Round 11: REAL WAV/PCM decode via the stdlib wave module — 8-bit
+    """REAL WAV/PCM decode via the stdlib wave module — 8-bit
     (unsigned, zero-centered by -128), 16-bit stereo, and 32-bit payloads,
     RMS pinned against a pure-Python reference; corrupt bytes yield a
     NULL-featured row."""
@@ -261,7 +261,7 @@ def test_y4m_rejects_corrupt_and_caps_frames():
     assert mm.parse_y4m(b"YUV4MPEG2 W8 H4 F0:1 C420\n") is None
     capped = mm.parse_y4m(good, max_frames=2)
     assert len(capped[5]) == 2 and len(mm.parse_y4m(good)[5]) == 5
-    # round 12 (advisory): the FRAME magic must be followed by '\n' or a
+    # the FRAME magic must be followed by '\n' or a
     # space-prefixed param list — a fused marker like b"FRAMExyz\n" is a
     # corrupt stream, not a frame header
     mono = b"YUV4MPEG2 W8 H4 Cmono F25:1\n"

@@ -179,7 +179,7 @@ def _write_embeddings(spark, out_dir, vecs):
 
 
 def test_nibble_pack_saturates_at_max_code(spark, tmp_path):
-    """Fuzz-aimed edge (VERDICT r11 next-round #6): a corpus of exactly
+    """Fuzz-aimed edge: a corpus of exactly
     the K well-separated seed vectors makes every Lloyd cluster a
     singleton, so vector i encodes to code i in EVERY subspace — vector
     15 exercises the 0xF nibble in all 8 positions (pq_code 0xFFFFFFFF,

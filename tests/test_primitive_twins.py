@@ -177,7 +177,8 @@ def test_ab_arm_twin(spark):
 # side: ``dedup_embedding_cosine``'s a < b pairs and the two SemDeDup
 # semi-joins.  The ranked-cosine SQL window is ``cosine_topk_sql``'s plus
 # the two of ``matryoshka_truncation_eval``, which ranks every candidate
-# twice, at full and at truncated dimension.
+# twice, at full and at truncated dimension.  Driver rows become a frame
+# only in ``session.local_frame``.
 SPELLINGS = {
     r"F\.conv\(\s*F\.substring\(": 1,
     r"SUBSTRING\(\s*MD5\(": 1,
@@ -190,6 +191,7 @@ SPELLINGS = {
     r"try_divide\(\s*(vec\.)?dot\(": 1,
     r'norm\(F\.col\("embedding"\)\)\.alias\(': 6,
     r"PARTITION BY q[\w.]*\s+ORDER BY\s+(cos\w*|\{[^}]*cos[^}]*\})\s+DESC": 3,
+    r"\.createDataFrame\(": 1,
 }
 
 

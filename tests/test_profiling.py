@@ -1,4 +1,4 @@
-"""Behavioral invariants for plans/profiling.py (round-5b ops).
+"""Behavioral invariants for plans/profiling.py.
 
 Value-level cross-engine equality is covered by tools/check_oracle.py;
 these pin the semantic contracts a hash comparison can't express —
@@ -701,7 +701,7 @@ def test_weighted_median_reduces_to_plain_with_unit_weights(spark):
 
 def test_symspell_finds_planted_typo_and_only_distance_one(spark):
     """A rare typo of a FREQUENT word is suggested; an equal-frequency
-    distance-1 pair is NOT (the round-11 dominance gate — typo mining,
+    distance-1 pair is NOT (the frequency-dominance gate — typo mining,
     not exhaustive pair enumeration; also the output bound on adversarial
     vocab, see fuzz seed 43)."""
     rows = [

@@ -1,7 +1,6 @@
 """Degenerate-input robustness: empty frames, all-NULL columns, single rows.
 
-Round 1's only runtime crash was an ANSI DIVIDE_BY_ZERO on an empty
-document — the class of bug that is invisible in happy-path fixtures and
+An ANSI DIVIDE_BY_ZERO on an empty document is the class of bug that is invisible in happy-path fixtures and
 guaranteed at 100 TB.  Every operator family gets a degenerate pass here.
 """
 
@@ -73,7 +72,7 @@ def test_align_to_schema_empty_frame(spark):
     assert [f.name for f in out.schema.fields] == ["a", "b"]
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_multimodal_empty_frame(spark):
     df = spark.createDataFrame([], "doc_id BIGINT, text STRING")
     assert mm.decode_image_features(mm.with_payload(df)).count() == 0
@@ -99,7 +98,7 @@ def test_asof_join_no_right_rows(spark):
 def test_asof_join_overlapping_payload_name(spark):
     """A right payload column that shares its name with a left column must
     carry real matched values (not silently NULL) and come back suffixed
-    ``_right`` — the pandas merge_asof contract (round-2 advisory)."""
+    ``_right`` — the pandas merge_asof contract."""
     left = spark.createDataFrame(
         [(1, "2024-01-02 00:00:00", "left-status")], "user_id INT, ts_s STRING, status STRING"
     ).selectExpr("user_id", "CAST(ts_s AS TIMESTAMP) AS ts", "status")

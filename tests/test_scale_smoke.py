@@ -1,4 +1,4 @@
-"""Scale-smoke evidence for the round-5b operator surface at sf0.1.
+"""Scale-smoke evidence for the heavy profiling and analytics operators at sf0.1.
 
 The differential gate proves VALUES at sf0.01; these prove the heavy new
 plans also complete at the 10x fixture within a generous wall-time bound
@@ -19,10 +19,10 @@ SF_01 = "/root/testdata/sf0.1"
 
 QUERIES = entrymod.queries()
 
-# Round 13: multi-minute sweep — gated from the default run (tests/conftest.py)
+# Multi-minute sweep — gated from the default run (tests/conftest.py)
 pytestmark = pytest.mark.slow
 
-#: (query, max seconds at sf0.1 on local[32]) — heavy round-5b plans only
+#: (query, max seconds at sf0.1 on local[32]) — heavy plans only
 _HEAVY = [
     ("dup_ngram_spans", 120),
     ("simhash_exact_pairs", 120),
@@ -32,7 +32,7 @@ _HEAVY = [
     ("pca_power_iteration", 60),
     ("active_users_rolling", 60),
     ("hits_hubs_authorities", 60),
-    # round-5c additions
+    # time-series, graph, statistics and warehouse plans
     ("llr_collocations", 120),
     ("supplier_common_neighbors", 120),
     ("fifo_returns_allocation", 60),

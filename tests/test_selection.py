@@ -27,7 +27,7 @@ def _df(spark, vals):
 
 
 class TestKthSmallest:
-    @pytest.mark.slow  # >14 s: gated from the default run (round 13)
+    @pytest.mark.slow  # >14 s: gated from the default run
     def test_full_domain_extremes_and_negatives(self, spark):
         vals = [I64_MIN, -1, 0, 1, I64_MAX, -256, 255, -(1 << 40), 1 << 40]
         df = _df(spark, vals)
@@ -56,7 +56,7 @@ class TestKthSmallest:
         with pytest.raises(ValueError):
             kth_smallest(_df(spark, []), "v", 1)
 
-    @pytest.mark.slow  # >14 s: gated from the default run (round 13)
+    @pytest.mark.slow  # >14 s: gated from the default run
     def test_random_cross_check(self, spark):
         rng = random.Random(11)
         vals = [
@@ -75,7 +75,7 @@ class TestKthSmallest:
             assert kth_smallest(df, "v", k) == want[k - 1], k
 
 
-@pytest.mark.slow  # >14 s: gated from the default run (round 13)
+@pytest.mark.slow  # >14 s: gated from the default run
 def test_quantile_rank_definition_matches_brute_force(spark):
     """The catalog query's k = 1 + floor(q*(n-1)) (lower-nearest rank) must
     select exactly sorted[k-1] for every registered quantile."""
@@ -104,7 +104,7 @@ class TestQuantilesByRadix:
             k = 1 + math.floor(q * (len(vals) - 1))
             assert v == want[k - 1], q
 
-    @pytest.mark.slow  # >14 s: gated from the default run (round 13)
+    @pytest.mark.slow  # >14 s: gated from the default run
     @pytest.mark.parametrize("budget", [65536, 0])
     def test_seeded_random_cross_check_vs_kth_smallest(self, spark, budget):
         """budget=0 forces every counting pass (the 100 TB path); the

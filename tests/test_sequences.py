@@ -1,4 +1,4 @@
-"""Behavioral invariants for the round-5c wave (plans/timeseries.py, graph_retrieval.py, stats_eval.py, business_analytics.py).
+"""Behavioral invariants for plans/timeseries.py, graph_retrieval.py, stats_eval.py and business_analytics.py.
 
 Value-level cross-engine equality is covered by tools/check_oracle.py;
 these pin the semantic contracts a hash comparison can't express.

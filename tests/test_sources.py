@@ -28,7 +28,7 @@ def test_events_ts_normalized_to_timestamp(spark):
 # The events fixture's parquet TIMESTAMP(NANOS) column surfaces differently
 # across Spark versions: legacy readers honor nanosAsLong and hand back a
 # LongType of raw nanos; Spark 4.1+ reads it natively as TIMESTAMP_NTZ
-# (micros).  Round 3 shipped broken because only the LongType branch existed.
+# (micros).  A reader that handles only the LongType branch breaks on 4.1+.
 # This parametrized test pins BOTH reader behaviors (plus the already-
 # normalized passthrough) so the next Spark minor bump cannot silently
 # re-break events.ts consumers.
@@ -140,3 +140,70 @@ def test_load_table_pins_utc_in_foreign_session(spark):
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+# -- session.local_frame: the one driver-rows -> frame seam ------------------
+
+_SEAM_DDL = "n bigint, i int, x double, s string, b boolean, a array<string>"
+_SEAM_SCHEMA = T.StructType(
+    [
+        T.StructField("n", T.LongType()),
+        T.StructField("i", T.IntegerType()),
+        T.StructField("x", T.DoubleType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("b", T.BooleanType()),
+        T.StructField("a", T.ArrayType(T.StringType())),
+    ]
+)
+_SEAM_TUPLES = [
+    (1, 2, 0.5, "p", True, ["u", None]),
+    (None, None, None, None, None, None),
+    (-(2**62), -7, -1e300, "", False, []),
+]
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        _SEAM_TUPLES,
+        [Row(*t) for t in _SEAM_TUPLES],
+        # a missing key reads as NULL
+        [{"n": 1, "s": "p", "a": ["u"]}, {"i": 3, "x": 0.25, "b": False}, {}],
+        [],
+    ],
+    ids=["tuples", "rows", "dicts", "empty"],
+)
+@pytest.mark.parametrize("schema", [_SEAM_SCHEMA, _SEAM_DDL], ids=["struct", "ddl"])
+def test_local_frame_matches_create_dataframe(spark, rows, schema):
+    """The seam gives the frame ``createDataFrame(rows, schema)`` gives:
+    same schema, same rows, NULLs included, for every accepted row form."""
+    from lms_etl_pipeline_spark.session import local_frame
+
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema == _SEAM_SCHEMA
+    assert got.collect() == want.collect()
+
+
+def test_local_frame_rejects_fraction_in_bigint(spark):
+    """The Arrow conversion alone would truncate 1.5 to 1; the seam's row
+    check raises instead, as createDataFrame over Python rows does."""
+    from lms_etl_pipeline_spark.session import local_frame
+
+    with pytest.raises(TypeError):
+        local_frame(spark, [(1.5, None, None, None, None, None)], _SEAM_SCHEMA)
+
+
+def test_seam_built_frames_scan_a_local_table(spark):
+    """A seam-built frame is a local table scan in the JVM, not a scan
+    over a pickled RDD, which runs Python-worker tasks."""
+    from lms_etl_pipeline_spark.plans.order_stats import quantile_exact_selection
+    from lms_etl_pipeline_spark.session import local_frame
+
+    for df in (
+        local_frame(spark, _SEAM_TUPLES, _SEAM_SCHEMA),
+        quantile_exact_selection(spark, SF_SMOKE),
+    ):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

@@ -1,4 +1,4 @@
-"""Behavioral invariants for plans/training_mix.py (round-5 ops).
+"""Behavioral invariants for plans/training_mix.py.
 
 Value-level cross-engine equality is covered by tools/check_oracle.py;
 these pin the semantic contracts a hash comparison can't express.

@@ -6,8 +6,7 @@ Flags the plan shapes that are fine at sf0.01 and fatal at 100 TB:
   intentional bounded cross join, declared in ALLOW_CROSS)
 - unpartitioned Window nodes — Exchange SinglePartition funnels, the
   other classic scale killer — unless declared in ALLOW_GLOBAL_WINDOW
-  (SF-independent domain bound) or ALLOW_GLOBAL_WINDOW_CORPUS (input
-  proportional to a named table, with the scalable form documented)
+  (SF-independent domain bound)
 - every allowlisted claim is MACHINE-CHECKED: the query is executed and
   each cartesian/nested-loop join's small side (BroadcastExchange output
   rows, or the smaller child for a true CartesianProduct) and each
@@ -216,20 +215,6 @@ ALLOW_BROADCAST: dict[str, tuple[str, float]] = {
     "dsir_importance_selection": ("documents", 0.6),
 }
 
-
-# CORPUS-PROPORTIONAL window inputs: a global window whose input grows
-# with a named table.  EMPTY: every former entry (14
-# queries — equi-depth quantiles, Lorenz/Pareto curves, percentile
-# ranks, ROC sweeps, sweep-line concurrency, RFM quartiles, rank-sum
-# tests) was rewritten onto operators/rank.py's bucketed prefix
-# decomposition (statically-known key domains use pure bit/floor
-# buckets; unknown domains use with_uniform_key_buckets' deterministic
-# 1-row (min, max) width_bucket broadcast), leaving only the <=66-row
-# per-bucket prefix window — SF-independent, in ALLOW_GLOBAL_WINDOW
-# above.  Kept as a mechanism so a future genuinely-corpus-bounded
-# anchor can declare (driving table, max ratio, scalable form) and be
-# ratio-checked against the table's row count at the audited SF.
-ALLOW_GLOBAL_WINDOW_CORPUS: dict[str, tuple[str, float, str]] = {}
 
 
 _JOIN_NODES = ("CartesianProductExec", "BroadcastNestedLoopJoinExec")
@@ -580,17 +565,7 @@ def check_bounds(spark, entrymod, sf_dir: str) -> list[str]:
     executed plan's metrics."""
     failures: list[str] = []
     queries = entrymod.queries()
-    table_rows: dict[str, int] = {}
-
-    def _table_rows(t: str) -> int:
-        if t not in table_rows:
-            table_rows[t] = spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-        return table_rows[t]
-
-    names = sorted(
-        set(ALLOW_CROSS) | set(ALLOW_GLOBAL_WINDOW) | set(ALLOW_GLOBAL_WINDOW_CORPUS)
-    )
-    for name in names:
+    for name in sorted(set(ALLOW_CROSS) | set(ALLOW_GLOBAL_WINDOW)):
         fn = queries.get(name)
         if fn is None:
             failures.append(f"{name}: allowlisted but not registered")
@@ -627,19 +602,14 @@ def check_bounds(spark, entrymod, sf_dir: str) -> list[str]:
                         f"declared bound {bound} — the boundedness claim is false"
                     )
 
-        if name in ALLOW_GLOBAL_WINDOW or name in ALLOW_GLOBAL_WINDOW_CORPUS:
+        if name in ALLOW_GLOBAL_WINDOW:
             inputs = _global_window_inputs(plan)
             if not inputs:
                 print(f"  gwin  {'n/a':10s} {name}: no unpartitioned window executed")
                 continue
             worst = max(inputs)
-            if name in ALLOW_GLOBAL_WINDOW:
-                bound = ALLOW_GLOBAL_WINDOW[name]
-                desc = f"<= {bound} (SF-independent)"
-            else:
-                table, ratio, alt = ALLOW_GLOBAL_WINDOW_CORPUS[name]
-                bound = int(ratio * _table_rows(table))
-                desc = f"<= {ratio} x |{table}| = {bound} (scalable form: {alt})"
+            bound = ALLOW_GLOBAL_WINDOW[name]
+            desc = f"<= {bound} (SF-independent)"
             status = "ok" if worst <= bound else "OVER BOUND"
             print(
                 f"  gwin  {status:10s} {name}: worst window input {worst} {desc}"
@@ -675,10 +645,8 @@ def main() -> int:
             flags.append("CartesianProduct")
         if "BroadcastNestedLoopJoin" in plan and name not in ALLOW_CROSS:
             flags.append("BroadcastNestedLoopJoin")
-        if (
-            name not in ALLOW_GLOBAL_WINDOW
-            and name not in ALLOW_GLOBAL_WINDOW_CORPUS
-            and _has_global_window(df._jdf.queryExecution().sparkPlan())
+        if name not in ALLOW_GLOBAL_WINDOW and _has_global_window(
+            df._jdf.queryExecution().sparkPlan()
         ):
             flags.append("UnpartitionedWindow")
         status = "⚠ " + ",".join(flags) if flags else "ok"

@@ -1,7 +1,7 @@
 """Seeded adversarial-fixture fuzzer: property-based differential testing
 at catalog granularity.
 
-The round-8 degenerate axes (sf0 / sf_one / sf_hostile) are hand-built
+The degenerate fixtures (sf0 / sf_one / sf_hostile) are hand-built
 worst cases; this tool GENERALIZES them — generate a random fixture from a
 seed, adversarial WITHIN the declared data domains, and sweep the whole
 catalog differentially against DuckDB.  Any seed that fails is a repro
@@ -24,17 +24,17 @@ In-domain adversarial choices (everything the engines could disagree on):
 - text: duplicated docs, near-dup variants (one token appended), empty
   and single-token docs, shared boilerplate shingles;
 - embeddings: duplicate vectors, the zero vector, near-parallel pairs
-  (cosine ties), and values on 2^-k boundaries (decimal-quantization
-  tie class found at sf0.1 in round 6).
+  (cosine ties), and values on 2^-k boundaries (the decimal-quantization
+  tie class the sf0.1 sweep found).
 
 Money/metric domains stay valid by construction (<=2dp money, <=4dp
 rates, finite metrics) — the domain GATES (units residual, finite-metric)
 must pass on every generated fixture; violating them is the other tools'
 job (tools/make_sf_hostile.py).
 
-Round 10 widens the generator with three axes it could not previously
-produce (VERDICT r9 "Next round" #4), ACTIVE FOR SEEDS >= 20 ONLY so the
-seed-0..19 fixtures that pin earlier defect classes stay byte-identical:
+Three wider axes are ACTIVE FOR SEEDS >= 20 ONLY
+(``WIDE_AXES_FROM_SEED``), so the seed-0..19 fixtures that pin earlier
+defect classes stay byte-identical:
 
 - sub-day timestamp knife edges: instants that are midnight in non-UTC /
   half- and quarter-hour-offset zones (18:30, 18:15, 03:30, 11:00 UTC),
@@ -51,8 +51,9 @@ seed-0..19 fixtures that pin earlier defect classes stay byte-identical:
   supplier balances and event metric values go negative (customer
   balances already did), exercising abs/quantile/sign-sensitive paths.
 
-Round 11 widens the generator again (VERDICT r10 "Next round" #6), ACTIVE
-FOR SEEDS >= 40 ONLY, aimed at the round-10 trainers' preconditions:
+Trainer-aimed axes are ACTIVE FOR SEEDS >= 40 ONLY
+(``TRAINER_AXES_FROM_SEED``), aimed at the preconditions of the GD
+classifier and BPE trainers:
 
 - quality-rule knife edges: document token counts ON the label gates
   (19/20/21 and 999/1000/1001 for ``20 <= n <= 1000``), stopword ratios
@@ -112,8 +113,9 @@ _VOCAB = (
     "batch stream spark data row column filter value query big slow fast"
 ).split()
 
-#: seeds >= this get the round-10 widened axes; below it, fixtures stay
-#: byte-identical to the ones that pinned the earlier defect classes
+#: seeds >= this get the wide timestamp/unicode/sign axes; below it,
+#: fixtures stay byte-identical to the ones that pinned the earlier
+#: defect classes
 WIDE_AXES_FROM_SEED = 20
 
 # UTC instants that are midnight (or a DST wall-time hole) somewhere:
@@ -151,16 +153,15 @@ _WIDE_VOCAB = [
 ]
 
 
-#: seeds >= this get the round-11 trainer-aimed axes; below, fixtures stay
+#: seeds >= this get the trainer-aimed axes; below, fixtures stay
 #: byte-identical to the seeds that pin earlier defect classes
 TRAINER_AXES_FROM_SEED = 40
 
-#: seeds >= this additionally draw PRE-EPOCH timestamps (round 12, VERDICT
-#: r11 "what's wrong" #2): DuckDB's ``//`` truncates toward zero while
-#: Spark's ``unix_timestamp`` floors, so every second-resolution epoch
-#: conversion diverges by 1s for any instant before 1970 unless the oracle
-#: uses a sign-safe integer floor.  The axis crosses the epoch from both
-#: sides at microsecond resolution.
+#: seeds >= this additionally draw PRE-EPOCH timestamps: DuckDB's ``//``
+#: truncates toward zero while Spark's ``unix_timestamp`` floors, so every
+#: second-resolution epoch conversion diverges by 1s for any instant
+#: before 1970 unless the oracle uses a sign-safe integer floor.  The axis
+#: crosses the epoch from both sides at microsecond resolution.
 PRE_EPOCH_AXES_FROM_SEED = 45
 
 _PRE_EPOCH_TS = [

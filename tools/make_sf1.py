@@ -1,6 +1,6 @@
 """Synthesize a FULL ~sf1 fixture for the adversarial deep sweep.
 
-Rationale (round-6 finding): the Spark↔DuckDB differential harness is
+Rationale: the Spark↔DuckDB differential harness is
 data-agnostic, and bigger fixtures sample more of the float value space
 and more tie/duplicate structure — the sf0.1 sweep caught a rounding-tie
 bug (embedding_centroids) that the sf0.001/0.01 gates never hit.  This

@@ -5,7 +5,7 @@ exercise NULL-propagation through aggregates, but n=1 reaches the places
 empties can't — the n-1 sample-variance denominators, zero-variance
 normalizations, single-class AUC pair counts, 1x1 contingency tables, and
 a centered embedding cloud whose norm is exactly 0.  Sweeping the catalog
-against it in round 8 found ten real ANSI-abort defects (ab-test variance,
+against it found ten real ANSI-abort defects (ab-test variance,
 ANOVA dof, Pearson/ OLS variance products, CUSUM sigma, KS one-sided CDF,
 Cramer's 1x1 table, AUC with one class, PCA zero-norm direction) plus one
 empty-split semantics divergence (embedding_centroid_drift) and one
