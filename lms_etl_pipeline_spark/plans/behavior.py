@@ -423,8 +423,8 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combining sum on the other — edges partition once per
     direction and iterations reuse it; normalizers are 1-row broadcasts.
     Unrolled fixed iterations keep it a single declarative plan (the
-    open-ended variant would localCheckpoint per iteration like
-    ``operators/ml.py``).
+    open-ended variant would ``session.materialize`` per iteration like
+    ``operators/ml.pagerank``).
     """
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

@@ -70,7 +70,7 @@ def hierarchy_rollup_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     logarithmic fan, not quadratic; the rollup is one map-side-combining
     aggregate on the ancestor key.  Unbounded-depth hierarchies swap the
     closed-form chain for the iterative-doubling join loop
-    (localCheckpoint-bounded, ``operators/ml.py`` discipline).
+    (``session.materialize``-bounded, the ``operators/ml.py`` discipline).
     """
     s = load_table(spark, sf_dir, "supplier")
     li = load_table(spark, sf_dir, "lineitem")

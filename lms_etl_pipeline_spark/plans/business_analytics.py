@@ -314,15 +314,22 @@ def surrogate_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("part", "p_partkey"),
     ):
         t = load_table(spark, sf_dir, table)
-        h = tx.hash60(F.col(key).cast("string"))
+        # One distinct aggregate per arm: distinct keys counted inside each
+        # surrogate group.  Each key has exactly one surrogate, so the group
+        # counts sum to COUNT(DISTINCT key), and COUNT(sk) counts the non-NULL
+        # surrogates.  Two countDistincts over different children would plan
+        # an Expand whose group order follows expression ids, so the plan
+        # would depend on what the session built before.
+        per_sk = t.groupBy(tx.hash60(F.col(key).cast("string")).alias("sk")).agg(
+            F.count("*").alias("n"), F.countDistinct(F.col(key)).alias("nk")
+        )
+        n_keys = F.coalesce(F.sum("nk"), F.lit(0))
         arms.append(
-            t.agg(
-                F.count("*").cast("bigint").alias("n_rows"),
-                F.countDistinct(F.col(key)).cast("bigint").alias("n_keys"),
-                F.countDistinct(h).cast("bigint").alias("n_surrogates"),
-                (F.countDistinct(F.col(key)) - F.countDistinct(h))
-                .cast("bigint")
-                .alias("n_collisions"),
+            per_sk.agg(
+                F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_rows"),
+                n_keys.cast("bigint").alias("n_keys"),
+                F.count("sk").cast("bigint").alias("n_surrogates"),
+                (n_keys - F.count("sk")).cast("bigint").alias("n_collisions"),
             ).select(F.lit(table).alias("table_name"), "*")
         )
     return functools.reduce(lambda x, y: x.unionByName(y), arms)

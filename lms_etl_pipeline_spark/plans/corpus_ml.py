@@ -35,10 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark.operators import ml
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators import vectors as vec
 from lms_etl_pipeline_spark.operators.graph import order_flow_edges, order_flow_edges_sql
-from lms_etl_pipeline_spark.operators.ml import kmeans_assign
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.session import local_frame, materialize
 from lms_etl_pipeline_spark.plans.llm import EMB_DIM
@@ -270,50 +270,13 @@ def semdedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KMEANS_K = 8
 
-
-def _d2_sql(a: str, c: str) -> str:
-    """Left-assoc squared-L2 fragment, bit-identical to the zip_with fold."""
-    terms = []
-    for i in range(1, EMB_DIM + 1):
-        x = f"(CAST({a}[{i}] AS DOUBLE) - CAST({c}[{i}] AS DOUBLE))"
-        terms.append(f"{x} * {x}")
-    return " + ".join(terms)
-
-
 _KMEANS_ORACLE = f"""
     WITH c0 AS (SELECT vec_id AS cid, embedding AS cvec
                 FROM embeddings WHERE vec_id < {_KMEANS_K}),
-    p1 AS (SELECT e.vec_id, c.cid,
-                  {_d2_sql("e.embedding", "c.cvec")} AS d2
-           FROM embeddings e CROSS JOIN c0 c),
-    a1 AS (SELECT vec_id, cid AS cluster FROM (
-             SELECT vec_id, cid,
-                    ROW_NUMBER() OVER (PARTITION BY vec_id
-                                       ORDER BY d2, cid) AS rn
-             FROM p1) WHERE rn = 1),
-    m AS (SELECT a1.cluster,
-                 GENERATE_SUBSCRIPTS(e.embedding, 1) AS pos,
-                 UNNEST(e.embedding) AS val
-          FROM a1 JOIN embeddings e USING (vec_id)),
-    c1e AS (SELECT cluster, pos,
-                   CAST((CASE WHEN s8 >= 0
-                         THEN (2 * CAST(s8 * 100000000 AS HUGEINT) + 100 * n)
-                              // (200 * n)
-                         ELSE -((2 * CAST(-s8 * 100000000 AS HUGEINT) + 100 * n)
-                              // (200 * n)) END) AS DOUBLE) / 1000000.0 AS v
-            FROM (SELECT cluster, pos,
-                         SUM(CAST(CAST(val AS DOUBLE) AS DECIMAL(27,8))) AS s8,
-                         CAST(COUNT(*) AS BIGINT) AS n
-                  FROM m GROUP BY 1, 2)),
-    c1 AS (SELECT cluster AS cid, LIST(v ORDER BY pos) AS cvec
-           FROM c1e GROUP BY 1),
-    p2 AS (SELECT e.vec_id, c.cid,
-                  {_d2_sql("e.embedding", "c.cvec")} AS d2
-           FROM embeddings e CROSS JOIN c1 c)
-    SELECT vec_id, cluster, dist FROM (
-      SELECT vec_id, cid AS cluster, d2 AS dist,
-             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-      FROM p2) WHERE rn = 1
+    a1 AS ({ml.kmeans_assign_sql("embeddings", "c0", "vec_id", "embedding", EMB_DIM)}),
+    c1 AS ({ml.kmeans_update_sql("embeddings", "a1", "vec_id", "embedding")}),
+    a2 AS ({ml.kmeans_assign_sql("embeddings", "c1", "vec_id", "embedding", EMB_DIM)})
+    SELECT vec_id, cluster, d2 AS dist FROM a2
     """
 
 
@@ -321,70 +284,25 @@ _KMEANS_ORACLE = f"""
 def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two unrolled Lloyd iterations of k-means (k=8, centroids seeded from
     the first k vectors — deterministic, no random init): assign → recompute
-    means → reassign; emits each vector's cluster and rounded distance.
+    means → reassign; emits each vector's cluster and distance.
     This is the coarse-quantizer trainer for the IVF ANN path
-    (``knn_cosine_ivf``) expressed as an oracle-checkable plan.
+    (``knn_cosine_ivf``) expressed as an oracle-checkable plan, built from
+    the library's steps (``operators/ml``).
 
     Scale: per iteration, assignment is a k-row broadcast against one linear
     corpus scan (no shuffle of the corpus), and the mean update is one
     posexplode + groupBy(cluster, dim) — a (k·dim)-group aggregate that
     combines map-side. Iterations are data-independent plan layers, so n
-    iterations = n such passes; at 100 TB you'd localCheckpoint between
-    passes to bound lineage (the 2-step unroll here doesn't need it).
-    Determinism: means go through fixed-scale DECIMAL sums (order-
-    independent) and are rounded before reuse, per repo convention."""
+    iterations = n such passes; ``ml.kmeans_fit`` runs the open-ended loop
+    with a materialize barrier per pass (the 2-step unroll here doesn't
+    need it)."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     c0 = e.filter(F.col("vec_id") < _KMEANS_K).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
     )
-    a1 = kmeans_assign(e, c0, "vec_id", "embedding").select("vec_id", "cluster")
-    m = a1.join(e, "vec_id").select(
-        "cluster", F.posexplode("embedding").alias("pos", "val")
-    )
-    # Centroid means quantize to 6 dp in EXACT integer arithmetic
-    # (round-half-away of S/(100n) in 1e-6 units, S = exact 1e-8-unit
-    # sum): ROUND(double, 6) here was itself the seed-37 tie — a mean on
-    # a 7th-decimal 5 rounded differently per engine, shifting the
-    # centroid by 1e-6 and every downstream distance with it.  The same
-    # integer formula runs on both engines, so the quantized centroid is
-    # identical by construction; /1e6 is one correctly-rounded divide.
-    c1e = (
-        m.groupBy("cluster", "pos")
-        .agg(
-            # float -> DOUBLE -> decimal: casting float32 STRAIGHT to a
-            # scale-8 decimal diverges between engines on ~20% of values
-            # (Spark rounds the float's SHORTEST repr, ~7 sig digits;
-            # DuckDB rounds its binary expansion — seed 37: 949 element
-            # mismatches).  Widening to double first makes Spark's
-            # shortest repr carry the full binary value, so both engines
-            # quantize the same number.
-            F.sum(F.col("val").cast("double").cast("decimal(27,8)")).alias("s8"),
-            F.count("*").cast("bigint").alias("n"),
-        )
-        .select(
-            "cluster",
-            "pos",
-            (
-                F.expr(
-                    "CASE WHEN s8 >= 0 THEN "
-                    "(2 * CAST(s8 * 100000000 AS DECIMAL(38,0)) + 100 * n) "
-                    "div (200 * n) "
-                    "ELSE -((2 * CAST(-s8 * 100000000 AS DECIMAL(38,0)) "
-                    "+ 100 * n) div (200 * n)) END"
-                ).cast("double")
-                / 1000000.0
-            ).alias("v"),
-        )
-    )
-    c1 = (
-        c1e.groupBy("cluster")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("s"))
-        .select(
-            F.col("cluster").alias("cid"),
-            F.transform("s", lambda x: x["v"]).alias("cvec"),
-        )
-    )
-    a2 = kmeans_assign(e, c1, "vec_id", "embedding")
+    a1 = ml.kmeans_assign(e, c0, "vec_id", "embedding")
+    c1 = ml.kmeans_update(e, a1, "vec_id", "embedding")
+    a2 = ml.kmeans_assign(e, c1, "vec_id", "embedding")
     # dist is emitted UNROUNDED: the squared-L2 fold is bit-identical
     # across engines (left-assoc, identical rounded centroid inputs), so
     # a cosmetic ROUND(4) only adds the round-tie hazard — fuzz seed 37
@@ -397,38 +315,17 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PageRank (3 unrolled power iterations)
 # ---------------------------------------------------------------------------
 
-_PR_DAMP = 0.85
 _PR_ITER = 3
-
-
-def _pr_iter_sql(prev: str, out: str) -> str:
-    """One power iteration: contributions rounded then DECIMAL-summed."""
-    return f"""
-    {out} AS (
-      SELECT n.node,
-             ROUND((1 - {_PR_DAMP}) / (SELECT n FROM nn)
-                   + {_PR_DAMP} * COALESCE(s.acc, 0.0), 12) AS pr
-      FROM nodes n LEFT JOIN (
-        SELECT e.dst AS node,
-               CAST(SUM(CAST(ROUND(p.pr / d.outdeg, 12) AS DECIMAL(28,12)))
-                    AS DOUBLE) AS acc
-        FROM edges e JOIN {prev} p ON p.node = e.src
-                     JOIN deg d ON d.node = e.src
-        GROUP BY 1) s ON s.node = n.node)"""
 
 
 @query(
     "pagerank_graph",
     oracle=f"""
     WITH edges AS ({order_flow_edges_sql()}),
-    nodes AS (SELECT src AS node FROM edges
-              UNION SELECT dst FROM edges),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    deg AS (SELECT src AS node, COUNT(*) AS outdeg FROM edges GROUP BY 1),
-    pr0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS pr FROM nodes),
-    {_pr_iter_sql("pr0", "pr1")},
-    {_pr_iter_sql("pr1", "pr2")},
-    {_pr_iter_sql("pr2", "pr3")}
+    {ml.pagerank_start_sql()},
+    {ml.pagerank_step_sql("pr0", "pr1")},
+    {ml.pagerank_step_sql("pr1", "pr2")},
+    {ml.pagerank_step_sql("pr2", "pr3")}
     SELECT node, ROUND(pr, 8) AS pagerank FROM pr3
     """,
 )
@@ -440,62 +337,24 @@ def pagerank_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     page before filtering (CommonCrawl-style harmonic/PageRank scores); the
     fixtures have no hyperlink table, so order flow plays the link graph.
 
-    Scale: one iteration = edges ⋈ scores on src (equi-join) + groupBy dst
-    — the canonical distributed PageRank data layout. Edges partition once
-    by src and every iteration reuses that partitioning; score updates are
-    map-side-combining sums. Unrolled fixed iterations keep the whole thing
-    a single declarative plan; an open-ended solver would localCheckpoint
-    per iteration to bound lineage. Determinism: contributions are rounded
-    then DECIMAL-summed (order-independent), per repo convention."""
+    Scale: one iteration (``ml.pagerank_step``) = edges ⋈ scores on src
+    (equi-join) + groupBy dst — the canonical distributed PageRank data
+    layout. Edges partition once by src and every iteration reuses that
+    partitioning; score updates are map-side-combining sums. Unrolled
+    fixed iterations keep the whole thing a single declarative plan;
+    ``ml.pagerank`` is the open-ended solver with a materialize barrier per
+    iteration."""
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    # Materialize the edge list and node set ONCE —
-    # the unrolled 3-iteration plan references edges (contrib), nodes
-    # (re-rank join), deg and nn per iteration, so the lazy form re-derived
-    # the orders⋈lineitem+distinct subtree up to ~a dozen times per run
-    # (exchange reuse only covers identical exchanges, not the
-    # differently-aggregated consumers).  The curation-pipeline barrier
-    # pattern; values unchanged (oracle re-verified).
-    edges = materialize(order_flow_edges(o, li))
-    nodes = materialize(
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    # graph size as a 1-row broadcast, not a driver-side count(): the whole
-    # query stays one declarative plan with no eager actions
-    nn = nodes.agg(F.count("*").alias("n"))
-    deg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").alias("outdeg")
-    )
-    pr = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", (F.lit(1.0) / F.col("n")).alias("pr")
-    )
+    # Materialize the edge list (and, in pagerank_start, the node set)
+    # ONCE — the unrolled 3-iteration plan references edges (contrib),
+    # nodes (re-rank join), deg and nn per iteration, so the lazy form
+    # re-derived the orders⋈lineitem+distinct subtree up to ~a dozen times
+    # per run (exchange reuse only covers identical exchanges, not the
+    # differently-aggregated consumers).
+    g, pr = ml.pagerank_start(materialize(order_flow_edges(o, li)))
     for _ in range(_PR_ITER):
-        contrib = (
-            edges.join(pr.withColumnRenamed("node", "src"), "src")
-            .join(F.broadcast(deg.withColumnRenamed("node", "src")), "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.round(F.col("pr") / F.col("outdeg"), 12)
-                .cast("decimal(28,12)")
-                .alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").cast("double").alias("acc"))
-        )
-        pr = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(nn))
-            .select(
-                "node",
-                F.round(
-                    (1 - _PR_DAMP) / F.col("n")
-                    + _PR_DAMP * F.coalesce(F.col("acc"), F.lit(0.0)),
-                    12,
-                ).alias("pr"),
-            )
-        )
+        pr = ml.pagerank_step(g, pr)
     return pr.select("node", F.round("pr", 8).alias("pagerank"))
 
 

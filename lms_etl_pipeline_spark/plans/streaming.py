@@ -1,11 +1,12 @@
 """Event-time windowing over the ``events`` table (SURVEY.md §2.12
 "streaming" row), expressed batch-first so the DuckDB oracle can check it.
 
-The exact same ``window()`` / ``session_window()`` expressions run unchanged
-on a ``readStream`` DataFrame with ``withWatermark`` — the streaming entry
-points in ``lms_etl_pipeline_spark.streaming`` reuse these builders.  That is
-the Spark idiom: one declarative windowed plan, micro-batch or batch
-execution chosen by the source.
+``events_session_window`` builds through the streaming entry point
+``streaming.sessionized_counts``: on a batch frame the optimizer drops its
+watermark, so the batch and micro-batch plans are one declarative windowed
+plan with the execution chosen by the source.  The tumbling and sliding
+windows keep their own ``window()`` spelling, since they also group by
+event type or sum the value, which ``streaming.windowed_counts`` does not.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from lms_etl_pipeline_spark.operators.rank import (
 )
 from lms_etl_pipeline_spark.plans.catalog import query
 from lms_etl_pipeline_spark.sources.tables import load_table
+from lms_etl_pipeline_spark.streaming import sessionized_counts
 
 # Exact-decimal view of the event measure: deterministic distributed sums.
 def _dec_value() -> Column:
@@ -128,17 +130,7 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ts VALUE (exactly Spark's merge-overlapping-windows semantics), so
     the sid is computed per distinct timestamp — unique ORDER BY key, fully
     deterministic — and raw events join back on (user_id, ts)."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.session_window("ts", "10 minutes").alias("sw"), F.col("user_id"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n_events",
-        )
-    )
+    return sessionized_counts(load_table(spark, sf_dir, "events"))
 
 
 @query(

@@ -156,11 +156,13 @@ def materialize(df, *, eager: bool = True, cut_lineage: bool = False):
 
     ``cut_lineage=True`` is REQUIRED at every materialize site inside an
     iterative loop whose body references the previous iteration's frame
-    more than once (k-means' empty-cluster anti-join, label propagation's
-    own-row union): persist preserves lineage, so iteration k's logical
-    plan would nest TWO copies of iteration k-1's — 2^k plan growth that
-    OOMs the driver around depth 10 (measured: ``kmeans_fit`` max_iter=10
-    under persist blew an 8 GB heap building the plan string alone).  In
+    more than once, and is set at the iterative sites whose frames feed
+    the next round (connected components' own-row union and neighbour
+    join, MMR's per-round state): persist preserves lineage, so iteration
+    k's logical plan would nest TWO copies of iteration k-1's — 2^k plan
+    growth that OOMs the driver around depth 10 (measured: a 10-iteration
+    loop of that shape under persist blew an 8 GB heap building the plan
+    string alone).  In
     persist mode it takes a **reliable checkpoint** (replicated by the
     cluster DFS, lineage truncated — the standard iterative-Spark barrier,
     cf. GraphX/MLlib periodic checkpointing) when a checkpoint dir is set,

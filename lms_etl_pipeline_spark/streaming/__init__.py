@@ -11,11 +11,13 @@ run processes exactly the files that arrived since the last checkpoint,
 then stops — at-least-once delivery made effectively-once by the keyed,
 idempotent upsert (same as the reference's design).
 
-Event-time windowing: the SAME ``window()`` / ``session_window()``
-expressions used by the batch-checkable queries in ``plans.streaming`` run
-unchanged here on a streaming frame, with ``withWatermark`` bounding state.
-That's the point of the Spark design — one declarative windowed plan,
-batch or micro-batch execution chosen by the source.
+Event-time windowing, with ``withWatermark`` bounding state: the
+batch-checkable ``plans.streaming.events_session_window`` builds through
+``sessionized_counts`` (a batch plan drops the watermark) — one declarative
+windowed plan, batch or micro-batch execution chosen by the source.
+``windowed_counts`` counts per window only; the batch tumbling and sliding
+queries also group by event type or sum the value, so they keep their own
+``window()`` spelling and do not go through it.
 """
 
 from __future__ import annotations
@@ -93,8 +95,7 @@ def windowed_counts(
 
     The watermark bounds streaming state: windows older than
     ``max(event time) - watermark`` are finalized and evicted, which is
-    what keeps an unbounded stream's aggregation memory flat — the same
-    query shape as ``plans.streaming.events_tumbling_window``.
+    what keeps an unbounded stream's aggregation memory flat.
     """
     w = F.window(ts_col, window_len, slide) if slide else F.window(ts_col, window_len)
     return (
@@ -181,8 +182,9 @@ def sessionized_counts(
     gap: str = "10 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Session windows (inactivity gap) per key with watermark-bounded state —
-    streaming twin of ``plans.streaming.events_session_window``."""
+    """Session windows (inactivity gap) per key with watermark-bounded state;
+    ``plans.streaming.events_session_window`` is this over the batch
+    ``events`` table."""
     return (
         stream_df.withWatermark(ts_col, watermark)
         .groupBy(F.session_window(ts_col, gap).alias("sw"), F.col(key_col))

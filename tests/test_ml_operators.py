@@ -1,12 +1,17 @@
-"""Tests for operators/ml.py: generalized k-means and PageRank (the reusable
-library APIs behind the unrolled oracle-checked plans)."""
+"""Tests for operators/ml.py: the k-means and PageRank loops, and their
+agreement with the unrolled oracle-checked catalog builders that share
+their steps."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark.operators.graph import order_flow_edges
 from lms_etl_pipeline_spark.operators.ml import kmeans_assign, kmeans_fit, pagerank
+from lms_etl_pipeline_spark.plans import corpus_ml as cm
+from lms_etl_pipeline_spark.sources.tables import load_table
+from tests.conftest import SF_SMOKE
 
 
 def test_kmeans_fit_converges_on_separated_clusters(spark):
@@ -65,6 +70,47 @@ def test_kmeans_assign_empty_centroid_set_is_rejected_gracefully(spark):
     assert kmeans_assign(pts, cent).count() == 0
 
 
+# The seeds (ids 0-7) hold two duplicate pairs, so two centroids start
+# equal and the higher cid loses every member in the first assignment.
+_DUP_SEED_EMB = [
+    (0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [10.0, 10.0]), (3, [10.0, 10.0]),
+    (4, [-10.0, 5.0]), (5, [5.0, -10.0]), (6, [20.0, -20.0]), (7, [-20.0, 20.0]),
+    (8, [1.0, 1.0]), (9, [-1.0, 2.0]), (10, [11.0, 9.0]), (11, [-9.0, 6.0]),
+    (12, [4.0, -9.0]), (13, [21.0, -19.0]), (14, [-19.0, 21.0]), (15, [2.0, 0.0]),
+]
+
+
+@pytest.mark.parametrize("source", ["sf0.001", "duplicate_seeds"])
+def test_kmeans_fit_one_iteration_is_kmeans_lloyd(spark, monkeypatch, source):
+    """kmeans_fit(k=8, max_iter=1) assigns, updates once and re-assigns:
+    kmeans_lloyd's two unrolled iterations, row for row.  On the duplicate
+    seeds an emptied cluster drops out on both sides."""
+    if source == "sf0.001":
+        emb = load_table(spark, SF_SMOKE, "embeddings")
+    else:
+        emb = spark.createDataFrame(
+            _DUP_SEED_EMB, "vec_id BIGINT, embedding ARRAY<FLOAT>"
+        )
+        monkeypatch.setattr(cm, "load_table", lambda spark_, sf_dir_, name: emb)
+    want = sorted(tuple(r) for r in cm.kmeans_lloyd(spark, SF_SMOKE).collect())
+    pts = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
+    assign, cent = kmeans_fit(pts, k=8, max_iter=1)
+    got = sorted(tuple(r) for r in assign.select("id", "cluster", "d2").collect())
+    assert got == want
+    if source == "duplicate_seeds":
+        assert cent.count() == 6
+        assert {r.cluster for r in assign.collect()} <= {0, 2, 4, 5, 6, 7}
+
+
+def test_pagerank_three_iterations_is_pagerank_graph(spark):
+    want = {r.node: r.pagerank for r in cm.pagerank_graph(spark, SF_SMOKE).collect()}
+    o = load_table(spark, SF_SMOKE, "orders")
+    li = load_table(spark, SF_SMOKE, "lineitem")
+    pr = pagerank(order_flow_edges(o, li), max_iter=3)
+    got = dict(pr.select("node", F.round("pagerank", 8)).collect())
+    assert got == want
+
+
 @pytest.mark.slow  # >14 s: gated from the default run
 def test_iterative_operators_scale_evidence_sf01(spark):
     """Convergence-at-scale evidence: at sf0.1 both
@@ -75,8 +121,6 @@ def test_iterative_operators_scale_evidence_sf01(spark):
     open-ended loops are certified plannable at depth, not only at
     sf-tiny."""
     import time
-
-    from lms_etl_pipeline_spark.sources.tables import load_table
 
     sf_dir = "/root/testdata/sf0.1"
 
@@ -94,7 +138,7 @@ def test_iterative_operators_scale_evidence_sf01(spark):
     assert kstats["converged"], kstats
     assert kstats["iterations"] < 45, kstats
     assert assign.count() == emb.count()
-    assert cent.count() == 8  # empty-cluster guard keeps k stable
+    assert cent.count() == 8  # no cluster empties on this fixture
     # checkpoint-bounded lineage: the result plan must not embed the loop
     assert len(plan_lines(assign)) <= 5, "\n".join(plan_lines(assign))
 
@@ -105,7 +149,7 @@ def test_iterative_operators_scale_evidence_sf01(spark):
         F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
     )
     pstats: dict = {}
-    pr = pagerank(edges, max_iter=40, tol_scale=9, stats=pstats)
+    pr = pagerank(edges, max_iter=40, stats=pstats)
     assert pstats["converged"], pstats
     assert pstats["iterations"] < 40, pstats
     assert abs(pr.agg(F.sum("pagerank")).collect()[0][0]) > 0

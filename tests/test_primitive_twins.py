@@ -11,6 +11,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from lms_etl_pipeline_spark.operators import ml
 from lms_etl_pipeline_spark.operators import text as tx
 from lms_etl_pipeline_spark.operators import vectors as vec
 from lms_etl_pipeline_spark.plans.behavior import AB_ARM_SQL, ab_arm
@@ -156,6 +157,75 @@ def test_cosine_topk_twin(spark, on, k):
         assert not any(q == 2 for q, _ in rank)  # the singleton bucket has no pairs
 
 
+def test_sq_dist_twin(engines):
+    _, vecs, con = engines
+    sql = ml.sq_dist_sql("a", "b", 3)
+    got_spark, got_duck = _both(vecs, "id", ml.sq_dist(F.col("a"), F.col("b")), con, "vecs", sql)
+    assert got_spark == got_duck
+    assert got_spark[2] == 0.0 and got_spark[3] == 2.0
+
+
+# float elements: the update widens each to double before the decimal cast
+KM_POINTS = [
+    (0, [0.0, 0.0]),
+    (1, [0.0, 0.0]),  # equal to 0: centroid 1 ties with 0, loses, empties
+    (2, [-0.000002, 1.5]),
+    (3, [-0.000003, 2.5]),  # x mean -2.5e-6: a negative half-way mean
+    (4, [0.000002, 0.15]),
+    (5, [0.000003, 0.3]),
+    (6, [5.0, -5.0]),
+]
+KM_CENTROIDS = [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [0.0, 2.0]), (3, [0.0, 0.2]), (4, [5.0, -5.0])]
+
+
+def test_kmeans_step_twins(spark):
+    """kmeans_assign and kmeans_update against their SQL twins: the tie
+    goes to the lower cid, the emptied cluster drops out, and half-way
+    means round away from zero on both sides of it."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE kp (id BIGINT, vec FLOAT[])")
+    con.executemany("INSERT INTO kp VALUES (?, ?)", KM_POINTS)
+    con.execute("CREATE TABLE kc (cid BIGINT, cvec DOUBLE[])")
+    con.executemany("INSERT INTO kc VALUES (?, ?)", KM_CENTROIDS)
+    pts = spark.createDataFrame(KM_POINTS, "id BIGINT, vec ARRAY<FLOAT>")
+    cents = spark.createDataFrame(KM_CENTROIDS, "cid BIGINT, cvec ARRAY<DOUBLE>")
+
+    assign = ml.kmeans_assign(pts, cents)
+    assign_sql = ml.kmeans_assign_sql("kp", "kc", "id", "vec", 2)
+    got_spark = sorted(tuple(r) for r in assign.collect())
+    assert got_spark == sorted(con.execute(assign_sql).fetchall())
+    assert [r[1] for r in got_spark] == [0, 0, 2, 2, 3, 3, 4]
+
+    update_sql = ml.kmeans_update_sql("kp", f"({assign_sql})", "id", "vec")
+    got_spark = {r.cid: r.cvec for r in ml.kmeans_update(pts, assign).collect()}
+    got_duck = dict(con.execute(update_sql).fetchall())
+    con.close()
+    assert got_spark == got_duck
+    assert sorted(got_spark) == [0, 2, 3, 4]
+    assert got_spark[2] == [-0.000003, 2.0]
+    assert got_spark[3] == [0.000003, 0.225]
+
+
+def test_pagerank_step_twins(spark):
+    """pagerank_start and two pagerank_step calls against their SQL twins
+    on a graph with a cycle, a source-only node and a sink."""
+    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"), ("c", "e")]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE pe (src VARCHAR, dst VARCHAR)")
+    con.executemany("INSERT INTO pe VALUES (?, ?)", edges)
+    g, pr = ml.pagerank_start(spark.createDataFrame(edges, "src STRING, dst STRING"))
+    pr = ml.pagerank_step(g, ml.pagerank_step(g, pr))
+    got_spark = {r.node: r.pr for r in pr.collect()}
+    got_duck = dict(con.execute(f"""
+        WITH edges AS (SELECT * FROM pe), {ml.pagerank_start_sql()},
+        {ml.pagerank_step_sql("pr0", "pr1")}, {ml.pagerank_step_sql("pr1", "pr2")}
+        SELECT node, pr FROM pr2""").fetchall())
+    con.close()
+    assert got_spark == got_duck
+    assert set(got_spark) == set("abcde")
+    assert got_spark["d"] == round(0.15 / 5, 12)  # no in-edges: the teleport floor
+
+
 def test_ab_arm_twin(spark):
     users = [(u,) for u in range(-3, 200)]
     con = duckdb.connect()
@@ -178,7 +248,9 @@ def test_ab_arm_twin(spark):
 # semi-joins.  The ranked-cosine SQL window is ``cosine_topk_sql``'s plus
 # the two of ``matryoshka_truncation_eval``, which ranks every candidate
 # twice, at full and at truncated dimension.  Driver rows become a frame
-# only in ``session.local_frame``.
+# only in ``session.local_frame``.  The Lloyd mean update and the PageRank
+# iteration live once in ``operators/ml.py``, and the session window once
+# in ``streaming.sessionized_counts``.
 SPELLINGS = {
     r"F\.conv\(\s*F\.substring\(": 1,
     r"SUBSTRING\(\s*MD5\(": 1,
@@ -192,6 +264,9 @@ SPELLINGS = {
     r'norm\(F\.col\("embedding"\)\)\.alias\(': 6,
     r"PARTITION BY q[\w.]*\s+ORDER BY\s+(cos\w*|\{[^}]*cos[^}]*\})\s+DESC": 3,
     r"\.createDataFrame\(": 1,
+    r'F\.col\("pr"\) / F\.col\("outdeg"\)': 1,
+    r'\.cast\("decimal\(27,8\)"\)': 1,
+    r"F\.session_window\(": 1,
 }
 
 

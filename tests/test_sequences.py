@@ -298,6 +298,19 @@ def test_surrogate_keys_no_collisions_at_fixture_scale(spark):
         assert r.n_surrogates == r.n_keys
 
 
+def test_surrogate_key_audit_fingerprint_is_session_independent(spark):
+    """bench.plan_fingerprint of the audit is one value however many
+    expression ids the session allocated before the build."""
+    import bench
+
+    prints = set()
+    for i in range(6):
+        # analyzing this frame takes i*3+1 fresh expression ids
+        spark.range(1).select(*[F.lit(j).alias(f"c{j}") for j in range(i * 3 + 1)])
+        prints.add(bench.plan_fingerprint(QUERIES["surrogate_key_audit"](spark, SF_SMOKE)))
+    assert len(prints) == 1, prints
+
+
 # ------------------------------------------------- weekly churn
 
 
